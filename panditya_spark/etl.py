@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from panditya_spark.operators.relational import split_to_array, year_pair_with_guard
+from panditya_spark.operators.relational import (
+    literal_frame,
+    split_to_array,
+    year_pair_with_guard,
+)
 from panditya_spark.sources.loaders import read_csv_all_string
 
 # transform.py:186-190
@@ -71,12 +75,13 @@ def _with_row_idx(df: DataFrame) -> DataFrame:
     ``monotonically_increasing_id`` (partition id in the upper bits,
     in-partition offset in the lower 33), per-partition row counts are a
     tiny aggregate (one row per partition) cumulative-summed on the
-    driver and broadcast back. The reference semantics depend on row
-    order (dict upserts), and splits of a single file are ordered by
-    byte offset, so partition-id order == file order for the reference's
-    single-CSV inputs at any partitioning. Multi-file directories follow
-    Spark's deterministic split-packing order; a cluster-scale ingest
-    would ship an explicit sequence column instead.
+    driver and broadcast back as a literal frame (no Python worker).
+    The reference semantics depend on row order (dict upserts), and
+    splits of a single file are ordered by byte offset, so partition-id
+    order == file order for the reference's single-CSV inputs at any
+    partitioning. Multi-file directories follow Spark's deterministic
+    split-packing order; a cluster-scale ingest would ship an explicit
+    sequence column instead.
 
     The tagged scan is cached so the count pass and the output pass see
     the identical partition layout (monotonic ids are only stable for a
@@ -94,8 +99,7 @@ def _with_row_idx(df: DataFrame) -> DataFrame:
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+    off_df = literal_frame(df.sparkSession, offsets, "_pid int, _off long")
     return (
         parts.join(F.broadcast(off_df), "_pid", "left")
         .withColumn(
@@ -435,6 +439,21 @@ def etext_links_from_csv(
     return links, counts
 
 
+def nest_links(groups: dict[tuple[str, str, str], list[str]]) -> dict:
+    """(work_id, collection, subtype) → sorted urls, nested as work_id →
+    collection → (url list | subtype → url list). A collection with a
+    single subtype maps to that subtype's url list itself
+    (transform.py:242-244)."""
+    mapping: dict = {}
+    for (wid, coll, sub), urls in groups.items():
+        mapping.setdefault(wid, {}).setdefault(coll, {})[sub] = urls
+    for colls in mapping.values():
+        for cname, subtypes in list(colls.items()):
+            if len(subtypes) == 1:
+                colls[cname] = next(iter(subtypes.values()))
+    return mapping
+
+
 def etext_nested_mapping(links: DataFrame, counts: DataFrame) -> dict:
     """Re-build the exact nested JSON shape of transform.py:246-270:
     work_id → collection → (sorted url list | subtype → sorted url
@@ -447,13 +466,7 @@ def etext_nested_mapping(links: DataFrame, counts: DataFrame) -> dict:
         .agg(F.array_sort(F.collect_set("url")).alias("urls"))
         .collect()
     )
-    mapping: dict = {}
-    for r in grouped:
-        mapping.setdefault(r.work_id, {}).setdefault(r.collection, {})[r.subtype] = list(r.urls)
-    for wid, colls in mapping.items():
-        for cname, subtypes in list(colls.items()):
-            if len(subtypes) == 1:
-                colls[cname] = next(iter(subtypes.values()))
+    mapping = nest_links({(r.work_id, r.collection, r.subtype): list(r.urls) for r in grouped})
     totals = dict.fromkeys(COLLECTION_SUBTYPE_LABELS, 0)
     missing = dict.fromkeys(COLLECTION_SUBTYPE_LABELS, 0)
     for r in counts.collect():

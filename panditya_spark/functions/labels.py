@@ -52,21 +52,20 @@ def dropdown_label(
 
 
 # ---------------------------------------------------------------- J6
+# flask_app.py:173-180 — phrase per (source type, target type); any
+# other pair has none (the reference logs an error and returns None).
+RELATIONSHIP_PHRASES = {
+    ("author", "work"): "source author wrote target work",
+    ("work", "work"): "source base text inspired target commentary",
+}
+
+
 def edge_relationship(src_type: Column, dst_type: Column) -> Column:
-    """flask_app.py:173-180 — phrase per (source type, target type);
-    null for invalid pairs (the reference logs an error and returns
-    None)."""
-    return (
-        F.when(
-            (src_type == "author") & (dst_type == "work"),
-            F.lit("source author wrote target work"),
-        )
-        .when(
-            (src_type == "work") & (dst_type == "work"),
-            F.lit("source base text inspired target commentary"),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
+    """RELATIONSHIP_PHRASES as a column; null for invalid pairs."""
+    out = F.lit(None).cast("string")
+    for (s, d), phrase in reversed(RELATIONSHIP_PHRASES.items()):
+        out = F.when((src_type == s) & (dst_type == d), F.lit(phrase)).otherwise(out)
+    return out
 
 
 # ---------------------------------------------------------------- G4

@@ -427,7 +427,13 @@ def khop_bfs(
             if max_dist is None or max_dist < depth:
                 break
 
-    vnodes = visited.select("node").distinct()
+    # visited is distinct by construction (distinct seeds, each hop
+    # anti-joined against visited). Under the same measured-count gate
+    # it is broadcast into both semi-joins, so the edge table is read
+    # in one pass and never shuffled; at hops 0 the set is the seeds.
+    vnodes = visited.select("node")
+    if n_visited is None or n_visited <= bcast_cap:
+        vnodes = F.broadcast(vnodes)
     sub_edges = (
         edges.join(vnodes.withColumnRenamed("node", "src"), "src", "left_semi")
         .join(vnodes.withColumnRenamed("node", "dst"), "dst", "left_semi")

@@ -10,8 +10,26 @@ Reference provenance is cited per function (file:line of /root/reference).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import json
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side row list as a one-partition DataFrame built
+    inside the JVM. ``schema`` is a DDL field list such as
+    ``"node string"``. Unlike ``spark.createDataFrame``, which
+    parallelizes a Python RDD, no job that scans the frame starts a
+    Python worker. The rows travel as one JSON string literal, so the
+    plan holds one literal and the py4j calls stay constant whatever
+    the list length."""
+    names = StructType.fromDDL(schema).names
+    payload = json.dumps([dict(zip(names, r)) for r in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.from_json(F.lit(payload), f"array<struct<{schema}>>"))
+    )
 
 
 def spread_small_input(

@@ -15,8 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from panditya_spark.functions.labels import date_info, edge_relationship
+from panditya_spark.etl import nest_links
+from panditya_spark.functions.labels import RELATIONSHIP_PHRASES, date_info
 from panditya_spark.operators.graph import khop_bfs
+from panditya_spark.operators.relational import literal_frame
 
 # Serving-boundary row cap (VERDICT r8 #4): every response path here
 # collects the final frame into the driver — correct reference parity
@@ -42,13 +44,17 @@ def _bounded_collect(df: DataFrame, what: str, cap: int | None = None) -> list:
     the client can narrow the request (fewer hops, tighter exclude)."""
     cap = SERVING_MAX_ROWS if cap is None else cap
     rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
+    _check_cap(len(rows), what, cap)
+    return rows
+
+
+def _check_cap(n: int, what: str, cap: int) -> None:
+    if n > cap:
         raise ServingCapExceeded(
             f"{what} too large: more than {cap} rows at the serving "
             "boundary (raise SPARK_GRAFT_SERVING_MAX_ROWS or narrow the "
             "request)"
         )
-    return rows
 
 
 def validate_subgraph_inputs(authors, works, hops, exclude_list):
@@ -73,7 +79,18 @@ def subgraph_response(
 ) -> dict:
     """Full §3.1 lifecycle. entities/edges come from etl.py;
     etext_links is the (work_id, collection, subtype, url) long table
-    or None. Returns the flask_app.py:233-245 response dict."""
+    or None. Returns the flask_app.py:233-245 response dict.
+
+    The seed and exclude frames are literal frames, so no Python worker
+    runs. After khop_bfs the visited node set is collected once, under
+    the serving cap. Being bounded, it is then broadcast into one pass
+    over entities for the node annotation and one over the links for
+    the e-text annotation; khop_bfs's induced edge set broadcasts it
+    into one pass over the edges. Nothing is shuffled after the BFS.
+    A visited id without an
+    entity row is an unknown seed (the reference's KeyError → 400). The
+    flags, the nested e-text shape and the relationship phrases are
+    shaped on the driver from the collected rows."""
     spark = entities.sparkSession
     authors = list(dict.fromkeys(authors))
     works = list(dict.fromkeys(works))
@@ -82,25 +99,18 @@ def subgraph_response(
     if err is not None:
         return err
 
-    center = list(set(authors) | set(works))
-    seeds = spark.createDataFrame([(c,) for c in center], ["node"])
+    center = set(authors) | set(works)
+    exclude = set(exclude_list)
+    seeds = literal_frame(spark, [(c,) for c in center], "node string")
     exclude_df = (
-        spark.createDataFrame([(x,) for x in exclude_list], ["node"])
+        literal_frame(spark, [(x,) for x in exclude_list], "node string")
         if exclude_list
         else None
     )
     nodes, sub_edges = khop_bfs(edges, seeds, hops, exclude=exclude_df)
-
-    # Unknown seed ids → the reference raises KeyError → 400.
-    # One left-anti probe: non-empty ⇒ some subgraph node lacks an
-    # entity row; the first one names the error.
-    unknown = (
-        nodes.join(entities.select(F.col("id").alias("node")), "node", "left_anti")
-        .limit(1)
-        .collect()
-    )
-    if unknown:
-        return {"error": f"Invalid ID: '{unknown[0][0]}'"}
+    visited = nodes.select("node")
+    node_ids = [r.node for r in _bounded_collect(visited, "subgraph node set")]
+    visited = F.broadcast(visited)
 
     dates = date_info(
         F.col("type"),
@@ -109,10 +119,11 @@ def subgraph_response(
         F.col("author_lowest_year"),
         F.col("author_highest_year"),
     )
-    annotated = (
-        nodes.join(entities, nodes.node == entities.id)
+    annotated = {
+        r.id: r
+        for r in entities.join(visited, entities.id == visited.node, "left_semi")
         .select(
-            "node",
+            "id",
             F.col("name").alias("label"),
             "type",
             "aka",
@@ -120,69 +131,63 @@ def subgraph_response(
             dates.alias("dates"),
             F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
             F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
-            F.col("node").isin(center).alias("is_central"),
-            F.col("node").isin(exclude_list).alias("is_excluded")
-            if exclude_list
-            else F.lit(False).alias("is_excluded"),
         )
-    )
+        .collect()
+    }
+    unknown = next((n for n in node_ids if n not in annotated), None)
+    if unknown is not None:
+        return {"error": f"Invalid ID: '{unknown}'"}
 
-    # e-text annotation (J7): nested per-work shape from the long table.
-    links_by_work: dict[str, dict] = {}
+    # e-text annotation (J7): the nested per-work shape, folded here
+    # from the long rows of the visited works. The cap counts
+    # (work_id, collection, subtype) groups, as when Spark grouped them;
+    # the raw rows are bounded by the node cap times links per work.
+    links_by_work: dict = {}
     if etext_links is not None:
-        from panditya_spark.etl import etext_nested_mapping
-
-        sub_links = etext_links.join(
-            nodes.withColumnRenamed("node", "work_id"), "work_id", "left_semi"
+        link_rows = (
+            etext_links.join(
+                visited.withColumnRenamed("node", "work_id"), "work_id", "left_semi"
+            )
+            .select("work_id", "collection", "subtype", "url")
+            .collect()
         )
-        grouped = _bounded_collect(
-            sub_links.groupBy("work_id", "collection", "subtype").agg(
-                F.array_sort(F.collect_set("url")).alias("urls")
-            ),
-            "subgraph e-text annotation",
-        )
-        for r in grouped:
-            links_by_work.setdefault(r.work_id, {}).setdefault(r.collection, {})[
-                r.subtype
-            ] = list(r.urls)
-        for wid, colls in links_by_work.items():
-            for cname, subtypes in list(colls.items()):
-                if len(subtypes) == 1:
-                    colls[cname] = next(iter(subtypes.values()))
+        urls: dict[tuple[str, str, str], set[str]] = {}
+        for r in link_rows:
+            got = urls.setdefault((r.work_id, r.collection, r.subtype), set())
+            if r.url is not None:
+                got.add(r.url)
+        _check_cap(len(urls), "subgraph e-text annotation", SERVING_MAX_ROWS)
+        links_by_work = nest_links({k: sorted(us) for k, us in urls.items()})
 
-    filtered_nodes = []
-    for r in _bounded_collect(annotated, "subgraph node set"):
-        filtered_nodes.append(
-            {
-                "id": r.node,
-                "label": r.label,
-                "type": r.type,
-                "aka": r.aka,
-                "social_ids": r.social_ids,
-                "dates": r.dates,
-                "discipline": r.discipline,
-                "disciplines": r.disciplines,
-                "is_central": bool(r.is_central),
-                "is_excluded": bool(r.is_excluded),
-                # reference uses False (not None) for works without links
-                "etext_links": links_by_work.get(r.node, False),
-            }
-        )
+    filtered_nodes = [
+        {
+            "id": r.id,
+            "label": r.label,
+            "type": r.type,
+            "aka": r.aka,
+            "social_ids": r.social_ids,
+            "dates": r.dates,
+            "discipline": r.discipline,
+            "disciplines": r.disciplines,
+            "is_central": r.id in center,
+            "is_excluded": r.id in exclude,
+            # reference uses False (not None) for works without links
+            "etext_links": links_by_work.get(r.id, False),
+        }
+        for r in annotated.values()
+    ]
 
-    src_t = entities.select(F.col("id").alias("src"), F.col("type").alias("src_type"))
-    dst_t = entities.select(F.col("id").alias("dst"), F.col("type").alias("dst_type"))
-    typed_edges = _bounded_collect(
-        sub_edges.join(F.broadcast(src_t), "src")
-        .join(F.broadcast(dst_t), "dst")
-        .select(
-            "src",
-            "dst",
-            edge_relationship(F.col("src_type"), F.col("dst_type")).alias("rel"),
-        ),
-        "subgraph edge set",
-    )
+    # Periphery trim (grapher.py:90-92): khop_bfs's induced edge set,
+    # each edge phrased from its endpoints' entity types.
     filtered_edges = [
-        {"source": e.src, "target": e.dst, "relationship": e.rel} for e in typed_edges
+        {
+            "source": e.src,
+            "target": e.dst,
+            "relationship": RELATIONSHIP_PHRASES.get(
+                (annotated[e.src].type, annotated[e.dst].type)
+            ),
+        }
+        for e in _bounded_collect(sub_edges.select("src", "dst"), "subgraph edge set")
     ]
 
     return {
@@ -207,16 +212,7 @@ def _nested_links(links: DataFrame) -> dict:
         ),
         "e-text link mapping",
     )
-    mapping: dict = {}
-    for r in grouped:
-        mapping.setdefault(r.work_id, {}).setdefault(r.collection, {})[r.subtype] = list(
-            r.urls
-        )
-    for colls in mapping.values():
-        for cname, subtypes in list(colls.items()):
-            if len(subtypes) == 1:
-                colls[cname] = next(iter(subtypes.values()))
-    return mapping
+    return nest_links({(r.work_id, r.collection, r.subtype): list(r.urls) for r in grouped})
 
 
 def valid_collections(links: DataFrame) -> list[str]:
@@ -375,8 +371,10 @@ def entity_labels_response(entities: DataFrame, ids: list[str]) -> dict:
 def dropdown_options(entities: DataFrame) -> dict:
     """GET /api/entities/{authors|works|all} (flask_app.py:59-73,95-106):
     '{name} ({id})' + optional date/aka brackets, collation-sorted.
-    Built once per session in the reference; same here (cache the
-    result)."""
+    Every call labels and sorts the whole entity table in Spark (the
+    collation key is a Python UDF) and collects it under the serving
+    cap; nothing is cached. The reference builds these lists once at
+    start-up, so a server should keep the result."""
     from panditya_spark.functions.collation import collate
     from panditya_spark.functions.labels import date_info, dropdown_label
 

@@ -22,9 +22,10 @@ Usage: python scripts/bench_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _OPS = ("Join", "Window", "Generate", "EvalPython", "InPandas", "MapInPandas")
 

@@ -14,9 +14,10 @@ refactor) fail loudly here long before they show up as bench noise.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_of(df) -> str:

@@ -15,9 +15,10 @@ to their FINAL plans, so the metrics reflect the re-optimized run.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 INTERESTING = (
     "numOutputRows",

@@ -1,16 +1,16 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")
 def spark():
     from panditya_spark.session import get_spark
-    import os
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("panditya-tests")

@@ -17,6 +17,7 @@ Golden sources:
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,15 @@ from pyspark.sql import functions as F
 ENTITIES_CSV = "/root/reference/data/2025-11-07-extracted-entities-cleaned.csv"
 SETI_CSV = "/root/reference/data/2025-11-07-seti-master.csv"
 ETEXT_GOLDEN_JSON = "/root/reference/data/2025-11-07-etext-link-data.json"
+
+# The golden files belong to the reference checkout; without it there
+# is nothing to compare against.
+REFERENCE_DATA = os.path.dirname(ENTITIES_CSV)
+if not os.path.isdir(REFERENCE_DATA):
+    pytest.skip(
+        f"reference data directory {REFERENCE_DATA} is missing",
+        allow_module_level=True,
+    )
 
 # offline_mode.md:62-64 — grapher.construct_subgraph(['40377'], 1).edges
 KALIDASA_1HOP_WORKS = {

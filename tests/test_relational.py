@@ -157,6 +157,15 @@ def test_with_row_idx_multi_partition(spark):
         assert r.row_idx == r.payload, (r.row_idx, r.payload)
 
 
+def test_with_row_idx_offsets_stay_in_jvm(spark):
+    """The per-partition offsets are a literal frame, not a Python RDD
+    (a LogicalRDD leaf), so ingest starts no Python worker."""
+    from panditya_spark.etl import _with_row_idx
+
+    out = _with_row_idx(spark.range(0, 10, 1, 3))
+    assert "LogicalRDD" not in out._jdf.queryExecution().analyzed().toString()
+
+
 def test_merge_upsert_all_action_paths(spark):
     """Every MERGE branch on one constructed frame: matched update,
     matched delete, unmatched-source insert, unmatched-source delete
