@@ -353,8 +353,10 @@ def khop_bfs(
     semantics of grapher.py:90-92.
 
     Each round is: frontier ⋈ undirected-adjacency → new frontier,
-    anti-joined against visited. Frontiers are typically small, so AQE
-    flips the expansion join to broadcast; visited accumulates via
+    anti-joined against visited. From the second round on, while the
+    visited count measured by the previous round's probe stays under
+    the heap-derived cap, the frontier is broadcast into the expansion
+    join and visited into the anti-join; visited accumulates via
     union + localCheckpoint to keep lineage flat.
     """
     # Cached, NOT key-repartitioned: AQE broadcasts the small frontier
@@ -2389,24 +2391,29 @@ def hits(
 
 
 # ------------------------------------------------------------ G17 (ext)
-def _broadcast_edge_cap(spark: SparkSession) -> int:
-    """Max canonical-edge count the k-truss close may broadcast,
-    derived from the session's driver heap: a hashed (v, w) two-long
-    relation costs ~48 B/edge (UnsafeRow + map overhead) and the gate
-    budgets 10% of heap, so the cap scales with the memory actually
-    configured instead of assuming the 48g stress harness. Unparseable
-    or unset driver memory falls back to Spark's 1g default (cap
-    ~2.2M edges) — conservative beats an OOM."""
+def _driver_heap_bytes(spark: SparkSession) -> int:
+    """The session's ``spark.driver.memory`` in bytes (``512m``, ``3g``,
+    a bare byte count; an optional trailing ``b``). Unparseable or unset
+    driver memory falls back to Spark's 1g default — conservative
+    beats an OOM."""
     import re
 
     mem = spark.conf.get("spark.driver.memory", "1g") or "1g"
     m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
     if not m:
-        heap = 1 << 30
-    else:
-        heap = int(m.group(1)) * (
-            1 << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m.group(2)]
-        )
+        return 1 << 30
+    return int(m.group(1)) << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m.group(2)]
+
+
+def _broadcast_edge_cap(spark: SparkSession) -> int:
+    """Max canonical-edge count the k-truss close may broadcast,
+    derived from the session's driver heap: a hashed (v, w) two-long
+    relation costs ~48 B/edge (UnsafeRow + map overhead) and the gate
+    budgets 10% of heap, so the cap scales with the memory actually
+    configured instead of assuming the 48g stress harness (a 1g
+    driver, the fallback for unparseable memory, caps at ~2.2M
+    edges)."""
+    heap = _driver_heap_bytes(spark)
     return max(1_000_000, int(heap * 0.10) // 48)
 
 
@@ -3199,16 +3206,7 @@ def _local_tail_cap(spark: SparkSession) -> int:
     round), past which collecting more stops paying even with the
     memory to spare. A 1g driver lands at ~107k instead of inheriting
     a constant sized for the 48g stress harness."""
-    import re
-
-    mem = spark.conf.get("spark.driver.memory", "1g") or "1g"
-    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
-    if not m:
-        heap = 1 << 30
-    else:
-        heap = int(m.group(1)) * (
-            1 << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m.group(2)]
-        )
+    heap = _driver_heap_bytes(spark)
     return min(1_000_000, max(100_000, int(heap * 0.03) // 300))
 
 

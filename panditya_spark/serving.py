@@ -1,13 +1,18 @@
 """Serving layer: the reference's API surface (SURVEY §3) composed
 from engine operators. Each function returns the exact response shape
-of the corresponding Flask endpoint; heavy lifting stays in DataFrames,
-dict shaping happens at the collect() boundary exactly as the
-reference's jsonify boundary.
+of the corresponding Flask endpoint; dict shaping happens at the
+collect() boundary exactly as the reference's jsonify boundary, and
+collects that grow with the data are bounded by the serving row cap.
 
 Flagship: subgraph_response == POST /api/graph/subgraph
 (flask_app.py:183-252): validate → k-hop BFS with exclusion
 (grapher.py:25-94) → annotate (grapher.py:118-137) → per-type node
-projection + edge relationship phrases → response dict.
+projection + edge relationship phrases → response dict. A reply is
+bounded by the cap, so the BFS state (seeds, exclude list, visited set,
+frontier) lives on the driver as Python sets, and each hop is one scan
+of the edge table filtered by a hash-set ``IN`` predicate
+(``operators.relational.in_set``); the distributed ``khop_bfs`` serves
+the unbounded batch query (g1_khop_bfs) and is re-exported here.
 """
 
 from __future__ import annotations
@@ -17,8 +22,8 @@ from pyspark.sql import functions as F
 
 from panditya_spark.etl import nest_links
 from panditya_spark.functions.labels import RELATIONSHIP_PHRASES, date_info
-from panditya_spark.operators.graph import khop_bfs
-from panditya_spark.operators.relational import literal_frame
+from panditya_spark.operators.graph import khop_bfs  # noqa: F401  (re-export)
+from panditya_spark.operators.relational import in_set
 
 # Serving-boundary row cap (VERDICT r8 #4): every response path here
 # collects the final frame into the driver — correct reference parity
@@ -81,17 +86,21 @@ def subgraph_response(
     etext_links is the (work_id, collection, subtype, url) long table
     or None. Returns the flask_app.py:233-245 response dict.
 
-    The seed and exclude frames are literal frames, so no Python worker
-    runs. After khop_bfs the visited node set is collected once, under
-    the serving cap. Being bounded, it is then broadcast into one pass
-    over entities for the node annotation and one over the links for
-    the e-text annotation; khop_bfs's induced edge set broadcasts it
-    into one pass over the edges. Nothing is shuffled after the BFS.
-    A visited id without an
-    entity row is an unknown seed (the reference's KeyError → 400). The
-    flags, the nested e-text shape and the relationship phrases are
+    The BFS is level-synchronous and held on the driver, like the
+    reference's loop (grapher.py:25-94): the visited set and the
+    frontier are Python sets, checked against the node cap at every
+    hop. Each hop is one collect of the edges touching the expandable
+    frontier (the frontier minus excluded nodes, which are reached but
+    never expanded), as an ``InSet`` filter over the edge table. Every
+    such edge has both ends visited, so it is an edge of the reply and
+    the edge-set cap bounds the fetch. After the loop, three more
+    single-scan collects read the induced edges (duplicates kept, as
+    in khop_bfs's ``sub_edges``), the visited entities and their e-text
+    links. No frame is built from request data and nothing is
+    broadcast, shuffled, cached or checkpointed. A visited id without
+    an entity row is an unknown id (the reference's KeyError → 400).
+    The flags, the nested e-text shape and the relationship phrases are
     shaped on the driver from the collected rows."""
-    spark = entities.sparkSession
     authors = list(dict.fromkeys(authors))
     works = list(dict.fromkeys(works))
     exclude_list = list(set(exclude_list or []))
@@ -101,16 +110,28 @@ def subgraph_response(
 
     center = set(authors) | set(works)
     exclude = set(exclude_list)
-    seeds = literal_frame(spark, [(c,) for c in center], "node string")
-    exclude_df = (
-        literal_frame(spark, [(x,) for x in exclude_list], "node string")
-        if exclude_list
-        else None
-    )
-    nodes, sub_edges = khop_bfs(edges, seeds, hops, exclude=exclude_df)
-    visited = nodes.select("node")
-    node_ids = [r.node for r in _bounded_collect(visited, "subgraph node set")]
-    visited = F.broadcast(visited)
+    # Discovery order (seeds first) fixes which unknown id is reported.
+    order = list(dict.fromkeys(authors + works))
+    visited = set(order)
+    _check_cap(len(visited), "subgraph node set", SERVING_MAX_ROWS)
+    frontier = set(visited)
+    for _ in range(hops):
+        expand = frontier - exclude
+        if not expand:
+            break
+        touching = edges.where(in_set("src", expand) | in_set("dst", expand))
+        # Bounded like _bounded_collect, but the node cap is checked
+        # first, as when both were checked on the finished BFS.
+        rows = touching.select("src", "dst").limit(SERVING_MAX_ROWS + 1).collect()
+        frontier = set()
+        for e in rows:
+            for n in (e.src, e.dst):
+                if n not in visited:
+                    visited.add(n)
+                    frontier.add(n)
+                    order.append(n)
+        _check_cap(len(visited), "subgraph node set", SERVING_MAX_ROWS)
+        _check_cap(len(rows), "subgraph edge set", SERVING_MAX_ROWS)
 
     dates = date_info(
         F.col("type"),
@@ -121,7 +142,7 @@ def subgraph_response(
     )
     annotated = {
         r.id: r
-        for r in entities.join(visited, entities.id == visited.node, "left_semi")
+        for r in entities.where(in_set("id", visited))
         .select(
             "id",
             F.col("name").alias("label"),
@@ -134,7 +155,7 @@ def subgraph_response(
         )
         .collect()
     }
-    unknown = next((n for n in node_ids if n not in annotated), None)
+    unknown = next((n for n in order if n not in annotated), None)
     if unknown is not None:
         return {"error": f"Invalid ID: '{unknown}'"}
 
@@ -145,9 +166,7 @@ def subgraph_response(
     links_by_work: dict = {}
     if etext_links is not None:
         link_rows = (
-            etext_links.join(
-                visited.withColumnRenamed("node", "work_id"), "work_id", "left_semi"
-            )
+            etext_links.where(in_set("work_id", visited))
             .select("work_id", "collection", "subtype", "url")
             .collect()
         )
@@ -177,8 +196,9 @@ def subgraph_response(
         for r in annotated.values()
     ]
 
-    # Periphery trim (grapher.py:90-92): khop_bfs's induced edge set,
-    # each edge phrased from its endpoints' entity types.
+    # Periphery trim (grapher.py:90-92): the edges induced on the
+    # visited set, each phrased from its endpoints' entity types.
+    induced = edges.where(in_set("src", visited) & in_set("dst", visited))
     filtered_edges = [
         {
             "source": e.src,
@@ -187,7 +207,7 @@ def subgraph_response(
                 (annotated[e.src].type, annotated[e.dst].type)
             ),
         }
-        for e in _bounded_collect(sub_edges.select("src", "dst"), "subgraph edge set")
+        for e in _bounded_collect(induced.select("src", "dst"), "subgraph edge set")
     ]
 
     return {
@@ -201,24 +221,42 @@ def subgraph_response(
     }
 
 
-def _nested_links(links: DataFrame) -> dict:
-    """work_id → collection → (sorted url list | subtype → sorted url
-    list), single-subtype collections flattened to the bare list — the
-    ETEXT_LINKS value shape (transform.py:246-270). Aggregation in
-    Spark, dict fold at the collect boundary."""
-    grouped = _bounded_collect(
+def _link_groups(links: DataFrame, cap: int | None = None) -> list:
+    """(work_id, collection, subtype, urls) rows, one per group, with
+    the group's de-duplicated urls sorted; at most ``cap`` groups
+    (default SERVING_MAX_ROWS) are served. Aggregation in Spark, one
+    collect."""
+    return _bounded_collect(
         links.groupBy("work_id", "collection", "subtype").agg(
             F.array_sort(F.collect_set("url")).alias("urls")
         ),
         "e-text link mapping",
+        cap,
     )
-    return nest_links({(r.work_id, r.collection, r.subtype): list(r.urls) for r in grouped})
+
+
+def _nest(groups) -> dict:
+    """work_id → collection → (sorted url list | subtype → sorted url
+    list), single-subtype collections flattened to the bare list — the
+    ETEXT_LINKS value shape (transform.py:246-270), folded from
+    _link_groups rows."""
+    return nest_links({(r.work_id, r.collection, r.subtype): list(r.urls) for r in groups})
+
 
 
 def valid_collections(links: DataFrame) -> list[str]:
     """VALID_COLLECTIONS (flask_app.py:24): the collections known to the
-    e-text summary — here, the distinct collections in the links table."""
+    e-text summary — here, the distinct collections in the links table.
+    The views below call it only when their own rows cannot show that
+    the requested collections exist."""
     return [r.collection for r in links.select("collection").distinct().collect()]
+
+
+def _invalid_collection(links: DataFrame, collection: str) -> dict | None:
+    valid = valid_collections(links)
+    if collection not in valid:
+        return {"error": f"Invalid collection: {collection}. Valid options: {sorted(valid)}"}
+    return None
 
 
 def by_collection_response(
@@ -228,38 +266,45 @@ def by_collection_response(
     get_works_by_collection, flask_app.py:261-293): every work that has
     at least one link in `collection`; other collections' contributions
     are hidden unless include_other_collections. 'all' returns the full
-    mapping. The '...' placeholder work id is dropped."""
+    mapping. The '...' placeholder work id is dropped. A non-empty
+    reply shows the collection exists; only an empty one is checked
+    against valid_collections (a collection whose only work is the
+    placeholder is valid and empty)."""
     if not collection:
         return {"error": "Missing required parameter: collection"}
     if collection.lower() == "all":
         # flask_app.py:274-275 returns ETEXT_LINKS verbatim — the '...'
         # placeholder is only popped in the per-collection path.
-        return _nested_links(links)
-    valid = valid_collections(links)
-    if collection not in valid:
-        return {"error": f"Invalid collection: {collection}. Valid options: {sorted(valid)}"}
-    in_coll = links.filter(F.col("collection") == collection).select("work_id").distinct()
-    sub = links.join(in_coll, "work_id", "left_semi").filter(F.col("work_id") != "...")
-    if not include_other_collections:
-        sub = sub.filter(F.col("collection") == collection)
-    return _nested_links(sub)
+        return _nest(_link_groups(links))
+    in_coll = F.col("collection") == collection
+    if include_other_collections:
+        works = links.filter(in_coll).select("work_id").distinct()
+        sub = links.join(works, "work_id", "left_semi")
+    else:
+        sub = links.filter(in_coll)
+    groups = _link_groups(sub.filter(F.col("work_id") != "..."))
+    if not groups:
+        return _invalid_collection(links, collection) or {}
+    return _nest(groups)
 
 
 def unique_to_collection_response(links: DataFrame, collection: str | None) -> dict:
     """GET /api/seti/by_collection/unique (flask_app.py:331-361): works
-    whose ONLY collection is `collection`, restricted to it."""
+    whose ONLY collection is `collection`, restricted to it. As in
+    by_collection_response, only an empty reply is checked against
+    valid_collections."""
     if not collection:
         return {"error": "Missing required parameter: collection"}
-    valid = valid_collections(links)
-    if collection not in valid:
-        return {"error": f"Invalid collection: {collection}. Valid options: {sorted(valid)}"}
     only = (
         links.groupBy("work_id")
         .agg(F.collect_set("collection").alias("colls"))
         .filter((F.size("colls") == 1) & (F.col("colls")[0] == collection))
         .select("work_id")
     )
-    return _nested_links(links.join(only, "work_id", "left_semi"))
+    groups = _link_groups(links.join(only, "work_id", "left_semi"))
+    if not groups:
+        return _invalid_collection(links, collection) or {}
+    return _nest(groups)
 
 
 def overlap_response(
@@ -267,34 +312,55 @@ def overlap_response(
 ) -> dict:
     """GET /api/seti/by_collection/overlap (flask_app.py:364-416):
     three-way partition of works across two collections, each side
-    restricted to its own collection(s)."""
+    restricted to its own collection(s).
+
+    One grouped collect of the two collections' rows; each work's part
+    follows from the collections its groups name, so the split happens
+    on the driver. Each part keeps its own cap on groups, as when each
+    was collected alone. valid_collections runs only when a requested
+    collection has no row."""
     if not collection1 or not collection2:
         return {"error": "Both collection1 and collection2 are required"}
-    valid = valid_collections(links)
-    if collection1 not in valid or collection2 not in valid:
+
+    def invalid() -> dict | None:
+        valid = valid_collections(links)
+        if collection1 in valid and collection2 in valid:
+            return None
         return {
             "error": f"Invalid collection(s): {collection1}, {collection2}. "
             f"Valid options: {sorted(valid)}"
         }
-    member = links.groupBy("work_id").agg(F.collect_set("collection").alias("colls"))
-    in1 = F.array_contains("colls", collection1)
-    in2 = F.array_contains("colls", collection2)
-    both = member.filter(in1 & in2).select("work_id")
-    only1 = member.filter(in1 & ~in2).select("work_id")
-    only2 = member.filter(in2 & ~in1).select("work_id")
+
     pair = links.filter(F.col("collection").isin([collection1, collection2]))
+    try:
+        # Each part holds at most the cap, so all three at most 3x.
+        groups = _link_groups(pair, 3 * SERVING_MAX_ROWS)
+    except ServingCapExceeded:
+        err = invalid()
+        if err is not None:
+            return err
+        raise
+    if not {r.collection for r in groups} >= {collection1, collection2}:
+        err = invalid()
+        if err is not None:
+            return err
+    colls: dict[str, set[str]] = {}
+    for r in groups:
+        colls.setdefault(r.work_id, set()).add(r.collection)
+    both, only1, only2 = [], [], []
+    for r in groups:
+        if colls[r.work_id] >= {collection1, collection2}:
+            both.append(r)
+        elif r.collection == collection1:
+            only1.append(r)
+        else:
+            only2.append(r)
+    for part in (both, only1, only2):
+        _check_cap(len(part), "e-text link mapping", SERVING_MAX_ROWS)
     return {
-        "overlap": _nested_links(pair.join(both, "work_id", "left_semi")),
-        f"only_in_{collection1}": _nested_links(
-            pair.filter(F.col("collection") == collection1).join(
-                only1, "work_id", "left_semi"
-            )
-        ),
-        f"only_in_{collection2}": _nested_links(
-            pair.filter(F.col("collection") == collection2).join(
-                only2, "work_id", "left_semi"
-            )
-        ),
+        "overlap": _nest(both),
+        f"only_in_{collection1}": _nest(only1),
+        f"only_in_{collection2}": _nest(only2),
     }
 
 
@@ -322,7 +388,7 @@ def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | Non
     }
     if not valid_ids:
         return {"error": "No valid work IDs provided"}
-    return _nested_links(links.filter(F.col("work_id").isin(list(valid_ids))))
+    return _nest(_link_groups(links.filter(F.col("work_id").isin(list(valid_ids)))))
 
 
 def visualize_collection_params(

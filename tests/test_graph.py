@@ -1150,3 +1150,27 @@ def test_truss_decomposition_bucketed_close_matches(spark, monkeypatch):
     }
     want = _brute_trussness(edges)
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "mem, edge_cap, tail_cap",
+    [
+        ("1g", 2_236_962, 107_374),
+        ("3g", 6_710_886, 322_122),
+        ("512m", 1_118_481, 100_000),
+        ("12g", 26_843_545, 1_000_000),
+        # unparseable: Spark's 1g default
+        ("lots", 2_236_962, 107_374),
+    ],
+)
+def test_heap_derived_caps(mem, edge_cap, tail_cap):
+    """Both heap-derived gates read spark.driver.memory through one
+    parser: 10% of heap at 48 B/edge (floor 1M) for the broadcast cap,
+    3% at 300 B/edge clamped to [100k, 1M] for the local tail."""
+    from types import SimpleNamespace
+
+    import panditya_spark.operators.graph as G
+
+    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: mem))
+    assert G._broadcast_edge_cap(spark) == edge_cap
+    assert G._local_tail_cap(spark) == tail_cap

@@ -10,8 +10,11 @@ reference data files.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 import panditya_spark.serving as serving
+from panditya_spark.operators.graph import khop_bfs
 
 WROTE = "source author wrote target work"
 INSPIRED = "source base text inspired target commentary"
@@ -142,14 +145,6 @@ def test_relationship_phrases_and_periphery_trim(tables):
     assert _edges(_reply(tables, [], ["w7"], 3)) == []
 
 
-def test_serving_cap_on_node_set(tables, monkeypatch):
-    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 2)
-    with pytest.raises(serving.ServingCapExceeded, match="subgraph node set"):
-        _reply(tables, ["a1"], [], 1, links=False)
-    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 3)
-    assert len(_reply(tables, ["a1"], [], 1, links=False)["graph"]["nodes"]) == 3
-
-
 def test_serving_cap_on_etext_groups(tables, monkeypatch):
     """The e-text cap counts (work_id, collection, subtype) groups, not
     raw link rows: hop 1 from a1 reaches w1 and w2, whose six link rows
@@ -161,21 +156,220 @@ def test_serving_cap_on_etext_groups(tables, monkeypatch):
         _reply(tables, ["a1"], [], 1)
 
 
-def test_request_frames_start_no_python_worker(tables, monkeypatch):
-    """The seed and exclude frames come from literals in the JVM: a
-    LogicalRDD leaf would mean a Python RDD, and a Python worker in
-    every job that scans them."""
-    frames = []
-    real = serving.khop_bfs
+def test_serving_cap_on_node_set(tables, monkeypatch):
+    """The node cap is checked after every hop, so the request stops at
+    the hop whose new nodes cross it: from a1 the visited set grows
+    1 → 3 → 5 → 8 over hops 1-3. The expanded frontiers show where."""
+    expanded = []
+    real = serving.in_set
 
-    def spy(edges, seeds, hops, exclude=None):
-        frames.extend(f for f in (seeds, exclude) if f is not None)
-        return real(edges, seeds, hops, exclude=exclude)
+    def spy(col, values):
+        if col == "src":
+            expanded.append(set(values))
+        return real(col, values)
 
-    monkeypatch.setattr(serving, "khop_bfs", spy)
-    _reply(tables, ["a1"], ["w3"], 1, exclude=["w1"])
-    assert len(frames) == 2
-    for f in frames:
-        assert "LogicalRDD" not in f._jdf.queryExecution().analyzed().toString()
-    assert sorted(r.node for r in frames[0].collect()) == ["a1", "w3"]
-    assert [r.node for r in frames[1].collect()] == ["w1"]
+    monkeypatch.setattr(serving, "in_set", spy)
+    hop1, hop2, hop3 = {"a1"}, {"w1", "w2"}, {"w3", "w4"}
+    for cap, hops, frontiers in [(3, 3, [hop1, hop2]), (5, 3, [hop1, hop2, hop3]), (2, 1, [hop1])]:
+        monkeypatch.setattr(serving, "SERVING_MAX_ROWS", cap)
+        expanded.clear()
+        with pytest.raises(serving.ServingCapExceeded, match="subgraph node set"):
+            _reply(tables, ["a1"], [], hops, links=False)
+        assert expanded == frontiers
+    # the seeds alone over the cap: no scan at all
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 1)
+    expanded.clear()
+    with pytest.raises(serving.ServingCapExceeded, match="subgraph node set"):
+        _reply(tables, ["a1"], ["w1"], 2, links=False)
+    assert expanded == []
+    # an at-cap node set is served
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 3)
+    assert len(_reply(tables, ["a1"], [], 1, links=False)["graph"]["nodes"]) == 3
+
+
+def test_request_starts_no_python_worker(tables, monkeypatch):
+    """No frame is built from request data: a frame from Python rows
+    parallelizes a Python RDD, and every job that scans it starts a
+    Python worker."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    def refuse(*a, **kw):
+        raise AssertionError("the request built a frame from Python data")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    resp = _reply(tables, ["a1"], ["w3"], 2, exclude=["w1"])
+    assert set(_nodes(resp)) == {"a1", "w1", "w2", "w3", "a2", "w6"}
+
+
+def _jobs_after(spark, first: int) -> list:
+    """The status store's jobs with id >= first, once the listener bus
+    has delivered every event."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    it = jsc.statusStore().jobsList(None).iterator()
+    out = []
+    while it.hasNext():
+        j = it.next()
+        if j.jobId() >= first:
+            out.append(j)
+    return out
+
+
+@pytest.fixture(scope="module")
+def partitioned_tables(tables):
+    """The fixture tables cached as one and as two partitions each. One
+    partition makes every collect exactly one job; two keep the shuffle
+    check honest, since a plan over a single partition needs no
+    exchange even for a distinct."""
+    out = {n: tuple(t.coalesce(1).repartition(n).cache() for t in tables) for n in (1, 2)}
+    for ts in out.values():
+        for t in ts:
+            t.count()
+    yield out
+    for ts in out.values():
+        for t in ts:
+            t.unpersist()
+
+
+def _request_jobs(spark, tables, hops) -> list:
+    """The status store's records of the jobs a hops-h request from a1
+    starts, run under its own job group."""
+    jsc = spark.sparkContext._jsc.sc()
+    first = max([j.jobId() + 1 for j in _jobs_after(spark, 0)] or [0])
+    group = f"serving-shape-{hops}"
+    spark.sparkContext.setJobGroup(group, "subgraph job shape")
+    try:
+        assert "graph" in _reply(tables, ["a1"], [], hops)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    jobs = _jobs_after(spark, first)
+    assert all(j.jobGroup().get() == group for j in jobs)
+    return jobs
+
+
+@pytest.mark.parametrize("hops", [0, 1, 2, 3])
+def test_job_shape(spark, partitioned_tables, hops):
+    """A hops-h request from a1 scans the edges once per hop, then the
+    induced edges, the entities and the links once each: h + 3 jobs
+    over one-partition tables. Over two partitions no job writes
+    shuffle data, broadcasts, checkpoints or caches."""
+    assert len(_request_jobs(spark, partitioned_tables[1], hops)) == hops + 3
+    jsc = spark.sparkContext._jsc.sc()
+    persisted = jsc.getPersistentRDDs().size()
+    store = jsc.statusStore()
+    for j in _request_jobs(spark, partitioned_tables[2], hops):
+        assert not j.name().startswith(("localCheckpoint", "checkpoint")), j.name()
+        tags = j.jobTags().iterator()
+        while tags.hasNext():
+            assert not tags.next().startswith("broadcast exchange")
+        stages = j.stageIds().iterator()
+        while stages.hasNext():
+            assert store.lastStageAttempt(stages.next()).shuffleWriteBytes() == 0
+    assert jsc.getPersistentRDDs().size() == persisted
+
+
+def test_ids_needing_escapes_round_trip(spark):
+    """Ids with quotes, backslashes and IAST letters survive the IN
+    predicate, both as a short list (an In of literals) and past the
+    optimizer's InSet threshold of 10 values."""
+    from panditya_spark.operators.relational import in_set
+
+    odd = ["o'neil", "back\\slash", "\\'", "'", "śāstra", "ā'\\ś", "x"]
+    ids = odd + [f"w{i}" for i in range(6)]
+    entities = spark.createDataFrame(
+        [(i, "work", f"Work {i}", "", None, None, None, None, None, None, None) for i in ids],
+        ENTITY_SCHEMA,
+    )
+    # a star around "'": every id is one hop from it
+    edges = spark.createDataFrame(
+        [("'", i, "inspired") for i in ids if i != "'"], "src string, dst string, relationship string"
+    )
+    resp = serving.subgraph_response(entities, edges, None, [], ["'"], 1)
+    assert set(_nodes(resp)) == set(ids)
+    assert len(resp["graph"]["edges"]) == len(ids) - 1
+    for some in (odd[:3], odd[3:], ids):
+        got = entities.where(in_set("id", some)).select("id").collect()
+        assert sorted(r.id for r in got) == sorted(some)
+    assert entities.where(in_set("id", [])).count() == 0
+
+
+# ------------------------------------------------------- property test
+NODES = [f"n{i}" for i in range(7)]
+
+
+@pytest.fixture(scope="module")
+def property_entities(spark):
+    return spark.createDataFrame(
+        [
+            (n, "author" if i < 2 else "work", n, "", None, None, None, None, None, None, None)
+            for i, n in enumerate(NODES)
+        ],
+        ENTITY_SCHEMA,
+    ).cache()
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    edge_list=st.lists(st.tuples(st.sampled_from(NODES), st.sampled_from(NODES)), max_size=12),
+    seeds=st.lists(st.sampled_from(NODES + ["unknown"]), min_size=1, max_size=3),
+    exclude=st.lists(st.sampled_from(NODES), max_size=3),
+    hops=st.integers(0, 4),
+)
+def test_reply_matches_khop_bfs(spark, property_entities, edge_list, seeds, exclude, hops):
+    """On random small digraphs (self-loops and duplicate edges
+    included), the reply's nodes, flags and (src, dst) edge list equal
+    the distributed khop_bfs's visited set and induced edges; a seed
+    without an entity row is an Invalid ID."""
+    edges = spark.createDataFrame(
+        [(s, d, "inspired") for s, d in edge_list], "src string, dst string, relationship string"
+    )
+    resp = serving.subgraph_response(property_entities, edges, None, [], seeds, hops, exclude)
+    if "unknown" in seeds:
+        assert resp == {"error": "Invalid ID: 'unknown'"}
+        return
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "node string")
+    excl_df = spark.createDataFrame([(x,) for x in exclude], "node string") if exclude else None
+    visited, induced = khop_bfs(edges, seed_df, hops, exclude=excl_df)
+    want_nodes = {r.node for r in visited.collect()}
+    nodes = _nodes(resp)
+    assert set(nodes) == want_nodes
+    for n, node in nodes.items():
+        assert (node["is_central"], node["is_excluded"]) == (n in seeds, n in exclude)
+    got_edges = sorted((e["source"], e["target"]) for e in resp["graph"]["edges"])
+    assert got_edges == sorted((r.src, r.dst) for r in induced.collect())
+
+
+def test_collection_views(spark, tables):
+    """The SETI views over the fixture links plus a collection whose
+    only work is the '...' placeholder: valid, and empty where the
+    placeholder is dropped. valid_collections is consulted only for an
+    empty reply, so an unknown collection still gets its error."""
+    links = spark.createDataFrame(
+        LINKS + [("w8", "DCS", "web HTML", "d8"), ("...", "PH", "w", "p")],
+        "work_id string, collection string, subtype string, url string",
+    )
+    valid = "['DCS', 'GRETIL', 'PH', 'SARIT']"
+    w1 = {"GRETIL": ["u0", "u1"]}
+    w2 = {"DCS": {"web HTML": ["d1"], "GitHub (1) CoNLL-U": ["d2"]}, "GRETIL": ["g2"]}
+    assert serving.by_collection_response(links, "GRETIL") == {"w1": w1, "w2": {"GRETIL": ["g2"]}}
+    assert serving.by_collection_response(links, "DCS", True) == {"w2": w2, "w8": {"DCS": ["d8"]}}
+    assert serving.by_collection_response(links, "PH") == {}
+    assert serving.by_collection_response(links, "XX") == {
+        "error": f"Invalid collection: XX. Valid options: {valid}"
+    }
+    assert serving.unique_to_collection_response(links, "GRETIL") == {"w1": w1}
+    assert serving.unique_to_collection_response(links, "PH") == {"...": {"PH": ["p"]}}
+    assert serving.unique_to_collection_response(links, "XX")["error"].startswith("Invalid collection: XX")
+    assert serving.overlap_response(links, "DCS", "GRETIL") == {
+        "overlap": {"w2": w2},
+        "only_in_DCS": {"w8": {"DCS": ["d8"]}},
+        "only_in_GRETIL": {"w1": w1},
+    }
+    assert serving.overlap_response(links, "SARIT", "SARIT") == {
+        "overlap": {"w7": {"SARIT": ["s7"]}}, "only_in_SARIT": {},
+    }
+    assert serving.overlap_response(links, "SARIT", "XX") == {
+        "error": f"Invalid collection(s): SARIT, XX. Valid options: {valid}"
+    }
