@@ -122,9 +122,10 @@ def main() -> int:
         "g1_khop_bfs",
         "g10_longest_chain",
         "dedup_minhash_lsh",
-        # Warms the driver-side union-find + createDataFrame path and
-        # the explode/TakeOrdered shapes — both showed >2x official-vs-
-        # local spread in round 3 from first-call cost attribution.
+        # Warms connected_components' local tier (edge collect +
+        # literal_frame) and the explode/TakeOrdered shapes — both
+        # showed >2x official-vs-local spread in round 3 from
+        # first-call cost attribution.
         "dedup_cluster_canonical",
         "text_heavy_hitters",
         # Warms the gate/chunk/partitioned-write codegen of the shard

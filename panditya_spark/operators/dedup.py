@@ -365,10 +365,7 @@ def minhash_dedup_pairs(
 
 
 def cluster_canonical(
-    pairs: DataFrame,
-    id1: str = "doc1",
-    id2: str = "doc2",
-    small_collect_threshold: int = 100_000,
+    pairs: DataFrame, id1: str = "doc1", id2: str = "doc2"
 ) -> DataFrame:
     """Collapse near-dup pairs into clusters and elect each cluster's
     canonical survivor — the terminal stage of every dedup pipeline: a
@@ -376,73 +373,24 @@ def cluster_canonical(
     (A~B, B~C ⇒ one cluster of three) and one keeper per cluster is
     chosen.
 
-    Two physical strategies by pair count (the same size-gating the
-    betweenness operator uses):
-
-    - ≤ ``small_collect_threshold`` pairs: sequential union-find at the
-      driver. The pair graph of a dedup run is orders of magnitude
-      smaller than the corpus (47 pairs from 500 docs at sf0.01); when
-      it fits in one driver buffer, O(E·α) union-find replaces ~10
-      scheduler round-trips of loop machinery (measured: 4.3s → <1s at
-      sf0.1 with identical output).
-    - above it: the distributed connected-components operator
-      (hash-to-min + pointer jumping, O(log diameter) rounds) — the
-      100 TB path, where even the pair graph can exceed driver memory.
-
-    component = min member id in both paths, so the output is
-    bit-identical. Returns (doc_id, canonical_id, keep) for every doc
-    appearing in a pair; unpaired docs are trivially their own
-    canonical and are omitted.
+    The closure is graph.connected_components over the pair graph, so
+    the canonical is the cluster's min doc id. The pair graph of a dedup
+    run is orders of magnitude smaller than the corpus (47 pairs from
+    500 docs at sf0.01), so it usually takes that operator's local tier:
+    one collect and a union-find on the driver. Returns (doc_id,
+    canonical_id, keep) for every doc appearing in a pair; unpaired docs
+    are trivially their own canonical and are omitted.
     """
-    edges = pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst")).cache()
-    try:
-        n_pairs = edges.count()
-        if n_pairs <= small_collect_threshold:
-            parent: dict = {}
+    from panditya_spark.operators.graph import connected_components
 
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]  # path halving
-                    x = parent[x]
-                return x
-
-            for r in edges.collect():
-                a, b = r.src, r.dst
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min id keeps the canonical deterministic
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            rows = [
-                (node, find(node), int(node == find(node))) for node in parent
-            ]
-            id_type = edges.schema["src"].dataType
-            from pyspark.sql.types import IntegerType, StructField, StructType
-
-            schema = StructType(
-                [
-                    StructField("doc_id", id_type),
-                    StructField("canonical_id", id_type),
-                    StructField("keep", IntegerType()),
-                ]
-            )
-            return edges.sparkSession.createDataFrame(rows, schema)
-
-        from panditya_spark.operators.graph import connected_components
-
-        comp = connected_components(edges)
-        return comp.select(
-            F.col("node").alias("doc_id"),
-            F.col("component").alias("canonical_id"),
-            (F.col("node") == F.col("component")).cast("int").alias("keep"),
-        )
-    finally:
-        # Small path: fully materialized at the driver — safe to drop.
-        # Large path: connected_components caches its own undirected
-        # projection, so the raw edge cache is no longer load-bearing.
-        edges.unpersist()
+    comp = connected_components(
+        pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
+    )
+    return comp.select(
+        F.col("node").alias("doc_id"),
+        F.col("component").alias("canonical_id"),
+        (F.col("node") == F.col("component")).cast("int").alias("keep"),
+    )
 
 
 def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -1,10 +1,22 @@
-"""Graph operators (SURVEY.md §2.8) as iterative DataFrame programs.
+"""Graph operators (SURVEY.md §2.8) over an ``edges(src, dst)`` DataFrame.
 
 The reference does all of this with NetworkX on a single in-memory graph
-(grapher.py, utils/analyze.py). Here every algorithm is a loop of joins
-over an ``edges(src, dst)`` DataFrame with lineage hygiene
-(cache + localCheckpoint every few rounds), so the same code runs on a
-17k-node prosopography graph or a multi-billion-edge cluster graph.
+(grapher.py, utils/analyze.py). Every algorithm here has a distributed
+tier: a loop of joins with lineage hygiene (cache + localCheckpoint every
+few rounds, _LoopState), so the same code runs on a 17k-node
+prosopography graph or a multi-billion-edge cluster graph.
+
+Connected components, strongly connected components, PageRank and label
+propagation also have a local tier, because on a small graph every loop
+round is Spark fixed cost, not work. The rule that picks the tier
+(_local_graph): one ``limit(cap+1)`` collect of the edges, and of the
+vertices when given, is both the size probe and the data fetch. When
+the edges fit the heap-derived cap (_local_cap), no id is null, all ids
+share one string or integer type, and the result has at most
+_LOCAL_MAX_ROWS rows, a pure-Python kernel with the distributed loop's
+exact semantics runs on the driver and its rows come back through
+relational.literal_frame. Otherwise the distributed loop runs.
+truss_decomposition finishes its peel on the driver under the same cap.
 
 Semantics replicated from the reference:
 - k-hop BFS (grapher.py:25-94): undirected expansion from a seed set;
@@ -24,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as _W
+
+from panditya_spark.operators.relational import literal_frame
 
 
 def undirected(edges: DataFrame) -> DataFrame:
@@ -466,24 +480,223 @@ def density(edges: DataFrame, vertices: DataFrame) -> float:
     return 0.0 if n <= 1 else m / (n * (n - 1))
 
 
+# ------------------------------------------------------------ local tier
+# Result rows above which the local tier hands a graph back to the
+# distributed loop. Measured with connected_components on 4 cores, the
+# sf0.1 key chain (165k nodes, 165k edges) and k disjoint copies of it:
+# local 2.3 s against distributed 3.9-4.3 s at 165k nodes, a tie at
+# 330k (6.2 s against 6.1 s) and a loss at 660k (15-17 s against
+# 10-12 s). The collect, the kernel and literal_frame's JSON literal
+# all grow with the graph; the distributed loop's per-round fixed cost
+# does not.
+_LOCAL_MAX_ROWS = 200_000
+
+# Id types that round-trip exactly through literal_frame's JSON payload
+# and order the same in Python as in Spark.
+_LOCAL_ID_TYPES = frozenset({"string", "int", "bigint"})
+
+
+def _local_cap(spark: SparkSession) -> int:
+    """Edge cap of the driver-side tiers (the local graph kernels and
+    truss_decomposition's tail peel), derived from driver heap the way
+    _broadcast_edge_cap is: Python dict/heap state costs ~300 B/edge
+    (measured ~0.3 GB at 1M edges), the gate budgets 3% of heap, and
+    the result is clamped to [100k, 1M]. The 1M ceiling is the
+    measured wall-clock crossover of the truss peel (~10-17 us/edge
+    single-threaded against 3 distributed jobs per tail round), past
+    which collecting more stops paying even with the memory to spare.
+    A 1g driver lands at ~107k."""
+    heap = _driver_heap_bytes(spark)
+    return min(1_000_000, max(100_000, int(heap * 0.03) // 300))
+
+
+def _local_graph(
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    cols: tuple[str, str] = ("src", "dst"),
+) -> tuple[list[tuple], list, str] | None:
+    """The local tier's size probe and data fetch in one: collect at
+    most _LOCAL_MAX_ROWS+1 vertices when given, then at most cap+1
+    edges. Returns (edge pairs, nodes, id type), where nodes are the
+    distinct vertices when given and the distinct edge endpoints
+    otherwise, both in first-seen order. Returns None, and the caller
+    runs its distributed loop, when the ids are not all of one
+    _LOCAL_ID_TYPES type, an id is null, the edges exceed the cap, or
+    the nodes exceed _LOCAL_MAX_ROWS."""
+    src, dst = cols
+    fields = [edges.schema[src], edges.schema[dst]]
+    if vertices is not None:
+        fields.append(vertices.schema[vertices.columns[0]])
+    types = {f.dataType.simpleString() for f in fields}
+    if len(types) != 1 or not types <= _LOCAL_ID_TYPES:
+        return None
+    nodes = None
+    if vertices is not None:
+        vs = vertices.select(vertices.columns[0]).limit(_LOCAL_MAX_ROWS + 1).collect()
+        if len(vs) > _LOCAL_MAX_ROWS:
+            return None
+        nodes = list(dict.fromkeys(r[0] for r in vs))
+        if None in nodes:
+            return None
+    cap = _local_cap(edges.sparkSession)
+    pairs = [tuple(r) for r in edges.select(src, dst).limit(cap + 1).collect()]
+    if len(pairs) > cap or any(a is None or b is None for a, b in pairs):
+        return None
+    if nodes is None:
+        nodes = list(dict.fromkeys(x for p in pairs for x in p))
+        if len(nodes) > _LOCAL_MAX_ROWS:
+            return None
+    return pairs, nodes, types.pop()
+
+
+def _cc_local(pairs: list[tuple], nodes: list) -> list[tuple]:
+    """connected_components on the driver: union-find whose root is
+    always its set's min id. Only edges with both endpoints in `nodes`
+    join sets, as in the distributed loop, whose label joins drop edges
+    to non-vertices."""
+    parent = {v: v for v in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+    return [(v, find(v)) for v in nodes]
+
+
+def _scc_local(pairs: list[tuple], nodes: list) -> list[tuple]:
+    """strongly_connected_components on the driver: iterative Tarjan,
+    each component labelled by its min member. `nodes` are the edge
+    endpoints, so, as in the distributed loop, only nodes with an edge
+    are emitted."""
+    adj: dict = {v: [] for v in nodes}
+    for a, b in pairs:
+        adj[a].append(b)
+    index: dict = {}
+    low: dict = {}
+    stack: list = []
+    on_stack: set = set()
+    label: dict = {}
+    for root in nodes:
+        if root in index:
+            continue
+        index[root] = low[root] = len(index)
+        stack.append(root)
+        on_stack.add(root)
+        work = [(root, iter(adj[root]))]
+        while work:
+            v, it = work[-1]
+            for w in it:
+                if w not in index:
+                    index[w] = low[w] = len(index)
+                    stack.append(w)
+                    on_stack.add(w)
+                    work.append((w, iter(adj[w])))
+                    break
+                if w in on_stack:
+                    low[v] = min(low[v], index[w])
+            else:
+                work.pop()
+                if work:
+                    u = work[-1][0]
+                    low[u] = min(low[u], low[v])
+                if low[v] == index[v]:
+                    members = []
+                    while True:
+                        w = stack.pop()
+                        on_stack.discard(w)
+                        members.append(w)
+                        if w == v:
+                            break
+                    m = min(members)
+                    for w in members:
+                        label[w] = m
+    return [(v, label[v]) for v in nodes]
+
+
+def _pagerank_local(
+    pairs: list[tuple], nodes: list, iters: int, damping: float
+) -> list[tuple]:
+    """pagerank on the driver with the distributed loop's semantics:
+    out-degrees count every edge, duplicates included; only ranked
+    nodes contribute; dangling mass is the rank of ranked nodes without
+    an out-edge. The update keeps pagerank()'s operand order,
+    (1-d) + d*(contrib + dm/n), which _pr_topk_oracle relies on; only
+    the order of summation differs."""
+    out: dict = {}
+    for a, _ in pairs:
+        out[a] = out.get(a, 0) + 1
+    n = float(len(nodes))
+    dangling = [v for v in nodes if v not in out]
+    rank = dict.fromkeys(nodes, 1.0)
+    for _ in range(iters):
+        contrib: dict = {}
+        for a, b in pairs:
+            r = rank.get(a)
+            if r is not None:
+                contrib[b] = contrib.get(b, 0.0) + r / out[a]
+        dm = sum(rank[v] for v in dangling)
+        rank = {
+            v: (1 - damping) + damping * (contrib.get(v, 0.0) + dm / n)
+            for v in nodes
+        }
+    return list(rank.items())
+
+
+def _lpa_local(pairs: list[tuple], nodes: list, max_iter: int) -> list[tuple]:
+    """label_propagation on the driver: synchronous rounds over the
+    deduplicated undirected projection restricted to `nodes` (a
+    self-loop is one neighbor), plus the self-vote; ties go to the
+    smallest label. Stops early at a fixpoint, which later rounds
+    would only repeat."""
+    nbrs: dict = {v: set() for v in nodes}
+    for a, b in pairs:
+        if a in nbrs and b in nbrs:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    label = {v: v for v in nodes}
+    for _ in range(max_iter):
+        new = {}
+        for v, ns in nbrs.items():
+            votes = {label[v]: 1}
+            for u in ns:
+                votes[label[u]] = votes.get(label[u], 0) + 1
+            top = max(votes.values())
+            new[v] = min(c for c, k in votes.items() if k == top)
+        if new == label:
+            break
+        label = new
+    return list(label.items())
+
+
 def connected_components(
     edges: DataFrame, vertices: DataFrame | None = None, max_iter: int = 50
 ) -> DataFrame:
     """Undirected connected components (analyze.py:36-39) without
-    GraphFrames: iterative min-label propagation to fixpoint.
+    GraphFrames.
 
     Returns (node, component) where component = min node id (string
-    comparison if ids are strings) in the component. Each round joins
-    the current labels across edges and takes the min of neighbor
-    labels; converges in O(diameter) rounds (the reference graph's
-    diameter is ~27 per offline_mode.md; cap guards pathological
-    inputs). Labels are checkpointed per round to keep lineage flat.
-
-    At 100 TB scale the round count, not data volume, dominates; the
-    min-label join is a plain shuffle-hash join that AQE handles, and a
-    large-star/small-star contraction variant could cut rounds to
-    O(log n) — documented trade-off, diameter here is small.
+    comparison if ids are strings) in the component. With explicit
+    `vertices` only edges whose two endpoints are both vertices count.
+    A graph that fits the local tier is solved by union-find on the
+    driver (_cc_local). Otherwise labels propagate to a fixpoint, one
+    checkpointed round at a time: hash-to-min with pointer jumping,
+    O(log diameter) rounds. Raises ValueError when `max_iter` rounds
+    end before the fixpoint.
     """
+    local = _local_graph(edges, vertices)
+    if local is not None:
+        pairs, nodes, t = local
+        return literal_frame(
+            edges.sparkSession, _cc_local(pairs, nodes), f"node {t}, component {t}"
+        )
     # Cached, NOT key-repartitioned: from round 1 on the delta side is
     # tiny and AQE broadcasts it, so the edge table is never shuffled at
     # all — an up-front repartition("b") costs a full O(E) shuffle and
@@ -582,11 +795,9 @@ def connected_components(
         return cand
 
     def _pointer_jump(cand: DataFrame, bcast: bool) -> DataFrame:
-        """L(v) ← L(L(v)) over the candidate labels — the doubling step
-        split out so the loop can choose whether cand is a lazy subtree
-        (it then appears TWICE in this plan) or a per-round minor
-        checkpoint (one extra job, cand computed once) — see the loop
-        body for the measured choice."""
+        """L(v) ← L(L(v)) over the candidate labels — the doubling
+        step. cand appears twice in this plan, so the loop passes it
+        in checkpointed."""
         parent = cand.select(
             F.col("node").alias("p_node"), F.col("component").alias("p_comp")
         )
@@ -621,23 +832,14 @@ def connected_components(
     bcast_cap = _broadcast_edge_cap(edges.sparkSession) // 2
     n_nodes: int | None = None
     with _loop_shuffle_scope(edges.sparkSession, est and est * 2):
-        import os as _os
-
-        cand_ckpt = _os.environ.get("PANDITYA_CC_CAND_CKPT", "1") == "1"
         for it in range(max_iter):
             bcast = n_nodes is not None and n_nodes <= bcast_cap
-            cand = cand_plan(labels, use_delta=it >= 1, bcast=bcast)
-            if cand_ckpt:
-                # The pointer jump references cand twice, so a lazy
-                # cand runs the und-join + min-agg subtree TWICE per
-                # round; the minor checkpoint trades one O(V) frame
-                # materialization for computing the O(E) half once —
-                # the dominant term at scale (r17). Paired sf0.1 A/B:
-                # <= the lazy shape in 6/8 pairs, equal at quiet floor
-                # (the lazy shape's duplicated work is cheap at 330k
-                # edges; the gap widens with |E|). Env knob 0 restores
-                # the one-job-per-round r16 shape for replay.
-                cand = state.minor(cand)
+            # The pointer jump references cand twice, so a lazy cand
+            # would run the und-join + min-agg subtree TWICE per round;
+            # the minor checkpoint trades one O(V) frame materialization
+            # for computing the O(E) half once — the dominant term at
+            # scale (r17).
+            cand = state.minor(cand_plan(labels, use_delta=it >= 1, bcast=bcast))
             # Materialization and the any-changed fixpoint probe share
             # one job (round_end_probe): the former round_end + isEmpty
             # pair was two jobs per round at ~150 ms fixed cost each
@@ -650,6 +852,13 @@ def connected_components(
             n_nodes = int(n_cnt or 0)
             if not any_changed:
                 break
+        else:
+            und.unpersist()
+            state.finish()
+            raise ValueError(
+                "connected_components: labels did not reach a fixpoint "
+                f"within max_iter={max_iter} rounds — raise max_iter"
+            )
     und.unpersist()
     state.finish(labels)
     return labels.select("node", "component")
@@ -829,8 +1038,18 @@ def label_propagation(
     bipartite structures — the reference graph is bipartite-ish
     (author↔work), and without it the label wave bounces between the
     levels forever (measured: modularity −0.014 undamped vs +0.917
-    damped on the key-chain forest, converged by round 4).
+    damped on the key-chain forest, converged by round 4). A graph
+    that fits the local tier runs the same rounds on the driver
+    (_lpa_local).
     """
+    local = _local_graph(edges, vertices)
+    if local is not None:
+        pairs, nodes, t = local
+        return literal_frame(
+            edges.sparkSession,
+            _lpa_local(pairs, nodes, max_iter),
+            f"node {t}, community {t}",
+        )
     und = undirected(edges).cache()
     nodes = (
         vertices.select(F.col(vertices.columns[0]).alias("node"))
@@ -1473,8 +1692,17 @@ def pagerank(
     round so ranks sum to n. Out-degrees are precomputed once and the
     rank⋈edges join reuses the same key each round — on a cluster the
     edge table would be pre-partitioned by src so every iteration
-    shuffles only the rank vector.
+    shuffles only the rank vector. A graph that fits the local tier
+    runs the same iteration on the driver (_pagerank_local).
     """
+    local = _local_graph(edges, vertices)
+    if local is not None:
+        pairs, nodes, t = local
+        return literal_frame(
+            edges.sparkSession,
+            _pagerank_local(pairs, nodes, iters, damping),
+            f"node {t}, rank double",
+        )
     e = edges.select("src", "dst")
     nodes = (
         vertices.select(F.col(vertices.columns[0]).alias("node"))
@@ -1588,6 +1816,10 @@ def strongly_connected_components(
     classic graph decomposition the suite lacked): (node, scc) where
     scc = the lexicographic min member id, deterministic.
 
+    A graph that fits the local tier is solved by iterative Tarjan on
+    the driver (_scc_local); max_outer and max_inner bound only the
+    distributed loop described below.
+
     Round-10 rewrite: reachability MIN-LABEL FW-BW (the label-pair
     formulation of Fleischer-Hendrickson-Pinar divide-and-conquer, the
     shape Hong et al.'s multi-pivot variants distribute). Per outer
@@ -1646,6 +1878,15 @@ def strongly_connected_components(
     performance contract, not a silent-wrong-answer hazard.
     """
     src, dst = edges.columns[0], edges.columns[1]
+    local = _local_graph(edges, cols=(src, dst))
+    if local is not None:
+        pairs, nodes, t = local
+        # The distributed loop's scc column is a string for string ids
+        # and a bigint for integer ids.
+        scc_t = "string" if t == "string" else "bigint"
+        return literal_frame(
+            edges.sparkSession, _scc_local(pairs, nodes), f"node {t}, scc {scc_t}"
+        )
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
@@ -3195,21 +3436,6 @@ def _local_truss_tail(
     return out
 
 
-def _local_tail_cap(spark: SparkSession) -> int:
-    """Default alive-edge gate for truss_decomposition's sequential
-    tail peel, derived from driver heap the way _broadcast_edge_cap
-    is: the local peel's Python dict/heap state costs ~300 B/edge
-    (measured ~0.3 GB at 1M edges), the gate budgets 3% of heap, and
-    the result is clamped to [100k, 1M] — the 1M ceiling is the
-    MEASURED wall-clock crossover on this host (VERDICT r13 #6:
-    ~10-17 us/edge single-threaded vs 3 distributed jobs per tail
-    round), past which collecting more stops paying even with the
-    memory to spare. A 1g driver lands at ~107k instead of inheriting
-    a constant sized for the 48g stress harness."""
-    heap = _driver_heap_bytes(spark)
-    return min(1_000_000, max(100_000, int(heap * 0.03) // 300))
-
-
 def truss_decomposition(
     edges: DataFrame,
     local_tail_edges: int | None = None,
@@ -3254,7 +3480,7 @@ def truss_decomposition(
     rounds, and every round skipped in the 1M→200k window was pure
     overhead under the old 200k gate. Memory stays modest (~0.3 GB of
     dict/heap state at 1M edges), and since round 15 the DEFAULT gate
-    is derived from the configured driver heap (_local_tail_cap —
+    is derived from the configured driver heap (_local_cap —
     clamped to the measured 1M crossover ceiling) instead of assuming
     the stress harness's heap; the knob still overrides, and 0 forces
     every round distributed. Triangle-free edges short-circuit to
@@ -3271,10 +3497,10 @@ def truss_decomposition(
     t_start = _time.time()
     spark = edges.sparkSession
     if local_tail_edges is None:
-        # Heap-derived default (see _local_tail_cap): constrained
+        # Heap-derived default (see _local_cap): constrained
         # drivers get a proportionally smaller collect gate without
         # touching the knob; 0 still forces every round distributed.
-        local_tail_edges = _local_tail_cap(spark)
+        local_tail_edges = _local_cap(spark)
     e = (
         edges.select(
             F.least(F.col("src"), F.col("dst")).alias("a"),

@@ -23,3 +23,32 @@ def rows(df, *cols):
     if cols:
         df = df.select(*cols)
     return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def force_distributed_tier(mp: pytest.MonkeyPatch) -> None:
+    """Send every non-empty graph to the graph operators' distributed
+    loops: a local-tier edge cap of 0 fails the size probe."""
+    from panditya_spark.operators import graph
+
+    mp.setattr(graph, "_local_cap", lambda spark: 0)
+
+
+@pytest.fixture()
+def distributed_tier(monkeypatch):
+    """Run the whole test on the graph operators' distributed tier."""
+    force_distributed_tier(monkeypatch)
+
+
+@pytest.fixture()
+def graph_tiers(monkeypatch):
+    """Run one test body on both graph tiers: ``for tier in
+    graph_tiers():`` yields "local", then "distributed" with the
+    distributed tier forced until the test ends. Looping inside the
+    test keeps its id unchanged."""
+
+    def tiers():
+        yield "local"
+        force_distributed_tier(monkeypatch)
+        yield "distributed"
+
+    return tiers

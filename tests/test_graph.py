@@ -7,6 +7,8 @@ visited nodes), undirected expansion."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from panditya_spark.operators.graph import (
@@ -17,7 +19,7 @@ from panditya_spark.operators.graph import (
     pagerank,
     undirected,
 )
-from tests.conftest import rows
+from tests.conftest import force_distributed_tier, rows
 
 
 @pytest.fixture()
@@ -94,15 +96,28 @@ def test_bfs_exclusion_included_not_expanded(spark, chain_graph):
     assert rows(edges, "src", "dst") == [("a", "b")]
 
 
-def test_connected_components(spark, chain_graph):
-    comp = dict(rows(connected_components(chain_graph), "node", "component"))
-    assert comp == {
-        "a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "f": "f", "g": "f",
-    }
-    # partition property: every edge endpoint shares a component
-    e = chain_graph.collect()
-    for r in e:
-        assert comp[r.src] == comp[r.dst]
+def test_connected_components(spark, chain_graph, graph_tiers):
+    for tier in graph_tiers():
+        comp = dict(rows(connected_components(chain_graph), "node", "component"))
+        assert comp == {
+            "a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "f": "f", "g": "f",
+        }, tier
+        # partition property: every edge endpoint shares a component
+        e = chain_graph.collect()
+        for r in e:
+            assert comp[r.src] == comp[r.dst]
+
+
+def test_connected_components_raises_on_exhausted_nonfixpoint(spark, distributed_tier):
+    """A 10-node path needs several hash-to-min rounds: one round must
+    raise instead of returning unconverged labels."""
+    e = spark.createDataFrame(
+        [(f"p{i}", f"p{i + 1}") for i in range(9)], "src string, dst string"
+    )
+    with pytest.raises(ValueError, match="did not reach a fixpoint"):
+        connected_components(e, max_iter=1)
+    got = dict(rows(connected_components(e), "node", "component"))
+    assert got == {f"p{i}": "p0" for i in range(10)}
 
 
 def test_degrees(spark, chain_graph):
@@ -133,13 +148,34 @@ def test_undirected_dedup(spark):
     assert rows(undirected(df)) == [("a", "b"), ("b", "a")]
 
 
-def test_pagerank_mass_conservation(spark, chain_graph):
-    pr = pagerank(chain_graph, iters=10)
-    total = pr.agg(F.sum("rank")).first()[0]
-    n = 7
-    assert abs(total - n) < 1e-6  # ranks sum to n with dangling handling
-    ranks = dict(rows(pr, "node", "rank"))
-    assert ranks["b"] > ranks["a"]  # b has in-links, a has none
+def test_pagerank_mass_conservation(spark, chain_graph, graph_tiers):
+    for tier in graph_tiers():
+        pr = pagerank(chain_graph, iters=10)
+        total = pr.agg(F.sum("rank")).first()[0]
+        n = 7
+        assert abs(total - n) < 1e-6, tier  # ranks sum to n with dangling handling
+        ranks = dict(rows(pr, "node", "rank"))
+        assert ranks["b"] > ranks["a"]  # b has in-links, a has none
+
+
+def test_label_propagation_hand_values(spark, graph_tiers):
+    """Triangle a-b-c with d hanging off c. Round 1: a, b and c see a
+    three-way tie and take the smallest label, a; d ties its own label
+    with c's and takes c. Round 2 pulls d into a. With d left out of
+    `vertices` its edge stops counting, and the isolated vertex e keeps
+    its own label."""
+    from panditya_spark.operators.graph import label_propagation
+
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
+        "src string, dst string",
+    )
+    v = spark.createDataFrame([("a",), ("b",), ("c",), ("e",)], "id string")
+    for tier in graph_tiers():
+        lpa = lambda **kw: dict(rows(label_propagation(e, **kw)))  # noqa: E731
+        assert lpa(max_iter=1) == {"a": "a", "b": "a", "c": "a", "d": "c"}, tier
+        assert lpa(max_iter=5) == dict.fromkeys("abcd", "a"), tier
+        assert lpa(max_iter=5, vertices=v) == {"a": "a", "b": "a", "c": "a", "e": "e"}, tier
 
 
 def test_betweenness_broadcast_hand_values(spark):
@@ -331,7 +367,7 @@ def test_louvain_recovers_planted_cliques(spark):
     ]
 
 
-def test_louvain_beats_lpa_modularity(spark):
+def test_louvain_beats_lpa_modularity(spark, graph_tiers):
     """The real Louvain must reach at least the LPA substitute's Q on
     the reference-shaped key-chain forest (measured: 0.954 vs 0.917 —
     the same Q python-louvain attains in the reference)."""
@@ -344,9 +380,10 @@ def test_louvain_beats_lpa_modularity(spark):
 
     edges = key_chain_edges(spark, "/root/testdata/sf0.001")
     q_louvain = modularity(edges, louvain(edges, max_levels=3, max_rounds=8))
-    q_lpa = modularity(edges, label_propagation(edges, max_iter=4))
-    assert q_louvain >= q_lpa
     assert q_louvain > 0.9
+    for tier in graph_tiers():
+        q_lpa = modularity(edges, label_propagation(edges, max_iter=4))
+        assert q_louvain >= q_lpa, tier
 
 
 def _scc_brute(edges):
@@ -368,7 +405,7 @@ def _scc_brute(edges):
     return out
 
 
-def test_scc_cycle_and_dag(spark):
+def test_scc_cycle_and_dag(spark, graph_tiers):
     """A 4-cycle collapses to one SCC (min-id labeled); a pure chain is
     all singletons; a node off the cycle stays singleton."""
     from panditya_spark.operators.graph import strongly_connected_components
@@ -377,12 +414,13 @@ def test_scc_cycle_and_dag(spark):
              ("a", "b"),                                        # into the cycle
              ("e", "f"), ("f", "g")]                            # chain out
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["scc"] for r in strongly_connected_components(df).collect()}
-    assert got == {"a": "a", "b": "b", "c": "b", "d": "b", "e": "b",
-                   "f": "f", "g": "g"}
+    for tier in graph_tiers():
+        got = {r["node"]: r["scc"] for r in strongly_connected_components(df).collect()}
+        assert got == {"a": "a", "b": "b", "c": "b", "d": "b", "e": "b",
+                       "f": "f", "g": "g"}, tier
 
 
-def test_scc_two_cores_linked(spark):
+def test_scc_two_cores_linked(spark, graph_tiers):
     """Two disjoint cycles joined by a path: two SCCs plus singleton
     bridge nodes — exercises the FW-BW split and the weak-CC
     pre-partitioning in one graph, plus a second weak component."""
@@ -393,14 +431,19 @@ def test_scc_two_cores_linked(spark):
              ("x", "y"), ("y", "z"), ("z", "x"),      # core 2
              ("p", "q"), ("q", "p")]                  # separate weak comp
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["scc"] for r in strongly_connected_components(df).collect()}
-    assert got == {"a": "a", "b": "a", "m": "m",
-                   "x": "x", "y": "x", "z": "x",
-                   "p": "p", "q": "p"}
+    for tier in graph_tiers():
+        got = {r["node"]: r["scc"] for r in strongly_connected_components(df).collect()}
+        assert got == {"a": "a", "b": "a", "m": "m",
+                       "x": "x", "y": "x", "z": "x",
+                       "p": "p", "q": "p"}, tier
 
 
-def test_scc_long_cycle_converges_or_raises(spark):
-    """The propagation bound is a DIAMETER cap with a loud contract:
+def test_scc_long_cycle_converges_or_raises(spark, monkeypatch):
+    """The local tier resolves a 50-node directed cycle to one SCC
+    whatever max_inner is: the bound applies to the distributed loop
+    only, which the rest of the test pins.
+
+    The propagation bound is a DIAMETER cap with a loud contract:
     a 50-node directed cycle (one SCC; the min label needs one round
     per hop, and pointer jumping provably cannot accelerate directed
     reachability labels — see the operator's in-loop NOTE) must raise
@@ -416,16 +459,23 @@ def test_scc_long_cycle_converges_or_raises(spark):
     n = 50
     edges = [(f"c{i:02d}", f"c{(i + 1) % n:02d}") for i in range(n)]
     df = spark.createDataFrame(edges, ["src", "dst"])
+    one_scc = {f"c{i:02d}": "c00" for i in range(n)}
+    got = {
+        r["node"]: r["scc"]
+        for r in strongly_connected_components(df, max_inner=40).collect()
+    }
+    assert got == one_scc
+    force_distributed_tier(monkeypatch)
     with pytest.raises(ValueError, match="did not converge"):
         strongly_connected_components(df, max_inner=40).collect()
     got = {
         r["node"]: r["scc"]
         for r in strongly_connected_components(df, max_inner=60).collect()
     }
-    assert got == {f"c{i:02d}": "c00" for i in range(n)}
+    assert got == one_scc
 
 
-def test_scc_matches_bruteforce_random(spark):
+def test_scc_matches_bruteforce_random(spark, graph_tiers):
     """Deterministic pseudo-random digraphs vs a transitive-closure
     reference — catches split/classification bugs structure tests
     miss."""
@@ -434,16 +484,66 @@ def test_scc_matches_bruteforce_random(spark):
     from panditya_spark.operators.graph import strongly_connected_components
 
     rng = random.Random(1234)
-    for trial in range(3):
-        n = 14
-        nodes = [f"n{i:02d}" for i in range(n)]
+    nodes = [f"n{i:02d}" for i in range(14)]
+    graphs = []
+    for _ in range(3):
         edges = sorted({
             (rng.choice(nodes), rng.choice(nodes)) for _ in range(30)
         })
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, ["src", "dst"])
-        got = {r["node"]: r["scc"] for r in strongly_connected_components(df).collect()}
-        assert got == _scc_brute(edges), (trial, edges)
+        graphs.append([(a, b) for a, b in edges if a != b])
+    for tier in graph_tiers():
+        for edges in graphs:
+            df = spark.createDataFrame(edges, ["src", "dst"])
+            got = {r["node"]: r["scc"] for r in strongly_connected_components(df).collect()}
+            assert got == _scc_brute(edges), (tier, edges)
+
+
+@st.composite
+def _small_digraph(draw):
+    """Up to 14 edges over 7 ids, self-loops and duplicates allowed, and
+    a vertex list (or None) that may omit endpoints and add isolated
+    ids."""
+    ids = [f"v{i}" for i in range(9)]
+    edge = st.tuples(st.sampled_from(ids[:7]), st.sampled_from(ids[:7]))
+    edges = draw(st.lists(edge, min_size=1, max_size=14))
+    vertices = draw(st.none() | st.lists(st.sampled_from(ids), min_size=1, unique=True))
+    return edges, vertices
+
+
+@settings(max_examples=6, deadline=None)
+@given(_small_digraph())
+def test_graph_tiers_agree(spark, graph):
+    """The local and distributed tiers of CC, SCC and LPA return the
+    same rows; PageRank agrees within the benchmark oracle's relative
+    tolerance of 1e-9."""
+    import math
+
+    from panditya_spark.operators.graph import (
+        label_propagation,
+        strongly_connected_components,
+    )
+
+    edges, vertices = graph
+    e = spark.createDataFrame(edges, "src string, dst string")
+    v = None if vertices is None else spark.createDataFrame([(x,) for x in vertices], "id string")
+
+    def run():
+        return (
+            dict(rows(connected_components(e, vertices=v))),
+            dict(rows(strongly_connected_components(e))),
+            dict(rows(label_propagation(e, max_iter=3, vertices=v))),
+            dict(rows(pagerank(e, iters=3, vertices=v))),
+        )
+
+    local = run()
+    with pytest.MonkeyPatch.context() as mp:
+        force_distributed_tier(mp)
+        distributed = run()
+    assert local[:3] == distributed[:3], graph
+    pr_local, pr_dist = local[3], distributed[3]
+    assert pr_local.keys() == pr_dist.keys(), graph
+    for node, r in pr_local.items():
+        assert math.isclose(r, pr_dist[node], rel_tol=1e-9), (graph, node)
 
 
 def test_personalized_pagerank_proximity_and_mass(spark):
@@ -1173,4 +1273,4 @@ def test_heap_derived_caps(mem, edge_cap, tail_cap):
 
     spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: mem))
     assert G._broadcast_edge_cap(spark) == edge_cap
-    assert G._local_tail_cap(spark) == tail_cap
+    assert G._local_cap(spark) == tail_cap
