@@ -16,7 +16,8 @@ share one string or integer type, and the result has at most
 _LOCAL_MAX_ROWS rows, a pure-Python kernel with the distributed loop's
 exact semantics runs on the driver and its rows come back through
 relational.literal_frame. Otherwise the distributed loop runs.
-truss_decomposition finishes its peel on the driver under the same cap.
+The truss peel of ktruss and truss_decomposition finishes on the driver
+under the same cap.
 
 Semantics replicated from the reference:
 - k-hop BFS (grapher.py:25-94): undirected expansion from a seed set;
@@ -33,7 +34,7 @@ Semantics replicated from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as _W
 
@@ -80,6 +81,10 @@ def _source_file_bytes(df: DataFrame) -> int | None:
     return total if total > 0 else None
 
 
+# Decompressed loop input per reduce partition in _loop_shuffle_scope.
+_LOOP_SHUFFLE_TARGET_MB = 8
+
+
 def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
     """Volume-derived shuffle partitioning for an iterative loop
     (guide §2.2: size partitions by data, never by core count).
@@ -107,12 +112,9 @@ def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
     (its propagation aggregate is CPU-bound at ~2x|E| rows/round), so
     the SCC loop deliberately does not use this scope.
 
-    Local default target 8 MB of (decompressed) loop input per reduce
-    partition — env-tunable; a production deployment over TB-scale
-    loops would raise PANDITYA_LOOP_SHUFFLE_TARGET_MB toward the
-    64-256 MB advisory range of guide §2.2/§9, but the clamp to the
-    session ceiling already dominates there."""
-    import os
+    The target is _LOOP_SHUFFLE_TARGET_MB of (decompressed) loop input
+    per reduce partition. At TB-scale loops the clamp to the session
+    ceiling dominates it."""
     from contextlib import contextmanager
 
     @contextmanager
@@ -126,14 +128,10 @@ def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
         if est_bytes is None:
             yield
             return
-        target_mb = int(os.environ.get("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "8"))
-        if target_mb <= 0:  # 0 disables the scope (A/B escape hatch)
-            yield
-            return
         # Parquet zstd/snappy on these string-keyed tables decompresses
         # ~3x; the estimate feeds a clamp, so precision is not load-bearing.
         est = est_bytes * 3
-        parts = max(1, min(cur, -(-est // (target_mb << 20))))
+        parts = max(1, min(cur, -(-est // (_LOOP_SHUFFLE_TARGET_MB << 20))))
         if parts >= cur:
             yield
             return
@@ -305,8 +303,6 @@ class _LoopState:
         AQE, an extra job per round; CollectMetrics adds neither (no
         exchange, no job — measured: probe delivery < 1 ms after the
         checkpoint job)."""
-        from pyspark.sql import Observation
-
         agg_expr = (
             probe if probe is not None else F.max(F.col(flag_col))
         ).alias("probe")
@@ -498,7 +494,7 @@ _LOCAL_ID_TYPES = frozenset({"string", "int", "bigint"})
 
 def _local_cap(spark: SparkSession) -> int:
     """Edge cap of the driver-side tiers (the local graph kernels and
-    truss_decomposition's tail peel), derived from driver heap the way
+    the truss peel's tail), derived from driver heap the way
     _broadcast_edge_cap is: Python dict/heap state costs ~300 B/edge
     (measured ~0.3 GB at 1M edges), the gate budgets 3% of heap, and
     the result is clamped to [100k, 1M]. The 1M ceiling is the
@@ -1085,9 +1081,6 @@ def label_propagation(
     return labels
 
 
-_LOUVAIN_VERBOSE = False
-
-
 def louvain(
     edges: DataFrame,
     max_levels: int = 4,
@@ -1259,16 +1252,6 @@ def louvain(
                 )
             )
             moved = not labels.filter("changed").isEmpty()
-            if _LOUVAIN_VERBOSE:
-                import sys as _sys
-                import time as _time
-
-                print(
-                    f"louvain level round {rnd}: moved="
-                    f"{labels.filter('changed').count()} t={_time.time():.1f}",
-                    file=_sys.stderr,
-                    flush=True,
-                )
             labels = labels.select("node", "comm")
             idle = 0 if moved else idle + 1
             if idle >= 2:  # full direction cycle with no move
@@ -1290,16 +1273,6 @@ def louvain(
 
         n_nodes = k.count()
         n_comms = labels.select("comm").distinct().count()
-        if _LOUVAIN_VERBOSE:
-            import sys as _sys
-            import time as _time
-
-            print(
-                f"louvain level {_level}: {n_nodes} nodes -> {n_comms} comms "
-                f"t={_time.time():.1f}",
-                file=_sys.stderr,
-                flush=True,
-            )
         if n_comms == n_nodes:
             state.finish()
             break
@@ -1767,40 +1740,12 @@ def pagerank(
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle participation counts via the ordered-join
-    method: canonicalize each undirected edge to (a < b), join
-    edge(a,b) ⋈ edge(b,c) into wedges (a < b < c by construction),
-    close each wedge against edge(a,c). Every triangle is enumerated
-    exactly once; each member node is credited once.
-
-    Scale shape: two equi-joins on the edge table — the standard
-    distributed triangle plan. The classic refinement (orienting edges
-    by degree so wedge fan-out is bounded by the LOW-degree endpoint)
-    drops in by replacing the (a < b) canonical order with a
-    (degree, id) order; id order is kept here because the co-purchase
-    graph is degree-flat and the oracle must replay the same order.
-    Returns (node, n_triangles), nodes in ≥1 triangle."""
-    e = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("a"),
-            F.greatest(F.col("src"), F.col("dst")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    ab = e
-    bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = e.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
-    tri = (
-        ab.join(bc, "b")
-        .join(
-            ac,
-            (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")),
-            "left_semi",
-        )
-    )
+    """Per-node triangle participation counts: every triangle of
+    triangle_list credits each of its three members once. Returns
+    (node, n_triangles), nodes in at least one triangle."""
+    tri = triangle_list(_canonical_edges(edges))
     return (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
+        tri.select(F.explode(F.array("ta", "tb", "tc")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
@@ -1881,11 +1826,8 @@ def strongly_connected_components(
     local = _local_graph(edges, cols=(src, dst))
     if local is not None:
         pairs, nodes, t = local
-        # The distributed loop's scc column is a string for string ids
-        # and a bigint for integer ids.
-        scc_t = "string" if t == "string" else "bigint"
         return literal_frame(
-            edges.sparkSession, _scc_local(pairs, nodes), f"node {t}, scc {scc_t}"
+            edges.sparkSession, _scc_local(pairs, nodes), f"node {t}, scc {t}"
         )
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
@@ -1896,8 +1838,6 @@ def strongly_connected_components(
     # trim's first layer (deg0 is exactly the flag frame that layer
     # would recompute over the same union) — one shuffle job instead
     # of a distinct-nodes job plus a flags job.
-    from pyspark.sql import Observation
-
     obs_deg0 = Observation()
     deg0 = (
         e.select(F.col("src").alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i"))
@@ -1927,7 +1867,9 @@ def strongly_connected_components(
     # round, so the former eager round_end here paid one full-frame
     # materialization job for nothing (r16 trim fusion, guide §1.2).
     labels = deg0.select(
-        "node", F.lit("0").alias("part"), F.lit(None).cast("string").alias("scc")
+        "node",
+        F.lit("0").alias("part"),
+        F.lit(None).cast(deg0.schema["node"].dataType).alias("scc"),
     )
     state = _LoopState()
     # Every node starts unsettled; an empty graph starts the loop with
@@ -2216,8 +2158,6 @@ def strongly_connected_components(
                 # blowup distributed SCC avoids by design. Rounds are
                 # therefore a DIAMETER bound, with the loud raise
                 # below instead of silent truncation.
-                from pyspark.sql import Observation
-
                 obs = Observation()
                 lab = (
                     lab.select("node", "dir", "val", F.lit(True).alias("is_old"))
@@ -2647,370 +2587,131 @@ def _driver_heap_bytes(spark: SparkSession) -> int:
 
 
 def _broadcast_edge_cap(spark: SparkSession) -> int:
-    """Max canonical-edge count the k-truss close may broadcast,
-    derived from the session's driver heap: a hashed (v, w) two-long
-    relation costs ~48 B/edge (UnsafeRow + map overhead) and the gate
-    budgets 10% of heap, so the cap scales with the memory actually
-    configured instead of assuming the 48g stress harness (a 1g
-    driver, the fallback for unparseable memory, caps at ~2.2M
-    edges)."""
+    """Max canonical-edge count a broadcast may carry, derived from the
+    session's driver heap: a hashed (v, w) two-long relation costs
+    ~48 B/edge and the gate budgets 10% of heap (a 1g driver, the
+    fallback for unparseable memory, caps at ~2.2M edges)."""
     heap = _driver_heap_bytes(spark)
     return max(1_000_000, int(heap * 0.10) // 48)
 
 
 # Below this edge count the broadcast close beats the bloom close's
-# extra stages; above it the bloom's compact words table (cache-local
-# probes + ~95% map-side pruning) wins even where the closing set
-# STILL fits the broadcast budget. Round-15 same-session A/B of all
-# five strategies AFTER the survivor-barrier fix (identical triangle
-# counts, keyed entries in .stress/ab_close.json, clean HEAD
-# 57c4d13): at 116k edges broadcast 2.4s vs best bloom 4.2s; at 1.2M
-# edges bloom-b4 4.4s / bloom-b16 5.7s vs broadcast 10.5s (ladder
-# 13.5s); at 12M edges bloom-b16 23.5s vs broadcast 59.2s vs
-# bloom-b4 142.7s vs shuffle-probe 188.6s vs ladder-B3 213.5s. (The
-# pre-fix A/B had the shuffle probe winning the 12M row at 30.3s —
-# an artifact of the pushdown bug making BOTH probes pay a full
-# wedge exchange; with the broadcast probe exchanging only pruned
-# survivors, the shuffle probe's inherent full-wedge exchange loses
-# 8x.) On a real cluster the same threshold is also the network
-# argument: a broadcast ships the closing set to EVERY executor
-# (n x executors), the bloom path exchanges O(n + survivors) once.
+# extra stages; above it the bloom's compact words table wins even where
+# the closing set still fits the broadcast cap (.stress/ab_close.json:
+# 116k edges broadcast 2.4 s vs bloom 4.2 s; 1.2M edges bloom 4.4 s vs
+# broadcast 10.5 s).
 _BLOOM_MIN_EDGES = 500_000
-
-# The SHUFFLE word probe pays the one full-wedge exchange the
-# broadcast probe avoids entirely, so it is ONLY the last-resort
-# tier past 16x the broadcast cap, where the words table itself no
-# longer fits one broadcast (the post-fix 12M A/B row: shuffle
-# 188.6s vs broadcast-probed b16 23.5s — the pre-fix promotion of
-# the shuffle probe above 8M edges measured two equally-handicapped
-# plans and is withdrawn). Bits stay at the 4-bit floor there: past
-# 16x the cap the heap budget allows nothing more.
-
-# The shuffle probe's one wedge exchange MUST fit local scratch,
-# which the broadcast probe never touches: the first r15 sf10
-# attempt picked the shuffle probe at 120M edges and died with
-# [No space left on device] — the wedge exchange extrapolates to
-# ~100 GB there (measured ~830 B/edge at 12M: 9.9 GB shuffle write
-# per run, .stress/ab_close.json) against 78 GB free. The strategy
-# requires a measured scratch-free figure and budgets 2 KB/edge
-# (~2.5x the measured rate) before preferring the exchange-paying
-# tier; callers pass _scratch_free_bytes(spark). On a real cluster
-# the same guard holds per-executor: scratch scales with the fleet,
-# so the budget passes exactly where the exchange is actually safe.
-_WEDGE_EXCHANGE_BYTES_PER_EDGE = 2048
-
-
-def _scratch_free_bytes(spark: SparkSession) -> int | None:
-    """Free bytes on the filesystem backing Spark's local scratch
-    (first spark.local.dir entry; Spark's default is the system tmp
-    dir). On a multi-dir scratch config this UNDERCOUNTS available
-    scratch — deliberately conservative: the budget may force the
-    ladder where the exchange would fit, never the reverse (r15
-    VERDICT note). None when unreadable — callers treat that as
-    'unknown', and _close_strategy then never prefers an
-    exchange-paying tier over a broadcast-probe one."""
-    import shutil
-
-    try:
-        local = (
-            spark.conf.get("spark.local.dir", None)
-            or spark.sparkContext.getConf().get("spark.local.dir", None)
-            or "/tmp"
-        )
-        return shutil.disk_usage(local.split(",")[0]).free
-    except Exception:  # noqa: BLE001 — unknown beats a wrong number
-        return None
 
 
 def _close_strategy(
-    n_edges: int,
-    cap: int,
-    prefer_broadcast_in_cap: bool = False,
-    scratch_free_bytes: int | None = None,
-) -> tuple[str, int, int]:
-    """Pick the closing-edge probe strategy for the triangle build,
-    given the canonical edge count and the broadcast cap (both in
-    edges). Returns (strategy, close_buckets, bloom_bits_per_edge).
+    n_edges: int, cap: int, prefer_broadcast_in_cap: bool = False
+) -> tuple[str, int]:
+    """Pick triangle_list's close from the canonical edge count and the
+    broadcast cap (both in edges). Returns (strategy, bloom bits per
+    edge).
 
-    - ``broadcast`` (n <= min(cap, _BLOOM_MIN_EDGES)): the closing set
-      broadcasts whole; the wedge side never hits an exchange. The
-      fast path for SMALL graphs — measured above ~1M edges the bloom
-      close beats it even in-cap (see _BLOOM_MIN_EDGES).
-      ``prefer_broadcast_in_cap=True`` keeps the broadcast close for
-      the WHOLE in-cap range — the knob for loop-heavy callers whose
-      round state competes with the bloom's pinned blocks in executor
-      storage (truss_decomposition's measured regression, 333 -> 413s
-      sf1); encoding it here rather than at call sites keeps future
-      callers from silently inheriting the wrong default.
-    - ``bloom`` (to 16*cap): introduced in round 14 as the above-cap
-      replacement for the bucket ladder, promoted to the default for
-      every non-small graph by the same round's A/B — a relational
-      BLOCKED bloom filter over the composite (v, w) closing key
-      prunes the ~21/22 of wedges that close nothing map-side, then
-      ONE ordinary co-partitioned shuffle semi join settles exactness.
-      Broadcast payload is the packed bitmap-words table: n*bits/64
-      rows vs the closing set's n, so the same heap budget reaches
-      16x further (bits floors at 4). bits = 64*cap/n clamped to
-      [4, 16]: in-cap and just above it the bloom gets 16 bits/edge
-      (fpr ~0.5%); at 16x the cap it degrades gracefully to 4
-      bits/edge (fpr ~15% — still a ~5x wedge-exchange cut on a 22:1
-      wedge:triangle graph). Since round 15 the filter is BLOCKED
-      (one word per key, all k=3 bits inside it — see triangle_list),
-      so exactly ONE hashed words relation is live during the probe:
-      the sizing needs no k-way concurrency discount.
-    - ``bloom_shuffle`` (ONLY n > 16*cap — the regime where the
-      words table itself outgrows one broadcast; the short-lived r15
-      promotion of this tier above 8M edges in-cap measured two
-      plans equally handicapped by the pushdown bug and is
-      withdrawn — post-fix the broadcast probe wins the 12M A/B row
-      8x because it never exchanges the wedge set at all): the same
-      4-bit blocked bitmap, probed via a co-partitioned shuffle hash
-      join on the word index instead of a broadcast. The words table
-      is n/16 rows (16x smaller than the closing set) and the wedge
-      side exchanges ONCE on the word index — which it computes for
-      the bit test anyway — then the pruned survivors settle
-      exactness through the usual semi join. Linear in |E|: this
-      removes the O(|E|*B) bucket-ladder re-enumeration from the
-      default plan space entirely.
-    - ``bucketed``: the pre-round-15 last resort, kept ONLY behind
-      ``PANDITYA_TRIANGLE_LADDER=1`` (for A/B provenance): hash-split
-      the closing set into cap-sized broadcast chunks, one wedge
-      re-enumeration per chunk — exact, but CPU grows O(|E|*B) with
-      the chunk count, the super-linear shape the sf10 probe measured
-      as a 17.8x decade ratio before the bloom close replaced it.
-    """
-    import os
+    - ``broadcast`` up to min(cap, _BLOOM_MIN_EDGES), or up to the whole
+      cap with ``prefer_broadcast_in_cap``: the closing edge set
+      broadcasts into the semi probe.
+    - ``bloom`` up to 16*cap: the blocked bloom filter's words table
+      broadcasts instead, at 64*cap/n bits per edge clamped to [4, 16],
+      so the same heap budget reaches 16x further.
 
-    # The shuffle probe pays one wedge exchange the broadcast probe
-    # never does; prefer it ONLY when that exchange measurably fits
-    # local scratch (see _WEDGE_EXCHANGE_BYTES_PER_EDGE — the first
-    # r15 sf10 run died on disk without this guard). Unknown scratch
-    # (None) fails the guard wherever a broadcast-probe tier exists.
-    shuffle_fits = (
-        scratch_free_bytes is not None
-        and n_edges * _WEDGE_EXCHANGE_BYTES_PER_EDGE <= scratch_free_bytes
-    )
+    Past 16*cap even the 4-bit words table overruns the budget, and the
+    close raises ValueError."""
     if n_edges <= min(cap, _BLOOM_MIN_EDGES) or (
         prefer_broadcast_in_cap and n_edges <= cap
     ):
-        return ("broadcast", 1, 0)
+        return "broadcast", 0
     if n_edges <= 16 * cap:
-        return ("bloom", 1, min(16, max(4, (64 * cap) // max(n_edges, 1))))
-    if os.environ.get("PANDITYA_TRIANGLE_LADDER") == "1":
-        return ("bucketed", -(-n_edges // cap), 0)
-    if scratch_free_bytes is not None and not shuffle_fits:
-        # Past 16x the cap the only exchange-free alternative is the
-        # ladder: super-linear CPU, but it completes where the wedge
-        # exchange provably cannot fit. Reached only with a MEASURED
-        # scratch shortfall, never on unknown.
-        return ("bucketed", -(-n_edges // cap), 0)
-    return ("bloom_shuffle", 1, 4)
-
-
-def _close_kwargs(strat: str, buckets: int, bits: int) -> dict:
-    """Map a _close_strategy tuple onto triangle_list/_incidence
-    keyword arguments — one place instead of four call sites."""
-    return dict(
-        broadcast_close=strat == "broadcast",
-        close_buckets=buckets,
-        bloom_close=strat in ("bloom", "bloom_shuffle"),
-        bloom_probe="shuffle" if strat == "bloom_shuffle" else "broadcast",
-        bloom_bits=bits,
+        return "bloom", min(16, max(4, (64 * cap) // n_edges))
+    raise ValueError(
+        f"triangle_list: {n_edges:,} canonical edges exceed 16x the "
+        f"{cap:,}-edge broadcast cap derived from the driver heap; "
+        "raise spark.driver.memory"
     )
 
 
-def triangle_incidence(
-    e: DataFrame,
-    broadcast_close: bool = False,
-    close_buckets: int = 1,
-    bloom_close: bool = False,
-    bloom_bits: int = 16,
-    bloom_probe: str = "broadcast",
-    n_edges: int | None = None,
-) -> DataFrame:
-    """Triangle→edge incidence table over canonical edges (a < b):
-    enumerate each triangle once, explode it into 3 rows, one per
-    member edge. Columns: ``tri`` (a compact per-run triangle id —
-    see below), (ea, eb) one of its canonical edges. Exposed at module
-    level so scripts/explain_audit.py can gate the per-round join
-    shape of k-truss.
-
-    Enumeration is DEGREE-ORDERED (compact-forward — Latapy 2008, the
-    orientation triangle_counts' docstring names): each undirected
-    edge is oriented from its (degree, id)-smaller endpoint to the
-    larger, wedges are pairs of out-edges sharing a source, and the
-    closing edge is a LEFT-SEMI probe (never a cartesian product).
-    Versus the id-ordered wedge join this bounds per-vertex wedge
-    fan-out by the SMALLER endpoint's degree (out-degrees under this
-    orientation are O(sqrt(m))), which is what keeps the one-time
-    incidence build's shuffle volume from exploding on skewed degree
-    distributions. Output content is IDENTICAL either way (the
-    triangle SET doesn't depend on enumeration order); the two degree
-    joins the orientation costs are node-sized, one shuffle each.
-
-    ``broadcast_close=True`` broadcasts the (v, w) closing-edge set
-    into the semi probe instead of shuffling the WEDGE side. Wedges
-    outnumber triangles heavily (measured on the sf0.1 co-purchase
-    graph: 41.1M wedges vs 1.88M triangles, 21.8:1 — the wedge
-    exchange was the bulk of the r12-measured 14.4 GB sf1 k-truss
-    shuffle), so eliminating that exchange is the dominant build
-    saving; callers size-gate it on the EDGE count (the broadcast
-    payload), not the wedge count — see ktruss. The wedge rows then
-    stream map-side from the wedge join straight through the probe.
-
-    ``tri`` is ``monotonically_increasing_id`` assigned to the
-    pre-explode triangle frame: 1 long instead of the 3 triangle-vertex
-    longs on every incidence row, cutting the bytes of the two static
-    incidence shuffles and every per-round hit/expansion frame by
-    ~40%. The id is only unique WITHIN one materialization — callers
-    that reuse the incidence across actions must pin it first
-    (ktruss eager-checkpoints it once, which is also what makes the
-    id stable for the whole peel)."""
-    tri = triangle_list(
-        e,
-        broadcast_close=broadcast_close,
-        close_buckets=close_buckets,
-        bloom_close=bloom_close,
-        bloom_bits=bloom_bits,
-        bloom_probe=bloom_probe,
-        n_edges=n_edges,
-    ).select(F.array("ta", "tb", "tc").alias("t"))
-    # Id assigned on the PRE-explode frame (its own select), so the 3
-    # incidence rows of one triangle replicate a single id.
-    tri = tri.select(F.monotonically_increasing_id().alias("tri"), "t")
-    return tri.select(
-        "tri",
-        F.explode(_tri_edge_structs(F.col("t"))).alias("ed"),
-    ).select("tri", F.col("ed.ea").alias("ea"), F.col("ed.eb").alias("eb"))
+def _canonical_edges(edges: DataFrame) -> DataFrame:
+    """The simple undirected graph of ``edges(src, dst)`` as canonical
+    edges (a, b) with a < b: self-loops dropped, duplicates merged."""
+    return (
+        edges.select(
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
 
 
-def _tri_edge_structs(t):
-    """The 3 canonical member edges of a sorted triangle array, as an
-    array of (ea, eb) structs — shared by the incidence explode above
-    and the decomposition's per-round recount."""
-    return F.array(
-        F.struct(t[0].alias("ea"), t[1].alias("eb")),
-        F.struct(t[1].alias("ea"), t[2].alias("eb")),
-        F.struct(t[0].alias("ea"), t[2].alias("eb")),
+def _edge_support(tri: DataFrame, name: str = "support") -> DataFrame:
+    """(ea, eb, ``name``): how many triangles of ``tri`` (ta, tb, tc)
+    hold each canonical edge. The exploded member edges stream into a
+    map-side-combined groupBy, so the exchange is edge-sized."""
+    t = [F.col("ta"), F.col("tb"), F.col("tc")]
+    members = F.array(
+        *(
+            F.struct(t[i].alias("ea"), t[j].alias("eb"))
+            for i, j in ((0, 1), (1, 2), (0, 2))
+        )
+    )
+    return (
+        tri.select(F.explode(members).alias("ed"))
+        .groupBy(F.col("ed.ea").alias("ea"), F.col("ed.eb").alias("eb"))
+        .agg(F.count(F.lit(1)).alias(name))
     )
 
 
 def triangle_list(
     e: DataFrame,
-    broadcast_close: bool = False,
-    close_buckets: int = 1,
-    bloom_close: bool = False,
-    bloom_bits: int = 16,
-    bloom_probe: str = "broadcast",
     n_edges: int | None = None,
+    prefer_broadcast_in_cap: bool = False,
     probe_plan_only: bool = False,
 ) -> DataFrame:
-    """Triangle LIST over canonical edges (a < b): one row per
-    triangle, columns (ta, tb, tc) with ta < tb < tc — the pre-explode
-    form of triangle_incidence (which derives from this). 3x fewer
-    rows than the incidence form; the decomposition loop keeps THIS as
-    its shrinking state and derives per-edge counts by exploding
-    member edges on demand.
+    """The triangles over canonical edges ``e`` (a, b), a < b: one row per
+    triangle, columns (ta, tb, tc) with ta < tb < tc. The one triangle
+    enumerator: triangle_counts explodes its rows, and ktruss and
+    truss_decomposition peel them.
 
-    Enumeration is DEGREE-ORDERED (compact-forward — Latapy 2008):
-    each undirected edge is oriented from its (degree, id)-smaller
-    endpoint to the larger (a < b by id breaks degree ties, so the
-    total order is strict), wedges are pairs of out-edges sharing a
-    source, and the closing edge is a LEFT-SEMI probe (never a
-    cartesian product) — out-degrees under this orientation are
-    O(sqrt(m)), which keeps the wedge fan-out bounded on skewed degree
-    distributions. ``broadcast_close=True`` broadcasts the closing-
-    edge set into the probe instead of shuffling the wedge side
-    (wedges outnumber triangles ~22:1 on the co-purchase family);
-    callers size-gate it on the EDGE count.
+    Enumeration is degree-ordered (compact-forward, Latapy 2008): each
+    edge is oriented from its (degree, id)-smaller endpoint to the
+    larger, a wedge is a pair of out-edges sharing a source, and its
+    closing edge is a LEFT SEMI probe, never a cartesian product.
+    Out-degrees under this order are O(sqrt(m)), which bounds the wedge
+    fan-out on skewed degree distributions.
 
-    ``bloom_close=True`` is the FIRST path ABOVE the broadcast gate
-    (round-14, replacing the bucket ladder as the default there —
-    _close_strategy picks it for cap < n <= 16*cap): a relational
-    bloom filter over the COMPOSITE (v, w) closing key prunes
-    non-closing wedges map-side before one ordinary co-partitioned
-    shuffle semi join settles exactness. Catalyst's own
-    InjectRuntimeFilter cannot build this bloom — the wedge-side key
-    xxhash64(v, w) mixes columns from both legs of the wedge
-    self-join, so it has no lineage to a single scan attribute and
-    the rule degrades to near-useless per-column blooms — so the
-    bloom is expressed RELATIONALLY with public DataFrame ops.
+    The close comes from _close_strategy, given the edge count
+    (``n_edges``; when not given, e is pinned and counted in one job)
+    and the heap-derived broadcast cap:
 
-    Since round 15 the filter is BLOCKED (Putze/Sanders/Singler 2007
-    cache-efficient blocked bloom, block = one 64-bit word — the same
-    layout Impala and Kudu use for their runtime filters):
+    - ``broadcast``: the closing set broadcasts, so the wedges (about
+      22 per triangle on the co-purchase graphs) cross no exchange.
+    - ``bloom``: a blocked bloom filter (Putze, Sanders and Singler
+      2007; one 64-bit word per key) over the composite (v, w) key.
+      xxhash64(1, v, w) picks the key's word among n*bits/64, and three
+      further salted hashes pick bits inside it; one bit_or aggregate
+      builds the (word, mask) table, which broadcasts. A wedge survives
+      if its word holds all three of its bits. Survivors, the true
+      closers plus ~0.5% false positives at 16 bits (~15% at 4), settle
+      exactness in one shuffle semi join against the closing set.
+      Catalyst's runtime bloom filter cannot build this filter: the key
+      mixes columns from both legs of the wedge join.
 
-    1. The bitmap is a (word, mask) table: ONE salted hash
-       xxhash64(1, v, w) picks the edge's word among m = n*bits/64,
-       and k=3 further salted hashes xxhash64({2,3,4}, v, w) pick
-       bit positions INSIDE that word, OR-ed into a single 64-bit
-       mask; one ``bit_or`` aggregation per word builds the table
-       (salted draws are mutually independent — unlike the r14
-       column-permutation variant, where the third draw was a
-       deterministic function of the first and (v), costing pruning
-       efficiency). n*bits/64 rows — 8-16x smaller than the closing
-       set — so it broadcasts long after the closing set cannot.
-    2. The probe is a SINGLE join on the word index plus one fused
-       ``(bv & mask) = mask`` filter testing all k bits at once —
-       whole-stage-codegen, and exactly ONE hashed relation live
-       (the r14 shape ran k=3 separate broadcast joins whose hashed
-       relations were concurrently resident at ~3x the budget).
-       Expected word load at 16 bits/edge is 4 edges * 3 bits = 12
-       of 64 bits -> fpr ~0.5%; at the 4-bit floor, 48 draws ->
-       ~53% density -> fpr ~15% — the same operating points as the
-       classic filter at equal m, with one probe instead of three.
-       ``bloom_probe`` picks the join strategy:
-       - ``"broadcast"`` (default, n <= 16*cap): the words table
-         broadcasts; zero wedge exchange before the survivor join.
-       - ``"shuffle"`` (n > 16*cap — round 15, replacing the bucket
-         ladder as the default there): a co-partitioned shuffle hash
-         join on the word index. The wedge side exchanges ONCE on a
-         key it must compute for the bit test anyway; the words side
-         is n/16 rows at the 4-bit floor. Total exchange is
-         O(|wedges| + survivors + n) — linear at any scale, versus
-         the ladder's O(|E|*B) re-enumeration CPU. (A plain shuffle
-         semi join on (v, w) is also linear, but its exchanged rows
-         carry no pruning: the bloom variant's survivor leg is
-         ~5-20x thinner, and the word-probe leg exchanges the same
-         wedge count at similar width, so the bloom dominates
-         whenever the semi join would shuffle-sort both sides.)
-    3. Survivors (true closers ~1/22 of wedges, plus fpr) make ONE
-       shuffle semi join against the closing set — exact by
-       construction (a bloom has no false negatives; the semi join
-       removes false positives), with the wedge-side exchange cut
-       ~10-20x versus the naive shuffle close.
-
-    ``close_buckets=B`` (B > 1) is the pre-round-15 last resort above
-    16*cap, now reachable ONLY via ``PANDITYA_TRIANGLE_LADDER=1``
-    (the shuffle-probed bloom replaced it as the default there — it
-    is linear in |E| where the ladder is O(|E|*B); kept for A/B
-    provenance and as an escape hatch on exchange-starved hosts):
-    the closing-edge set is hash-split on (v, w) into B chunks that
-    each fit the broadcast budget, and the wedge side is probed once
-    per chunk — every triangle's closing edge lands in exactly one
-    chunk, so the union over chunks is the exact triangle set with no
-    dedup. This replaces the old shuffle-semi-join fallback, whose
-    wedge-side exchange is the scale killer the sf10 probe measured:
-    ~22 wedges per triangle × 24 B at 120M edges extrapolates to a
-    ~144 GB exchange, which filled the sandbox disk and died
-    ([SPILL_OUT_OF_MEMORY] No space left on device). Bucketing trades
-    that exchange for B map-side re-enumerations of the wedge join
-    from the pinned oriented table (CPU, no shuffle) — exact, but the
-    close cost grows ~O(|E|·B), which the sf10 probe measured as the
-    bulk of a 17.8x decade ratio; that super-linear CPU is why the
-    bloom path is preferred whenever its bitmap fits. Each chunk's
-    triangles are materialized SEQUENTIALLY (localCheckpoint per
-    chunk, then a union of the pinned parts), so at most one
-    cap-sized broadcast is live at a time — the unioned-lazy form
-    kept all B hashed relations referenced for the whole job,
-    approaching the full closing set in concurrent broadcast memory.
-    """
-    if probe_plan_only and not bloom_close:
-        # Audit-hook misuse guard (r15 ADVICE): the flag exposes the
-        # bloom probe's pre-barrier stage; combined with any other
-        # path it would silently return the full triangle list and
-        # the audit would gate the wrong plan.
-        raise ValueError("probe_plan_only requires bloom_close=True")
+    ``probe_plan_only`` returns the bloom close's survivors before the
+    optimizer barrier, so scripts/explain_audit.py can gate that stage's
+    plan; it raises ValueError unless the bloom close is picked."""
+    if n_edges is None:
+        # Pinned: the count rides the checkpoint job, and the degree and
+        # wedge joins below read e without recomputing its lineage.
+        obs = Observation()
+        e = e.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        n_edges = obs.get["n"]
+    strat, bits = _close_strategy(
+        n_edges, _broadcast_edge_cap(e.sparkSession), prefer_broadcast_in_cap
+    )
+    if probe_plan_only and strat != "bloom":
+        raise ValueError("probe_plan_only requires the bloom close")
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -3029,733 +2730,322 @@ def triangle_list(
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
     )
-    o2 = oriented.select(
-        F.col("u"), F.col("v").alias("w"), F.col("dv").alias("dw")
-    )
+    if strat == "bloom":
+        # Pinned: the wedge join, the words table and the exactness
+        # join all read it; the repartition lets the self-join reuse
+        # one u-partitioning.
+        oriented = oriented.repartition("u").localCheckpoint(eager=True)
+    o2 = oriented.select(F.col("u"), F.col("v").alias("w"), F.col("dv").alias("dw"))
     wedge = oriented.join(o2, "u").filter(
         (F.col("dv") < F.col("dw"))
         | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
     )
     # v precedes w in (deg, id) order, so the closing edge {v, w} — if
     # present — is oriented v→w: one equi-key LEFT-SEMI probe.
-    def _to_triangles(probed: DataFrame) -> DataFrame:
-        return probed.select(
-            F.array_sort(F.array("u", "v", "w")).alias("t")
-        ).select(
-            F.col("t")[0].alias("ta"),
-            F.col("t")[1].alias("tb"),
-            F.col("t")[2].alias("tc"),
-        )
-
     closing = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    if bloom_close or close_buckets > 1:
-        # Pin the oriented table so wedge re-enumeration replays from
-        # storage instead of re-running the degree joins; the
-        # repartition lets the self-join reuse one u-partitioning.
-        oriented = oriented.repartition("u").localCheckpoint(eager=True)
-        o2b = oriented.select(
-            F.col("u"), F.col("v").alias("w"), F.col("dv").alias("dw")
-        )
-        wedge_b = oriented.join(o2b, "u").filter(
-            (F.col("dv") < F.col("dw"))
-            | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
-        )
-        closing_b = oriented.select(
-            F.col("u").alias("v"), F.col("v").alias("w")
-        )
-    if bloom_close:
-        n = n_edges if n_edges is not None else closing_b.count()
-        m_words = max(1, (max(n, 1) * bloom_bits + 63) // 64)
-        # Blocked bloom: xxhash64(1, v, w) picks the word, the three
-        # further salted draws pick independent bits INSIDE it (no
-        # h1 + i*h2 Kirsch-Mitzenmacher mixing — long addition
-        # overflows under ANSI mode; distinct literal salts give
-        # genuinely decorrelated draws). The SAME two SQL expressions
-        # are used on the build and probe sides, which is the whole
-        # no-false-negative argument.
-        word_sql = f"pmod(xxhash64(1, v, w), {m_words}L)"
-        mask_sql = " | ".join(
-            f"shiftleft(1L, CAST(pmod(xxhash64({salt}, v, w), 64) AS INT))"
-            for salt in (2, 3, 4)
-        )
-        # The bitmap as a relation: bit_or the per-edge masks per
-        # word. Map-side partial aggregation keeps the one exchange
-        # word-count-sized; the pinned result feeds the probe from a
-        # single small table.
-        words = (
-            closing_b.select(
-                F.expr(word_sql).alias("bw"),
-                F.expr(mask_sql).alias("bm"),
-            )
-            .groupBy("bw")
-            .agg(F.expr("bit_or(bm)").alias("bv"))
-            .localCheckpoint(eager=True)
-        )
-        probed = wedge_b.withColumn(
-            "_bw", F.expr(word_sql)
-        ).withColumn("_bm", F.expr(mask_sql))
-        if bloom_probe == "shuffle":
-            # Past 16*cap the words table outgrows one broadcast:
-            # co-partitioned shuffle hash join on the word index
-            # (words side builds the per-partition hash table — it is
-            # the ~16x smaller relation), bit test fused after it.
-            wjoin = probed.join(
-                words.hint("shuffle_hash"), F.col("_bw") == F.col("bw")
-            )
-        else:
-            wjoin = probed.join(
-                F.broadcast(words), F.col("_bw") == F.col("bw")
-            )
-        # One fused test of all k bits; a wedge whose word is absent
-        # carries no bits and was already dropped by the inner join.
-        survivors = wjoin.filter(F.expr("(bv & _bm) = _bm")).select(
-            "u", "v", "w"
-        )
-        if probe_plan_only:
-            # Audit hook (scripts/explain_audit.py): expose the probe
-            # stage BEFORE the barrier below, so its plan shape — word
-            # join, fused bit test, and critically the ABSENCE of the
-            # exactness LeftSemi (see the barrier comment) — can be
-            # gated. Production always takes the barrier path.
-            return survivors
-        # OPTIMIZER BARRIER — load-bearing, do not remove. Without
-        # it Catalyst's PushDownLeftSemiAntiJoin pushes the exactness
-        # semi join BELOW the word join (its (v, w) keys exist on the
-        # probed leg), so the bit-test filter runs AFTER the semi's
-        # exchange and the "pruned survivor" exchange silently
-        # carries the FULL wedge set — measured at sf1 as 410.9M
-        # rows / 7.8 GB written by the close stage (vs 22.0M actual
-        # survivors), and at sf10 as a >73 GB disk-filling exchange
-        # that ENOSPC'd the sandbox (the round-15 g17 ledger
-        # failures). A non-deterministic projection is NOT a
-        # sufficient barrier (column pruning deletes the unused
-        # column and the barrier with it); the lazy localCheckpoint
-        # compiles the pruned survivors to a LogicalRDD no optimizer
-        # rule can reorder across, at the bounded cost of storing the
-        # ~10-20x-pruned survivor set once (MEMORY_AND_DISK, spilled
-        # blocks freed with the plan). Cluster-mode caveat (r15
-        # ADVICE): localCheckpoint blocks live in executor-local
-        # storage — under dynamic allocation or executor loss they are
-        # unrecoverable and the job fails instead of recomputing; a
-        # cluster deployment needs shuffle-tracking/allocation pinned
-        # for this stage, or a reliable checkpoint() behind a config
-        # (the existing eager localCheckpoint uses share this caveat).
-        survivors = survivors.localCheckpoint(eager=False)
-        # Exactness: one ordinary shuffle semi join on the ~10-20x
-        # smaller surviving wedge set (shuffle_hash — no sort needed,
-        # the closing side builds the per-partition hash table). The
-        # explicit (u, v, w) projection states the exchange width in
-        # the code; Catalyst's column pruning already drops the spent
-        # degree columns either way.
-        return _to_triangles(
-            survivors.join(
-                closing_b.hint("shuffle_hash"), ["v", "w"], "left_semi"
-            )
-        )
-    if close_buckets > 1:
-        bucket = F.pmod(F.xxhash64("v", "w"), F.lit(close_buckets))
-        # Sequential materialization: each chunk's triangles are
-        # pinned by their own action before the next chunk's
-        # broadcast is built, so at most ONE cap-sized hashed
-        # relation is live at any moment (the lazy unioned form kept
-        # all B referenced for the job's duration — concurrent
-        # broadcast memory approaching the full closing set, exactly
-        # what the cap exists to bound). The pinned parts union into
-        # the exact triangle set; total extra storage is one pass
-        # over the OUTPUT (the triangle list), never the wedges.
-        parts = [
-            _to_triangles(
-                wedge_b.join(
-                    F.broadcast(closing_b.filter(bucket == b)),
-                    ["v", "w"],
-                    "left_semi",
-                )
-            ).localCheckpoint(eager=True)
-            for b in range(close_buckets)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        return out
-    if broadcast_close:
-        closing = F.broadcast(closing)
-    return _to_triangles(wedge.join(closing, ["v", "w"], "left_semi"))
+
+    def _to_triangles(probed: DataFrame) -> DataFrame:
+        t = F.array_sort(F.array("u", "v", "w"))
+        return probed.select(t[0].alias("ta"), t[1].alias("tb"), t[2].alias("tc"))
+
+    if strat == "broadcast":
+        return _to_triangles(wedge.join(F.broadcast(closing), ["v", "w"], "left_semi"))
+    m_words = max(1, (max(n_edges, 1) * bits + 63) // 64)
+    # The same two SQL expressions build and probe the filter, which is
+    # the whole no-false-negative argument. Distinct literal salts give
+    # independent draws without long-overflowing h1 + i*h2 mixing.
+    word_sql = f"pmod(xxhash64(1, v, w), {m_words}L)"
+    mask_sql = " | ".join(
+        f"shiftleft(1L, CAST(pmod(xxhash64({salt}, v, w), 64) AS INT))"
+        for salt in (2, 3, 4)
+    )
+    words = (
+        closing.select(F.expr(word_sql).alias("bw"), F.expr(mask_sql).alias("bm"))
+        .groupBy("bw")
+        .agg(F.expr("bit_or(bm)").alias("bv"))
+        .localCheckpoint(eager=True)
+    )
+    probed = wedge.withColumn("_bw", F.expr(word_sql)).withColumn(
+        "_bm", F.expr(mask_sql)
+    )
+    # One fused test of all three bits; a wedge whose word is absent
+    # carries no bits and the inner join already dropped it.
+    survivors = (
+        probed.join(F.broadcast(words), F.col("_bw") == F.col("bw"))
+        .filter(F.expr("(bv & _bm) = _bm"))
+        .select("u", "v", "w")
+    )
+    if probe_plan_only:
+        return survivors
+    # OPTIMIZER BARRIER — load-bearing. Without it Catalyst's
+    # PushDownLeftSemiAntiJoin pushes the exactness semi join below the
+    # word join (its (v, w) keys exist on the probed leg), so the
+    # "pruned" exchange carries every wedge: measured at sf1 as 410.9M
+    # rows / 7.8 GB against 22.0M survivors. A non-deterministic
+    # projection is no barrier (column pruning deletes it); a lazy
+    # localCheckpoint compiles the survivors to a LogicalRDD no rule
+    # reorders across. On a cluster its blocks live in executor-local
+    # storage and are lost with the executor.
+    survivors = survivors.localCheckpoint(eager=False)
+    return _to_triangles(
+        survivors.join(closing.hint("shuffle_hash"), ["v", "w"], "left_semi")
+    )
 
 
 def ktruss(edges: DataFrame, k: int, max_iter: int = 64) -> DataFrame:
-    """k-truss: the maximal subgraph in which every EDGE participates
-    in at least k-2 triangles — the edge-level strengthening of the
-    k-core (spec extension, same family as g13/g15; the standard
-    cohesive-subgraph ladder: component ⊇ core ⊇ truss).
+    """k-truss: the maximal subgraph in which every edge lies in at least
+    k-2 triangles, the edge-level strengthening of the k-core. Returns
+    its canonical edges (a, b, support), support counted inside the
+    truss.
 
-    INCREMENTAL support peeling over a STATIC incidence table:
-    triangles are enumerated ONCE by triangle_incidence's degree-ordered
-    (compact-forward) build — see its docstring: wedges fan out from the
-    lower-degree endpoint under a (degree, id) total order, closed by a
-    LEFT SEMI join; each triangle still appears exactly once as
-    (a, b, c) with a < b < c — into a triangle→edge incidence table
-    (3 rows per triangle), materialized
-    ONCE in two static copies — one hash-partitioned by edge (the
-    victim probe side), one by triangle key (the expansion side). The
-    per-round state is ONLY the per-edge support table (one row per
-    surviving edge — 5x smaller than the incidence table on this
-    graph): edges below k-2 support are removed, the triangles they
-    touch are located by one edge-keyed semi-join on the static
-    incidence, expanded to their 3 edge rows through the triangle-
-    keyed copy (shuffling only the hit set), filtered to triangles
-    still fully ALIVE (all 3 edges present in the round-start support
-    — the lazy equivalent of maintaining a shrinking incidence
-    table: a triangle destroyed earlier always has a removed edge, so
-    it can never pass), and the surviving edges of exactly those
-    triangles get their support decremented — never a full re-count,
-    and never a re-materialization of the incidence table. The
-    round-7 measurement that motivated this: re-checkpointing the
-    incidence table every round (the previous design) cost
-    O(rounds × triangles) in write volume — 123-236s at sf0.1
-    (5.65M incidence rows × ~15 rounds) with the one-time triangle
-    build contributing only ~9s; peel state is now O(rounds × edges).
-    Late peel rounds remove a handful of edges, so their cost is
-    proportional to the handful (cf. the large-star note on
-    connected components).
+    Phase 1 counts every edge's full-graph support from one
+    triangle_list pass and keeps the edges with support >= k-2: only
+    they can be in the truss (10.8% of the sf0.1 co-purchase graph's
+    edges at k=10). Phase 2 runs truss_decomposition's level peel
+    (_truss_peel) over them with the level pinned at k-3: each round
+    removes the edges with support <= k-3 and lowers the support of the
+    rest, until no such edge is left.
 
-    k <= 2 short-circuits: every edge trivially has support >= k-2, so
-    the 2-truss is the whole graph — ALL canonical edges are returned
-    with their full-graph triangle support (0 for triangle-free edges),
-    matching the textbook definition rather than silently dropping
-    no-support rows.
-
-    The edge set only shrinks; fixpoint when a round removes nothing.
-    If max_iter is exhausted before fixpoint the partial peel is NOT
-    returned — the function raises, because a non-fixpoint output
-    violates the documented support >= k-2 invariant. Lineage/stats
-    reset on the shared parquet-spill cadence. Returns surviving
-    canonical edges (a, b, support) with support counted INSIDE the
-    truss (the invariant the pytest pins alongside brute-force
-    equality).
-    """
-    e = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("a"),
-            F.greatest(F.col("src"), F.col("dst")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # Size-gate the broadcast closing-edge probe on the broadcast
-    # PAYLOAD (the canonical edge set): under the cap the wedge side —
-    # which outnumbers triangles ~22:1 on this graph family — never
-    # hits an exchange; above it, fall back to the shuffle semi join.
-    # The cap is derived from the session's driver heap (local mode:
-    # the one JVM that hosts every broadcast copy), not a fixed
-    # constant — a hashed two-long relation costs ~48 B/edge, and the
-    # gate budgets 10% of heap for it, so a default 12g session caps
-    # at ~26M edges (covers the 12M-edge sf1 graph) while a 1g driver
-    # caps at ~2.2M instead of OOMing at a constant 30M. One count
-    # action, against a peel loop that runs one count per round
-    # anyway.
-    n_edges = e.count()
-    cap = _broadcast_edge_cap(edges.sparkSession)
-    # Above the cap: composite-key blocked-bloom close (one wedge
-    # pass, one pruned exchange), its words table broadcast to 16x
-    # the cap and shuffle-probed past that — see _close_strategy.
-    # The old shuffle-semi fallback exchanged the UNPRUNED wedge
-    # side, which the sf10 probe measured as a disk-filling ~144 GB
-    # at 120M edges.
-    scratch_free = _scratch_free_bytes(edges.sparkSession)
-    strat, buckets, bits = _close_strategy(
-        n_edges, cap, scratch_free_bytes=scratch_free
-    )
-    close_kw = _close_kwargs(strat, buckets, bits)
-    # PHASE 1 — full-graph support WITHOUT materializing incidence:
-    # the exploded triangle rows stream straight into a map-side-
-    # combinable groupBy (shuffle is edge-keyed partial aggregates,
-    # never the 3-rows-per-triangle table), pinned once edge-sized.
-    # Its k-2 filter IS the peel's round 1, applied before the
-    # expensive part: only edges passing it can be in the truss, so
-    # the static incidence is built on the SURVIVOR subgraph —
-    # measured on the sf0.1 co-purchase graph, 10.8% of edges survive
-    # (129,505 of 1,196,000 at k=10), shrinking the materialized
-    # incidence ~10x. On a graph where nothing is filtered the phase-1
-    # pass is one extra aggregated enumeration — bounded waste, and
-    # such graphs have trivial peels. Fixpoint is IDENTICAL: phase-2's
-    # recounted support within the survivor subgraph is exactly the
-    # original round-2 state (recount == incremental decrement, the
-    # equivalence the unrolled oracle pins).
-    sup_full = (
-        triangle_incidence(e, n_edges=n_edges, **close_kw)
-        .groupBy("ea", "eb")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .localCheckpoint(eager=True)
-    )
+    k <= 2 short-circuits: the 2-truss is the whole graph, so every
+    canonical edge returns with its full-graph support (0 for
+    triangle-free edges). ``max_iter`` bounds the distributed peel
+    rounds; running out before the fixpoint raises RuntimeError instead
+    of returning a partial peel."""
+    e = _canonical_edges(edges)
+    sup_full = _edge_support(triangle_list(e)).localCheckpoint(eager=True)
     if k <= 2:
-        # Whole graph qualifies; report full-graph support per edge.
-        out = _checkpoint(
-            e.join(
-                sup_full.withColumnRenamed("ea", "a").withColumnRenamed(
-                    "eb", "b"
-                ),
-                ["a", "b"],
-                "left_outer",
-            ).select(
-                "a",
-                "b",
-                F.coalesce("support", F.lit(0)).alias("support"),
+        full = sup_full.select(F.col("ea").alias("a"), F.col("eb").alias("b"), "support")
+        return _checkpoint(
+            e.join(full, ["a", "b"], "left_outer").select(
+                "a", "b", F.coalesce("support", F.lit(0)).alias("support")
             )
         )
-        return out
-    e2 = sup_full.filter(F.col("support") >= k - 2).select(
+    survivors = sup_full.filter(F.col("support") >= k - 2).select(
         F.col("ea").alias("a"), F.col("eb").alias("b")
     )
-    # PHASE 2 — static incidence copies over the survivor subgraph,
-    # checkpointed ONCE: the edge-keyed copy serves the victim probe,
-    # the triangle-keyed copy the expansion — each round shuffles only
-    # victim-sized / hit-sized frames against them, never the
-    # incidence table itself.
-    # Survivors are ~10x fewer than e on this family, so re-derive the
-    # gate from THEIR count (cheap: e2 filters the pinned sup_full) —
-    # a graph too big to broadcast whole often fits after phase 1.
-    n_surv = e2.count()
-    strat2, buckets2, bits2 = _close_strategy(
-        n_surv, cap, scratch_free_bytes=scratch_free
-    )
-    te = triangle_incidence(
-        e2, n_edges=n_surv, **_close_kwargs(strat2, buckets2, bits2)
-    )
-    te_by_edge = te.repartition("ea", "eb").localCheckpoint(eager=True)
-    te_by_tri = te_by_edge.repartition("tri").localCheckpoint(eager=True)
-    # Initial support from the already-materialized copy — the
-    # survivor-subgraph enumeration must run exactly once.
-    sup = te_by_edge.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
-    state = _LoopState()
-    (sup,) = state.round_end(sup)
-    converged = False
-    for _ in range(max_iter):
-        victims = sup.filter(F.col("support") < k - 2).select("ea", "eb")
-        if victims.count() == 0:
-            converged = True
-            break
-        # Triangles touched by this round's removals…
-        hit = (
-            te_by_edge.join(victims, ["ea", "eb"], "semi")
-            .select("tri")
-            .distinct()
-        )
-        hit_rows = te_by_tri.join(hit, ["tri"], "semi")
-        # …restricted to triangles still fully alive at round start
-        # (all 3 edge rows present in sup): a triangle destroyed in an
-        # earlier round always contains an already-removed edge, so
-        # this filter is the lazy equivalent of the old shrinking te.
-        alive_rows = hit_rows.join(sup.select("ea", "eb"), ["ea", "eb"], "semi")
-        destroyed = (
-            alive_rows.groupBy("tri")
-            .agg(F.count(F.lit(1)).alias("n_alive"))
-            .filter(F.col("n_alive") == 3)
-            .select("tri")
-        )
-        # …decrement only the SURVIVING edges of those triangles.
-        dec = (
-            alive_rows.join(destroyed, ["tri"], "semi")
-            .join(victims, ["ea", "eb"], "anti")
-            .groupBy("ea", "eb")
-            .agg(F.count(F.lit(1)).alias("dec"))
-        )
-        sup_next = (
-            sup.filter(F.col("support") >= k - 2)
-            .join(dec, ["ea", "eb"], "left_outer")
-            .select(
-                "ea",
-                "eb",
-                (
-                    F.col("support") - F.coalesce("dec", F.lit(0))
-                ).alias("support"),
-            )
-        )
-        (sup,) = state.round_end(sup_next)
-    if not converged:
-        # Same one-round observation lag as kcore: a max_iter tuned
-        # to the exact peel depth leaves a valid truss in sup that
-        # the loop never got to certify. One victim-count check
-        # before raising; the invariant is never weakened.
-        converged = sup.filter(F.col("support") < k - 2).count() == 0
-    if not converged:
-        raise RuntimeError(
-            f"ktruss: no fixpoint after {max_iter} peel rounds; "
-            "raise max_iter (partial peel would violate the "
-            "support >= k-2 invariant)"
-        )
+    alive, _ = _truss_peel(survivors, max_iter, pin=k - 3)
     out = _checkpoint(
-        sup.select(
-            F.col("ea").alias("a"), F.col("eb").alias("b"), "support"
-        )
+        alive.select(F.col("ea").alias("a"), F.col("eb").alias("b"), "support")
     )
-    state.finish()
+    _release(alive)
     return out
 
 
+# A peel round whose victims number under this fraction of the alive
+# triangles decrements the support of the edges their triangles touch;
+# any other round recounts the surviving triangles.
+_DECREMENT_FRAC = 0.1
+
+
+def _truss_peel(
+    e: DataFrame,
+    max_rounds: int,
+    pin: int | None = None,
+    emit=None,
+    stats: dict | None = None,
+) -> tuple[DataFrame, list[tuple]]:
+    """The level peel of ktruss and truss_decomposition over the
+    triangles of canonical edges ``e`` (a, b).
+
+    The triangle list is built once, with the broadcast close for the
+    whole in-cap range (the bloom close's pinned blocks would compete
+    with the loop state in executor storage), and shrinks with the
+    per-edge support (ea, eb, support). Each round, at level l (the
+    minimum support, never falling; ``pin`` when given):
+
+    1. the victims are the edges with support <= l, handed to
+       ``emit(victims, l)`` when given;
+    2. the triangles holding a victim leave the list: three anti joins,
+       with the victims broadcast when they fit the cap;
+    3. the surviving edges' support drops: a round whose victims number
+       under _DECREMENT_FRAC of the alive triangles decrements it by
+       the hit triangles, any other round recounts the new list.
+
+    The peel stops when no edge is left or, with ``pin``, when no
+    support <= pin is. Once the alive edges fit _local_cap the rest runs
+    on the driver (_local_truss_tail), which stops the same way. More
+    than ``max_rounds`` distributed rounds raise RuntimeError. ``stats``
+    receives the round counts and the final level.
+
+    Returns (alive, peeled): the (ea, eb, support) frame of the edges
+    left at the stop, and the (a, b, trussness) rows the local tail
+    removed."""
+    spark = e.sparkSession
+    cap = _broadcast_edge_cap(spark)
+    tri = triangle_list(e, prefer_broadcast_in_cap=True).localCheckpoint(eager=True)
+    state = _LoopState()
+    (sup,) = state.round_end(_edge_support(tri))
+    stats = {} if stats is None else stats
+    stats.update(distributed_rounds=0, decrement_rounds=0, local_tail_n=0)
+    level = pin or 0
+    peeled: list[tuple] = []
+    for rnd in range(max_rounds + 1):
+        # sum(support) is three times the alive triangle count, which
+        # the decrement gate needs; it rides the same aggregate.
+        m = sup.agg(
+            F.min("support").alias("m"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum("support").alias("s"),
+        ).first()
+        if m["n"] == 0 or (pin is not None and m["m"] > pin):
+            break
+        if m["n"] <= _local_cap(spark):
+            stats["local_tail_n"] = m["n"]
+            peeled, left = _local_truss_tail(
+                [tuple(r) for r in sup.collect()], level, pin is not None
+            )
+            sup = spark.createDataFrame(left, sup.schema)
+            break
+        if rnd == max_rounds:
+            raise RuntimeError(
+                f"truss peel: no fixpoint after {max_rounds} rounds; raise "
+                "the round limit (a partial peel breaks the support invariant)"
+            )
+        level = max(level, m["m"])
+        victims = sup.filter(F.col("support") <= level).select("ea", "eb")
+        if emit is not None:
+            emit(victims, level)
+        n_vic = victims.count()
+        tri_next, hit_parts = tri, []
+        for cols in (["ta", "tb"], ["tb", "tc"], ["ta", "tc"]):
+            probe = victims.select(F.col("ea").alias(cols[0]), F.col("eb").alias(cols[1]))
+            if n_vic <= cap:
+                probe = F.broadcast(probe)
+            tri_next = tri_next.join(probe, cols, "anti")
+            # A USING join moves its keys first: re-project before the
+            # positional union below.
+            hit_parts.append(tri.join(probe, cols, "semi").select("ta", "tb", "tc"))
+        tri_next = state.minor(tri_next)
+        kept = sup.filter(F.col("support") > level)
+        if n_vic <= cap and n_vic < _DECREMENT_FRAC * (m["s"] // 3):
+            stats["decrement_rounds"] += 1
+            hits = hit_parts[0].union(hit_parts[1]).union(hit_parts[2]).distinct()
+            sup_next = kept.join(_edge_support(hits, "d"), ["ea", "eb"], "left_outer")
+            sup_next = sup_next.select(
+                "ea", "eb", (F.col("support") - F.coalesce("d", F.lit(0))).alias("support")
+            )
+        else:
+            sup_next = kept.select("ea", "eb").join(
+                _edge_support(tri_next), ["ea", "eb"], "left_outer"
+            )
+            sup_next = sup_next.select(
+                "ea", "eb", F.coalesce("support", F.lit(0)).alias("support")
+            )
+        # round_end materializes both frames, so nothing lazy reads the
+        # superseded triangle list: free it now rather than a
+        # generation later.
+        old_tri = tri
+        tri, sup = state.round_end(tri_next, sup_next)
+        _release(old_tri)
+        stats["distributed_rounds"] += 1
+    stats["final_level"] = level
+    state.finish(sup)
+    _release(tri)
+    return sup, peeled
+
+
 def _local_truss_tail(
-    alive: list[tuple[int, int, int]], level: int
-) -> list[tuple[int, int, int]]:
-    """Sequential bucket peel finishing a truss decomposition on the
-    (small, size-gated) surviving subgraph: `alive` is the collected
-    (a, b, support) state, `level` the peel level already reached by
-    the distributed rounds. Classical min-support peeling (Wang &
-    Cheng, VLDB'12): pop a minimum-support edge, its trussness is
-    max(level-so-far, its support) + 2 (the level is monotone — an
-    edge cascading below the current level still leaves AT the
-    current level), remove it, and decrement the two surviving edges
-    of every triangle it closed (common neighbors of its endpoints
-    within the alive subgraph). Driver state is edge-count-bounded —
-    the gate admits ~200k edges ≈ a few MB — and kills the
-    cascade-depth-many tiny Spark rounds the peel tail otherwise
-    costs (each late round removes a handful of edges but pays full
-    driver/job latency). Returns (a, b, trussness) rows."""
+    alive: list[tuple], level: int, pinned: bool
+) -> tuple[list[tuple], list[tuple]]:
+    """The level peel on the driver over the collected (a, b, support)
+    rows, from peel level ``level`` (the bucket peel of Wang and Cheng,
+    VLDB 2012): pop a minimum-support edge, give it trussness
+    max(level, support) + 2, remove it, and decrement the other two
+    edges of every triangle it closed. ``pinned`` stops at the first
+    edge whose support exceeds ``level``. State is edge-count-bounded;
+    _local_cap admits it. Returns (peeled (a, b, trussness) rows, the
+    (a, b, support) rows left)."""
     import heapq
 
     sup = {(a, b): s for a, b, s in alive}
-    adj: dict[int, set[int]] = {}
+    adj: dict = {}
     for a, b, _ in alive:
         adj.setdefault(a, set()).add(b)
         adj.setdefault(b, set()).add(a)
     heap = [(s, a, b) for (a, b), s in sup.items()]
     heapq.heapify(heap)
-    out = []
+    peeled = []
     while heap:
-        s, a, b = heapq.heappop(heap)
+        s, a, b = heap[0]
         if sup.get((a, b)) != s:
-            continue  # stale heap entry from a decrement
+            heapq.heappop(heap)  # stale entry from a decrement
+            continue
+        if pinned and s > level:
+            break
+        heapq.heappop(heap)
         level = max(level, s)
-        out.append((a, b, level + 2))
+        peeled.append((a, b, level + 2))
         del sup[(a, b)]
         adj[a].discard(b)
         adj[b].discard(a)
         for c in adj[a] & adj[b]:
             for e in ((min(a, c), max(a, c)), (min(b, c), max(b, c))):
-                if e in sup:
-                    sup[e] -= 1
-                    heapq.heappush(heap, (sup[e], *e))
-    return out
+                sup[e] -= 1
+                heapq.heappush(heap, (sup[e], *e))
+    return peeled, [(a, b, s) for (a, b), s in sup.items()]
 
 
 def truss_decomposition(
-    edges: DataFrame,
-    local_tail_edges: int | None = None,
-    max_rounds: int = 4096,
-    decrement_frac: float = 0.1,
-    stats_out: dict | None = None,
+    edges: DataFrame, max_rounds: int = 4096, stats_out: dict | None = None
 ) -> DataFrame:
-    """FULL truss decomposition: every canonical edge labeled with its
-    trussness — the maximum k for which it belongs to the k-truss
-    (spec extension past g17's single-k peel; one pass yields every
-    k-truss as a filter, the way k-core decomposition generalizes a
-    single k-core). Support-order (level/bucket) peeling, the named
-    round-12 lever: instead of one fixed k, the peel level l only ever
-    RISES — each round removes every edge whose support is <= l, and
-    when a round finds no such edge the level jumps straight to the
-    new minimum support. Edges removed at level l have trussness l+2:
-    at the first round of level l the surviving graph IS the
-    (l+2)-truss (everything below was peeled, and peeling only removes
-    edges outside it), so every edge alive then sits in the
-    (l+2)-truss, and being removed during level l bars it from the
-    (l+3)-truss.
+    """Full truss decomposition: every canonical edge (a, b) with its
+    trussness, the largest k whose k-truss holds it, so one pass answers
+    every ktruss(k) as a filter.
 
-    Scale shape — identical state discipline to ktruss (same two
-    static incidence copies, per-round shuffles victim-sized, support
-    decremented incrementally, never recounted), with two deltas:
-    (1) the incidence is built on the FULL graph (no phase-1 k-bound —
-    every level is output), so the one-time build cost matches the
-    pre-cut single-k build; (2) per-round victims stream into a
-    parquet APPEND accumulator (O(|E|) total write across the whole
-    run) instead of a growing unioned frame (O(rounds x |E|)).
-    The peel TAIL is driver-latency-bound, not data-bound — late
-    rounds remove a handful of edges each but pay 3 Spark jobs — so
-    once the alive edge set fits `local_tail_edges` (driver state, the
-    same size-gating discipline as the betweenness broadcast mode) the
-    remaining subgraph is collected and finished by the sequential
-    bucket peel (_local_truss_tail), cutting the cascade-depth-many
-    tiny rounds. The default gate is sized by the MEASURED crossover
-    (VERDICT r13 #6): the local peel costs ~10-17 us/edge single-
-    threaded (9.4 us at 100k, 17.2 us at 1M, clustered synthetic), so
-    collecting at 1M edges spends ~17 s of driver time — less than the
-    3-jobs-per-round distributed latency of a mere handful of tail
-    rounds, and every round skipped in the 1M→200k window was pure
-    overhead under the old 200k gate. Memory stays modest (~0.3 GB of
-    dict/heap state at 1M edges), and since round 15 the DEFAULT gate
-    is derived from the configured driver heap (_local_cap —
-    clamped to the measured 1M crossover ceiling) instead of assuming
-    the stress harness's heap; the knob still overrides, and 0 forces
-    every round distributed. Triangle-free edges short-circuit to
-    trussness 2 before the loop.
+    The level peel (_truss_peel) only ever raises its level l: each
+    round removes every edge with support <= l, and when none is left l
+    jumps to the new minimum support. An edge removed at level l has
+    trussness l+2: when level l starts, the surviving graph is the
+    (l+2)-truss, and removal during level l bars the edge from the
+    (l+3)-truss. Each round's victims append to one parquet directory,
+    O(|E|) writes over the whole run. Triangle-free edges get
+    trussness 2.
 
-    Value-checked against the unrolled level-peel SQL oracle
-    (plans/graph_queries._trussness_oracle — full per-round recount
-    cross-validates the incremental decrement) and brute-force
-    equality + per-k slice == ktruss(k) in
-    tests/test_graph.py::test_truss_decomposition_*.
-    """
-    import time as _time
-
-    t_start = _time.time()
-    spark = edges.sparkSession
-    if local_tail_edges is None:
-        # Heap-derived default (see _local_cap): constrained
-        # drivers get a proportionally smaller collect gate without
-        # touching the knob; 0 still forces every round distributed.
-        local_tail_edges = _local_cap(spark)
-    e = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("a"),
-            F.greatest(F.col("src"), F.col("dst")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-    cap = _broadcast_edge_cap(spark)
-    # Above the cap: bloom close first, bucketed ladder last resort
-    # (see _close_strategy / triangle_list) — the shuffle fallback's
-    # wedge exchange is the scale killer. IN-cap, this operator keeps
-    # the broadcast close even past _BLOOM_MIN_EDGES (measured, same
-    # session, sf1: ktruss improved 80.5 -> 57.6s under the in-cap
-    # bloom build, but the full decomposition regressed 333 -> 413s —
-    # its 29-round recount loop localCheckpoints the shrinking
-    # triangle list every round, and the bloom build's pinned
-    # oriented/words blocks compete with that loop state in executor
-    # storage for the whole run; ktruss's victim-sized peel state has
-    # no such pressure).
-    strat, buckets, bits = _close_strategy(
-        n_edges,
-        cap,
-        prefer_broadcast_in_cap=True,
-        scratch_free_bytes=_scratch_free_bytes(spark),
-    )
-    tri = triangle_list(
-        e, n_edges=n_edges, **_close_kwargs(strat, buckets, bits)
-    ).localCheckpoint(eager=True)
-    member_edges = F.explode(
-        _tri_edge_structs(F.array("ta", "tb", "tc"))
-    ).alias("ed")
-    sup = (
-        tri.select(member_edges)
-        .select(F.col("ed.ea").alias("ea"), F.col("ed.eb").alias("eb"))
-        .groupBy("ea", "eb")
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
-    t_build = _time.time()
-    # Victim accumulator: one append-mode parquet dir, written
-    # victim-sized per round, read back once at the end.
+    ``stats_out``, when given, receives the peel's distributed and
+    decrement round counts, its final level, the local tail's edge
+    count and the wall time. Value-checked against the unrolled
+    level-peel SQL oracle (plans/graph_queries._trussness_oracle) and,
+    per k, against ktruss in tests/test_graph.py."""
     import atexit
+    import os
     import shutil
     import tempfile
+    import time
 
-    acc_dir = tempfile.mkdtemp(prefix="panditya-trussness-")
-    atexit.register(shutil.rmtree, acc_dir, ignore_errors=True)
     from pyspark.sql.types import LongType, StructField, StructType
 
-    out_schema = StructType(
+    t0 = time.time()
+    spark = edges.sparkSession
+    e = _canonical_edges(edges).localCheckpoint(eager=True)
+    acc_dir = tempfile.mkdtemp(prefix="panditya-trussness-")
+    atexit.register(shutil.rmtree, acc_dir, ignore_errors=True)
+
+    def emit(victims: DataFrame, level: int) -> None:
+        victims.select(
+            F.col("ea").alias("a"),
+            F.col("eb").alias("b"),
+            F.lit(level + 2).cast("long").alias("trussness"),
+        ).write.mode("append").parquet(acc_dir)
+
+    _, peeled = _truss_peel(e, max_rounds, emit=emit, stats=stats_out)
+    schema = StructType(
         [
             StructField("a", e.schema["a"].dataType),
             StructField("b", e.schema["b"].dataType),
             StructField("trussness", LongType()),
         ]
     )
-    # Triangle-free edges: trussness 2, settled before the loop.
-    (
-        e.join(
-            sup.select(F.col("ea").alias("a"), F.col("eb").alias("b")),
-            ["a", "b"],
-            "anti",
+    labels = spark.createDataFrame(peeled, schema)
+    if os.listdir(acc_dir):
+        labels = labels.union(spark.read.schema(schema).parquet(acc_dir))
+    out = _checkpoint(
+        e.join(labels, ["a", "b"], "left_outer").select(
+            "a", "b", F.coalesce("trussness", F.lit(2).cast("long")).alias("trussness")
         )
-        .select("a", "b", F.lit(2).cast("long").alias("trussness"))
-        .write.mode("append")
-        .parquet(acc_dir)
     )
-    state = _LoopState()
-    (sup,) = state.round_end(sup)
-    level = 0
-    converged = False
-    rounds = 0
-    local_n = 0
-    local_rows: list[tuple[int, int, int]] = []
-    rounds_dec = 0
-    for _ in range(max_rounds):
-        # sum(support) rides the same one-pass agg: every alive
-        # triangle contributes 3 to it, so the alive-triangle count
-        # the hybrid gate below needs is free — no extra job.
-        stats = sup.agg(
-            F.min("support").alias("m"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("support").alias("s"),
-        ).first()
-        if stats["n"] == 0:
-            converged = True
-            break
-        if stats["n"] <= local_tail_edges:
-            local_n = stats["n"]
-            t_loop = _time.time()
-            local_rows = _local_truss_tail(
-                [(r["ea"], r["eb"], r["support"]) for r in sup.collect()],
-                level,
-            )
-            if stats_out is not None:
-                stats_out["sec_local_tail"] = round(_time.time() - t_loop, 1)
-            converged = True
-            break
-        rounds += 1
-        level = max(level, stats["m"])
-        victims = sup.filter(F.col("support") <= level).select("ea", "eb")
-        (
-            victims.select(
-                F.col("ea").alias("a"),
-                F.col("eb").alias("b"),
-                F.lit(level + 2).cast("long").alias("trussness"),
-            )
-            .write.mode("append")
-            .parquet(acc_dir)
-        )
-        # Support update over the SHRINKING triangle LIST — the
-        # triangles are loop state, unlike the single-k peel's static
-        # incidence. Survival invariant either branch: every row of
-        # tri is a triangle fully alive at round start, so a triangle
-        # survives the round iff NONE of its 3 member edges is a
-        # victim — three LEFT-ANTI probes against the VICTIM set
-        # (broadcast: victims per round are bounded by one level
-        # bucket + cascade, far smaller than the alive set, so the
-        # triangle side never hits an exchange and the broadcast
-        # build is victim-sized, not graph-sized). The support update
-        # is then HYBRID (gate below): bulk levels — victims a large
-        # fraction of the alive set, everything below the rising
-        # level goes — RECOUNT by exploding all survivors' member
-        # edges into one map-side-combined groupBy; sparse-victim
-        # levels DECREMENT by exploding only the hit triangles.
-        # Per-round volume tracks the CURRENT subgraph either way and
-        # shrinks geometrically as levels rise.
-        n_vic = victims.count()  # cheap: filter on pinned sup
-        bc_victims = n_vic <= cap
-        # Round-15 hybrid gate (VERDICT r14 #5): on SPARSE-victim
-        # rounds — this round's victims under decrement_frac of the
-        # alive triangles (count carried free in stats.s/3) — a
-        # victim-KEYED decrement beats recounting the whole shrinking
-        # list: only triangles touching a victim (the "hits") are
-        # exploded, instead of all survivors. Bulk levels (victims a
-        # large fraction) keep the recount, whose one full-explode
-        # shuffle beats per-hit bookkeeping there. Exactness is the
-        # same invariant either way: every tri row is fully alive at
-        # round start, a triangle dies iff one of its 3 member edges
-        # is a victim, and support = alive-triangle membership count
-        # (decrement == recount, the equivalence the unrolled oracle
-        # pins; also pinned directly by
-        # test_truss_decomposition_decrement_matches_recount).
-        n_tri_alive = int(stats["s"] or 0) // 3
-        use_dec = bc_victims and n_vic < decrement_frac * n_tri_alive
-        tri_next = tri
-        for cols in (("ta", "tb"), ("tb", "tc"), ("ta", "tc")):
-            probe = victims.select(
-                F.col("ea").alias(cols[0]), F.col("eb").alias(cols[1])
-            )
-            if bc_victims:
-                probe = F.broadcast(probe)
-            tri_next = tri_next.join(probe, list(cols), "anti")
-        # Materialize the survivors FIRST (state.minor), so the
-        # recount/decrement below reads the pinned RDD instead of
-        # replaying the three probes.
-        tri_next = state.minor(tri_next)
-        if use_dec:
-            rounds_dec += 1
-            # Hit triangles: ≥1 member edge is a victim — 3 broadcast
-            # SEMI probes (victim-sized builds, zero triangle
-            # exchange), dedup by the triple (a triangle may hold 2-3
-            # victim edges). The distinct + explode shuffle is
-            # HIT-sized; the recount's is alive-sized.
-            hit_parts = []
-            for cols in (("ta", "tb"), ("tb", "tc"), ("ta", "tc")):
-                probe = F.broadcast(
-                    victims.select(
-                        F.col("ea").alias(cols[0]),
-                        F.col("eb").alias(cols[1]),
-                    )
-                )
-                # A USING semi join moves its join columns FIRST
-                # (e.g. the (tb, tc) probe yields columns
-                # [tb, tc, ta]); re-project to the canonical order or
-                # the positional union below scrambles the triples —
-                # the round-15 bug the sf0.1 checksum caught.
-                hit_parts.append(
-                    tri.join(probe, list(cols), "semi").select(
-                        "ta", "tb", "tc"
-                    )
-                )
-            hits = (
-                hit_parts[0]
-                .unionByName(hit_parts[1])
-                .unionByName(hit_parts[2])
-                .distinct()
-            )
-            dec = (
-                hits.select(member_edges)
-                .select(F.col("ed.ea").alias("ea"), F.col("ed.eb").alias("eb"))
-                .groupBy("ea", "eb")
-                .agg(F.count(F.lit(1)).alias("d"))
-            )
-            sup_next = (
-                sup.filter(F.col("support") > level)
-                .join(dec, ["ea", "eb"], "left_outer")
-                .select(
-                    "ea",
-                    "eb",
-                    (
-                        F.col("support") - F.coalesce(F.col("d"), F.lit(0))
-                    ).alias("support"),
-                )
-            )
-        else:
-            alive2 = sup.filter(F.col("support") > level).select("ea", "eb")
-            cnt = (
-                tri_next.select(member_edges)
-                .select(F.col("ed.ea").alias("ea"), F.col("ed.eb").alias("eb"))
-                .groupBy("ea", "eb")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
-            sup_next = (
-                alive2.join(cnt, ["ea", "eb"], "left_outer")
-                .select(
-                    "ea",
-                    "eb",
-                    F.coalesce("support", F.lit(0)).alias("support"),
-                )
-            )
-        old_tri = tri
-        (tri, sup) = state.round_end(tri_next, sup_next)
-        if old_tri is not tri:
-            # Nothing lazy outlives the round (victims are already on
-            # disk, tri/sup are materialized), so the superseded
-            # triangle generation can be freed immediately instead of
-            # waiting out _LoopState's two-generation window — it is
-            # the one loop state here that is triangle-sized.
-            _release(old_tri)
-    if not converged:
-        raise RuntimeError(
-            f"truss_decomposition: {max_rounds} rounds exhausted before "
-            "the peel emptied; raise max_rounds"
-        )
-    if stats_out is not None:
-        stats_out.update(
-            distributed_rounds=rounds,
-            decrement_rounds=rounds_dec,
-            final_level=level,
-            local_tail_n=local_n,
-            sec_build=round(t_build - t_start, 1),
-            sec_total=round(_time.time() - t_start, 1),
-        )
-    acc = spark.read.schema(out_schema).parquet(acc_dir)
-    if local_rows:
-        acc = acc.union(
-            spark.createDataFrame(local_rows, schema=out_schema)
-        )
-    out = _checkpoint(acc)
-    state.finish()
     _release(e)
-    _release(tri)
+    if stats_out is not None:
+        stats_out["sec_total"] = round(time.time() - t0, 1)
     return out
 
 
@@ -3848,8 +3138,8 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     oracle-checkable — the same reason k-core returns degrees rather
     than normalized scores.
 
-    Scale shape: triangle credit reuses the ordered two-equi-join plan
-    of triangle_counts; undirected degree is one map-side-combinable
+    Scale shape: triangle credit is triangle_counts (exploded
+    triangle_list rows); undirected degree is one map-side-combinable
     aggregate; the two join on node. Returns
     (node, n_triangles, n_wedges) over all nodes with degree >= 1
     (zero-triangle nodes included with n_triangles 0)."""

@@ -294,6 +294,10 @@ def g2_g11_full_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def g13_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-part triangle counts over the part co-purchase graph
+    (operators/graph.triangle_counts: exploded triangle_list rows).
+    The oracle enumerates the same triangle set by an id-ordered join;
+    the enumeration order does not change the counts."""
     from panditya_spark.operators.graph import triangle_counts
 
     li = _t(spark, sf_dir, "lineitem")
@@ -664,17 +668,15 @@ def _trussness_oracle(unroll: int, mod: int = 2) -> str:
 
 @register("g17_trussness", oracle=_trussness_oracle(unroll=80, mod=2))
 def g17_trussness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL truss decomposition of the part co-purchase graph — every
+    """Full truss decomposition of the part co-purchase graph: every
     canonical edge labeled with the max k whose k-truss contains it
-    (operators/graph.truss_decomposition): the support-order peel that
-    answers every k-truss query in one pass, vs g17_ktruss's single
-    k=10 slice. The l_orderkey % 2 = 0 HALF-graph slice (promoted
-    from % 4 in round 14 — VERDICT r13 #8) keeps the oracle's
-    per-step full recounts tractable (see _trussness_oracle); the
-    FULL-graph decomposition is exercised by the stress ledger and by
-    per-k slice equality with ktruss(k) + brute-force trussness in
-    tests/test_graph.py::test_truss_decomposition_*. At sf0.01 the
-    slice has 59,385 edges, max trussness 13, 46 peel steps."""
+    (operators/graph.truss_decomposition, the level peel it shares with
+    ktruss), which answers every k-truss query in one pass. The
+    l_orderkey % 2 = 0 half-graph slice keeps the oracle's per-step
+    full recounts tractable (see _trussness_oracle); brute-force
+    trussness and per-k slice equality with ktruss(k) on both tiers
+    are in tests/test_graph.py::test_truss_decomposition_*. At sf0.01
+    the slice has 59,385 edges, max trussness 13, 46 peel steps."""
     from panditya_spark.operators.graph import truss_decomposition
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 2 == 0)
@@ -689,14 +691,13 @@ def g17_trussness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g17_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-truss of the part co-purchase graph (edge-level cohesion, the
     step past g15's k-core): surviving canonical edges with their
-    in-truss triangle support, value-checked against an unrolled
-    support-peel SQL oracle (see _ktruss_oracle — the oracle's full
-    recount per round cross-validates the incremental Spark
-    implementation). Exact semantics additionally pinned by
-    brute-force equality in
+    in-truss triangle support (operators/graph.ktruss: a full-graph
+    support filter, then the truss level peel pinned at k-3),
+    value-checked against an unrolled support-peel SQL oracle (see
+    _ktruss_oracle; its full recount per round cross-validates the
+    peel's decrements). Brute-force equality on both tiers is in
     tests/test_graph.py::test_ktruss_matches_bruteforce. k=10 gives a
-    non-trivial truss at sf0.01 (4,974 of 115,729 edges survive,
-    8 peel rounds)."""
+    non-trivial truss at sf0.01 (4,974 of 115,729 edges survive)."""
     from panditya_spark.operators.graph import ktruss
 
     li = _t(spark, sf_dir, "lineitem")
@@ -787,8 +788,9 @@ def g18_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def g19_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering-coefficient components over the part
-    co-purchase graph (operators/graph.clustering_coefficients):
-    exact integer (triangles, wedges) per node — C(v) is their ratio.
+    co-purchase graph (operators/graph.clustering_coefficients, whose
+    triangle credit is triangle_counts over triangle_list): exact
+    integer (triangles, wedges) per node — C(v) is their ratio.
     Value-checked every round through the combo slot."""
     from panditya_spark.operators.graph import clustering_coefficients
 

@@ -1,17 +1,11 @@
-"""A/B the triangle-close strategies on ONE graph in ONE session:
-broadcast (the in-cap reference), the blocked-bloom close at 16 and 4
-bits/edge (broadcast word probe — the first above-cap path), the
-round-15 SHUFFLE-probed bloom (the past-16x-cap tier), and the
-bucketed chunk ladder (the pre-r15 last resort, now env-gated in
-production), each FORCED via triangle_list's explicit flags on the
-same pinned co-purchase edge set — so the comparison isolates the
-close, not the round's weather or a code delta. Results MERGE into
-.stress/ab_close.json keyed by "<sf_tag>:<edge_count>edges" (round-15
-fix: the r14 script overwrote the file per run, leaving the
-multi-scale claims in graph.py's docstring without committed
-provenance).
+"""A/B triangle_list's two closes on ONE graph in ONE session:
+broadcast and the broadcast-probed blocked bloom (at the bits per edge
+the heap-derived cap gives), each forced by patching the broadcast
+tier's ceiling graph._BLOOM_MIN_EDGES on the same pinned co-purchase
+edge set, so the comparison isolates the close. Results merge into
+.stress/ab_close.json keyed by "<sf_tag>:<edge_count>edges".
 
-Usage: python scripts/ab_close_strategies.py [sf_dir] [bucket_B]
+Usage: python scripts/ab_close_strategies.py [sf_dir]
 Env: STRESS_REPS (default 2) -> min-of-N per mode.
 """
 from __future__ import annotations
@@ -51,7 +45,6 @@ def _snap():
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, ".stress", "sf1")
-    bucket_b = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     reps = max(1, int(os.environ.get("STRESS_REPS", "2")))
 
     from pyspark.sql import SparkSession, functions as F
@@ -72,7 +65,7 @@ def main() -> int:
     ensure_session_defaults(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from panditya_spark.operators.graph import triangle_list
+    from panditya_spark.operators import graph as G
 
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     lp = li.select("l_orderkey", "l_partkey").distinct()
@@ -102,27 +95,21 @@ def main() -> int:
     except Exception:  # noqa: BLE001
         commit = "unknown"
 
-    modes = {
-        "broadcast": dict(broadcast_close=True),
-        "bloom_b16": dict(bloom_close=True, bloom_bits=16, n_edges=n),
-        "bloom_b4": dict(bloom_close=True, bloom_bits=4, n_edges=n),
-        "bloom_shuffle_b4": dict(
-            bloom_close=True, bloom_bits=4, bloom_probe="shuffle", n_edges=n
-        ),
-        f"bucketed_B{bucket_b}": dict(close_buckets=bucket_b),
-    }
+    # The ceiling of the broadcast tier each mode runs under.
+    modes = {"broadcast": n, "bloom": 0}
     result = {
         "sf_dir": sf_dir, "edges": n, "commit": commit,
         "reps": reps, "estimator": f"min_of_{reps}",
     }
     n_tri_ref = None
-    for name, kw in modes.items():
+    for name, ceiling in modes.items():
         walls = []
         before = _snap()
         n_tri = None
+        G._BLOOM_MIN_EDGES = ceiling
         for _ in range(reps):
             t0 = time.time()
-            n_tri = triangle_list(e, **kw).count()
+            n_tri = G.triangle_list(e, n_edges=n).count()
             walls.append(round(time.time() - t0, 1))
         after = _snap()
         if n_tri_ref is None:
@@ -146,12 +133,6 @@ def main() -> int:
     if os.path.exists(OUT):
         with open(OUT) as fh:
             book = json.load(fh)
-        if "edges" in book:  # legacy single-run layout (r14)
-            legacy_key = (
-                f"{os.path.basename(book.get('sf_dir', '?'))}"
-                f":{book['edges']}edges"
-            )
-            book = {legacy_key: book}
     key = f"{os.path.basename(sf_dir.rstrip('/'))}:{n}edges"
     book[key] = result
     tmp = OUT + ".tmp"

@@ -274,26 +274,9 @@ def _build_two_level_refine(spark, sf_dir):
     )
 
 
-def _build_ktruss_round(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from panditya_spark.operators.graph import triangle_incidence
-    from panditya_spark.plans.graph_queries import _t
-
-    li = _t(spark, sf_dir, "lineitem")
-    lp = li.select("l_orderkey", "l_partkey").distinct()
-    x = lp.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    y = lp.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    e = (
-        x.join(y, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .distinct()
-    )
-    return triangle_incidence(e)
-
-
-def _bloom_close_edges(spark, sf_dir):
+def _triangle_edges(spark, sf_dir):
+    """The canonical (a, b) part co-purchase edges the g17 queries
+    enumerate triangles over."""
     from pyspark.sql import functions as F
 
     from panditya_spark.plans.graph_queries import _t
@@ -310,32 +293,32 @@ def _bloom_close_edges(spark, sf_dir):
     )
 
 
+def _build_ktruss_round(spark, sf_dir):
+    """The triangle plan the k-truss peel starts from, with the close
+    triangle_list picks for this edge count."""
+    from panditya_spark.operators.graph import triangle_list
+
+    return triangle_list(_triangle_edges(spark, sf_dir))
+
+
+def _bloom_triangle_list(spark, sf_dir, **kw):
+    """triangle_list with the bloom close forced whatever the edge
+    count: the broadcast tier's ceiling drops to 0 edges for the call
+    (the close is picked when triangle_list is called)."""
+    from panditya_spark.operators import graph as G
+
+    e = _triangle_edges(spark, sf_dir)
+    saved, G._BLOOM_MIN_EDGES = G._BLOOM_MIN_EDGES, 0
+    try:
+        return G.triangle_list(e, **kw)
+    finally:
+        G._BLOOM_MIN_EDGES = saved
+
+
 def _build_bloom_close(spark, sf_dir):
-    """The above-cap bloom close, forced regardless of edge count:
-    the blocked-bitmap single probe + one exact shuffle semi that
-    replaces the bucket ladder (operators/graph.py:triangle_list,
-    rounds 14-15)."""
-    from panditya_spark.operators.graph import triangle_list
-
-    e = _bloom_close_edges(spark, sf_dir)
-    return triangle_list(e, bloom_close=True, bloom_bits=16, n_edges=e.count())
-
-
-def _build_bloom_shuffle_close(spark, sf_dir):
-    """The past-16x-cap close (round 15): the same blocked bitmap,
-    probed via a co-partitioned shuffle hash join on the word index
-    instead of a broadcast — the tier that removed the O(|E|*B)
-    bucket ladder from the default plan space."""
-    from panditya_spark.operators.graph import triangle_list
-
-    e = _bloom_close_edges(spark, sf_dir)
-    return triangle_list(
-        e,
-        bloom_close=True,
-        bloom_bits=4,
-        bloom_probe="shuffle",
-        n_edges=e.count(),
-    )
+    """The bloom close: the blocked-bitmap single probe plus one exact
+    shuffle semi join (operators/graph.py:triangle_list)."""
+    return _bloom_triangle_list(spark, sf_dir)
 
 
 def _build_bloom_probe_stage(spark, sf_dir):
@@ -348,33 +331,7 @@ def _build_bloom_probe_stage(spark, sf_dir):
     AFTER the semi's exchange and made the 'pruned' exchange carry
     the FULL wedge set (measured: 410.9M rows / 7.8 GB at sf1 vs
     22.0M actual survivors; a >73 GB ENOSPC at sf10)."""
-    from panditya_spark.operators.graph import triangle_list
-
-    e = _bloom_close_edges(spark, sf_dir)
-    return triangle_list(
-        e,
-        bloom_close=True,
-        bloom_bits=16,
-        n_edges=e.count(),
-        probe_plan_only=True,
-    )
-
-
-def _build_bloom_shuffle_probe_stage(spark, sf_dir):
-    """The shuffle-probed variant's probe stage, pre-barrier — same
-    LeftSemi-absence gate as the broadcast probe, plus the
-    co-partitioned word-index join shape."""
-    from panditya_spark.operators.graph import triangle_list
-
-    e = _bloom_close_edges(spark, sf_dir)
-    return triangle_list(
-        e,
-        bloom_close=True,
-        bloom_bits=4,
-        bloom_probe="shuffle",
-        n_edges=e.count(),
-        probe_plan_only=True,
-    )
+    return _bloom_triangle_list(spark, sf_dir, probe_plan_only=True)
 
 
 CHECKS = [
@@ -755,8 +712,9 @@ CHECKS = [
     (
         ("g17_ktruss/round_incidence", _build_ktruss_round),
         [
-            # The per-round triangle plan: two equi-joins (middle-vertex
-            # join + closing-edge LEFT-SEMI probe), never a product.
+            # The peel's triangle plan (triangle_list): the wedge
+            # equi-join plus the closing-edge LEFT-SEMI probe, never a
+            # product.
             ("closing edge probed via LEFT-SEMI join", r"LeftSemi"),
             ("no cartesian/nested-loop join", ("absent", ["CartesianProduct", "BroadcastNestedLoop"])),
         ],
@@ -773,7 +731,7 @@ CHECKS = [
             ("exact semi join settles false positives", r"LeftSemi"),
             ("semi is a shuffled hash join (no sort)",
              ("count>=", "ShuffledHashJoin", 2)),
-            # NOTE (r15 ADVICE): the eager-checkpointed closing_b side
+            # NOTE: the eager-checkpointed closing side
             # also scans an ExistingRDD, so this existence check alone
             # cannot detect removal of the survivor barrier — the
             # xxhash64-absence gate is the load-bearing one.
@@ -803,43 +761,6 @@ CHECKS = [
             ("salted in-word bit draws fused JVM-side",
              r"shiftleft\(1, cast\(pmod\(xxhash64\(2"),
             ("fused all-bits test", r"&.*_bm.*= _bm|\(bv.* & .*_bm"),
-            ("no cartesian/nested-loop join", ("absent", ["CartesianProduct"])),
-            ("no Python eval in plan", ("absent", ["BatchEvalPython", "ArrowEvalPython"])),
-        ],
-    ),
-    (
-        ("g17_ktruss/bloom_shuffle_close", _build_bloom_shuffle_close),
-        [
-            # Past 16x the cap: same barrier guarantee as the
-            # broadcast-probed tier — the exactness plan sees only
-            # pinned survivors.
-            ("exact semi join settles false positives", r"LeftSemi"),
-            ("semi is a shuffled hash join (no sort)",
-             ("count>=", "ShuffledHashJoin", 2)),
-            # NOTE (r15 ADVICE): the eager-checkpointed closing_b side
-            # also scans an ExistingRDD, so this existence check alone
-            # cannot detect removal of the survivor barrier — the
-            # xxhash64-absence gate is the load-bearing one.
-            ("survivor side enters through the barrier",
-             r"Scan ExistingRDD"),
-            ("nothing broadcast in the shuffle tier",
-             ("absent", ["BroadcastHashJoin", "BroadcastExchange"])),
-            ("no cartesian/nested-loop join", ("absent", ["CartesianProduct"])),
-            ("no Python eval in plan", ("absent", ["BatchEvalPython", "ArrowEvalPython"])),
-        ],
-    ),
-    (
-        ("g17_ktruss/bloom_shuffle_probe_stage",
-         _build_bloom_shuffle_probe_stage),
-        [
-            ("the exactness semi has NOT been pushed into the probe",
-             ("absent", ["LeftSemi"])),
-            ("word probe is a co-partitioned shuffled hash join",
-             ("count>=", "ShuffledHashJoin", 2)),
-            ("nothing broadcast in the shuffle tier",
-             ("absent", ["BroadcastHashJoin", "BroadcastExchange"])),
-            ("salted in-word bit draws fused JVM-side",
-             r"shiftleft\(1, cast\(pmod\(xxhash64\(2"),
             ("no cartesian/nested-loop join", ("absent", ["CartesianProduct"])),
             ("no Python eval in plan", ("absent", ["BatchEvalPython", "ArrowEvalPython"])),
         ],

@@ -40,12 +40,13 @@ def test_loop_shuffle_scope_lowers_and_restores(spark, monkeypatch):
     spark.sql.shuffle.partitions inside the with-block according to the
     byte estimate, restores the session value on exit (also on raise),
     never RAISES above the session setting, and is a no-op when the
-    estimate is unavailable or the env knob disables it."""
+    estimate is unavailable."""
+    from panditya_spark.operators import graph as G
     from panditya_spark.operators.graph import _loop_shuffle_scope
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    monkeypatch.setenv("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "8")
+    monkeypatch.setattr(G, "_LOOP_SHUFFLE_TARGET_MB", 8)
     # Small estimate -> lowered inside, restored after.
     with _loop_shuffle_scope(spark, 1 << 20):
         assert int(spark.conf.get(key)) == 1
@@ -53,13 +54,9 @@ def test_loop_shuffle_scope_lowers_and_restores(spark, monkeypatch):
     # Huge estimate -> clamped at the session value (never raised).
     with _loop_shuffle_scope(spark, 1 << 40):
         assert spark.conf.get(key) == before
-    # None estimate (non-file source) and env-disabled -> no-op.
+    # None estimate (non-file source) -> no-op.
     with _loop_shuffle_scope(spark, None):
         assert spark.conf.get(key) == before
-    monkeypatch.setenv("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "0")
-    with _loop_shuffle_scope(spark, 1 << 20):
-        assert spark.conf.get(key) == before
-    monkeypatch.setenv("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "8")
     # Restored even when the loop body raises.
     with pytest.raises(RuntimeError):
         with _loop_shuffle_scope(spark, 1 << 20):
@@ -515,7 +512,8 @@ def _small_digraph(draw):
 def test_graph_tiers_agree(spark, graph):
     """The local and distributed tiers of CC, SCC and LPA return the
     same rows; PageRank agrees within the benchmark oracle's relative
-    tolerance of 1e-9."""
+    tolerance of 1e-9. SCC also runs on the same graph with int ids,
+    and on both tiers its scc column has the node column's type."""
     import math
 
     from panditya_spark.operators.graph import (
@@ -525,13 +523,20 @@ def test_graph_tiers_agree(spark, graph):
 
     edges, vertices = graph
     e = spark.createDataFrame(edges, "src string, dst string")
+    ie = spark.createDataFrame([(int(a[1:]), int(b[1:])) for a, b in edges], "src int, dst int")
     v = None if vertices is None else spark.createDataFrame([(x,) for x in vertices], "id string")
+
+    def scc(df):
+        out = strongly_connected_components(df)
+        assert out.schema["scc"].dataType == out.schema["node"].dataType == df.schema["src"].dataType
+        return dict(rows(out))
 
     def run():
         return (
             dict(rows(connected_components(e, vertices=v))),
-            dict(rows(strongly_connected_components(e))),
+            scc(e),
             dict(rows(label_propagation(e, max_iter=3, vertices=v))),
+            scc(ie),
             dict(rows(pagerank(e, iters=3, vertices=v))),
         )
 
@@ -539,8 +544,8 @@ def test_graph_tiers_agree(spark, graph):
     with pytest.MonkeyPatch.context() as mp:
         force_distributed_tier(mp)
         distributed = run()
-    assert local[:3] == distributed[:3], graph
-    pr_local, pr_dist = local[3], distributed[3]
+    assert local[:4] == distributed[:4], graph
+    pr_local, pr_dist = local[4], distributed[4]
     assert pr_local.keys() == pr_dist.keys(), graph
     for node, r in pr_local.items():
         assert math.isclose(r, pr_dist[node], rel_tol=1e-9), (graph, node)
@@ -703,7 +708,7 @@ def _brute_ktruss(edges: list[tuple[str, str]], k: int) -> dict[tuple, int]:
         es -= drop
 
 
-def test_ktruss_matches_bruteforce(spark):
+def test_ktruss_matches_bruteforce(spark, graph_tiers):
     from panditya_spark.operators.graph import ktruss
 
     # K5 minus one edge, plus a triangle hanging off via a bridge, plus
@@ -715,12 +720,13 @@ def test_ktruss_matches_bruteforce(spark):
         ("h", "i"), ("i", "j"),                          # chain
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    for k in (3, 4):
-        got = {
-            (r["a"], r["b"]): r["support"]
-            for r in ktruss(df, k=k).collect()
-        }
-        assert got == _brute_ktruss(edges, k), k
+    for tier in graph_tiers():
+        for k in (3, 4):
+            got = {
+                (r["a"], r["b"]): r["support"]
+                for r in ktruss(df, k=k).collect()
+            }
+            assert got == _brute_ktruss(edges, k), (tier, k)
 
 
 def test_ktruss_empty_on_triangle_free_graph(spark):
@@ -776,8 +782,10 @@ def test_kcore_raises_on_exhausted_nonfixpoint(spark):
     assert kcore(df, k=2, max_iter=16).count() == 0
 
 
-def test_ktruss_raises_on_exhausted_nonfixpoint(spark):
+def test_ktruss_raises_on_exhausted_nonfixpoint(spark, distributed_tier):
     """An insufficient max_iter must raise, not return a partial peel.
+    max_iter bounds the distributed peel rounds, so the test pins the
+    distributed tier.
 
     The construction must cascade across RECOUNTED rounds, because the
     round-12 phase-1 support filter consumes what used to be round 1
@@ -790,7 +798,7 @@ def test_ktruss_raises_on_exhausted_nonfixpoint(spark):
     phase 1 removes ONLY the support-1 pendant edges. The loop then
     needs three rounds: recount kills the chords (their reinforcement
     died), the chord removals zero the cycle edges, and an empty
-    victim round certifies the fixpoint."""
+    victim-free check certifies the fixpoint."""
     import pytest
 
     from panditya_spark.operators.graph import ktruss
@@ -916,12 +924,10 @@ def _brute_trussness(edges: list[tuple[str, str]]) -> dict[tuple, int]:
         k += 1
 
 
-def test_truss_decomposition_matches_bruteforce(spark):
+def test_truss_decomposition_matches_bruteforce(spark, graph_tiers):
     """Exact trussness per edge on the K5-remnant + pendant-triangle +
-    chain graph, on BOTH execution paths: the distributed level peel
-    (local_tail_edges=0 forces every round through Spark) and the
-    size-gated local tail (the default gate swallows this toy graph
-    whole)."""
+    chain graph, on both tiers: the size-gated local tail (which
+    swallows this toy graph whole) and the distributed level peel."""
     from panditya_spark.operators.graph import truss_decomposition
 
     edges = [
@@ -932,15 +938,15 @@ def test_truss_decomposition_matches_bruteforce(spark):
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
     expected = _brute_trussness(edges)
-    for tail in (0, 200_000):
+    for tier in graph_tiers():
         got = {
             (r["a"], r["b"]): r["trussness"]
-            for r in truss_decomposition(df, local_tail_edges=tail).collect()
+            for r in truss_decomposition(df).collect()
         }
-        assert got == expected, tail
+        assert got == expected, tier
 
 
-def test_truss_decomposition_slices_equal_ktruss(spark):
+def test_truss_decomposition_slices_equal_ktruss(spark, graph_tiers):
     """The decomposition's k-slice (edges with trussness >= k) must be
     exactly ktruss(k)'s edge set for every k — the nesting property
     that makes one decomposition pass answer every k-truss query."""
@@ -953,11 +959,12 @@ def test_truss_decomposition_slices_equal_ktruss(spark):
         ("h", "i"), ("i", "j"),
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    dec = truss_decomposition(df, local_tail_edges=0).collect()
-    for k in (3, 4, 5):
-        slice_k = {(r["a"], r["b"]) for r in dec if r["trussness"] >= k}
-        truss_k = {(r["a"], r["b"]) for r in ktruss(df, k=k).collect()}
-        assert slice_k == truss_k, k
+    for tier in graph_tiers():
+        dec = truss_decomposition(df).collect()
+        for k in (3, 4, 5):
+            slice_k = {(r["a"], r["b"]) for r in dec if r["trussness"] >= k}
+            truss_k = {(r["a"], r["b"]) for r in ktruss(df, k=k).collect()}
+            assert slice_k == truss_k, (tier, k)
 
 
 def test_truss_decomposition_triangle_free_all_two(spark):
@@ -973,12 +980,15 @@ def test_truss_decomposition_triangle_free_all_two(spark):
     assert got == {("a", "b"): 2, ("b", "c"): 2, ("c", "d"): 2}
 
 
-def test_triangle_list_bucketed_close_matches_broadcast(spark):
-    """The bucketed close (the above-broadcast-cap path: hash-split
-    closing set, one broadcast probe per chunk) must enumerate exactly
-    the broadcast path's triangle set — each triangle's closing edge
-    lands in exactly one bucket, so the union needs no dedup."""
-    from panditya_spark.operators.graph import triangle_list
+def test_triangle_list_bloom_close_matches_broadcast(spark, monkeypatch):
+    """The bloom close (relational blocked bitmap over xxhash64(v, w),
+    broadcast word probe, one exact shuffle semi join) must enumerate
+    exactly the broadcast close's triangle set: no false negatives from
+    the bloom, false positives removed by the final semi join. The
+    tiers are forced through the broadcast cap: a cap of 1 edge puts
+    the 15 edges at the 4-bit floor (worst fpr, most false positives
+    for the semi join to kill), a cap of 4 at the 16-bit ceiling."""
+    from panditya_spark.operators import graph as G
 
     edges = [
         ("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"),
@@ -987,99 +997,44 @@ def test_triangle_list_bucketed_close_matches_broadcast(spark):
         ("h", "i"), ("i", "j"),
     ]
     e = spark.createDataFrame(edges, ["a", "b"])
-    want = sorted(map(tuple, triangle_list(e, broadcast_close=True).collect()))
-    for buckets in (2, 5):
-        got = sorted(
-            map(tuple, triangle_list(e, close_buckets=buckets).collect())
-        )
-        assert got == want, buckets
+    want = sorted(map(tuple, G.triangle_list(e).collect()))
+    assert len(want) == 8
+    for cap, bits in ((1, 4), (4, 16)):
+        monkeypatch.setattr(G, "_broadcast_edge_cap", lambda spark, cap=cap: cap)
+        assert G._close_strategy(len(edges), cap) == ("bloom", bits)
+        got = sorted(map(tuple, G.triangle_list(e).collect()))
+        assert got == want, bits
 
 
-def test_triangle_list_bloom_close_matches_broadcast(spark):
-    """The bloom close (the first above-cap path: relational bitmap
-    over xxhash64(v, w), broadcast word probes, one exact shuffle
-    semi) must enumerate exactly the broadcast path's triangle set —
-    no false negatives from the bloom, false positives removed by the
-    final semi join. bloom_bits=4 runs the floor configuration (worst
-    fpr, most false positives for the semi join to kill)."""
-    from panditya_spark.operators.graph import triangle_list
+def test_close_strategy_tiers():
+    """broadcast under min(cap, _BLOOM_MIN_EDGES), broadcast-probed
+    bloom to 16x the cap (bits clamped to [4, 16]), ValueError past it;
+    prefer_broadcast_in_cap keeps broadcast for the whole in-cap range
+    (the truss peel's choice)."""
+    import pytest
 
-    edges = [
-        ("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"),
-        ("b", "c"), ("b", "d"), ("b", "e"), ("c", "d"), ("c", "e"),
-        ("e", "f"), ("f", "g"), ("g", "h"), ("f", "h"),
-        ("h", "i"), ("i", "j"),
-    ]
-    e = spark.createDataFrame(edges, ["a", "b"])
-    want = sorted(map(tuple, triangle_list(e, broadcast_close=True).collect()))
-    for bits in (4, 16):
-        for probe in ("broadcast", "shuffle"):
-            got = sorted(
-                map(
-                    tuple,
-                    triangle_list(
-                        e,
-                        bloom_close=True,
-                        bloom_bits=bits,
-                        bloom_probe=probe,
-                    ).collect(),
-                )
-            )
-            assert got == want, (bits, probe)
-
-
-def test_close_strategy_tiers(monkeypatch):
-    """broadcast under the cap, broadcast-probed bloom to 16x the cap
-    (bits clamped to [4, 16]), shuffle-probed bloom past that; the
-    bucket ladder only behind PANDITYA_TRIANGLE_LADDER=1; the
-    prefer_broadcast_in_cap flag keeps broadcast for the whole in-cap
-    range (truss_decomposition's loop-pressure knob)."""
     from panditya_spark.operators.graph import _close_strategy
 
-    monkeypatch.delenv("PANDITYA_TRIANGLE_LADDER", raising=False)
-    assert _close_strategy(10, 10) == ("broadcast", 1, 0)
-    strat, buckets, bits = _close_strategy(11, 10)
-    assert (strat, buckets) == ("bloom", 1) and bits == 16
+    assert _close_strategy(10, 10) == ("broadcast", 0)
+    assert _close_strategy(11, 10) == ("bloom", 16)
     # In-cap but past the measured bloom-vs-broadcast crossover:
     # bloom even though the closing set would broadcast.
-    assert _close_strategy(600_000, 10_000_000) == ("bloom", 1, 16)
-    assert _close_strategy(400_000, 10_000_000) == ("broadcast", 1, 0)
+    assert _close_strategy(600_000, 10_000_000) == ("bloom", 16)
+    assert _close_strategy(400_000, 10_000_000) == ("broadcast", 0)
     # ... unless the caller asked to keep broadcast for the whole
     # in-cap range; above the cap the flag changes nothing.
     assert _close_strategy(
         600_000, 10_000_000, prefer_broadcast_in_cap=True
-    ) == ("broadcast", 1, 0)
-    strat, _, _ = _close_strategy(
+    ) == ("broadcast", 0)
+    assert _close_strategy(
         600_000, 100_000, prefer_broadcast_in_cap=True
-    )
-    assert strat == "bloom"
-    strat, _, bits = _close_strategy(160, 10)
-    assert strat == "bloom" and bits == 4
-    # In-cap the broadcast-probed bloom is ALWAYS preferred over the
-    # shuffle probe — the post-barrier-fix 12M A/B row has broadcast
-    # probe 23.5s vs shuffle probe 188.6s (the short-lived in-cap
-    # shuffle promotion above 8M edges measured two plans equally
-    # handicapped by the pushdown bug and was withdrawn) — however
-    # much scratch is free.
-    assert _close_strategy(
-        9_000_000, 100_000_000, scratch_free_bytes=1 << 40
-    )[0] == "bloom"
-    assert _close_strategy(9_000_000, 100_000_000)[0] == "bloom"
-    assert _close_strategy(
-        9_000_000, 100_000_000, scratch_free_bytes=1 << 30
-    )[0] == "bloom"
-    # Past 16x the cap: shuffle-probed bloom at the 4-bit floor is
-    # the default (unknown scratch included — no broadcast-probe
-    # alternative exists there); a MEASURED shortfall falls back to
-    # the ladder; the env flag forces the ladder outright.
-    assert _close_strategy(161, 10) == ("bloom_shuffle", 1, 4)
-    assert _close_strategy(
-        161, 10, scratch_free_bytes=1 << 40
-    ) == ("bloom_shuffle", 1, 4)
-    assert _close_strategy(161, 10, scratch_free_bytes=1)[0] == "bucketed"
-    monkeypatch.setenv("PANDITYA_TRIANGLE_LADDER", "1")
-    strat, buckets, _ = _close_strategy(161, 10)
-    assert strat == "bucketed" and buckets == 17
+    ) == ("bloom", 10)
+    assert _close_strategy(160, 10) == ("bloom", 4)
+    # Past 16x the cap no close fits the driver heap.
+    with pytest.raises(ValueError, match="161 canonical edges exceed 16x"):
+        _close_strategy(161, 10)
+    with pytest.raises(ValueError, match="driver heap"):
+        _close_strategy(161, 10, prefer_broadcast_in_cap=True)
 
 
 def test_ktruss_bloom_close_matches_bruteforce(spark, monkeypatch):
@@ -1124,14 +1079,15 @@ def test_truss_decomposition_bloom_close_matches(spark, monkeypatch):
     assert got == _brute_trussness(edges)
 
 
-def test_truss_decomposition_decrement_matches_recount(spark):
-    """The round-15 hybrid support update: decrement_frac=1e9 forces
-    the victim-keyed DECREMENT branch on every distributed round,
-    decrement_frac=0.0 forces the original full RECOUNT —
-    local_tail_edges=0 keeps every round distributed so both branches
-    actually run. Results must be identical to each other and to
-    brute force (support = alive-triangle membership, the invariant
-    both branches maintain)."""
+def test_truss_decomposition_decrement_matches_recount(
+    spark, monkeypatch, distributed_tier
+):
+    """The hybrid support update: _DECREMENT_FRAC = 1e9 forces the
+    victim-keyed DECREMENT branch on every distributed round, 0.0 the
+    full RECOUNT; the distributed tier keeps every round in Spark so
+    both branches actually run. Results must be identical to each
+    other and to brute force (support = alive-triangle membership, the
+    invariant both branches maintain)."""
     from panditya_spark.operators import graph as G
 
     # Deterministic pseudo-random graph, dense enough that hit
@@ -1150,106 +1106,17 @@ def test_truss_decomposition_decrement_matches_recount(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     want = _brute_trussness(edges)
     for frac in (0.0, 1e9):
+        monkeypatch.setattr(G, "_DECREMENT_FRAC", frac)
         stats: dict = {}
         got = {
             (r["a"], r["b"]): r["trussness"]
-            for r in G.truss_decomposition(
-                df,
-                local_tail_edges=0,
-                decrement_frac=frac,
-                stats_out=stats,
-            ).collect()
+            for r in G.truss_decomposition(df, stats_out=stats).collect()
         }
         assert got == want, frac
         if frac == 0.0:
             assert stats["decrement_rounds"] == 0
         else:
             assert stats["decrement_rounds"] == stats["distributed_rounds"]
-
-
-def test_ktruss_bloom_shuffle_close_matches_bruteforce(spark, monkeypatch):
-    """Force n > 16*cap so _close_strategy naturally selects the
-    round-15 shuffle-probed bloom (the tier that replaced the bucket
-    ladder as the default), and pin end-to-end ktruss AND the full
-    decomposition to brute force. cap=0 puts EVERY edge count past
-    16*cap, so both ktruss phases (full-graph support + survivor
-    incidence) and the decomposition's one-time build all run the
-    shuffle probe."""
-    from panditya_spark.operators import graph as G
-
-    monkeypatch.delenv("PANDITYA_TRIANGLE_LADDER", raising=False)
-    monkeypatch.setattr(G, "_broadcast_edge_cap", lambda spark: 0)
-    assert G._close_strategy(15, 0)[0] == "bloom_shuffle"
-    edges = [
-        ("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"),
-        ("b", "c"), ("b", "d"), ("b", "e"), ("c", "d"), ("c", "e"),
-        ("e", "f"), ("f", "g"), ("g", "h"), ("f", "h"),
-        ("h", "i"), ("i", "j"),
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    for k in (3, 4):
-        got = {
-            (r["a"], r["b"]): r["support"]
-            for r in G.ktruss(df, k=k).collect()
-        }
-        assert got == _brute_ktruss(edges, k), k
-    dec = {
-        (r["a"], r["b"]): r["trussness"]
-        for r in G.truss_decomposition(df).collect()
-    }
-    assert dec == _brute_trussness(edges)
-
-
-def test_ktruss_bucketed_close_matches_bruteforce(spark, monkeypatch):
-    """Force the bucketed-close LAST-RESORT path end-to-end (phase-1
-    support + phase-2 survivor incidence) — _close_strategy now
-    prefers the bloom close above the cap, so the ladder is pinned
-    explicitly — and check against brute force."""
-    from panditya_spark.operators import graph as G
-
-    monkeypatch.setattr(
-        G,
-        "_close_strategy",
-        lambda n, cap, **kw: ("bucketed", max(2, -(-n // max(cap, 1))), 0),
-    )
-    monkeypatch.setattr(G, "_broadcast_edge_cap", lambda spark: 4)
-    edges = [
-        ("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"),
-        ("b", "c"), ("b", "d"), ("b", "e"), ("c", "d"), ("c", "e"),
-        ("e", "f"), ("f", "g"), ("g", "h"), ("f", "h"),
-        ("h", "i"), ("i", "j"),
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    for k in (3, 4):
-        got = {
-            (r["a"], r["b"]): r["support"]
-            for r in G.ktruss(df, k=k).collect()
-        }
-        assert got == _brute_ktruss(edges, k), k
-
-
-def test_truss_decomposition_bucketed_close_matches(spark, monkeypatch):
-    from panditya_spark.operators import graph as G
-
-    monkeypatch.setattr(
-        G,
-        "_close_strategy",
-        lambda n, cap, **kw: ("bucketed", max(2, -(-n // max(cap, 1))), 0),
-    )
-    monkeypatch.setattr(G, "_broadcast_edge_cap", lambda spark: 4)
-    edges = [
-        ("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"),
-        ("b", "c"), ("b", "d"), ("b", "e"), ("c", "d"), ("c", "e"),
-        ("e", "f"), ("f", "g"), ("g", "h"), ("f", "h"),
-        ("h", "i"), ("i", "j"),
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        (r["a"], r["b"]): r["trussness"]
-        for r in G.truss_decomposition(df).collect()
-    }
-    want = _brute_trussness(edges)
-    assert got == want
 
 
 @pytest.mark.parametrize(
