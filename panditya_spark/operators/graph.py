@@ -1743,7 +1743,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts: every triangle of
     triangle_list credits each of its three members once. Returns
     (node, n_triangles), nodes in at least one triangle."""
-    tri = triangle_list(_canonical_edges(edges))
+    return _triangle_credits(
+        triangle_list(_canonical_edges(edges).localCheckpoint(eager=True))
+    )
+
+
+def _triangle_credits(tri: DataFrame) -> DataFrame:
+    """(node, n_triangles): one credit per member of each (ta, tb, tc)."""
     return (
         tri.select(F.explode(F.array("ta", "tb", "tc")).alias("node"))
         .groupBy("node")
@@ -2665,31 +2671,33 @@ def _edge_support(tri: DataFrame, name: str = "support") -> DataFrame:
 
 def triangle_list(
     e: DataFrame,
-    n_edges: int | None = None,
     prefer_broadcast_in_cap: bool = False,
     probe_plan_only: bool = False,
 ) -> DataFrame:
     """The triangles over canonical edges ``e`` (a, b), a < b: one row per
     triangle, columns (ta, tb, tc) with ta < tb < tc. The one triangle
     enumerator: triangle_counts explodes its rows, and ktruss and
-    truss_decomposition peel them.
+    truss_decomposition peel them. ``e`` should be pinned
+    (localCheckpoint) by the caller: it is counted, then read by both
+    legs of the wedge join and by the close.
 
-    Enumeration is degree-ordered (compact-forward, Latapy 2008): each
-    edge is oriented from its (degree, id)-smaller endpoint to the
-    larger, a wedge is a pair of out-edges sharing a source, and its
-    closing edge is a LEFT SEMI probe, never a cartesian product.
-    Out-degrees under this order are O(sqrt(m)), which bounds the wedge
-    fan-out on skewed degree distributions.
+    Enumeration is id-ordered: a wedge is an in-edge u→v times an
+    out-edge v→w of its middle vertex v, so every wedge has u < v < w
+    and is emitted once, with no filter; its closing edge (u, w) is a
+    LEFT SEMI probe, never a cartesian product. A vertex of degree d is
+    the middle of at most d²/4 wedges. A (degree, id) order would bound
+    a hub's share on a skewed graph, but on the degree-flat co-purchase
+    graphs it gives as many wedges (4.59M at sf0.01, 49.3M at sf0.1,
+    either order) and costs a degree aggregate and two joins.
 
-    The close comes from _close_strategy, given the edge count
-    (``n_edges``; when not given, e is pinned and counted in one job)
-    and the heap-derived broadcast cap:
+    The close comes from _close_strategy, given the edge count and the
+    heap-derived broadcast cap:
 
-    - ``broadcast``: the closing set broadcasts, so the wedges (about
-      22 per triangle on the co-purchase graphs) cross no exchange.
+    - ``broadcast``: the closing set broadcasts, so the wedges cross no
+      exchange.
     - ``bloom``: a blocked bloom filter (Putze, Sanders and Singler
-      2007; one 64-bit word per key) over the composite (v, w) key.
-      xxhash64(1, v, w) picks the key's word among n*bits/64, and three
+      2007; one 64-bit word per key) over the composite (u, w) key.
+      xxhash64(1, u, w) picks the key's word among n*bits/64, and three
       further salted hashes pick bits inside it; one bit_or aggregate
       builds the (word, mask) table, which broadcasts. A wedge survives
       if its word holds all three of its bits. Survivors, the true
@@ -2701,62 +2709,31 @@ def triangle_list(
     ``probe_plan_only`` returns the bloom close's survivors before the
     optimizer barrier, so scripts/explain_audit.py can gate that stage's
     plan; it raises ValueError unless the bloom close is picked."""
-    if n_edges is None:
-        # Pinned: the count rides the checkpoint job, and the degree and
-        # wedge joins below read e without recomputing its lineage.
-        obs = Observation()
-        e = e.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-        n_edges = obs.get["n"]
+    n_edges = e.count()
     strat, bits = _close_strategy(
         n_edges, _broadcast_edge_cap(e.sparkSession), prefer_broadcast_in_cap
     )
     if probe_plan_only and strat != "bloom":
         raise ValueError("probe_plan_only requires the bloom close")
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
+    wedge = e.select(F.col("a").alias("u"), F.col("b").alias("v")).join(
+        e.select(F.col("a").alias("v"), F.col("b").alias("w")), "v"
     )
-    ranked = (
-        e.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
-    )
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ranked.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    )
-    if strat == "bloom":
-        # Pinned: the wedge join, the words table and the exactness
-        # join all read it; the repartition lets the self-join reuse
-        # one u-partitioning.
-        oriented = oriented.repartition("u").localCheckpoint(eager=True)
-    o2 = oriented.select(F.col("u"), F.col("v").alias("w"), F.col("dv").alias("dw"))
-    wedge = oriented.join(o2, "u").filter(
-        (F.col("dv") < F.col("dw"))
-        | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
-    )
-    # v precedes w in (deg, id) order, so the closing edge {v, w} — if
-    # present — is oriented v→w: one equi-key LEFT-SEMI probe.
-    closing = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))
+    closing = e.select(F.col("a").alias("u"), F.col("b").alias("w"))
 
     def _to_triangles(probed: DataFrame) -> DataFrame:
-        t = F.array_sort(F.array("u", "v", "w"))
-        return probed.select(t[0].alias("ta"), t[1].alias("tb"), t[2].alias("tc"))
+        return probed.select(
+            F.col("u").alias("ta"), F.col("v").alias("tb"), F.col("w").alias("tc")
+        )
 
     if strat == "broadcast":
-        return _to_triangles(wedge.join(F.broadcast(closing), ["v", "w"], "left_semi"))
+        return _to_triangles(wedge.join(F.broadcast(closing), ["u", "w"], "left_semi"))
     m_words = max(1, (max(n_edges, 1) * bits + 63) // 64)
     # The same two SQL expressions build and probe the filter, which is
     # the whole no-false-negative argument. Distinct literal salts give
     # independent draws without long-overflowing h1 + i*h2 mixing.
-    word_sql = f"pmod(xxhash64(1, v, w), {m_words}L)"
+    word_sql = f"pmod(xxhash64(1, u, w), {m_words}L)"
     mask_sql = " | ".join(
-        f"shiftleft(1L, CAST(pmod(xxhash64({salt}, v, w), 64) AS INT))"
+        f"shiftleft(1L, CAST(pmod(xxhash64({salt}, u, w), 64) AS INT))"
         for salt in (2, 3, 4)
     )
     words = (
@@ -2779,7 +2756,7 @@ def triangle_list(
         return survivors
     # OPTIMIZER BARRIER — load-bearing. Without it Catalyst's
     # PushDownLeftSemiAntiJoin pushes the exactness semi join below the
-    # word join (its (v, w) keys exist on the probed leg), so the
+    # word join (its (u, w) keys exist on the probed leg), so the
     # "pruned" exchange carries every wedge: measured at sf1 as 410.9M
     # rows / 7.8 GB against 22.0M survivors. A non-deterministic
     # projection is no barrier (column pruning deletes it); a lazy
@@ -2788,7 +2765,7 @@ def triangle_list(
     # storage and are lost with the executor.
     survivors = survivors.localCheckpoint(eager=False)
     return _to_triangles(
-        survivors.join(closing.hint("shuffle_hash"), ["v", "w"], "left_semi")
+        survivors.join(closing.hint("shuffle_hash"), ["u", "w"], "left_semi")
     )
 
 
@@ -2811,23 +2788,29 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 64) -> DataFrame:
     triangle-free edges). ``max_iter`` bounds the distributed peel
     rounds; running out before the fixpoint raises RuntimeError instead
     of returning a partial peel."""
-    e = _canonical_edges(edges)
-    sup_full = _edge_support(triangle_list(e)).localCheckpoint(eager=True)
+    e = _canonical_edges(edges).localCheckpoint(eager=True)
+    sup_full = _edge_support(triangle_list(e))
     if k <= 2:
         full = sup_full.select(F.col("ea").alias("a"), F.col("eb").alias("b"), "support")
-        return _checkpoint(
+        out = _checkpoint(
             e.join(full, ["a", "b"], "left_outer").select(
                 "a", "b", F.coalesce("support", F.lit(0)).alias("support")
             )
         )
-    survivors = sup_full.filter(F.col("support") >= k - 2).select(
-        F.col("ea").alias("a"), F.col("eb").alias("b")
+        _release(e)
+        return out
+    survivors = (
+        sup_full.filter(F.col("support") >= k - 2)
+        .select(F.col("ea").alias("a"), F.col("eb").alias("b"))
+        .localCheckpoint(eager=True)
     )
+    _release(e)
     alive, _ = _truss_peel(survivors, max_iter, pin=k - 3)
     out = _checkpoint(
         alive.select(F.col("ea").alias("a"), F.col("eb").alias("b"), "support")
     )
     _release(alive)
+    _release(survivors)
     return out
 
 
@@ -2845,7 +2828,7 @@ def _truss_peel(
     stats: dict | None = None,
 ) -> tuple[DataFrame, list[tuple]]:
     """The level peel of ktruss and truss_decomposition over the
-    triangles of canonical edges ``e`` (a, b).
+    triangles of canonical edges ``e`` (a, b), which the caller pins.
 
     The triangle list is built once, with the broadcast close for the
     whole in-cap range (the bloom close's pinned blocks would compete
@@ -3138,18 +3121,17 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     oracle-checkable — the same reason k-core returns degrees rather
     than normalized scores.
 
-    Scale shape: triangle credit is triangle_counts (exploded
-    triangle_list rows); undirected degree is one map-side-combinable
-    aggregate; the two join on node. Returns
+    Scale shape: the undirected edges are pinned once; degree is one
+    map-side-combinable aggregate over them, triangle credit explodes
+    the triangle_list rows of their a < b half, and the two join on
+    node. Returns
     (node, n_triangles, n_wedges) over all nodes with degree >= 1
     (zero-triangle nodes included with n_triangles 0)."""
-    und = undirected(edges)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    tri = triangle_counts(edges)
+    und = undirected(edges).localCheckpoint(eager=True)
+    deg = und.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    # und holds each edge once per direction, so its a < b half is the
+    # canonical edge set: one pinned copy feeds both aggregates.
+    tri = _triangle_credits(triangle_list(und.filter(F.col("a") < F.col("b"))))
     return (
         deg.join(tri, "node", "left_outer")
         .select(

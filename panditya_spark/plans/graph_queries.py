@@ -789,7 +789,7 @@ def g18_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g19_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering-coefficient components over the part
     co-purchase graph (operators/graph.clustering_coefficients, whose
-    triangle credit is triangle_counts over triangle_list): exact
+    triangle credit explodes triangle_list rows): exact
     integer (triangles, wedges) per node — C(v) is their ratio.
     Value-checked every round through the combo slot."""
     from panditya_spark.operators.graph import clustering_coefficients

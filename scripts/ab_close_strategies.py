@@ -109,7 +109,7 @@ def main() -> int:
         G._BLOOM_MIN_EDGES = ceiling
         for _ in range(reps):
             t0 = time.time()
-            n_tri = G.triangle_list(e, n_edges=n).count()
+            n_tri = G.triangle_list(e).count()
             walls.append(round(time.time() - t0, 1))
         after = _snap()
         if n_tri_ref is None:

@@ -327,7 +327,7 @@ def _build_bloom_probe_stage(spark, sf_dir):
     survivor barrier protects. The load-bearing gate is the ABSENCE
     of the exactness LeftSemi here — Catalyst's
     PushDownLeftSemiAntiJoin used to leapfrog it below the word join
-    (its (v, w) keys exist on the probed leg), which put the bit test
+    (its (u, w) keys exist on the probed leg), which put the bit test
     AFTER the semi's exchange and made the 'pruned' exchange carry
     the FULL wedge set (measured: 410.9M rows / 7.8 GB at sf1 vs
     22.0M actual survivors; a >73 GB ENOSPC at sf10)."""

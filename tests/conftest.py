@@ -13,6 +13,12 @@ def spark():
     from panditya_spark.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # The status store keeps 1000 stages by default and evicts skipped
+    # stages first, even the newest; test_serving.py::test_job_shape
+    # reads every stage of a job, so the session keeps them all.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.ui.retainedStages=1000000 " + (
+        os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
     s = get_spark("panditya-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -981,7 +981,7 @@ def test_truss_decomposition_triangle_free_all_two(spark):
 
 
 def test_triangle_list_bloom_close_matches_broadcast(spark, monkeypatch):
-    """The bloom close (relational blocked bitmap over xxhash64(v, w),
+    """The bloom close (relational blocked bitmap over xxhash64(u, w),
     broadcast word probe, one exact shuffle semi join) must enumerate
     exactly the broadcast close's triangle set: no false negatives from
     the bloom, false positives removed by the final semi join. The
