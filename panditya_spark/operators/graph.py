@@ -61,89 +61,6 @@ _CKPT_ROOT: str | None = None
 _CKPT_SEQ = 0
 
 
-def _source_file_bytes(df: DataFrame) -> int | None:
-    """Sum of the on-disk sizes of the files a DataFrame scans, or None
-    when the source is not file-backed (memory relation, stream). A
-    metadata-only volume probe — no job, no scan."""
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    total = 0
-    for f in files:
-        p = f[7:] if f.startswith("file://") else f
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return None
-    return total if total > 0 else None
-
-
-# Decompressed loop input per reduce partition in _loop_shuffle_scope.
-_LOOP_SHUFFLE_TARGET_MB = 8
-
-
-def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
-    """Volume-derived shuffle partitioning for an iterative loop
-    (guide §2.2: size partitions by data, never by core count).
-
-    The session default (spark.sql.shuffle.partitions = core count) is
-    right for one-shot queries over the full input, but an iterative
-    loop runs dozens of per-round exchanges over state frames that are
-    a small multiple of the edge table — at the local tiers that means
-    24-36 reduce tasks carrying a few thousand rows each, where the
-    per-task fixed cost (launch, fetch, commit) dwarfs the work. AQE's
-    coalescing does not fix this: with coalescePartitions.
-    parallelismFirst=true (the default, kept — flipping it globally
-    was measured slower on the big aggregations in r16) it deliberately
-    refuses to merge below the core count.
-
-    This scope derives the loop's exchange width from the measured
-    INPUT volume instead: parts = est_bytes x decompression factor /
-    target, clamped to [1, session default]. The clamp means the scope
-    only ever LOWERS parallelism below the deployment's ceiling when
-    the loop's data is provably small — at cluster scale est_bytes is
-    huge, parts saturates at the deployment setting, and the scope is
-    a no-op. Paired same-session A/B at sf0.1 (steal < 1%%):
-    g5 4.3-5.0 -> 3.5s, g10 4.2-8.5 -> 3.8-4.1s, g1 3.3-3.9 -> 2.5-3.0s
-    at the derived width; g14_scc measured NEUTRAL at 12 and WORSE at 4
-    (its propagation aggregate is CPU-bound at ~2x|E| rows/round), so
-    the SCC loop deliberately does not use this scope.
-
-    The target is _LOOP_SHUFFLE_TARGET_MB of (decompressed) loop input
-    per reduce partition. At TB-scale loops the clamp to the session
-    ceiling dominates it."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _scope():
-        conf = spark.conf
-        try:
-            cur = int(conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            yield
-            return
-        if est_bytes is None:
-            yield
-            return
-        # Parquet zstd/snappy on these string-keyed tables decompresses
-        # ~3x; the estimate feeds a clamp, so precision is not load-bearing.
-        est = est_bytes * 3
-        parts = max(1, min(cur, -(-est // (_LOOP_SHUFFLE_TARGET_MB << 20))))
-        if parts >= cur:
-            yield
-            return
-        conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", str(cur))
-
-    return _scope()
-
-
 def _cleanup_ckpt_root() -> None:
     """Delete the spill root at process exit — final loop generations
     (still referenced by returned DataFrames) live until then."""
@@ -207,145 +124,70 @@ def _release(df: DataFrame | None) -> None:
 
 
 class _LoopState:
-    """Per-round materialization manager for iterative DataFrame loops.
+    """Materialization for the rounds of an iterative DataFrame loop.
 
-    Every step localCheckpoints (eager): the logical plan is cut to a
-    LogicalRDD each round, which is essential — loop bodies reference
-    the previous state twice (e.g. depth ⋈ improved(depth)), so an
-    uncut plan TREE doubles per round and analysis/treeString walks
-    explode exponentially. Cache() alone does not cut the logical plan.
+    ``step(*frames, **metrics)`` ends a round. It materializes every
+    state frame of the round: a localCheckpoint, or on every
+    ``period``-th step a parquet spill (_checkpoint) of all of them. A
+    localCheckpoint cuts the plan, which a loop needs because each round
+    reads the previous state more than once; but it carries the
+    optimized plan's statistics, whose size estimates compound per
+    round, and the spill resets them to the true file size. Every live
+    state frame goes through the same spill, or its chain keeps
+    compounding. A frame the loop already holds (a ``minor`` cut of this
+    round, or a frame of the last step) is carried as it is, except on a
+    spill step.
 
-    Every `period`-th step spills to parquet instead: Dataset
-    checkpoints carry the optimized plan's Statistics, and the
-    size-only visitor multiplies children's sizeInBytes, so the carried
-    BigInt doubles in bit-length per round — a parquet scan resets it
-    to the true file size, bounding the growth to 2^period (~trivial).
-    On a cluster the spill dir would be HDFS/S3 — the standard
-    reliable-checkpoint cadence of any iterative Spark job.
+    The named aggregate Columns in ``metrics`` are evaluated over the
+    first frame as one ``observe()`` inside the job that materializes
+    it, so a fixpoint probe or a count costs no job of its own. Returns
+    the materialized frames followed by the dict of metric values.
 
-    Cleanup (unpersist/delete) is delayed by one full spill
-    generation: a lazy DataFrame built in the current window may still
-    reference state from one generation back, but never older — each
-    round builds only on the previous round's outputs.
-
-    The parquet boundary MUST spill every live state DataFrame in the
-    same round: a chain that never passes through a spill (e.g. the
-    changed-frontier chain while only `depth` gets spilled) keeps
-    compounding carried stats and OOMs after ~45 rounds regardless of
-    the other chain's resets."""
+    Release rule: once a step's frames exist, the previous round's frames
+    (its state and its ``minor`` cuts) are freed, unless this step
+    carries them. ``finish(*keep)`` frees the rest at loop exit."""
 
     def __init__(self, period: int = 8):
         self.period = period
         self._round = 0
-        self._seen: set[int] = set()
-        self._window: list[DataFrame] = []
-        self._spilled: list[DataFrame] = []
-        self._old_window: list[DataFrame] = []
-        self._old_spilled: list[DataFrame] = []
+        self._prev: list[DataFrame] = []
+        self._cur: list[DataFrame] = []
 
     def minor(self, df: DataFrame) -> DataFrame:
         """Materialize mid-round state (plan cut, no spill)."""
         out = df.localCheckpoint(eager=True)
-        self._window.append(out)
-        self._seen.add(id(out))
+        self._cur.append(out)
         return out
 
-    def round_end(self, *dfs: DataFrame) -> list[DataFrame]:
-        """Finish a round with ALL live state DataFrames. Every
-        `period`-th round all of them are spilled to parquet (stats
-        reset) and stale state from two generations back is freed."""
+    def step(self, *frames: DataFrame, **metrics: Column) -> tuple:
+        obs = Observation() if metrics else None
+        if obs is not None:
+            head = frames[0].observe(obs, *[c.alias(k) for k, c in metrics.items()])
+            frames = (head, *frames[1:])
         self._round += 1
-        if self._round % self.period == 0:
-            out = [_checkpoint(d) for d in dfs]
-            for c in self._old_window:
-                _release(c)
-            for s in self._old_spilled:
-                _release(s)
-            self._old_window, self._window = self._window, []
-            self._old_spilled, self._spilled = self._spilled, list(out)
-            self._seen = {id(d) for d in out}
-        else:
-            out = [d if id(d) in self._seen else self.minor(d) for d in dfs]
-        return out
-
-    def round_end_probe(
-        self,
-        df: DataFrame,
-        flag_col: str,
-        probe: Column | None = None,
-        extra: Column | None = None,
-    ) -> tuple:
-        """Finish a round with ONE state DataFrame and answer "is any
-        row's boolean `flag_col` set" in the SAME Spark job: the state
-        is marked for a LAZY localCheckpoint and the max(flag)
-        aggregate is the action that materializes it — one job per
-        round instead of an eager checkpoint plus a separate probe
-        scan (VERDICT r5 'What's wrong #3'). On the parquet-spill
-        cadence the write is its own job and the probe is a cheap
-        aggregate over the fresh file scan.
-
-        probe: optional custom aggregate Column (e.g. F.max("dist"))
-        evaluated instead of max(flag_col); its RAW value is returned
-        so callers can fold any per-round scalar probe into the same
-        materializing job (the r16 job-count fusion).
-
-        extra: optional SECOND aggregate Column riding the same
-        observe() — when given, the return becomes a 3-tuple
-        (state, probe_value, extra_value). Loop callers use it for
-        free per-round cardinalities (broadcast gates, partition
-        sizing) that would otherwise cost a count() job (r17).
-
-        r16 rework (guide §1.2 — remove passes): the probe is now an
-        `observe()` metric, computed as a task-side side effect of the
-        SAME action that materializes the round (the eager checkpoint
-        or the parquet spill write). The earlier lazy-checkpoint +
-        max-aggregate shape still paid one extra exchange and, under
-        AQE, an extra job per round; CollectMetrics adds neither (no
-        exchange, no job — measured: probe delivery < 1 ms after the
-        checkpoint job)."""
-        agg_expr = (
-            probe if probe is not None else F.max(F.col(flag_col))
-        ).alias("probe")
-        aggs = [agg_expr]
-        if extra is not None:
-            aggs.append(extra.alias("_extra"))
-        obs = Observation()
-        df = df.observe(obs, *aggs)
-        self._round += 1
-        if self._round % self.period == 0:
-            out = _checkpoint(df)
-        else:
-            out = df.localCheckpoint(eager=True)
-        metrics = obs.get
-        flag = metrics["probe"]
-        if self._round % self.period == 0:
-            for c in self._old_window:
-                _release(c)
-            for s in self._old_spilled:
-                _release(s)
-            self._old_window, self._window = self._window, []
-            self._old_spilled, self._spilled = self._spilled, [out]
-            self._seen = {id(out)}
-        else:
-            self._window.append(out)
-            self._seen.add(id(out))
-        probe_val = flag if probe is not None else bool(flag)
-        if extra is not None:
-            return out, probe_val, metrics["_extra"]
-        return out, probe_val
+        spill = self._round % self.period == 0
+        held = self._prev + self._cur
+        out = [
+            _checkpoint(f) if spill
+            else f if any(f is h for h in held)
+            else f.localCheckpoint(eager=True)
+            for f in frames
+        ]
+        for f in self._prev:
+            if not any(f is o for o in out):
+                _release(f)
+        self._prev = self._cur + [o for o in out if not any(o is c for c in self._cur)]
+        self._cur = []
+        return (*out, obs.get if obs is not None else {})
 
     def finish(self, *keep: DataFrame) -> None:
-        """Release every checkpoint this loop produced except the ones
-        the returned result plans still read from (`keep`). Call at
-        loop exit; the kept generation's files are deleted by the
-        atexit _CKPT_ROOT cleanup. Bounds per-invocation leakage to the
-        final generation only."""
-        kept = {id(d) for d in keep}
-        for c in self._old_window + self._old_spilled + self._window + self._spilled:
-            if id(c) not in kept:
-                _release(c)
-        self._old_window, self._old_spilled = [], []
-        self._window, self._spilled = [], []
+        """Free every frame the loop still holds except ``keep``, the
+        frames the returned result reads. A kept spill's files go with
+        the atexit cleanup of the spill root."""
+        for f in self._prev + self._cur:
+            if not any(f is k for k in keep):
+                _release(f)
+        self._prev, self._cur = [], []
 
 
 def khop_bfs(
@@ -390,54 +232,44 @@ def khop_bfs(
 
     # One materialization per round: the frontier is visited@dist==d-1
     # (a cheap scan of the checkpointed table), so each round is a
-    # single expand ∪ accumulate job plus an empty-frontier scan.
-    # Loop exchanges sized by input volume, not core count (r17,
-    # guide §2.2): x2 for the undirected doubling of the edge scan.
-    est = _source_file_bytes(edges)
+    # single expand ∪ accumulate job.
     # Measured-count broadcast gate (r17, guide §3.1): visited is a
     # checkpointed LogicalRDD, so the planner can only guess its size —
     # the hop-2 executed plan showed it guessing wrong both ways
     # (broadcasting the O(E) adjacency into the expand join, SMJ-ing
     # the visited anti-join). The exact visited count rides each hop's
-    # probe for free; the frontier is a subset of visited, so one gate
+    # step for free; the frontier is a subset of visited, so one gate
     # covers both joins. Above the heap-derived cap (cluster scale)
     # the hints stay off and both joins shuffle.
     bcast_cap = _broadcast_edge_cap(edges.sparkSession) // 2
     n_visited: int | None = None
-    with _loop_shuffle_scope(edges.sparkSession, est and est * 2):
-        for depth in range(1, hops + 1):
-            small = n_visited is not None and n_visited <= bcast_cap
-            frontier = visited.filter(F.col("dist") == depth - 1).select("node")
-            # Excluded nodes are visited but never expanded (grapher.py:48-50).
-            expandable = (
-                frontier.join(exclude.select(F.col(exclude.columns[0]).alias("node")), "node", "left_anti")
-                if exclude is not None
-                else frontier
-            )
-            if small:
-                expandable = F.broadcast(expandable)
-            seen = visited.select("node")
-            nxt = (
-                expandable.join(adj, expandable.node == adj.a)
-                .select(F.col("b").alias("node"))
-                .distinct()
-                .join(F.broadcast(seen) if small else seen, "node", "left_anti")
-                .withColumn("dist", F.lit(depth))
-            )
-            # max(dist) == depth ⇔ this hop added at least one node; the
-            # probe rides the same job that materializes the round (the
-            # round_end_probe fusion — one job per hop instead of
-            # checkpoint + isEmpty); the visited count rides it too and
-            # feeds the next hop's broadcast gate.
-            visited, max_dist, n_cnt = state.round_end_probe(
-                visited.union(nxt),
-                "dist",
-                probe=F.max("dist"),
-                extra=F.count(F.lit(1)),
-            )
-            n_visited = int(n_cnt or 0)
-            if max_dist is None or max_dist < depth:
-                break
+    for depth in range(1, hops + 1):
+        small = n_visited is not None and n_visited <= bcast_cap
+        frontier = visited.filter(F.col("dist") == depth - 1).select("node")
+        # Excluded nodes are visited but never expanded (grapher.py:48-50).
+        expandable = (
+            frontier.join(exclude.select(F.col(exclude.columns[0]).alias("node")), "node", "left_anti")
+            if exclude is not None
+            else frontier
+        )
+        if small:
+            expandable = F.broadcast(expandable)
+        seen = visited.select("node")
+        nxt = (
+            expandable.join(adj, expandable.node == adj.a)
+            .select(F.col("b").alias("node"))
+            .distinct()
+            .join(F.broadcast(seen) if small else seen, "node", "left_anti")
+            .withColumn("dist", F.lit(depth))
+        )
+        # max(dist) == depth ⇔ this hop added at least one node; the
+        # visited count feeds the next hop's broadcast gate.
+        visited, m = state.step(
+            visited.union(nxt), max_dist=F.max("dist"), n=F.count(F.lit(1))
+        )
+        n_visited = int(m["n"] or 0)
+        if m["max_dist"] is None or m["max_dist"] < depth:
+            break
 
     # visited is distinct by construction (distinct seeds, each hop
     # anti-joined against visited). Under the same measured-count gate
@@ -819,42 +651,36 @@ def connected_components(
     # not data volume; at cluster scale data dominates and the
     # per-round structure is the right shape.
     state = _LoopState()
-    # Loop exchanges sized by input volume, not core count (r17,
-    # guide §2.2): x2 for the undirected doubling of the edge scan.
-    est = _source_file_bytes(edges)
     # The label count (constant across rounds = |V|) rides round 0's
-    # probe for free and gates the round-plan broadcast hints; row
+    # step for free and gates the round-plan broadcast hints; row
     # budget mirrors the frontier gate in the SCC loop.
     bcast_cap = _broadcast_edge_cap(edges.sparkSession) // 2
     n_nodes: int | None = None
-    with _loop_shuffle_scope(edges.sparkSession, est and est * 2):
-        for it in range(max_iter):
-            bcast = n_nodes is not None and n_nodes <= bcast_cap
-            # The pointer jump references cand twice, so a lazy cand
-            # would run the und-join + min-agg subtree TWICE per round;
-            # the minor checkpoint trades one O(V) frame materialization
-            # for computing the O(E) half once — the dominant term at
-            # scale (r17).
-            cand = state.minor(cand_plan(labels, use_delta=it >= 1, bcast=bcast))
-            # Materialization and the any-changed fixpoint probe share
-            # one job (round_end_probe): the former round_end + isEmpty
-            # pair was two jobs per round at ~150 ms fixed cost each
-            # (r16).
-            labels, any_changed, n_cnt = state.round_end_probe(
-                _pointer_jump(cand, bcast),
-                "changed",
-                extra=F.count(F.lit(1)),
-            )
-            n_nodes = int(n_cnt or 0)
-            if not any_changed:
-                break
-        else:
-            und.unpersist()
-            state.finish()
-            raise ValueError(
-                "connected_components: labels did not reach a fixpoint "
-                f"within max_iter={max_iter} rounds — raise max_iter"
-            )
+    for it in range(max_iter):
+        bcast = n_nodes is not None and n_nodes <= bcast_cap
+        # The pointer jump references cand twice, so a lazy cand
+        # would run the und-join + min-agg subtree TWICE per round;
+        # the minor checkpoint trades one O(V) frame materialization
+        # for computing the O(E) half once — the dominant term at
+        # scale (r17).
+        cand = state.minor(cand_plan(labels, use_delta=it >= 1, bcast=bcast))
+        # Materialization and the any-changed fixpoint probe share
+        # one job.
+        labels, m = state.step(
+            _pointer_jump(cand, bcast),
+            changed=F.max("changed"),
+            n=F.count(F.lit(1)),
+        )
+        n_nodes = int(m["n"] or 0)
+        if not m["changed"]:
+            break
+    else:
+        und.unpersist()
+        state.finish()
+        raise ValueError(
+            "connected_components: labels did not reach a fixpoint "
+            f"within max_iter={max_iter} rounds — raise max_iter"
+        )
     und.unpersist()
     state.finish(labels)
     return labels.select("node", "component")
@@ -914,19 +740,16 @@ def longest_chain_depth(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     # re-shuffling the (cached) edge table every round.
     frontier = nodes.select(F.col("node").alias("dst"))
     deltas: list[DataFrame] = []
-    # Loop exchanges sized by input volume, not core count (r17,
-    # guide §2.2).
-    with _loop_shuffle_scope(e.sparkSession, _source_file_bytes(e)):
-        for k in range(1, max_iter + 1):
-            frontier = _checkpoint(
-                e.join(frontier, "dst")
-                .select(F.col("src").alias("node"))
-                .distinct()
-            )
-            if frontier.isEmpty():
-                break
-            deltas.append(frontier.withColumn("chain_depth", F.lit(k)))
-            frontier = frontier.select(F.col("node").alias("dst"))
+    for k in range(1, max_iter + 1):
+        frontier = _checkpoint(
+            e.join(frontier, "dst")
+            .select(F.col("src").alias("node"))
+            .distinct()
+        )
+        if frontier.isEmpty():
+            break
+        deltas.append(frontier.withColumn("chain_depth", F.lit(k)))
+        frontier = frontier.select(F.col("node").alias("dst"))
     all_depths = nodes.withColumn("chain_depth", F.lit(0))
     for d in deltas:
         all_depths = all_depths.union(d)
@@ -955,11 +778,7 @@ def _list_chain_depth(e: DataFrame, max_iter: int) -> DataFrame:
         F.when(F.col("ptr").isNotNull(), 1).otherwise(0).alias("chain_depth"),
     )
     state = _LoopState()
-    # Loop exchanges sized by input volume, not core count (r17,
-    # guide §2.2): the pointer table is one row per node of a
-    # single-successor chain forest, the same order as the edge scan.
-    with _loop_shuffle_scope(e.sparkSession, _source_file_bytes(e)):
-        t = _list_chain_rounds(t, state, max_iter)
+    t = _list_chain_rounds(t, state, max_iter)
     state.finish(t)
     return t.select("node", "chain_depth")
 
@@ -998,10 +817,10 @@ def _list_chain_rounds(t: DataFrame, state: _LoopState, max_iter: int) -> DataFr
             if n_live is not None and n_live <= bcast_cap
             else live
         )
-        # One job per doubling round: the live-pointer COUNT probe
-        # rides the materializing aggregate (round_end_probe fusion);
-        # it is both the fixpoint test and next round's broadcast gate.
-        t, n_raw = state.round_end_probe(
+        # One job per doubling round: the live-pointer count rides the
+        # step; it is both the fixpoint test and next round's
+        # broadcast gate.
+        t, m = state.step(
             lhs.join(nxt, lhs.ptr == F.col("p_node")).select(
                 "node",
                 F.col("p_ptr").alias("ptr"),
@@ -1009,10 +828,9 @@ def _list_chain_rounds(t: DataFrame, state: _LoopState, max_iter: int) -> DataFr
                     "chain_depth"
                 ),
             ).unionByName(done),
-            "ptr",
-            probe=F.sum(F.col("ptr").isNotNull().cast("long")),
+            live=F.sum(F.col("ptr").isNotNull().cast("long")),
         )
-        n_live = int(n_raw or 0)
+        n_live = int(m["live"] or 0)
         if not n_live:
             break
     return t
@@ -1071,7 +889,7 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", "community")
         )
-        (labels,) = state.round_end(
+        labels, _ = state.step(
             nodes.join(winner, "node", "left_outer").select(
                 "node", F.coalesce("community", F.col("node")).alias("community")
             )
@@ -1151,7 +969,7 @@ def louvain(
             break
         labels = k.select("node", F.col("node").alias("comm"))
         state = _LoopState()
-        (labels,) = state.round_end(labels)
+        labels, _ = state.step(labels)
         idle = 0
         for rnd in range(max_rounds):
             comm_tot = (
@@ -1233,7 +1051,7 @@ def louvain(
             # split, every node is eligible every round (measured on
             # the key-chain forest: hash parity left pair-swaps
             # oscillating and capped Q at 0.85).
-            (labels,) = state.round_end(
+            labels, m = state.step(
                 base.join(mv, "node", "left_outer")
                 .select(
                     "node",
@@ -1249,11 +1067,11 @@ def louvain(
                     "node",
                     F.col("new_comm").alias("comm"),
                     (F.col("new_comm") != F.col("old_comm")).alias("changed"),
-                )
+                ),
+                moved=F.max("changed"),
             )
-            moved = not labels.filter("changed").isEmpty()
             labels = labels.select("node", "comm")
-            idle = 0 if moved else idle + 1
+            idle = 0 if m["moved"] else idle + 1
             if idle >= 2:  # full direction cycle with no move
                 break
         # Compose this level's assignment into the node→community map.
@@ -1560,10 +1378,11 @@ def eigenvector_centrality(
     small_v = n <= _broadcast_edge_cap(edges.sparkSession) // 2
     for _ in range(max_iter):
         # One materialization per round: the un-normalized update with
-        # x_last carried along. Norm and convergence delta are then two
-        # O(V) single-row aggregates over the materialized frame, and
-        # the normalized x is a lazy projection of it (no plan growth —
-        # the frame is a checkpoint).
+        # x_last carried along, its L2 norm riding the same job. The
+        # convergence delta needs the norm, so it is a second O(V)
+        # single-row aggregate over the materialized frame, and the
+        # normalized x is a lazy projection of it (no plan growth — the
+        # frame is a checkpoint).
         x_src = x.select(F.col("node").alias("src"), "x")
         contrib = (
             e.join(F.broadcast(x_src) if small_v else x_src, "src")
@@ -1577,11 +1396,8 @@ def eigenvector_centrality(
             F.col("x").alias("x_last"),
             (F.col("x") + F.coalesce(F.col("c"), F.lit(0.0))).alias("x_raw"),
         )
-        (raw,) = state.round_end(raw)
-        norm = (
-            raw.agg(F.sqrt(F.sum(F.col("x_raw") * F.col("x_raw"))).alias("n")).first()["n"]
-            or 1.0
-        )
+        raw, m = state.step(raw, norm=F.sqrt(F.sum(F.col("x_raw") * F.col("x_raw"))))
+        norm = m["norm"] or 1.0
         delta = raw.agg(
             F.sum(F.abs(F.col("x_raw") / F.lit(norm) - F.col("x_last"))).alias("d")
         ).first()["d"]
@@ -1718,7 +1534,7 @@ def pagerank(
         ).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
         )
-        (ranks,) = state.round_end(
+        ranks, _ = state.step(
             nodes.join(contribs, "node", "left_outer")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -1771,12 +1587,12 @@ def strongly_connected_components(
     the driver (_scc_local); max_outer and max_inner bound only the
     distributed loop described below.
 
-    Round-10 rewrite: reachability MIN-LABEL FW-BW (the label-pair
-    formulation of Fleischer-Hendrickson-Pinar divide-and-conquer, the
-    shape Hong et al.'s multi-pivot variants distribute). Per outer
-    round, every active node carries two labels propagated as a delta
-    iteration — lf = min node that reaches it (min flows FORWARD along
-    edges), lb = min node it reaches (min flows BACKWARD) — and:
+    The distributed tier is reachability MIN-LABEL FW-BW (the
+    label-pair formulation of Fleischer-Hendrickson-Pinar
+    divide-and-conquer). Per outer round, every active node carries two
+    labels propagated as a delta iteration — lf = min node that reaches
+    it (min flows FORWARD along edges), lb = min node it reaches (min
+    flows BACKWARD) — and:
 
       lf(u) == lb(u) == x  ⇔  x reaches u AND u reaches x
                            ⇔  u ∈ SCC(x), labeled by its min member
@@ -1786,47 +1602,25 @@ def strongly_connected_components(
     Nodes with lf != lb keep (part, lf, lb) as their refined partition:
     an SCC's members share identical reacher/reachable sets, hence
     identical label pairs, so no SCC ever straddles two classes and the
-    recursion is exact. Every class settles its own min each round
-    (the class-min m has lf(m) = lb(m) = m within its class), so the
-    outer round count is the FW-BW layering depth, as before.
+    recursion is exact. Every class settles its own min each round, so
+    the outer round count is the FW-BW layering depth. Both directions
+    ride one union-tagged frame, so propagation runs max(d_f, d_b)
+    rounds, and every partition propagates at once.
 
-    Why this shape (round-8/9 verdict: the 18.5s bench row was 30% of
-    the headline total): the sf0.1 profile attributed the cost to TWO
-    phase families the labels subsume — the weak-CC pre-partition
-    (14.2s: its only job was letting one-pivot-per-partition BFS run in
-    parallel; min-label propagation is pivot-parallel BY CONSTRUCTION,
-    every class propagates simultaneously in one frame) and the two
-    sequential per-direction BFS loops (13.6s: 4 fwd + 3 bwd frontier
-    rounds, each a fixed-cost Spark job; here both directions ride ONE
-    union-tagged frame, so the loop runs max(d_f, d_b) rounds, not
-    d_f + d_b). Propagation rounds equal frontier-BFS rounds (a min
-    label crosses one edge per round), so the rewrite strictly removes
-    phases without adding rounds. Output is bit-identical (brute-force
-    transitive-closure pytests + the g14_scc structural oracle).
-
-    TRIM stays: nodes with zero in- or out-degree inside their active
-    partition can't lie on a cycle — settled as singleton SCCs by an
-    inner fixpoint peel (one degree-flag shuffle per layer, kcore-
-    style) before propagation, stripping DAG regions in bulk. The
-    round-8 global pre-trim phase is gone — with weak CC removed there
-    is nothing left for it to shield, and the outer-0 trim peel is the
-    same computation on the same whole-graph frame.
-
-    Delta iteration: only labels that IMPROVED last round propagate
-    (the standard Flink/GraphX incremental-iteration shape), so late
-    rounds touch frontier-sized frames, not the full node set. All
-    loop state goes through _LoopState (plan cuts + stats-reset
-    parquet spills) like every other iterative operator here.
+    TRIM first: nodes with zero in- or out-degree inside their active
+    partition can't lie on a cycle, so an inner fixpoint peel (one
+    degree-flag frame per layer) strips DAG regions in bulk before
+    propagation; the peeled nodes settle as singleton SCCs. Delta
+    iteration: only labels that IMPROVED last round propagate, so late
+    rounds touch frontier-sized frames. The outer labels, the trim
+    layers and the propagation rounds each run on a _LoopState.
 
     assume_distinct: callers whose edge table is duplicate-free BY
     CONSTRUCTION (e.g. each leg keyed by a unique column, as in the
-    g14 key-chain graph) may skip the defensive edge-distinct — the
-    round-10 phase profile put ~2.5s of the ~10s sf0.1 wall on the
-    distinct + census preamble (VERDICT r10 #5). The contract is the
-    caller's to honor: duplicate edges would inflate the degree
-    census's o/i flags only through max(), so trim stays CORRECT, but
-    propagation would ship duplicate messages per round — a
-    performance contract, not a silent-wrong-answer hazard.
+    g14 key-chain graph) may skip the defensive edge-distinct. The
+    contract is the caller's to honor: duplicate edges would not change
+    the answer (the degree flags are max()es), but propagation would
+    ship duplicate messages per round.
     """
     src, dst = edges.columns[0], edges.columns[1]
     local = _local_graph(edges, cols=(src, dst))
@@ -1840,393 +1634,151 @@ def strongly_connected_components(
         e = e.distinct()
     e = _checkpoint(e)
 
-    # One degree-flag pass doubles as the node census AND the outer-0
-    # trim's first layer (deg0 is exactly the flag frame that layer
-    # would recompute over the same union) — one shuffle job instead
-    # of a distinct-nodes job plus a flags job.
-    obs_deg0 = Observation()
-    deg0 = (
-        e.select(F.col("src").alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i"))
-        .unionByName(
-            e.select(F.col("dst").alias("node"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+    def flags(ae: DataFrame) -> DataFrame:
+        """(node, o, i): whether each endpoint of ae has an out- and an
+        in-edge in ae — one shuffle."""
+        return (
+            ae.select(F.col("src").alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+            .unionByName(
+                ae.select(F.col("dst").alias("node"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+            )
+            .groupBy("node")
+            .agg(F.max("o").alias("o"), F.max("i").alias("i"))
         )
-        .groupBy("node")
-        .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-        # Node census AND the outer-0 trim layer's on-cycle count ride
-        # the checkpoint job as observe() metrics — the separate
-        # deg0.count() job (and the layer-0 on_cycle count job) fold
-        # away (r16 job fusion, guide §1.2).
-        .observe(
-            obs_deg0,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                ((F.col("o") == 1) & (F.col("i") == 1)).cast("long")
-            ).alias("n_cyc"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    _m_deg0 = obs_deg0.get
-    n_all = int(_m_deg0["n"] or 0)
-    n_all_on_cycle = int(_m_deg0["n_cyc"] or 0)
-    # labels stays a LAZY projection over the checkpointed deg0 census:
-    # three literal columns, each consumer reads it at most twice per
-    # round, so the former eager round_end here paid one full-frame
-    # materialization job for nothing (r16 trim fusion, guide §1.2).
+
+    cyc = (F.col("o") == 1) & (F.col("i") == 1)
+    n_cyc = F.sum(cyc.cast("long"))
+    state = _LoopState()
+    # The flags of the whole edge set are both the node census and the
+    # outer-0 trim's first layer.
+    deg0, m0 = state.step(flags(e), n=F.count(F.lit(1)), on=n_cyc)
+    n_unsettled = int(m0["n"] or 0)
     labels = deg0.select(
         "node",
         F.lit("0").alias("part"),
         F.lit(None).cast(deg0.schema["node"].dataType).alias("scc"),
     )
-    state = _LoopState()
-    # Every node starts unsettled; an empty graph starts the loop with
-    # nothing to do. Updated each outer round by the round_end_probe,
-    # whose probe now carries the unsettled COUNT (not just any-left):
-    # the count doubles as the next round's n_act, folding the former
-    # act.count() job into the label materialization (r16 trim fusion).
-    n_unsettled = n_all
+    # Measured-count broadcast gate (r17, guide §3.1): the frontier and
+    # the settled-pair frame sit directly over checkpointed LogicalRDDs,
+    # so AQE can never runtime-size them and the static estimate (full
+    # label size) forced shuffles in every round. Their exact counts
+    # ride the steps, so the hint fires exactly when they fit the
+    # heap-derived cap; at cluster scale they stay shuffles.
+    fr_cap = _broadcast_edge_cap(e.sparkSession) // 2
 
     for outer in range(max_outer):
-        # Ad-hoc checkpoints of this outer round (trim layers, the ae
-        # frame, the final label frame): released as soon as round_end
-        # has materialized the label table that subsumes them, so reps
-        # of the operator in one session don't accumulate block-manager
-        # state (superseded PROPAGATION labels are released even
-        # sooner, inside the loop).
-        scratch: list[DataFrame] = [deg0] if outer == 0 else []
         if n_unsettled <= 0:
             break
         active = labels.filter(F.col("scc").isNull()).select("node", "part")
-        # INVARIANT (load-bearing for the r16 trim fusion, see the
-        # fusion comment below): endpoints(ae) ⊆ active — every ae
-        # construction keeps edges strictly INSIDE the active node set,
-        # so on_cycle ⊆ endpoints(ae_cur) ⊆ act holds at every layer
-        # and `act = on_cycle` is a set identity, not an approximation.
-        # Building ae from any SUPERSET of active would silently
-        # resurrect settled nodes into the propagation (ADVICE r16).
+        trim, prop_state = _LoopState(), _LoopState()
+        # INVARIANT: endpoints(ae) ⊆ act at every trim layer — every ae
+        # keeps edges strictly INSIDE the active node set (outer 0:
+        # every node is active, in one part). So each layer's on-cycle
+        # set is a subset of act and simply becomes the next act.
         if outer == 0:
-            # Single part, every node active (labels.scc all null), so
-            # endpoints(e) ⊆ active trivially: the part-internal join
-            # below would be an identity rewrite of e.
-            ae = e
+            ae, fl, n_on = e, deg0, int(m0["on"] or 0)
         else:
-            # Both endpoints semi-joined against `active` itself —
-            # never a wider frame — and part-internal (part == p2).
-            ae = (
+            ae = trim.minor(
                 e.join(active.withColumnRenamed("node", "src"), "src")
                 .join(
-                    active.select(
-                        F.col("node").alias("dst"), F.col("part").alias("p2")
-                    ),
+                    active.select(F.col("node").alias("dst"), F.col("part").alias("p2")),
                     "dst",
                 )
                 .filter(F.col("part") == F.col("p2"))
                 .select("src", "dst")
-            ).localCheckpoint(eager=True)
-            scratch.append(ae)
-        # TRIM to a fixpoint: peel nodes missing an in- or out-edge
-        # from the ACTIVE subgraph repeatedly — only the shrinking
-        # (act, ae_cur) frames materialize per peel layer; the full
-        # label table is rewritten ONCE below, after the whole DAG
-        # region is stripped. ONE degree-flag shuffle per layer (the
-        # former has_out/has_in distinct+join pair was three), and the
-        # trimmed COUNT comes free from the on_cycle/act counts
-        # (on_cycle ⊆ ae_cur endpoints ⊆ act), so a no-trim layer
-        # breaks without materializing an anti-join. When a layer
-        # strips a tiny fraction, act/ae_cur are rewritten via
-        # broadcast ANTI-joins against the small trimmed frame (not
-        # semi-joins against the large survivor set) and the peel
-        # stops — on cycle-heavy graphs one near-empty layer would
-        # otherwise pay full-frame rewrites per straggler (the round-8
-        # adaptive-gate rationale); stragglers the gate leaves behind
-        # settle through later outer rounds' singleton classes.
-        # r16 trim fusion (guide §1.2/§2.4 — remove jobs and joins the
-        # algebra already answers): per peel layer exactly TWO frames
-        # materialize — the flag frame (whose count rides its own
-        # checkpoint as an observe() metric) and the surviving edge
-        # frame. Three former per-layer jobs folded away:
-        #   - act semi-join: on_cycle ⊆ endpoints(ae_cur) ⊆ act, so
-        #     act ∩ on_cycle == on_cycle — the next act IS the already-
-        #     checkpointed flag frame (no join, no job). act therefore
-        #     carries only `node`; the partition id is re-attached at
-        #     settle time from the labels table (part is functionally
-        #     determined by node).
-        #   - trimmed anti-join + trimmed_all union checkpoints: the
-        #     per-layer trimmed sets accumulate LAZILY (each one an
-        #     anti-join over frames that are already checkpointed) and
-        #     materialize once, inside the round-end label rewrite.
-        #     The small_trim branch still materializes its tiny frame
-        #     eagerly — it is broadcast into the act/ae_cur rewrites,
-        #     where a lazy plan would recompute the anti-join per use.
-        #   - the act.count() at outer>0: the previous round's probe
-        #     carries the unsettled COUNT (see round_end_probe below),
-        #     so n_act arrives with the label checkpoint for free.
-        act, ae_cur = active.select("node"), ae
-        trimmed_parts: list[DataFrame] = []
-        n_act = n_all if outer == 0 else n_unsettled
-        first_layer = True
-        ae_lazy = False  # True when small_trim leaves ae_cur un-materialized
-        for layer in range(max_inner):
-            if outer == 0 and first_layer:
-                # deg0 above IS this layer's flag frame.
-                on_cycle = deg0.filter(
-                    (F.col("o") == 1) & (F.col("i") == 1)
-                ).select("node")
-            else:
-                obs_on = Observation()
-                on_cycle = (
-                    ae_cur.select(
-                        F.col("src").alias("node"),
-                        F.lit(1).alias("o"),
-                        F.lit(0).alias("i"),
-                    )
-                    .unionByName(
-                        ae_cur.select(
-                            F.col("dst").alias("node"),
-                            F.lit(0).alias("o"),
-                            F.lit(1).alias("i"),
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-                    .filter((F.col("o") == 1) & (F.col("i") == 1))
-                    .select("node")
-                    # The layer count rides the checkpoint job as an
-                    # observe() metric — one job per peel layer where
-                    # eager-checkpoint + count() was two (r16 fusion).
-                    .observe(obs_on, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
-                )
-                scratch.append(on_cycle)
-            via_deg0 = outer == 0 and first_layer
-            first_layer = False
-            n_on = (
-                n_all_on_cycle
-                if via_deg0
-                else int(obs_on.get["n"])
             )
+            fl = None
+        n_act = n_unsettled
+        ae_lazy = False
+        for _ in range(max_inner):
+            if fl is None:
+                fl, ae, m = trim.step(flags(ae), ae, on=n_cyc)
+                n_on = int(m["on"] or 0)
+            act = fl.filter(cyc).select("node")
             if n_on == n_act:
                 break
-            if via_deg0:
-                # deg0 already holds this layer's answer: the trimmed
-                # set is its flag complement — a lazy filter over the
-                # checkpointed census, not an O(V) anti-join job.
-                trimmed = deg0.filter(
-                    ~((F.col("o") == 1) & (F.col("i") == 1))
-                ).select("node")
-            else:
-                # Lazy: both inputs are checkpointed; the anti-join
-                # runs once, inside the round-end label rewrite.
-                trimmed = act.join(on_cycle, "node", "left_anti").select(
-                    "node"
-                )
-            small_trim = (n_act - n_on) < max(64, 0.02 * n_act)
-            if small_trim:
-                # Tiny strip: materialize the small trimmed frame once
-                # and rewrite act/ae_cur as LAZY broadcast anti-joins
-                # against it — they materialize for free inside the
-                # lab-init checkpoint and the prop scans below; eager
-                # per-frame rewrites would cost two full
-                # materializations to drop a handful of rows.
-                trimmed = trimmed.localCheckpoint(eager=True)
-                scratch.append(trimmed)
-                trimmed_parts.append(trimmed)
-                t_src = trimmed.select(F.col("node").alias("src"))
-                t_dst = trimmed.select(F.col("node").alias("dst"))
-                # Invariant holds: act and ae_cur only SHRINK (anti-join
-                # against trimmed ⊆ act), so endpoints(ae_cur) ⊆ act.
-                act = act.join(F.broadcast(trimmed), "node", "left_anti")
-                ae_cur = ae_cur.join(F.broadcast(t_src), "src", "left_anti").join(
-                    F.broadcast(t_dst), "dst", "left_anti"
-                )
+            n_act, n_trim = n_on, n_act - n_on
+            if n_trim < max(64, 0.02 * (n_act + n_trim)):
+                # A tiny strip: drop the trimmed endpoints' edges by
+                # broadcast anti joins, lazily, and stop peeling; the
+                # stragglers settle through later outer rounds.
+                t = fl.filter(~cyc).select("node")
+                ae = ae.join(
+                    F.broadcast(t.withColumnRenamed("node", "src")), "src", "left_anti"
+                ).join(F.broadcast(t.withColumnRenamed("node", "dst")), "dst", "left_anti")
                 ae_lazy = True
-                n_act = n_on
                 break
-            trimmed_parts.append(trimmed)
-            # Invariant holds: the next act IS on_cycle (⊆ endpoints of
-            # the previous ae_cur ⊆ previous act), and ae_cur shrinks to
-            # edges with BOTH endpoints in the new act — never a
-            # superset of act's edges.
-            act = on_cycle
-            ae_cur = (
-                ae_cur.join(act.select(F.col("node").alias("src")), "src", "semi")
-                .join(act.select(F.col("node").alias("dst")), "dst", "semi")
-                .localCheckpoint(eager=True)
+            ae = trim.minor(
+                ae.join(act.withColumnRenamed("node", "src"), "src", "semi").join(
+                    act.withColumnRenamed("node", "dst"), "dst", "semi"
+                )
             )
-            scratch.append(ae_cur)
-            n_act = n_on
-            if (layer + 1) % 8 == 0:
-                # Same parquet spill cadence as the propagation loop:
-                # a deep DAG peel chains localCheckpoints whose carried
-                # stats compound per layer (act needs none: it IS the
-                # per-layer flag checkpoint, one level off ae_cur).
-                ae_cur = _checkpoint(ae_cur)
-                scratch.append(ae_cur)
-                if trimmed_parts:
-                    spilled_trim = _checkpoint(reduce_union(trimmed_parts))
-                    trimmed_parts = [spilled_trim]
-                    scratch.append(spilled_trim)
-        trimmed_all = reduce_union(trimmed_parts) if trimmed_parts else None
+            fl = None
         if n_act == 0:
             wide = None
         else:
+            if ae_lazy:
+                # Materialized once: lazily the anti joins would rerun
+                # inside both union legs of every propagation round.
+                ae = trim.minor(ae)
             # Fused bidirectional min-label propagation: dir 'f' rows
             # carry lf along src→dst, dir 'b' rows carry lb along the
-            # reversed edges — one frame, one loop, every partition and
-            # both directions at once. The part column stays OUT of the
-            # propagation state (edges are part-internal, so node
-            # determines part) and is re-attached once at settle time;
-            # each round is a single materialization — candidate mins
-            # fold into the label frame with a change flag, and the
-            # next frontier/fixpoint probe are free filters over the
-            # checkpointed result.
-            if ae_lazy:
-                # Materialize the small_trim rewrite ONCE before the
-                # propagation loop (r17): lazily it re-executed its four
-                # broadcast anti-joins inside BOTH union legs of every
-                # propagation round (the r16 executed-plan trace shows 4
-                # LeftAnti BHJs per round), and — worse — its optimizer
-                # size estimate made the planner broadcast the whole
-                # prop table (BuildLeft, a ~10^6-row hashed relation
-                # built per round at sf0.1). One eager checkpoint ends
-                # both: honest LogicalRDD stats and a plain scan per
-                # round. The r16 laziness argument still holds for the
-                # NO-propagation path (n_act == 0), which never reaches
-                # here.
-                ae_cur = ae_cur.localCheckpoint(eager=True)
-                scratch.append(ae_cur)
-            prop = ae_cur.select(
-                F.col("src").alias("u"), F.col("dst").alias("v"),
-                F.lit("f").alias("dir"),
+            # reversed edges — one frame, one loop. Edges are
+            # part-internal, so node determines part and the part
+            # column is re-attached once at settle time.
+            prop = ae.select(
+                F.col("src").alias("u"), F.col("dst").alias("v"), F.lit("f").alias("dir"),
             ).unionByName(
-                ae_cur.select(
-                    F.col("dst").alias("u"), F.col("src").alias("v"),
-                    F.lit("b").alias("dir"),
+                ae.select(
+                    F.col("dst").alias("u"), F.col("src").alias("v"), F.lit("b").alias("dir"),
                 )
             )
-            lab = (
+            lab = prop_state.minor(
                 act.select(
                     "node", F.lit("f").alias("dir"), F.col("node").alias("val"),
                     F.lit(True).alias("chg"),
-                )
-                .unionByName(
+                ).unionByName(
                     act.select(
-                        "node", F.lit("b").alias("dir"),
-                        F.col("node").alias("val"), F.lit(True).alias("chg"),
+                        "node", F.lit("b").alias("dir"), F.col("node").alias("val"),
+                        F.lit(True).alias("chg"),
                     )
                 )
-                .localCheckpoint(eager=True)
             )
-            converged = False
-            # Measured-count broadcast gate for the frontier (r17,
-            # guide §3.1 — pick the strategy deliberately): the
-            # frontier is a filter DIRECTLY over the checkpointed
-            # label LogicalRDD — no exchange below it, so AQE can
-            # never runtime-size it, and the static estimate (full
-            # label size) blocked the broadcast flip in EVERY round.
-            # The changed-row count is exact and free (it rides the
-            # previous round's observe), so the hint fires exactly
-            # when the frontier fits the heap-derived cap — at
-            # cluster scale early frontiers exceed it and the join
-            # stays a shuffle, the same gate discipline as the
-            # triangle close's _broadcast_edge_cap.
-            fr_cap = _broadcast_edge_cap(ae_cur.sparkSession) // 2
             n_front = 2 * n_act
-            for rnd in range(max_inner):
-                prev_lab = lab
-                frontier = lab.filter("chg")
-                # One shuffle per round: candidate labels (edge-join
-                # against the changed frontier) UNION the current label
-                # rows fold through a single (node, dir) min-aggregate;
-                # the old value rides along as min-over-old-rows, so
-                # the change flag needs no second join. Exactly one old
-                # row per (node, dir) exists, so _old is never null.
-                fr = frontier.select(F.col("node").alias("u"), "dir", "val")
+            for _ in range(max_inner):
+                fr = lab.filter("chg").select(F.col("node").alias("u"), "dir", "val")
                 if n_front <= fr_cap:
                     fr = F.broadcast(fr)
                 cand = prop.join(fr, ["u", "dir"]).select(
-                    F.col("v").alias("node"), "dir", "val",
-                    F.lit(False).alias("is_old"),
+                    F.col("v").alias("node"), "dir", "val", F.lit(False).alias("is_old"),
                 )
-                # NOTE on why there is NO pointer-jumping leg here
-                # (round-10 finding, measured on a 50-node directed
-                # cycle): L(v) <- L(L(v)) doubling — which makes the
-                # undirected CC loop O(log diameter) — does NOT
-                # transfer to directed reachability labels. lb(u) is
-                # "some node u reaches", and lb(lb(u)) is merely
-                # another reachable node that can carry LESS
-                # information (on a monotone-id cycle each node's
-                # min-reachable pointer is its immediate successor,
-                # whose own pointer is one step further and LARGER),
-                # so both a delta-gated and a full self-join jump leg
-                # left the propagation tail at one hop per round while
-                # paying an extra O(V) join. True doubling needs
-                # transitive-closure edge squaring — the quadratic
-                # blowup distributed SCC avoids by design. Rounds are
-                # therefore a DIAMETER bound, with the loud raise
-                # below instead of silent truncation.
-                obs = Observation()
-                lab = (
+                # One shuffle per round: candidate labels UNION the
+                # current label rows fold through a single (node, dir)
+                # min-aggregate; the old value rides along as
+                # min-over-old-rows, so the change flag needs no second
+                # join. No pointer-jumping leg: lb(lb(u)) is merely
+                # another reachable node and can carry LESS information
+                # (on a monotone-id cycle), so directed labels move one
+                # edge per round and the rounds are a DIAMETER bound.
+                lab, m = prop_state.step(
                     lab.select("node", "dir", "val", F.lit(True).alias("is_old"))
                     .unionByName(cand)
                     .groupBy("node", "dir")
                     .agg(
                         F.min("val").alias("val"),
-                        F.min(F.when(F.col("is_old"), F.col("val"))).alias(
-                            "_old"
-                        ),
+                        F.min(F.when(F.col("is_old"), F.col("val"))).alias("_old"),
                     )
-                    .select(
-                        "node", "dir", "val",
-                        (F.col("val") < F.col("_old")).alias("chg"),
-                    )
-                    # The fixpoint probe rides the SAME job that
-                    # materializes the round: observe() computes
-                    # max(chg) (= OR) as a task-side metric of the
-                    # eager checkpoint — no extra exchange, no extra
-                    # job (r16 fusion; the former eager-checkpoint +
-                    # isEmpty pair was two jobs per propagation round,
-                    # each ~110 ms of fixed cost at sf0.1 — guide §1.2).
-                    # The changed COUNT rides the same metric row for
-                    # free — it is next round's broadcast gate (r17).
-                    .observe(
-                        obs,
-                        F.max("chg").alias("chg"),
-                        F.sum(F.col("chg").cast("long")).alias("nchg"),
-                    )
-                    .localCheckpoint(eager=True)
+                    .select("node", "dir", "val", (F.col("val") < F.col("_old")).alias("chg")),
+                    chg=F.max("chg"),
+                    nchg=F.sum(F.col("chg").cast("long")),
                 )
-                _m = obs.get
-                any_chg = bool(_m["chg"])
-                n_front = int(_m["nchg"] or 0)
-                _release(prev_lab)
-                if (rnd + 1) % 8 == 0:
-                    # Parquet spill cadence (the _LoopState discipline,
-                    # inlined): localCheckpoint plans CARRY the
-                    # optimized plan's Statistics, and each round's
-                    # join/union products compound them — the carried
-                    # BigInt doubles in bit-length per round, and past
-                    # ~15 rounds the driver's stats arithmetic itself
-                    # stalls the loop (observed on the 50-cycle deep-
-                    # diameter test; invisible on shallow graphs that
-                    # converge in 5). A parquet scan resets to true
-                    # file-size stats.
-                    spilled = _checkpoint(lab)
-                    _release(lab)
-                    lab = spilled
-                if not any_chg:
-                    converged = True
+                n_front = int(m["nchg"] or 0)
+                if not m["chg"]:
                     break
-            scratch.append(lab)
-            if not converged:
+            else:
                 # A truncated propagation would SILENTLY mislabel: an
                 # unconverged lf/lb pair can split one SCC across two
-                # (lf, lb) classes, and later rounds never reunite a
-                # split. Raising is the house contract for bounded
-                # loops whose truncation changes answers (the
-                # streaming-timeout / SEMANTIC_DEDUP_MAX_K precedent).
-                # The bound is a DIAMETER cap, not a size cap: a min
-                # label crosses one edge per round, so only a directed
-                # path longer than max_inner trips this.
+                # classes, and later rounds never reunite a split.
                 raise ValueError(
                     "strongly_connected_components: min-label "
                     f"propagation did not converge within max_inner="
@@ -2237,74 +1789,46 @@ def strongly_connected_components(
                 F.min(F.when(F.col("dir") == "f", F.col("val"))).alias("lf"),
                 F.min(F.when(F.col("dir") == "b", F.col("val"))).alias("lb"),
             )
-            if outer == 0:
-                # part is the constant "0" — no need to join act back.
-                pairs = pairs.withColumn("part", F.lit("0"))
-            else:
-                # act carries only `node` since the r16 trim fusion;
-                # part (functionally determined by node) is re-attached
-                # from the checkpointed labels — pairs' nodes ⊆ act ⊆
-                # active, so the inner join is exactly the old act join.
-                pairs = pairs.join(active, "node")
+            # act ⊆ active, so the inner join only re-attaches part.
+            pairs = (
+                pairs.withColumn("part", F.lit("0")) if outer == 0
+                else pairs.join(active, "node")
+            )
             wide = pairs.select(
                 "node",
                 F.when(F.col("lf") == F.col("lb"), F.col("lf")).alias("new_scc"),
                 F.concat_ws("|", "part", "lf", "lb").alias("new_part"),
             )
-        upd = labels
-        if trimmed_all is not None:
-            upd = (
-                upd.alias("l")
-                .join(
-                    trimmed_all.select("node").alias("t"), "node", "left_outer"
-                )
-                .select(
-                    "node",
-                    "part",
-                    F.when(
-                        F.col("scc").isNull() & F.col("t.node").isNotNull(),
-                        F.col("node"),
-                    )
-                    .otherwise(F.col("scc"))
-                    .alias("scc"),
-                )
-            )
-        if wide is not None:
-            # wide has exactly n_act rows (one per propagated node) —
-            # the same measured-count broadcast gate as the frontier
-            # (r17): without it the static estimate forced a
-            # SortMergeJoin of the full label table per outer round.
-            w_side = F.broadcast(wide) if n_act <= fr_cap else wide
-            upd = upd.join(w_side, "node", "left_outer").select(
+        # Every active node is in wide (it propagated) or was trimmed,
+        # and a trimmed node is its own singleton SCC.
+        if wide is None:
+            upd = labels.select("node", "part", F.coalesce("scc", "node").alias("scc"))
+        else:
+            upd = labels.join(
+                F.broadcast(wide) if n_act <= fr_cap else wide, "node", "left_outer"
+            ).select(
                 "node",
                 F.coalesce("new_part", "part").alias("part"),
-                F.coalesce("scc", "new_scc").alias("scc"),
+                F.when(F.col("scc").isNull() & F.col("new_part").isNull(), F.col("node"))
+                .otherwise(F.coalesce("scc", "new_scc"))
+                .alias("scc"),
             )
-        # round_end_probe folds next round's "how many nodes are still
-        # unsettled?" probe into the SAME job that materializes the
-        # label table — the COUNT (not just any-left) doubles as the
-        # next round's trim n_act, so neither the former
-        # active.isEmpty() nor the former act.count() costs a job.
-        labels, _n_raw = state.round_end_probe(
-            upd.withColumn("unsettled", F.col("scc").isNull()),
-            "unsettled",
-            probe=F.sum(F.col("unsettled").cast("long")),
-        )
-        n_unsettled = int(_n_raw or 0)
-        for c in scratch:
-            _release(c)
+        # The unsettled count is the next round's n_act.
+        labels, m = state.step(upd, unsettled=F.sum(F.col("scc").isNull().cast("long")))
+        n_unsettled = int(m["unsettled"] or 0)
+        trim.finish()
+        prop_state.finish()
     else:
         # max_outer exhausted without the active set draining: any
-        # remaining scc=NULL row would silently corrupt the output
-        # (same loud-bound contract as the propagation loop above).
-        if not labels.filter(F.col("scc").isNull()).isEmpty():
+        # remaining scc=NULL row would silently corrupt the output.
+        if n_unsettled > 0:
             raise ValueError(
                 "strongly_connected_components: FW-BW recursion did "
                 f"not settle every node within max_outer={max_outer} "
                 "rounds — raise max_outer"
             )
     out = labels.select("node", "scc")
-    state.finish(labels)
+    state.finish(labels, deg0)  # deg0 when no round ran
     _release(e)
     return out
 
@@ -2363,7 +1887,7 @@ def personalized_pagerank(
         dangling = ranks.join(outd.select("node"), "node", "left_anti").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
         )
-        (ranks,) = state.round_end(
+        ranks, _ = state.step(
             nodes.join(contribs, "node", "left_outer")
             .join(restart, "node", "left_outer")
             .crossJoin(F.broadcast(dangling))
@@ -2433,17 +1957,17 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 128) -> DataFrame:
         .repartition("src")
         .localCheckpoint(eager=True)
     )
-    deg = e_static.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     state = _LoopState()
-    (deg,) = state.round_end(deg)
-    converged = False
+    # The count of nodes below k rides each round's step: zero (or
+    # null, for an empty deg) means deg IS the core degree table.
+    n_dying = F.sum((F.col("deg") < k).cast("long"))
+    deg, m = state.step(
+        e_static.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), dying=n_dying
+    )
     for _ in range(max_iter):
-        dying = deg.filter(F.col("deg") < k).select("src")
-        if dying.count() == 0:
-            # No node below k (vacuously true when deg is empty — the
-            # empty-core case): deg IS the core degree table.
-            converged = True
+        if not m["dying"]:
             break
+        dying = deg.filter(F.col("deg") < k).select("src")
         lost = (
             e_static.join(dying, "src", "semi")
             .groupBy("dst")
@@ -2457,16 +1981,10 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 128) -> DataFrame:
                 (F.col("deg") - F.coalesce("lost", F.lit(0))).alias("deg"),
             )
         )
-        (deg,) = state.round_end(deg_next)
-    if not converged:
-        # The loop only OBSERVES convergence one round after the peel
-        # that achieved it, so a max_iter tuned to the exact peel
-        # depth would land here with a perfectly valid core in deg.
-        # One cheap dying-count certifies it before giving up; the
-        # raise remains for genuine non-fixpoints (the degree >= k
-        # invariant is never weakened).
-        converged = deg.filter(F.col("deg") < k).count() == 0
-    if not converged:
+        deg, m = state.step(deg_next, dying=n_dying)
+    # After max_iter peels the last step's count still certifies a core
+    # the loop did not get to re-observe.
+    if m["dying"]:
         raise RuntimeError(
             f"kcore: no fixpoint after {max_iter} rounds; raise max_iter "
             "(a partial peel would violate the degree >= k invariant)"
@@ -2490,9 +2008,9 @@ def hits(
 
     Scale shape mirrors eigenvector_centrality: each half-round is one
     equi-join + groupBy on a fixed key (a cluster pre-partitions the
-    edge table once and reuses it all rounds), the L2 norm is a 1-row
-    aggregate broadcast back via crossJoin, and lineage/stats reset on
-    the shared parquet-spill cadence. Returns (node, hub, authority)
+    edge table once and reuses it all rounds), its L2 norm rides the
+    job that materializes it, and lineage/stats reset on the shared
+    parquet-spill cadence. Returns (node, hub, authority)
     over the full vertex set — sinks get authority, sources get hub,
     isolated-direction nodes get exact 0.0.
     """
@@ -2508,59 +2026,44 @@ def hits(
         .distinct()
         .cache()
     )
-    # Round-10 restructure (the 54.5s sf0.1 g16 profile): the loop
-    # now runs on SPARSE score vectors — the per-half-round zero-fill
-    # join against the node universe is mathematically inert inside
-    # the loop (absent rows contribute nothing to the e-join sums and
-    # zeros add nothing to the L2 norm), so it happens ONCE at the
-    # output. Each half-round is a single Spark job: the contribution
-    # frame is a LAZY localCheckpoint materialized by its own norm
-    # aggregate (the _LoopState.round_end_probe shape — the aggregate
-    # touches every partition, so the checkpoint is fully pinned), and
-    # the norm comes back as a driver scalar (a Python float IS a
-    # double; no crossJoin/broadcast machinery). Superseded vectors
-    # are released one generation behind; every 8th round spills to
-    # parquet to reset carried plan statistics (the _checkpoint
-    # docstring's BigInt-growth hazard).
-    scratch: list[DataFrame] = []
+    # The loop runs on SPARSE score vectors: a zero-fill join against
+    # the node universe is inert inside the loop (absent rows add
+    # nothing to the e-join sums or the L2 norm), so it happens ONCE at
+    # the output. Each half-round is one step whose L2 norm rides the
+    # materializing job; the normalized vector is a lazy projection of
+    # the step's frame. Two steps per round, so the state spills every
+    # 8th round.
+    state = _LoopState(period=16)
+    sq = F.sqrt(F.sum(F.col("raw") * F.col("raw")))
 
-    def _half(contrib: DataFrame, out_col: str) -> DataFrame:
-        full = contrib.localCheckpoint(eager=False)
-        nrm = full.agg(
-            F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("n")
-        ).first()[0]
-        scratch.append(full)
+    def _scaled(full: DataFrame, nrm, out_col: str) -> DataFrame:
         score = (
             (F.col("raw") / F.lit(float(nrm))) if nrm and nrm > 0 else F.lit(0.0)
         )
         return full.select("node", score.alias(out_col))
 
-    def _authority_of(hubs: DataFrame) -> DataFrame:
-        return _half(
+    def _authority_raw(hubs: DataFrame) -> DataFrame:
+        return (
             e.join(hubs.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("raw")),
-            "authority",
+            .agg(F.sum("hub").alias("raw"))
         )
 
-    h = nodes.withColumn("hub", F.lit(1.0))
-    prev_scratch: list[DataFrame] = []
-    for i in range(iters):
-        a = _authority_of(h)
-        h = _half(
+    h, carry = nodes.withColumn("hub", F.lit(1.0)), []
+    for _ in range(iters):
+        a_full, m = state.step(_authority_raw(h), nrm=sq)
+        a = _scaled(a_full, m["nrm"], "authority")
+        h_full, m = state.step(
             e.join(a.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("authority").alias("raw")),
-            "hub",
+            nrm=sq,
         )
-        if (i + 1) % 8 == 0:
-            spilled = _checkpoint(h)
-            scratch.append(spilled)
-            h = spilled
-        for c in prev_scratch:
-            _release(c)
-        prev_scratch, scratch = scratch, []
-    a_fin = _authority_of(h)
+        h, carry = _scaled(h_full, m["nrm"], "hub"), [h_full]
+    # The last hub frame rides the final step, so the output join can
+    # still read it.
+    a_full, *_, m = state.step(_authority_raw(h), *carry, nrm=sq)
+    a_fin = _scaled(a_full, m["nrm"], "authority")
     out = _checkpoint(
         nodes.join(h, "node", "left_outer")
         .join(a_fin, "node", "left_outer")
@@ -2570,8 +2073,7 @@ def hits(
             F.coalesce("authority", F.lit(0.0)).alias("authority"),
         )
     )
-    for c in prev_scratch + scratch:
-        _release(c)
+    state.finish()
     e.unpersist()
     nodes.unpersist()
     return out
@@ -2855,21 +2357,17 @@ def _truss_peel(
     removed."""
     spark = e.sparkSession
     cap = _broadcast_edge_cap(spark)
-    tri = triangle_list(e, prefer_broadcast_in_cap=True).localCheckpoint(eager=True)
     state = _LoopState()
-    (sup,) = state.round_end(_edge_support(tri))
+    tri = state.minor(triangle_list(e, prefer_broadcast_in_cap=True))
+    # sum(support) is three times the alive triangle count, which the
+    # decrement gate needs; the three ride each round's step.
+    sup_stats = dict(m=F.min("support"), n=F.count(F.lit(1)), s=F.sum("support"))
+    sup, m = state.step(_edge_support(tri), **sup_stats)
     stats = {} if stats is None else stats
     stats.update(distributed_rounds=0, decrement_rounds=0, local_tail_n=0)
     level = pin or 0
     peeled: list[tuple] = []
     for rnd in range(max_rounds + 1):
-        # sum(support) is three times the alive triangle count, which
-        # the decrement gate needs; it rides the same aggregate.
-        m = sup.agg(
-            F.min("support").alias("m"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("support").alias("s"),
-        ).first()
         if m["n"] == 0 or (pin is not None and m["m"] > pin):
             break
         if m["n"] <= _local_cap(spark):
@@ -2914,16 +2412,10 @@ def _truss_peel(
             sup_next = sup_next.select(
                 "ea", "eb", F.coalesce("support", F.lit(0)).alias("support")
             )
-        # round_end materializes both frames, so nothing lazy reads the
-        # superseded triangle list: free it now rather than a
-        # generation later.
-        old_tri = tri
-        tri, sup = state.round_end(tri_next, sup_next)
-        _release(old_tri)
+        sup, tri, m = state.step(sup_next, tri_next, **sup_stats)
         stats["distributed_rounds"] += 1
     stats["final_level"] = level
     state.finish(sup)
-    _release(tri)
     return sup, peeled
 
 
@@ -3068,9 +2560,8 @@ def weighted_sssp(
         F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("dist")
     ).distinct()
     state = _LoopState()
-    (dist,) = state.round_end(dist)
+    dist, _ = state.step(dist)
     frontier = dist
-    converged = False
     for _ in range(max_iter):
         cand = (
             frontier.join(e, frontier["node"] == e["src"])
@@ -3091,17 +2582,15 @@ def weighted_sssp(
             "improved",
         )
         # ONE materialization per round AND one job: the (node, dist,
-        # improved) frame is the only checkpointed state, and the
-        # max(improved) convergence probe IS the materializing action
-        # (round_end_probe) — the dist/frontier pair are lazy
-        # projections over the fresh checkpoint.
-        merged, any_improved = state.round_end_probe(merged, "improved")
+        # improved) frame is the only checkpointed state, the
+        # max(improved) convergence probe rides its step, and the
+        # dist/frontier pair are lazy projections over it.
+        merged, m = state.step(merged, improved=F.max("improved"))
         dist = merged.select("node", "dist")
         frontier = merged.filter(F.col("improved")).select("node", "dist")
-        if not any_improved:
-            converged = True
+        if not m["improved"]:
             break
-    if not converged:
+    else:
         raise RuntimeError(
             f"weighted_sssp: no fixpoint after {max_iter} rounds "
             "(negative cycle impossible; raise max_iter)"

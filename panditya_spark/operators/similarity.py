@@ -18,8 +18,6 @@
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -400,6 +398,12 @@ def cosine_near_pairs(
     )
 
 
+# kmeans_assign's local tail: the largest vector matrix (bytes) and
+# fixpoint work (n·k·d·iterations) it runs as one applyInPandas group.
+_KMEANS_LOCAL_BYTES = 64 << 20
+_KMEANS_LOCAL_FLOPS = 4_000_000_000
+
+
 def kmeans_assign(
     df: DataFrame,
     id_col: str,
@@ -453,22 +457,15 @@ def kmeans_assign(
     # checks against this very loop every round, so the tail is
     # bit-identical by the same certification. Gated on matrix bytes
     # AND per-iteration flops (n·k·d) so a wide-k run never lands a
-    # multi-Gflop matmul on one task; both bounds are env-tunable and
-    # scale-independent (a 100 TB run fails both and keeps the
-    # distributed loop).
+    # multi-Gflop matmul on one task; both bounds are scale-independent
+    # (a 100 TB run fails both and keeps the distributed loop).
     n_rows = cand.count()
     if n_rows == 0:
         raise ValueError("kmeans_assign: no non-null vectors to cluster")
     dim = len(cand.first()["kvec"])
-    local_bytes = int(
-        os.environ.get("PANDITYA_KMEANS_LOCAL_BYTES", str(64 << 20))
-    )
-    local_flops = int(
-        os.environ.get("PANDITYA_KMEANS_LOCAL_FLOPS", str(4_000_000_000))
-    )
     if (
-        n_rows * dim * 8 <= local_bytes
-        and n_rows * k * dim * (max_iter + 1) <= local_flops
+        n_rows * dim * 8 <= _KMEANS_LOCAL_BYTES
+        and n_rows * k * dim * (max_iter + 1) <= _KMEANS_LOCAL_FLOPS
     ):
         id_type = df.schema[id_col].dataType.simpleString()
         km_iters = max_iter

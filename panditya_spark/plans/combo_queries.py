@@ -440,12 +440,13 @@ _NULL = "∅"
 # 45-member cap with new oracle-bearing members still arriving.)
 
 # Measured solo (Spark collect + DuckDB oracle) seconds at sf0.01,
-# round-13 host, one warm session (scripts/measure_combo_weights.py —
-# re-run it whenever members change; VERDICT r7 #7; this refresh
-# covers all 109 members including the round-13 rotation's g17_ktruss
-# at its measured 19.7 — was a 20.0 estimate — and retires the stale
-# post-rewrite g15_kcore 5.38 → 5.09, VERDICT r12 missing-#3). Only
-# the ORDERING matters — a 2x drift leaves the split near-balanced.
+# round-13 host, one warm session (the full-member timing run is
+# recorded in COVERAGE.md, "g15_kcore combo weight refresh"; VERDICT
+# r7 #7; this refresh covers all 109 members including the round-13
+# rotation's g17_ktruss at its measured 19.7 — was a 20.0 estimate —
+# and retires the stale post-rewrite g15_kcore 5.38 → 5.09, VERDICT
+# r12 missing-#3). Only the ORDERING matters — a 2x drift leaves the
+# split near-balanced.
 # Members over 5s solo: g17_ktruss 19.7 (the combo's heaviest member
 # by far — the k=10 peel at sf0.01), stream_ingest_neardedup 16.3
 # (three real micro-batch replays — batch-count-bound),

@@ -347,12 +347,15 @@ def g13_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def g14_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed SCC (trim + weak-CC pre-partition + per-partition
-    FW-BW pivots — operators/graph.strongly_connected_components) on
-    the back-edged key chain. Algorithm semantics are pinned by the
-    brute-force transitive-closure tests (tests/test_graph.py); this
-    query value-checks the full 16k-node decomposition against the
-    structural oracle every round.
+    """SCC of the back-edged key chain
+    (operators/graph.strongly_connected_components). At sf0.01 and at
+    sf0.1 (315k edges, 165k nodes) the graph fits the local tier on a
+    3g or larger driver and iterative Tarjan runs on the driver; a
+    larger graph runs the distributed trim + min-label FW-BW loop.
+    Algorithm semantics are pinned on both tiers by the brute-force
+    transitive-closure tests (tests/test_graph.py); this query
+    value-checks the full decomposition against the structural oracle
+    every round.
 
     assume_distinct is honest here, not a bench dodge: each union leg
     is keyed by a UNIQUE column of its source table (N→C by c_custkey,

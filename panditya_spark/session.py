@@ -7,9 +7,10 @@ Defaults chosen for correctness *and* scale-out behavior:
   9,049-node component, so degree skew is real).
 - Arrow on (pandas UDF / toPandas transfers are columnar batches).
 - UTC session timezone so timestamp semantics match DuckDB oracles.
-- shuffle partitions sized to the local core count (tests run on
-  local[32]); on a real cluster this would be set per-job or left to
-  AQE coalescing.
+- Cores and driver heap derived from the host (host_defaults);
+  SPARK_GRAFT_CPUS and SPARK_DRIVER_MEM override them.
+- shuffle partitions sized to the local core count; on a real cluster
+  this would be set per-job or left to AQE coalescing.
 - A checkpoint dir for iterative algorithms (connected components,
   BFS) whose lineage must be cut periodically.
 """
@@ -24,12 +25,25 @@ from pyspark.sql import SparkSession
 _CHECKPOINT_DIR: str | None = None
 
 
-def get_spark(app_name: str = "panditya-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver heap) for a local session on this host: the
+    cores this process may run on, and a fifth of physical memory
+    (MemTotal) in whole GB, clamped to 1g..12g, leaving the rest to the
+    Python workers, the page cache and other processes."""
     try:
-        n = max(int(cpus), 1)
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        cores = os.cpu_count() or 1
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return max(cores, 1), f"{min(max(mem // (5 << 30), 1), 12)}g"
+
+
+def get_spark(app_name: str = "panditya-spark") -> SparkSession:
+    cores, heap = host_defaults()
+    try:
+        n = max(int(os.environ.get("SPARK_GRAFT_CPUS", cores)), 1)
     except ValueError:
-        n = 32
+        n = cores
     spark = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -40,20 +54,17 @@ def get_spark(app_name: str = "panditya-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", heap))
         # Long-lived sessions (the bench runs 35 queries × reps; a real
         # deployment runs for days) accumulate broadcast/shuffle/RDD
         # state that ContextCleaner only releases on a JVM GC; with a
-        # 12 GB heap, organic GC is rare and the block manager creeps
+        # large heap, organic GC is rare and the block manager creeps
         # ~120 MB per iterative-query rep until execution slows
         # (measured r16: 8 back-to-back g14_scc runs degraded 9.2 →
         # 21.0 s; with a 90 s periodic GC the same loop held 9.0-9.1 s
         # on late reps). Default 30min is tuned for multi-hour cluster
         # jobs; 90 s bounds the creep at a negligible full-GC cost.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "90s"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "90s")
         .getOrCreate()
     )
     ensure_session_defaults(spark)

@@ -799,12 +799,13 @@ def test_kmeans_local_tail_matches_distributed(spark, monkeypatch):
     """The r16 small-input local tail (one applyInPandas Lloyd) must be
     bit-identical to the distributed per-round loop — this is the
     load-bearing certification now that the two-level identity row
-    compares two numpy paths. The distributed arm is forced via the
-    byte-gate env override; same constructed geometry as the identity
+    compares two numpy paths. The distributed arm is forced by patching
+    the byte gate to 0; same constructed geometry as the identity
     test plus planted exact duplicates (the SemDeDup co-cluster
     invariant) and a null vector (the drop contract)."""
     import random
 
+    from panditya_spark.operators import similarity
     from panditya_spark.operators.similarity import kmeans_assign
 
     rng = random.Random(23)
@@ -817,7 +818,7 @@ def test_kmeans_local_tail_matches_distributed(spark, monkeypatch):
         r["vec_id"]: r["cluster"]
         for r in kmeans_assign(df, "vec_id", "embedding", k=8).collect()
     }
-    monkeypatch.setenv("PANDITYA_KMEANS_LOCAL_BYTES", "0")
+    monkeypatch.setattr(similarity, "_KMEANS_LOCAL_BYTES", 0)
     dist = {
         r["vec_id"]: r["cluster"]
         for r in kmeans_assign(df, "vec_id", "embedding", k=8).collect()

@@ -35,36 +35,6 @@ def seeds(spark, *ids):
     return spark.createDataFrame([(i,) for i in ids], ["node"])
 
 
-def test_loop_shuffle_scope_lowers_and_restores(spark, monkeypatch):
-    """The volume-derived loop partitioning scope (r17): lowers
-    spark.sql.shuffle.partitions inside the with-block according to the
-    byte estimate, restores the session value on exit (also on raise),
-    never RAISES above the session setting, and is a no-op when the
-    estimate is unavailable."""
-    from panditya_spark.operators import graph as G
-    from panditya_spark.operators.graph import _loop_shuffle_scope
-
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    monkeypatch.setattr(G, "_LOOP_SHUFFLE_TARGET_MB", 8)
-    # Small estimate -> lowered inside, restored after.
-    with _loop_shuffle_scope(spark, 1 << 20):
-        assert int(spark.conf.get(key)) == 1
-    assert spark.conf.get(key) == before
-    # Huge estimate -> clamped at the session value (never raised).
-    with _loop_shuffle_scope(spark, 1 << 40):
-        assert spark.conf.get(key) == before
-    # None estimate (non-file source) -> no-op.
-    with _loop_shuffle_scope(spark, None):
-        assert spark.conf.get(key) == before
-    # Restored even when the loop body raises.
-    with pytest.raises(RuntimeError):
-        with _loop_shuffle_scope(spark, 1 << 20):
-            assert int(spark.conf.get(key)) == 1
-            raise RuntimeError("loop body failure")
-    assert spark.conf.get(key) == before
-
-
 def test_bfs_hops_and_dist(spark, chain_graph):
     nodes, edges = khop_bfs(chain_graph, seeds(spark, "a"), hops=2)
     out = dict(rows(nodes, "node", "dist"))
@@ -762,9 +732,8 @@ def test_kcore_raises_on_exhausted_nonfixpoint(spark):
     cannot converge and must raise instead of returning a non-core.
     But a max_iter tuned to the EXACT peel depth (7 rounds for this
     13-node path: 6 two-endpoint rounds + the final center node) is a
-    valid fixpoint the loop just never re-observed — the post-loop
-    certification must return it, not raise."""
-    import pytest
+    valid fixpoint the loop just never re-observed — the below-k count
+    of the last round's step certifies it, so it returns, not raises."""
 
     from panditya_spark.operators.graph import kcore
 
@@ -773,13 +742,74 @@ def test_kcore_raises_on_exhausted_nonfixpoint(spark):
     with pytest.raises(RuntimeError, match="no fixpoint"):
         kcore(df, k=2, max_iter=2)
     # Exact peel depth: every round peeled, convergence observable
-    # only one round later — certified post-loop instead of raising.
+    # only one round later — certified by the last step, not raised.
     assert kcore(df, k=2, max_iter=7).count() == 0
     # One short of the peel depth still leaves a sub-k node -> raise.
     with pytest.raises(RuntimeError, match="no fixpoint"):
         kcore(df, k=2, max_iter=6)
     # With enough rounds the same input converges (to the empty core).
     assert kcore(df, k=2, max_iter=16).count() == 0
+    # A 40-edge path takes 21 peel rounds: its steps cross two parquet
+    # spill generations, so every round after a spill reads state the
+    # release rule has to keep alive.
+    # A triangle beside it is the core the last step must hand back.
+    long_path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(40)]
+    triangle = [("t0", "t1"), ("t1", "t2"), ("t2", "t0")]
+    df = spark.createDataFrame(long_path + triangle, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        kcore(df, k=2, max_iter=20)
+    core = kcore(df, k=2, max_iter=21)
+    assert sorted(rows(core, "node", "degree")) == [("t0", 2), ("t1", 2), ("t2", 2)]
+
+
+def _group_jobs(spark, name: str, run) -> int:
+    """Spark jobs that run() starts, read from the status store by job
+    group (the way tests/test_serving.py::test_job_shape reads them)."""
+    jsc = spark.sparkContext._jsc.sc()
+    spark.sparkContext.setJobGroup(name, name)
+    try:
+        run()
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    jsc.listenerBus().waitUntilEmpty()
+    it = jsc.statusStore().jobsList(None).iterator()
+    n = 0
+    while it.hasNext():
+        group = it.next().jobGroup()
+        n += group.isDefined() and group.get() == name
+    return n
+
+
+def test_loop_round_is_one_step(spark, distributed_tier):
+    """One more loop round costs the jobs of one _LoopState.step and
+    nothing else: k-core's below-k count and eigenvector centrality's
+    L2 norm ride the job that materializes the round. Pinned as the
+    job-count difference between inputs that need r and r+1 rounds:
+    k=2 peels a path from both ends, so 6 and 8 edges take 4 and 5
+    peel rounds; eigenvector centrality on a directed path does not
+    converge in 3 or 4 rounds, so max_iter sets the round count. All
+    four stay below the first parquet spill step, whose file-size
+    statistics change the later rounds' plans. A per-round probe
+    action (a count(), a first()) adds two jobs to each difference."""
+    from panditya_spark.operators.graph import eigenvector_centrality, kcore
+
+    def path(n):
+        return spark.createDataFrame(
+            [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)], ["src", "dst"]
+        )
+
+    def jobs(tag, run):
+        return _group_jobs(spark, f"loop-round-{tag}", run)
+
+    per_round = jobs("k5", lambda: kcore(path(8), 2).count()) - jobs(
+        "k4", lambda: kcore(path(6), 2).count()
+    )
+    assert per_round == 7
+    p = path(10)
+    per_round = jobs("e4", lambda: eigenvector_centrality(p, max_iter=4)) - jobs(
+        "e3", lambda: eigenvector_centrality(p, max_iter=3)
+    )
+    assert per_round == 7
 
 
 def test_ktruss_raises_on_exhausted_nonfixpoint(spark, distributed_tier):
