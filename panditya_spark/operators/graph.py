@@ -6,16 +6,16 @@ tier: a loop of joins with lineage hygiene (cache + localCheckpoint every
 few rounds, _LoopState), so the same code runs on a 17k-node
 prosopography graph or a multi-billion-edge cluster graph.
 
-Connected components, strongly connected components, PageRank and label
-propagation also have a local tier, because on a small graph every loop
-round is Spark fixed cost, not work. The rule that picks the tier
-(_local_graph): one ``limit(cap+1)`` collect of the edges, and of the
-vertices when given, is both the size probe and the data fetch. When
-the edges fit the heap-derived cap (_local_cap), no id is null, all ids
-share one string or integer type, and the result has at most
-_LOCAL_MAX_ROWS rows, a pure-Python kernel with the distributed loop's
-exact semantics runs on the driver and its rows come back through
-relational.literal_frame. Otherwise the distributed loop runs.
+Connected components, strongly connected components, PageRank, label
+propagation and exact betweenness also have a local tier, because on a
+small graph every loop round is Spark fixed cost, not work. The rule
+that picks the tier (_local_graph): one ``limit(cap+1)`` collect of the
+edges, and of the vertices when given, is both the size probe and the
+data fetch. When the edges fit the heap-derived cap (_local_cap), no id
+is null, all ids share one string or integer type, and the result has
+at most _LOCAL_MAX_ROWS rows, a pure-Python kernel with the distributed
+loop's exact semantics runs on the driver and its rows come back
+through relational.literal_frame. Otherwise the distributed loop runs.
 The truss peel of ktruss and truss_decomposition finishes on the driver
 under the same cap.
 
@@ -34,6 +34,7 @@ Semantics replicated from the reference:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as _W
@@ -118,9 +119,12 @@ def _release(df: DataFrame | None) -> None:
         shutil.rmtree(path, ignore_errors=True)
         return
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # not a localCheckpoint plan: nothing pinned
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+    except Py4JError:
+        return  # not a localCheckpoint plan: nothing pinned
+    # SparkContext.unpersistRDD, not RDD.unpersist: the latter logs a
+    # WARN for every locally checkpointed RDD it frees.
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
 
 
 class _LoopState:
@@ -1118,121 +1122,117 @@ def louvain(
     )
 
 
+# Distinct edges up to which betweenness_centrality, without an explicit
+# sample, computes exact all-sources Brandes; a larger graph samples 256
+# sources. Exact Brandes is O(V·E) work on either tier.
+_BETWEENNESS_EXACT_MAX_EDGES = 2_000_000
+
+
 def betweenness_centrality(
-    edges: DataFrame,
-    sample_sources: int | None = None,
-    seed: int = 42,
-    mode: str = "auto",
-    max_broadcast_edges: int = 2_000_000,
+    edges: DataFrame, sample_sources: int | None = None, seed: int = 42
 ) -> DataFrame:
     """Betweenness centrality (utils/analyze.py:166 — exact Brandes via
-    NetworkX in the reference). Directed, unweighted, endpoint-excluded.
+    NetworkX in the reference). Directed, unweighted, endpoint-excluded,
+    over the distinct edges. Returns (node, betweenness) with node in
+    the input id type, for every node reached from another node.
 
-    Two physical strategies, chosen by edge count (``mode='auto'``):
-
-    - **broadcast** (≤ ``max_broadcast_edges`` distinct edges): Brandes
-      is one BFS + dependency accumulation per source — embarrassingly
-      parallel over sources. The adjacency list is streamed to the
-      driver partition-by-partition (``toLocalIterator``, never a
-      single giant ``collect`` buffer) and broadcast once; sources are
-      a DataFrame and each partition runs per-source Brandes in Python,
-      emitting (node, partial) pairs a final groupBy sums.
-    - **distributed** (larger graphs): no driver materialization at
-      all. A multi-source frontier BFS (keyed by (source, node),
-      accumulating path counts σ as a map-side sum over predecessor
-      frontiers) runs forward; then dependency accumulation runs the
-      level structure backwards, each step a join of level d with level
-      d+1 through the edge table — O(diameter) rounds of pure
-      DataFrame joins. Defaults to the standard sampled approximation
-      (``sample_sources`` or 256 sources, scores scaled by V/k):
-      exact all-sources is O(V·E) work regardless of engine, and
-      sampling is how betweenness is run at scale.
+    - **Exact or sampled.** Without ``sample_sources``, a graph of at
+      most _BETWEENNESS_EXACT_MAX_EDGES distinct edges is exact (every
+      node a source); a larger one samples 256 sources. Sampled scores
+      are scaled by V/k.
+    - **Path.** An exact request that fits the local tier
+      (_local_graph) runs Brandes on the driver (_brandes_local).
+      Anything else runs the distributed multi-source path
+      (_betweenness_distributed), which an explicit ``sample_sources``
+      always takes.
+    - **Sampling.** ``sample(k/V, seed)`` over the frame of distinct
+      edge endpoints draws the sources, so which sources a seed picks
+      depends on that frame's partitioning, not only on the node set.
+      The removed Python-worker path sampled a sorted id list instead:
+      a seeded sample of a small graph can draw other sources than it
+      did there.
     """
-    e = edges.select("src", "dst").distinct().cache()
-    n_edges = e.count()
-    use_broadcast = mode == "broadcast" or (
-        mode == "auto" and n_edges <= max_broadcast_edges
-    )
+    e = edges.select("src", "dst").distinct()
+    if sample_sources is None:
+        local = _local_graph(e)
+        if local is not None:
+            pairs, nodes, t = local
+            return literal_frame(
+                edges.sparkSession,
+                _brandes_local(pairs, nodes),
+                f"node {t}, betweenness double",
+            )
+    e = e.cache()
     try:
-        if use_broadcast:
-            return _betweenness_broadcast(e, sample_sources, seed)
-        if sample_sources is None:
+        if sample_sources is None and e.count() > _BETWEENNESS_EXACT_MAX_EDGES:
             sample_sources = 256
-        nodes = (
+        sources = (
             e.select(F.col("src").alias("source"))
             .union(e.select(F.col("dst")))
             .distinct()
         )
-        n_nodes = nodes.count()
         scale = 1.0
-        sources = nodes
-        if sample_sources < n_nodes:
-            sources = nodes.sample(fraction=sample_sources / n_nodes, seed=seed)
-            scale = n_nodes / max(sample_sources, 1)
+        if sample_sources is not None:
+            n_nodes = sources.count()
+            if sample_sources < n_nodes:
+                sources = sources.sample(fraction=sample_sources / n_nodes, seed=seed)
+                scale = n_nodes / max(sample_sources, 1)
         return _betweenness_distributed(e, sources, scale)
     finally:
         e.unpersist()
 
 
-def _betweenness_broadcast(
-    e: DataFrame, sample_sources: int | None, seed: int
-) -> DataFrame:
-    """Broadcast-adjacency Brandes: partition-parallel over sources."""
-    sc = e.sparkSession.sparkContext
-    adj: dict[str, list[str]] = {}
-    node_set: set[str] = set()
-    # Streamed, not collect(): bounded driver memory per partition.
-    for r in e.toLocalIterator(prefetchPartitions=True):
-        adj.setdefault(r.src, []).append(r.dst)
-        node_set.add(r.src)
-        node_set.add(r.dst)
-    all_nodes = sorted(node_set)
-    b_adj = sc.broadcast(adj)
+def _brandes_local(pairs: list[tuple], nodes: list) -> list[tuple]:
+    """betweenness_centrality on the driver: Brandes from every source,
+    one BFS for shortest-path counts σ, then dependency accumulation
+    δ(v) = Σ σ(v)/σ(w)·(1+δ(w)) over successors w one level deeper, in
+    reverse BFS order. `pairs` are distinct edges. A node gets a row
+    once some other source reaches it, as in the distributed path.
 
-    nodes_df = e.sparkSession.createDataFrame([(n,) for n in all_nodes], ["source"])
-    scale = 1.0
-    if sample_sources is not None and sample_sources < len(all_nodes):
-        frac = sample_sources / len(all_nodes)
-        nodes_df = nodes_df.sample(fraction=frac, seed=seed)
-        scale = len(all_nodes) / max(sample_sources, 1)
-
-    def brandes(rows):
-        from collections import deque
-
-        a = b_adj.value
-        acc: dict[str, float] = {}
-        for row in rows:
-            s = row.source
-            # single-source shortest-path counts (unweighted BFS)
-            S, P, sigma, dist = [], {}, {s: 1.0}, {s: 0}
-            q = deque([s])
-            while q:
-                v = q.popleft()
-                S.append(v)
-                for w_ in a.get(v, ()):
-                    if w_ not in dist:
-                        dist[w_] = dist[v] + 1
-                        q.append(w_)
-                    if dist[w_] == dist[v] + 1:
-                        sigma[w_] = sigma.get(w_, 0.0) + sigma[v]
-                        P.setdefault(w_, []).append(v)
-            delta = dict.fromkeys(S, 0.0)
-            for w_ in reversed(S):
-                for v in P.get(w_, ()):
-                    delta[v] += (sigma[v] / sigma[w_]) * (1.0 + delta[w_])
-                if w_ != s:
-                    acc[w_] = acc.get(w_, 0.0) + delta[w_]
-        return iter(acc.items())
-
-    scores = nodes_df.rdd.mapPartitions(brandes).toDF(["node", "partial"])
-    return (
-        scores.groupBy("node")
-        .agg((F.sum("partial") * F.lit(scale)).alias("betweenness"))
-    )
+    Ids are renumbered to list indices and the per-source state lives in
+    lists reset after each BFS: the work is O(V·E) on one thread, and
+    on random digraphs of 1-2k nodes this runs about 2.4x faster than
+    the same loop over id-keyed dicts."""
+    index = {v: i for i, v in enumerate(nodes)}
+    n = len(nodes)
+    adj: list[list[int]] = [[] for _ in range(n)]
+    for a, b in pairs:
+        adj[index[a]].append(index[b])
+    acc = [0.0] * n
+    hit = [False] * n
+    dist = [-1] * n
+    sigma = [0.0] * n
+    delta = [0.0] * n
+    for s in range(n):
+        if not adj[s]:
+            continue
+        dist[s], sigma[s] = 0, 1.0
+        order = [s]
+        for v in order:  # the list is the BFS queue
+            dv, sv = dist[v] + 1, sigma[v]
+            for w in adj[v]:
+                dw = dist[w]
+                if dw < 0:
+                    dist[w], sigma[w] = dv, sv
+                    order.append(w)
+                elif dw == dv:
+                    sigma[w] += sv
+        for v in reversed(order):
+            dv, sv, d = dist[v] + 1, sigma[v], 0.0
+            for w in adj[v]:
+                if dist[w] == dv:
+                    d += (sv / sigma[w]) * (1.0 + delta[w])
+            delta[v] = d
+        dist[s] = -1
+        for v in order[1:]:
+            dist[v] = -1
+            acc[v] += delta[v]
+            hit[v] = True
+    return [(nodes[i], acc[i]) for i in range(n) if hit[i]]
 
 
 def _betweenness_distributed(
-    e: DataFrame, sources: DataFrame, scale: float, max_depth: int = 64
+    e: DataFrame, sources: DataFrame, scale: float
 ) -> DataFrame:
     """Multi-source Brandes as DataFrame joins — zero driver-side graph.
 
@@ -1240,7 +1240,9 @@ def _betweenness_distributed(
     the sum of σ over depth-d in-neighbors (every depth-d neighbor of a
     depth-(d+1) node is a shortest-path predecessor). Backward: δ(v) =
     Σ_w σ(v)/σ(w)·(1+δ(w)) over successors w one level deeper, one join
-    per level. Each level is materialized once and spilled to parquet
+    per level. The forward pass has no depth limit: it stops when no
+    source reaches a new node, so the scores are exact on any graph.
+    Each level is materialized once and spilled to parquet
     periodically (stats reset — see _LoopState); levels stay live for
     the backward pass, so cleanup is explicit at the end.
     """
@@ -1264,7 +1266,7 @@ def _betweenness_distributed(
     )
     levels.append(frontier)
     depth = 0
-    while depth < max_depth:
+    while True:
         visited = levels[0] if len(levels) == 1 else reduce_union(levels)
         nxt = (
             frontier.join(e, frontier.node == e.src)
@@ -1316,7 +1318,8 @@ def _betweenness_distributed(
             score_frames.append(deltas.select("node", "delta"))
 
     if not score_frames:
-        out = spark.createDataFrame([], "node string, betweenness double")
+        t = e.schema["src"].dataType.simpleString()
+        out = spark.createDataFrame([], f"node {t}, betweenness double")
     else:
         out = (
             reduce_union(score_frames)

@@ -323,13 +323,16 @@ def ivf_topk(
     )
 
 
+# Rows up to which cosine_near_pairs compares all pairs exactly; above
+# it the LSH candidate path runs.
+_COSINE_EXACT_MAX_ROWS = 1000
+
+
 def cosine_near_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    mode: str = "auto",
-    exact_max_rows: int = 1000,
     dim: int | None = None,
     n_planes: int = 4,
     n_tables: int = 12,
@@ -337,8 +340,8 @@ def cosine_near_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs.
 
-    ``mode='auto'`` routes by size: at or below ``exact_max_rows`` the
-    exact all-pairs path runs (O(n²) but trivially cheap, and the
+    The row count picks the path: at or below _COSINE_EXACT_MAX_ROWS
+    the exact all-pairs path runs (O(n²) but trivially cheap, and the
     deterministic oracle twin for the correctness gate); above it, the
     LSH-candidate path — sign-sketch buckets, (table, bucket) equi-join
     on the deduped id pairs, exact cosine re-rank of survivors only.
@@ -351,15 +354,12 @@ def cosine_near_pairs(
     the default 4 planes × 12 tables; looser thresholds need coarser
     tables (fewer planes) or more of them.
 
-    ``row_count_hint`` skips the mode-probe count() job when the caller
-    already knows the cardinality (e.g. from parquet footer metadata) —
-    one fewer Spark job per invocation.
+    ``row_count_hint`` skips the count() job that picks the path when
+    the caller already knows the cardinality (e.g. from parquet footer
+    metadata) — one fewer Spark job per invocation.
     """
-    n_rows = row_count_hint if row_count_hint is not None else (
-        df.count() if mode == "auto" else None
-    )
-    use_exact = mode == "exact" or (mode == "auto" and n_rows <= exact_max_rows)
-    if use_exact:
+    n_rows = row_count_hint if row_count_hint is not None else df.count()
+    if n_rows <= _COSINE_EXACT_MAX_ROWS:
         a = df.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"))
         b = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"))
         sim = F.round(cosine(F.col("v1"), F.col("v2")), 4)
@@ -528,42 +528,26 @@ def kmeans_assign(
             cols.append(F.col("list_id").alias("prev"))
         return src.select(*cols, best_list("kvec").alias("list_id"))
 
-    from pyspark.sql import Observation
+    from panditya_spark.operators.graph import _LoopState
 
-    from panditya_spark.operators.graph import _release
-
-    assigned = assign(cent, cand, with_prev=False).localCheckpoint(eager=True)
+    # Each round chains off the previous round's assignment (same rows,
+    # same vectors as the cached cand) and its moved-probe rides the
+    # round's materializing job; the step frees the round before. No
+    # step spills: a Lloyd round is a projection, so there are no
+    # compounding join statistics for a parquet spill to reset.
+    state = _LoopState(period=max_iter + 2)
+    assigned, _ = state.step(assign(cent, cand, with_prev=False))
     for _ in range(max_iter):
         cent = _avg_vectors(assigned, "list_id", "kvec").withColumnRenamed(
             "kvec", "centvec"
         )
-        obs = Observation()
-        # Each round chains off the previous checkpointed assignment
-        # (same rows, same vectors — the cached cand would be an
-        # identical scan) and the moved-probe rides the checkpoint job
-        # as an observe() metric: one job per Lloyd round where
-        # checkpoint + probe-join-aggregate was two jobs and an extra
-        # shuffle (r16 fusion, guide §1.2/§2.4).
-        new = (
-            assign(cent, assigned, with_prev=True)
-            .observe(
-                obs,
-                F.max(
-                    (F.col("list_id") != F.col("prev")).cast("int")
-                ).alias("m"),
-            )
-            .localCheckpoint(eager=True)
+        assigned, m = state.step(
+            assign(cent, assigned, with_prev=True),
+            moved=F.max((F.col("list_id") != F.col("prev")).cast("int")),
         )
-        moved = bool(obs.get["m"])
-        # The round above consumed the old assignment for the last
-        # time (the centroid collect and the chained projection are
-        # the only readers); release its pinned blocks so repeated
-        # invocations in one session don't accumulate block-manager
-        # state (the round-10 SCC/HITS discipline).
-        _release(assigned)
-        assigned = new
-        if not moved:
+        if not m["moved"]:
             break
+    state.finish(assigned)
     cand.unpersist()
     return assigned.select(
         F.col("kid").alias(id_col), F.col("list_id").alias("cluster")

@@ -372,9 +372,11 @@ def g6_degree_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def g7_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Brandes betweenness, parallel over sources (G7,
-    analyze.py:166). The key-chain forest has a closed form the oracle
-    exploits; the operator itself is general."""
+    """Exact Brandes betweenness (G7, analyze.py:166): on the driver
+    when the key-chain graph fits the local tier, otherwise the
+    distributed multi-source path over all sources. The key-chain
+    forest has a closed form the oracle exploits; the operator itself
+    is general."""
     from panditya_spark.operators.graph import betweenness_centrality
 
     edges = key_chain_edges(spark, sf_dir)

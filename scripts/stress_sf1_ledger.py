@@ -47,17 +47,16 @@ ORDER = [
     "g17_ktruss",
 ]
 
-# Rows that exist only in this ledger (not registry queries): the
-# distributed-Brandes mode g7's auto gate would not pick at these edge
-# counts (key-chain edges stay under the 2M broadcast cap even at sf1),
+# Rows that exist only in this ledger (not registry queries): sampled
+# distributed Brandes, which g7's exact request does not take at these
+# edge counts (key-chain edges stay under the 2M exact cap even at sf1),
 # measured explicitly because distributed-sampled IS the 100 TB mode.
+# An explicit sample_sources always runs the distributed path.
 def _g7_distributed(spark, sf_dir):
     from panditya_spark.operators.graph import betweenness_centrality
     from panditya_spark.plans.graph_queries import key_chain_edges
 
-    return betweenness_centrality(
-        key_chain_edges(spark, sf_dir), mode="distributed", sample_sources=64
-    )
+    return betweenness_centrality(key_chain_edges(spark, sf_dir), sample_sources=64)
 
 
 def _trussness_full(spark, sf_dir):

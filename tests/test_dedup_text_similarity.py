@@ -206,11 +206,13 @@ def test_kmeans_assign_empty_input_raises_clearly(spark):
         kmeans_assign(df, "id", "v", k=2)
 
 
-def test_cosine_near_pairs_lsh_path(spark):
-    """LSH mode: perfect recall on true near-duplicates (cos ≥ 0.99)
-    and a plan with no cartesian product."""
+def test_cosine_near_pairs_lsh_path(spark, monkeypatch):
+    """LSH path: perfect recall on true near-duplicates (cos ≥ 0.99)
+    and a plan with no cartesian product. The 80 rows take the exact
+    path; a row threshold of 0 sends them through LSH."""
     import random
 
+    from panditya_spark.operators import similarity
     from panditya_spark.operators.similarity import cosine_near_pairs
 
     rng = random.Random(3)
@@ -224,9 +226,10 @@ def test_cosine_near_pairs_lsh_path(spark):
 
     exact = {
         (r.id1, r.id2)
-        for r in cosine_near_pairs(df, "vid", "vec", 0.99, mode="exact").collect()
+        for r in cosine_near_pairs(df, "vid", "vec", 0.99).collect()
     }
-    approx_df = cosine_near_pairs(df, "vid", "vec", 0.99, mode="lsh")
+    monkeypatch.setattr(similarity, "_COSINE_EXACT_MAX_ROWS", 0)
+    approx_df = cosine_near_pairs(df, "vid", "vec", 0.99)
     plan = approx_df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     approx = {(r.id1, r.id2) for r in approx_df.collect()}

@@ -145,7 +145,14 @@ def test_label_propagation_hand_values(spark, graph_tiers):
         assert lpa(max_iter=5, vertices=v) == {"a": "a", "b": "a", "c": "a", "e": "e"}, tier
 
 
-def test_betweenness_broadcast_hand_values(spark):
+def test_betweenness_broadcast_hand_values(spark, graph_tiers):
+    """Exact betweenness on both tiers. On the local tier Brandes runs
+    on the driver and its rows come back as a JVM literal: no frame from
+    Python rows, no Python RDD and no broadcast, so no job of the call
+    starts a Python worker."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
     from panditya_spark.operators.graph import betweenness_centrality
 
     # Directed path a->b->c->d: interior nodes b, c each lie on 2
@@ -153,13 +160,31 @@ def test_betweenness_broadcast_hand_values(spark):
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
     )
-    got = dict(rows(betweenness_centrality(e, mode="broadcast"), "node", "betweenness"))
-    assert got == {"b": 2.0, "c": 2.0, "d": 0.0}
+    # A 70-edge int chain 0->...->70: source 0's BFS runs 70 levels,
+    # across several of the distributed forward pass's parquet spills.
+    # Node i lies on the i·(70-i) shortest paths s < i < t.
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(70)], "src int, dst int"
+    )
+
+    def refuse(*a, **kw):
+        raise AssertionError("betweenness shipped Python data to the executors")
+
+    for tier in graph_tiers():
+        with pytest.MonkeyPatch.context() as mp:
+            if tier == "local":
+                mp.setattr(SparkSession, "createDataFrame", refuse)
+                mp.setattr(SparkContext, "parallelize", refuse)
+                mp.setattr(SparkContext, "broadcast", refuse)
+            got = dict(rows(betweenness_centrality(e), "node", "betweenness"))
+            deep = dict(rows(betweenness_centrality(chain), "node", "betweenness"))
+        assert got == {"b": 2.0, "c": 2.0, "d": 0.0}, tier
+        assert deep == {i: float(i * (70 - i)) for i in range(1, 71)}, tier
 
 
-def test_betweenness_distributed_matches_broadcast(spark):
-    """The distributed multi-source-BFS path must agree exactly with
-    the broadcast Brandes path when run over all sources."""
+def test_betweenness_distributed_matches_broadcast(spark, graph_tiers):
+    """Exact betweenness agrees on the local tier (driver Brandes) and
+    the distributed tier (multi-source BFS over all sources)."""
     from panditya_spark.operators.graph import betweenness_centrality
 
     e = spark.createDataFrame(
@@ -171,14 +196,9 @@ def test_betweenness_distributed_matches_broadcast(spark):
         ],
         ["src", "dst"],
     )
-    bc = dict(rows(betweenness_centrality(e, mode="broadcast"), "node", "betweenness"))
-    # sample_sources >= |V| means the sample is the full node set.
-    dist = dict(
-        rows(
-            betweenness_centrality(e, mode="distributed", sample_sources=10**6),
-            "node",
-            "betweenness",
-        )
+    bc, dist = (
+        dict(rows(betweenness_centrality(e), "node", "betweenness"))
+        for _ in graph_tiers()
     )
     assert set(bc) == set(dist)
     for k in bc:
@@ -186,14 +206,14 @@ def test_betweenness_distributed_matches_broadcast(spark):
 
 
 def test_betweenness_sampled_accuracy_vs_exact(spark):
-    """Accuracy evidence for the DEFAULT-ON sampled scale mode
-    (VERDICT r8 #6): on a barbell graph (two 20-cliques joined by a
-    5-node bridge path — the canonical high-betweenness structure),
-    the distributed run sampling under half the sources must (a) put
-    the five bridge nodes in its top-5 with recall >= 0.8, (b) agree
-    with exact broadcast Brandes on the single highest-betweenness
-    node, and (c) score every bridge node above every clique-interior
-    node. Deterministic: the source sample is seed-pinned."""
+    """Accuracy evidence for the sampled scale mode (VERDICT r8 #6):
+    on a barbell graph (two 20-cliques joined by a 5-node bridge path —
+    the canonical high-betweenness structure), the distributed run
+    sampling under half the sources must (a) put the five bridge nodes
+    in its top-5 with recall >= 0.8, (b) agree with exact Brandes on
+    the single highest-betweenness node, and (c) score every bridge
+    node above every clique-interior node. Deterministic: the source
+    sample is seed-pinned."""
     from panditya_spark.operators.graph import betweenness_centrality
 
     edges = []
@@ -210,12 +230,10 @@ def test_betweenness_sampled_accuracy_vs_exact(spark):
         edges.append((u, v))
         edges.append((v, u))
     e = spark.createDataFrame(edges, ["src", "dst"])
-    exact = dict(
-        rows(betweenness_centrality(e, mode="broadcast"), "node", "betweenness")
-    )
+    exact = dict(rows(betweenness_centrality(e), "node", "betweenness"))
     sampled = dict(
         rows(
-            betweenness_centrality(e, mode="distributed", sample_sources=20),
+            betweenness_centrality(e, sample_sources=20),
             "node",
             "betweenness",
         )
@@ -481,12 +499,14 @@ def _small_digraph(draw):
 @given(_small_digraph())
 def test_graph_tiers_agree(spark, graph):
     """The local and distributed tiers of CC, SCC and LPA return the
-    same rows; PageRank agrees within the benchmark oracle's relative
-    tolerance of 1e-9. SCC also runs on the same graph with int ids,
-    and on both tiers its scc column has the node column's type."""
+    same rows; PageRank and exact betweenness agree within the
+    benchmark oracle's relative tolerance of 1e-9. SCC and betweenness
+    also run on the same graph with int ids, and on both tiers their
+    node column (and SCC's scc column) has the input id type."""
     import math
 
     from panditya_spark.operators.graph import (
+        betweenness_centrality,
         label_propagation,
         strongly_connected_components,
     )
@@ -501,6 +521,11 @@ def test_graph_tiers_agree(spark, graph):
         assert out.schema["scc"].dataType == out.schema["node"].dataType == df.schema["src"].dataType
         return dict(rows(out))
 
+    def bc(df):
+        out = betweenness_centrality(df)
+        assert out.schema["node"].dataType == df.schema["src"].dataType
+        return dict(rows(out))
+
     def run():
         return (
             dict(rows(connected_components(e, vertices=v))),
@@ -508,6 +533,8 @@ def test_graph_tiers_agree(spark, graph):
             dict(rows(label_propagation(e, max_iter=3, vertices=v))),
             scc(ie),
             dict(rows(pagerank(e, iters=3, vertices=v))),
+            bc(e),
+            bc(ie),
         )
 
     local = run()
@@ -515,10 +542,10 @@ def test_graph_tiers_agree(spark, graph):
         force_distributed_tier(mp)
         distributed = run()
     assert local[:4] == distributed[:4], graph
-    pr_local, pr_dist = local[4], distributed[4]
-    assert pr_local.keys() == pr_dist.keys(), graph
-    for node, r in pr_local.items():
-        assert math.isclose(r, pr_dist[node], rel_tol=1e-9), (graph, node)
+    for got_local, got_dist in zip(local[4:], distributed[4:]):
+        assert got_local.keys() == got_dist.keys(), graph
+        for node, x in got_local.items():
+            assert math.isclose(x, got_dist[node], rel_tol=1e-9), (graph, node)
 
 
 def test_personalized_pagerank_proximity_and_mass(spark):
@@ -810,6 +837,29 @@ def test_loop_round_is_one_step(spark, distributed_tier):
         "e3", lambda: eigenvector_centrality(p, max_iter=3)
     )
     assert per_round == 7
+
+
+def test_release_frees_checkpoints(spark):
+    """_release unpersists a localCheckpoint's RDD and deletes a parquet
+    spill's directory."""
+    import os
+
+    from panditya_spark.operators.graph import _checkpoint, _release
+
+    def pinned(rdd_id):
+        return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+
+    local = spark.range(10).localCheckpoint(eager=True)
+    rdd_id = local._jdf.queryExecution().analyzed().rdd().id()
+    assert pinned(rdd_id)
+    _release(local)
+    assert not pinned(rdd_id)
+
+    spill = _checkpoint(spark.range(10))
+    path = spill._panditya_ckpt_path
+    assert os.path.isdir(path)
+    _release(spill)
+    assert not os.path.exists(path)
 
 
 def test_ktruss_raises_on_exhausted_nonfixpoint(spark, distributed_tier):
