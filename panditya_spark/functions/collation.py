@@ -2,11 +2,13 @@
 
 The reference sorts dropdown labels by a key built from alphabet
 positions with greedy 2-char digraph matching (utils/utils.py:84-103),
-applied at flask_app.py:72-73. It is the reference's only true
-scalar-UDF-shaped function, so here it is the engine's one pandas UDF:
-Arrow-batched, vectorized lookups, returning ARRAY<INT> sort keys that
-Spark compares lexicographically — the same comparison Python applies
-to lists.
+applied at flask_app.py:72-73. ``sort_key_py`` is that key. The serving
+dropdown (``serving.dropdown_options``) applies it on the driver, as the
+reference does, to the rows it fetches. ``collate`` wraps it in the
+engine's one pandas UDF (Arrow-batched, returning ARRAY<INT> sort keys
+that Spark compares lexicographically — the same comparison Python
+applies to lists); it now serves only the registry's
+``o1_collation_sort`` window.
 
 Quirk replicated exactly (utils.py:100-103): the digraph test runs at
 EVERY character position and the index always advances by 1, so a
@@ -40,8 +42,8 @@ UNKNOWN = len(SANSKRIT_ALPHABET)
 
 
 def sort_key_py(word: str) -> list[int]:
-    """Reference implementation (utils.py:100-103), used by tests as an
-    independent oracle and by driver-side sorting of small lists."""
+    """Reference implementation (utils.py:100-103): the dropdown's
+    driver-side sort key, and the tests' oracle for ``collate``."""
     word = word.lower()
     return [
         CUSTOM_ORDER.get(word[i : i + 2], CUSTOM_ORDER.get(word[i], UNKNOWN))

@@ -13,15 +13,27 @@ frontier) lives on the driver as Python sets, and each hop is one scan
 of the edge table filtered by a hash-set ``IN`` predicate
 (``operators.relational.in_set``); the distributed ``khop_bfs`` serves
 the unbounded batch query (g1_khop_bfs) and is re-exported here.
+
+One-partition rule: every query here reads its table through
+``coalesce(1)``. A single-partition child already satisfies the
+distribution an aggregate, window, distinct, sort or sort-merge join
+requires, so no request plans an exchange, and Spark's incremental
+``limit`` take finishes in its first job: each collect is one job over
+any partitioning of the served tables. Nothing on the request path
+starts a Python worker; the dropdown is collated on the driver. The
+rule relies on the served tables being start-up tables of reference
+size (17.5k entities) and on a reply being capped at SERVING_MAX_ROWS,
+so that one task reading a whole table stays cheap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from panditya_spark.etl import nest_links
-from panditya_spark.functions.labels import RELATIONSHIP_PHRASES, date_info
+from panditya_spark.functions.collation import sort_key_py
+from panditya_spark.functions.labels import RELATIONSHIP_PHRASES, date_info, dropdown_label
 from panditya_spark.operators.graph import khop_bfs  # noqa: F401  (re-export)
 from panditya_spark.operators.relational import in_set
 
@@ -91,12 +103,13 @@ def subgraph_response(
     frontier are Python sets, checked against the node cap at every
     hop. Each hop is one collect of the edges touching the expandable
     frontier (the frontier minus excluded nodes, which are reached but
-    never expanded), as an ``InSet`` filter over the edge table. Every
-    such edge has both ends visited, so it is an edge of the reply and
-    the edge-set cap bounds the fetch. After the loop, three more
-    single-scan collects read the induced edges (duplicates kept, as
-    in khop_bfs's ``sub_edges``), the visited entities and their e-text
-    links. No frame is built from request data and nothing is
+    never expanded), as an ``InSet`` filter over the one-partition edge
+    table. Every such edge has both ends visited, so it is an edge of
+    the reply and the edge-set cap bounds the fetch. After the loop, two
+    more collects read the visited entities left-joined with their
+    e-text links (``_with_links``) and the induced edges (duplicates
+    kept, as in khop_bfs's ``sub_edges``): a hops-h request is h + 2
+    jobs. No frame is built from request data and nothing is
     broadcast, shuffled, cached or checkpointed. A visited id without
     an entity row is an unknown id (the reference's KeyError → 400).
     The flags, the nested e-text shape and the relationship phrases are
@@ -107,6 +120,7 @@ def subgraph_response(
     err = validate_subgraph_inputs(authors, works, hops, exclude_list)
     if err is not None:
         return err
+    entities, edges = entities.coalesce(1), edges.coalesce(1)
 
     center = set(authors) | set(works)
     exclude = set(exclude_list)
@@ -140,43 +154,28 @@ def subgraph_response(
         F.col("author_lowest_year"),
         F.col("author_highest_year"),
     )
-    annotated = {
-        r.id: r
-        for r in entities.where(in_set("id", visited))
-        .select(
-            "id",
-            F.col("name").alias("label"),
-            "type",
-            "aka",
-            F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
-            dates.alias("dates"),
-            F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
-            F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
-        )
-        .collect()
-    }
+    nodes = entities.where(in_set("id", visited)).select(
+        "id",
+        F.col("name").alias("label"),
+        "type",
+        "aka",
+        F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
+        dates.alias("dates"),
+        F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
+        F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
+    )
+    if etext_links is not None:
+        nodes = _with_links(nodes, etext_links, visited)
+    rows = nodes.collect()
+    annotated = {r.id: r for r in rows}
     unknown = next((n for n in order if n not in annotated), None)
     if unknown is not None:
         return {"error": f"Invalid ID: '{unknown}'"}
-
-    # e-text annotation (J7): the nested per-work shape, folded here
-    # from the long rows of the visited works. The cap counts
-    # (work_id, collection, subtype) groups, as when Spark grouped them;
-    # the raw rows are bounded by the node cap times links per work.
-    links_by_work: dict = {}
-    if etext_links is not None:
-        link_rows = (
-            etext_links.where(in_set("work_id", visited))
-            .select("work_id", "collection", "subtype", "url")
-            .collect()
-        )
-        urls: dict[tuple[str, str, str], set[str]] = {}
-        for r in link_rows:
-            got = urls.setdefault((r.work_id, r.collection, r.subtype), set())
-            if r.url is not None:
-                got.add(r.url)
-        _check_cap(len(urls), "subgraph e-text annotation", SERVING_MAX_ROWS)
-        links_by_work = nest_links({k: sorted(us) for k, us in urls.items()})
+    # e-text annotation (J7): the nested per-work shape. The raw rows
+    # are bounded by the node cap times links per work.
+    links_by_work = (
+        _fold_links(rows, "subgraph e-text annotation") if etext_links is not None else {}
+    )
 
     filtered_nodes = [
         {
@@ -224,10 +223,10 @@ def subgraph_response(
 def _link_groups(links: DataFrame, cap: int | None = None) -> list:
     """(work_id, collection, subtype, urls) rows, one per group, with
     the group's de-duplicated urls sorted; at most ``cap`` groups
-    (default SERVING_MAX_ROWS) are served. Aggregation in Spark, one
-    collect."""
+    (default SERVING_MAX_ROWS) are served. Aggregation in Spark over one
+    partition: one collect, one job, no exchange."""
     return _bounded_collect(
-        links.groupBy("work_id", "collection", "subtype").agg(
+        links.coalesce(1).groupBy("work_id", "collection", "subtype").agg(
             F.array_sort(F.collect_set("url")).alias("urls")
         ),
         "e-text link mapping",
@@ -243,13 +242,53 @@ def _nest(groups) -> dict:
     return nest_links({(r.work_id, r.collection, r.subtype): list(r.urls) for r in groups})
 
 
+def _with_links(keyed: DataFrame, links: DataFrame, ids) -> DataFrame:
+    """``keyed`` (one row per ``id``) left-joined with its link rows:
+    ``links`` filtered to ``ids`` as (collection, subtype, url) plus
+    ``linked``, true on a joined row; a row without links keeps nulls.
+    Both sides read one partition, so the sort-merge join plans no
+    exchange and one job fetches the rows with their links. The hint
+    keeps the planner from broadcasting a small side, which would take
+    a job of its own."""
+    link_rows = (
+        links.coalesce(1)
+        .where(in_set("work_id", ids))
+        .select(
+            F.col("work_id").alias("id"), "collection", "subtype", "url", F.lit(True).alias("linked")
+        )
+    )
+    return keyed.join(link_rows.hint("merge"), "id", "left")
+
+
+def _fold_links(rows, what: str) -> dict:
+    """The nested link mapping of ``_with_links`` rows, folded on the
+    driver: one group per (id, collection, subtype) with its
+    de-duplicated urls sorted. The cap counts groups, as when Spark
+    grouped them (``_link_groups``)."""
+    urls: dict[tuple[str, str, str], set[str]] = {}
+    for r in rows:
+        if r.linked:
+            got = urls.setdefault((r.id, r.collection, r.subtype), set())
+            if r.url is not None:
+                got.add(r.url)
+    _check_cap(len(urls), what, SERVING_MAX_ROWS)
+    return nest_links({k: sorted(us) for k, us in urls.items()})
+
+
+def _with_work_collections(links: DataFrame) -> DataFrame:
+    """The links with ``colls``, the set of collections of each row's
+    work, as a window over one partition: no exchange, no join."""
+    return links.coalesce(1).withColumn(
+        "colls", F.collect_set("collection").over(Window.partitionBy("work_id"))
+    )
+
 
 def valid_collections(links: DataFrame) -> list[str]:
     """VALID_COLLECTIONS (flask_app.py:24): the collections known to the
     e-text summary — here, the distinct collections in the links table.
     The views below call it only when their own rows cannot show that
     the requested collections exist."""
-    return [r.collection for r in links.select("collection").distinct().collect()]
+    return [r.collection for r in links.coalesce(1).select("collection").distinct().collect()]
 
 
 def _invalid_collection(links: DataFrame, collection: str) -> dict | None:
@@ -276,12 +315,10 @@ def by_collection_response(
         # flask_app.py:274-275 returns ETEXT_LINKS verbatim — the '...'
         # placeholder is only popped in the per-collection path.
         return _nest(_link_groups(links))
-    in_coll = F.col("collection") == collection
     if include_other_collections:
-        works = links.filter(in_coll).select("work_id").distinct()
-        sub = links.join(works, "work_id", "left_semi")
+        sub = _with_work_collections(links).filter(F.array_contains("colls", collection))
     else:
-        sub = links.filter(in_coll)
+        sub = links.filter(F.col("collection") == collection)
     groups = _link_groups(sub.filter(F.col("work_id") != "..."))
     if not groups:
         return _invalid_collection(links, collection) or {}
@@ -295,13 +332,10 @@ def unique_to_collection_response(links: DataFrame, collection: str | None) -> d
     valid_collections."""
     if not collection:
         return {"error": "Missing required parameter: collection"}
-    only = (
-        links.groupBy("work_id")
-        .agg(F.collect_set("collection").alias("colls"))
-        .filter((F.size("colls") == 1) & (F.col("colls")[0] == collection))
-        .select("work_id")
+    only = _with_work_collections(links).filter(
+        (F.size("colls") == 1) & (F.col("colls")[0] == collection)
     )
-    groups = _link_groups(links.join(only, "work_id", "left_semi"))
+    groups = _link_groups(only)
     if not groups:
         return _invalid_collection(links, collection) or {}
     return _nest(groups)
@@ -331,7 +365,7 @@ def overlap_response(
             f"Valid options: {sorted(valid)}"
         }
 
-    pair = links.filter(F.col("collection").isin([collection1, collection2]))
+    pair = links.filter(in_set("collection", {collection1, collection2}))
     try:
         # Each part holds at most the cap, so all three at most 3x.
         groups = _link_groups(pair, 3 * SERVING_MAX_ROWS)
@@ -366,7 +400,8 @@ def overlap_response(
 
 def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | None) -> dict:
     """GET /api/seti/by_work (flask_app.py:419-454): comma-separated
-    numeric ids → nested link data for the valid WORK ids among them."""
+    numeric ids → nested link data for the valid WORK ids among them.
+    One collect fetches the requested works joined with their links."""
     import re
 
     if not ids_param or not ids_param.strip():
@@ -380,15 +415,11 @@ def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | Non
     ids = [i for i in stripped.split(",") if i]
     if not ids:
         return {"error": "No IDs provided"}
-    valid_ids = {
-        r.id
-        for r in entities.filter(
-            (F.col("type") == "work") & F.col("id").isin(ids)
-        ).select("id").collect()
-    }
-    if not valid_ids:
+    works = entities.coalesce(1).filter((F.col("type") == "work") & in_set("id", ids))
+    rows = _with_links(works.select("id"), links, ids).collect()
+    if not rows:
         return {"error": "No valid work IDs provided"}
-    return _nest(_link_groups(links.filter(F.col("work_id").isin(list(valid_ids)))))
+    return _fold_links(rows, "e-text link mapping")
 
 
 def visualize_collection_params(
@@ -402,7 +433,8 @@ def visualize_collection_params(
         return works_data
     works = list(works_data.keys())
     author_rows = _bounded_collect(
-        entities.filter(F.col("id").isin(works))
+        entities.coalesce(1)
+        .filter(in_set("id", works))
         .select(F.explode_outer("author_ids").alias("aid"))
         .filter(F.col("aid").isNotNull())
         .distinct(),
@@ -426,9 +458,9 @@ def entity_labels_response(entities: DataFrame, ids: list[str]) -> dict:
     if any(not re.fullmatch(r"[\d,]*", i) for i in ids):
         return {"error": "invalid id format"}
     rows = _bounded_collect(
-        entities.filter(F.col("id").isin(ids)).select(
-            "id", F.col("name").alias("label")
-        ),
+        entities.coalesce(1)
+        .filter(in_set("id", ids))
+        .select("id", F.col("name").alias("label")),
         "entity label set",
     )
     return {"labels": {r.id: r.label for r in rows}}
@@ -437,13 +469,13 @@ def entity_labels_response(entities: DataFrame, ids: list[str]) -> dict:
 def dropdown_options(entities: DataFrame) -> dict:
     """GET /api/entities/{authors|works|all} (flask_app.py:59-73,95-106):
     '{name} ({id})' + optional date/aka brackets, collation-sorted.
-    Every call labels and sorts the whole entity table in Spark (the
-    collation key is a Python UDF) and collects it under the serving
-    cap; nothing is cached. The reference builds these lists once at
-    start-up, so a server should keep the result."""
-    from panditya_spark.functions.collation import collate
-    from panditya_spark.functions.labels import date_info, dropdown_label
-
+    Every call labels the whole entity table in Spark, fetches
+    (id, type, label) as Arrow from one partition under the serving
+    cap, and sorts on the driver by ``collation.sort_key_py``, the
+    reference's own key applied as the reference applies it; entities
+    with equal keys keep their fetch order. Nothing is cached. The
+    reference builds these lists once at start-up, so a server should
+    keep the result."""
     dates = date_info(
         F.col("type"),
         F.col("lowest_year"),
@@ -451,15 +483,22 @@ def dropdown_options(entities: DataFrame) -> dict:
         F.col("author_lowest_year"),
         F.col("author_highest_year"),
     )
-    labeled = entities.select(
-        "id",
-        "type",
-        dropdown_label(F.col("name"), F.col("id"), dates, F.col("aka")).alias("label"),
-    ).orderBy(collate(F.col("label")))
-    rows = _bounded_collect(labeled, "dropdown option set")
+    table = (
+        entities.coalesce(1)
+        .select(
+            "id",
+            "type",
+            dropdown_label(F.col("name"), F.col("id"), dates, F.col("aka")).alias("label"),
+        )
+        .limit(SERVING_MAX_ROWS + 1)
+        .toArrow()
+    )
+    _check_cap(table.num_rows, "dropdown option set", SERVING_MAX_ROWS)
+    rows = zip(*(table.column(c).to_pylist() for c in ("id", "type", "label")))
     out = {"all": [], "authors": [], "works": []}
-    for r in rows:
-        opt = {"id": r.id, "label": r.label}
+    # A null label (a null name) sorts first, as nulls do in Spark.
+    for id_, type_, label in sorted(rows, key=lambda r: sort_key_py(r[2] or "")):
+        opt = {"id": id_, "label": label}
         out["all"].append(opt)
-        out[r.type + "s"].append(opt)
+        out[type_ + "s"].append(opt)
     return out

@@ -13,7 +13,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
 import panditya_spark.serving as serving
+from panditya_spark.functions.collation import sort_key_py
 from panditya_spark.operators.graph import khop_bfs
 
 WROTE = "source author wrote target work"
@@ -203,45 +206,48 @@ def test_request_starts_no_python_worker(tables, monkeypatch):
     assert set(_nodes(resp)) == {"a1", "w1", "w2", "w3", "a2", "w6"}
 
 
+def _iterate(seq):
+    """The elements of a JVM Scala collection."""
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 def _jobs_after(spark, first: int) -> list:
     """The status store's jobs with id >= first, once the listener bus
     has delivered every event."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
-    it = jsc.statusStore().jobsList(None).iterator()
-    out = []
-    while it.hasNext():
-        j = it.next()
-        if j.jobId() >= first:
-            out.append(j)
-    return out
+    return [j for j in _iterate(jsc.statusStore().jobsList(None)) if j.jobId() >= first]
 
 
 @pytest.fixture(scope="module")
 def partitioned_tables(tables):
-    """The fixture tables cached as one and as two partitions each. One
-    partition makes every collect exactly one job; two keep the shuffle
-    check honest, since a plan over a single partition needs no
-    exchange even for a distinct."""
-    out = {n: tuple(t.coalesce(1).repartition(n).cache() for t in tables) for n in (1, 2)}
-    for ts in out.values():
-        for t in ts:
-            t.count()
+    """The fixture tables as one- and two-partition local checkpoints,
+    the way the benchmark materializes its start-up tables. Over two
+    partitions a ``limit`` collect of a checkpoint takes a second job
+    unless the query reads one partition (a cached table takes one job
+    either way), and a distinct or aggregate needs an exchange unless
+    it does."""
+    from panditya_spark.operators.graph import _release
+
+    out = {
+        n: tuple(t.coalesce(1).repartition(n).localCheckpoint(eager=True) for t in tables)
+        for n in (1, 2)
+    }
     yield out
     for ts in out.values():
         for t in ts:
-            t.unpersist()
+            _release(t)
 
 
-def _request_jobs(spark, tables, hops) -> list:
-    """The status store's records of the jobs a hops-h request from a1
-    starts, run under its own job group."""
-    jsc = spark.sparkContext._jsc.sc()
+def _jobs_of(spark, call, group: str) -> list:
+    """The status store's records of the jobs ``call()`` starts, run
+    under its own job group."""
     first = max([j.jobId() + 1 for j in _jobs_after(spark, 0)] or [0])
-    group = f"serving-shape-{hops}"
-    spark.sparkContext.setJobGroup(group, "subgraph job shape")
+    spark.sparkContext.setJobGroup(group, "serving job shape")
     try:
-        assert "graph" in _reply(tables, ["a1"], [], hops)
+        call()
     finally:
         spark.sparkContext._jsc.clearJobGroup()
     jobs = _jobs_after(spark, first)
@@ -249,25 +255,100 @@ def _request_jobs(spark, tables, hops) -> list:
     return jobs
 
 
+def _request_jobs(spark, tables, hops) -> list:
+    """The jobs a hops-h request from a1 starts."""
+    return _jobs_of(
+        spark, lambda: _reply(tables, ["a1"], [], hops), f"serving-shape-{hops}"
+    )
+
+
+def _assert_no_shuffle(spark, jobs) -> None:
+    """No stage of ``jobs`` writes shuffle data."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    for j in jobs:
+        for stage in _iterate(j.stageIds()):
+            assert store.lastStageAttempt(stage).shuffleWriteBytes() == 0
+
+
 @pytest.mark.parametrize("hops", [0, 1, 2, 3])
 def test_job_shape(spark, partitioned_tables, hops):
     """A hops-h request from a1 scans the edges once per hop, then the
-    induced edges, the entities and the links once each: h + 3 jobs
-    over one-partition tables. Over two partitions no job writes
-    shuffle data, broadcasts, checkpoints or caches."""
-    assert len(_request_jobs(spark, partitioned_tables[1], hops)) == hops + 3
+    induced edges once, and the entities joined with their links once:
+    h + 2 jobs over one- and two-partition tables alike, since the
+    request reads each table through one partition. Over two partitions
+    no job writes shuffle data, broadcasts, checkpoints or caches."""
+    assert len(_request_jobs(spark, partitioned_tables[1], hops)) == hops + 2
     jsc = spark.sparkContext._jsc.sc()
     persisted = jsc.getPersistentRDDs().size()
-    store = jsc.statusStore()
-    for j in _request_jobs(spark, partitioned_tables[2], hops):
+    jobs = _request_jobs(spark, partitioned_tables[2], hops)
+    assert len(jobs) == hops + 2
+    for j in jobs:
         assert not j.name().startswith(("localCheckpoint", "checkpoint")), j.name()
-        tags = j.jobTags().iterator()
-        while tags.hasNext():
-            assert not tags.next().startswith("broadcast exchange")
-        stages = j.stageIds().iterator()
-        while stages.hasNext():
-            assert store.lastStageAttempt(stages.next()).shuffleWriteBytes() == 0
+        assert not any(t.startswith("broadcast exchange") for t in _iterate(j.jobTags()))
+    _assert_no_shuffle(spark, jobs)
     assert jsc.getPersistentRDDs().size() == persisted
+
+
+def _numeric(entities, links):
+    """The fixture with the reference's numeric ids: a1 → 11, w1 → 21."""
+    return (
+        entities.withColumn("id", F.translate("id", "aw", "12")),
+        links.withColumn("work_id", F.translate("work_id", "aw", "12")),
+    )
+
+
+def _by_work(entities, links, ids_param):
+    numeric_entities, numeric_links = _numeric(entities, links)
+    return serving.by_work_response(numeric_links, numeric_entities, ids_param)
+
+
+def _with_author_ids(entities):
+    """The fixture entities with each work's ``author_ids``, from the
+    wrote edges; authors and unwritten works get null."""
+    wrote: dict[str, list[str]] = {}
+    for src, dst, rel in EDGES:
+        if rel == "wrote":
+            wrote.setdefault(dst, []).append(src)
+    by_work = F.create_map(
+        *[c for w, a in wrote.items() for c in (F.lit(w), F.array(*map(F.lit, a)))]
+    )
+    return entities.withColumn("author_ids", by_work[F.col("id")])
+
+
+# (view, collects, call over the (entities, edges, links) fixture)
+VIEW_SHAPES = [
+    ("by_collection", 1, lambda e, _, li: serving.by_collection_response(li, "GRETIL")),
+    ("by_collection_others", 1, lambda e, _, li: serving.by_collection_response(li, "DCS", True)),
+    ("by_collection_invalid", 2, lambda e, _, li: serving.by_collection_response(li, "XX")),
+    ("unique", 1, lambda e, _, li: serving.unique_to_collection_response(li, "GRETIL")),
+    ("unique_invalid", 2, lambda e, _, li: serving.unique_to_collection_response(li, "XX")),
+    ("overlap", 1, lambda e, _, li: serving.overlap_response(li, "DCS", "GRETIL")),
+    ("overlap_invalid", 2, lambda e, _, li: serving.overlap_response(li, "SARIT", "XX")),
+    ("labels", 1, lambda e, _, li: serving.entity_labels_response(_numeric(e, li)[0], ["21", "11"])),
+    ("by_work", 1, lambda e, _, li: _by_work(e, li, "21,22")),
+    ("visualize", 2, lambda e, _, li: serving.visualize_collection_params(li, _with_author_ids(e), "GRETIL")),
+    ("dropdown", 1, lambda e, _, li: serving.dropdown_options(e)),
+]
+
+
+@pytest.mark.parametrize("collects, call", [v[1:] for v in VIEW_SHAPES], ids=[v[0] for v in VIEW_SHAPES])
+def test_view_job_shape(spark, partitioned_tables, collects, call):
+    """Over two-partition tables every endpoint but the subgraph runs
+    one job per collect, writes no shuffle data and plans no Python
+    evaluation."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    before = {x.executionId() for x in _iterate(sql.executionsList())}
+    jobs = _jobs_of(spark, lambda: call(*partitioned_tables[2]), "serving-view-shape")
+    assert len(jobs) == collects
+    _assert_no_shuffle(spark, jobs)
+    plans = [
+        x.physicalPlanDescription()
+        for x in _iterate(sql.executionsList())
+        if x.executionId() not in before
+    ]
+    assert plans
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_ids_needing_escapes_round_trip(spark):
@@ -373,3 +454,98 @@ def test_collection_views(spark, tables):
     assert serving.overlap_response(links, "SARIT", "XX") == {
         "error": f"Invalid collection(s): SARIT, XX. Valid options: {valid}"
     }
+
+
+def test_by_work_response(tables):
+    """Comma-separated numeric ids: the three input errors, no valid
+    work id, and the nested links of the valid work ids only (11 is an
+    author, 99 unknown, 28 a work without links)."""
+    entities, _, links = tables
+    for ids in ("", "  "):
+        assert _by_work(entities, links, ids) == {"error": "List input must be non-empty."}
+    for ids in ("21, 22", "21;22", "w1", "'21'"):
+        assert _by_work(entities, links, ids) == {
+            "error": "List input should not contain any characters besides numbers "
+            "and comma (no whitespace, quotation marks, etc.)"
+        }
+    assert _by_work(entities, links, ",,") == {"error": "No IDs provided"}
+    assert _by_work(entities, links, "11,99") == {"error": "No valid work IDs provided"}
+    assert _by_work(entities, links, "21,22,11,99,28") == {
+        "21": {"GRETIL": ["u0", "u1"]},
+        "22": {"DCS": {"web HTML": ["d1"], "GitHub (1) CoNLL-U": ["d2"]}, "GRETIL": ["g2"]},
+    }
+
+
+def test_entity_labels_response(tables):
+    """Labels of the valid ids only; a non-numeric id is a format error."""
+    entities, _, links = tables
+    numeric = _numeric(entities, links)[0]
+    assert serving.entity_labels_response(numeric, ["21", "11", "99"]) == {
+        "labels": {"21": "Work w1", "11": "Author One"}
+    }
+    assert serving.entity_labels_response(numeric, []) == {"labels": {}}
+    assert serving.entity_labels_response(numeric, ["21", "w1"]) == {"error": "invalid id format"}
+
+
+def test_visualize_collection_params(spark, tables):
+    """A collection's works plus every author of those works; an
+    unknown collection passes its error through."""
+    entities, _, _ = tables
+    links = spark.createDataFrame(
+        LINKS + [("w3", "GRETIL", "w", "g3")],
+        "work_id string, collection string, subtype string, url string",
+    )
+    params = serving.visualize_collection_params(links, _with_author_ids(entities), "GRETIL")
+    assert sorted(params.pop("works")) == ["w1", "w2", "w3"]
+    assert sorted(params.pop("authors")) == ["a1", "a2"]
+    assert params == {"hops": 0, "exclude_list": [], "repulsion": 50}
+    sarit = serving.visualize_collection_params(links, _with_author_ids(entities), "SARIT")
+    assert (sarit["works"], sarit["authors"]) == (["w7"], [])
+    assert serving.visualize_collection_params(links, _with_author_ids(entities), "XX")[
+        "error"
+    ].startswith("Invalid collection: XX")
+
+
+# IAST names whose collation order is not code-point order: 'kh' and
+# 'gh' are letters between k and ṅ, 'ai' and 'au' come after e, and a
+# capital sorts as its lower case. The numeric ids all score as unknown
+# characters, so "Kavi (31)" and "kavi (32)" tie.
+IAST_NAMES = ["Gaṅgā", "Khaṇḍana", "Kavi", "kavi", "Aitareya", "Ājñā", "ghaṭa", "Ṛgveda", "Auśanasa"]
+
+
+def test_dropdown_options(spark, tables, monkeypatch):
+    """Every entity once, split into authors and works, in the
+    reference's collation order (sort_key_py non-decreasing, ties
+    adjacent); over the cap the reply is the serving cap error."""
+    entities = tables[0]
+    opts = serving.dropdown_options(entities)
+    assert sorted(o["id"] for o in opts["all"]) == sorted(r.id for r in entities.collect())
+    assert {o["id"] for o in opts["authors"]} == {"a1", "a2"}
+    assert {o["id"] for o in opts["works"]} == {f"w{i}" for i in range(1, 9)}
+    assert opts["authors"] + opts["works"] == sorted(opts["all"], key=lambda o: o["id"][0])
+    assert {"id": "a1", "label": "Author One (a1) [300–400] [A1]"} in opts["authors"]
+
+    iast = spark.createDataFrame(
+        [
+            (str(30 + i), "author" if i % 3 == 0 else "work", name, "", None, None, None,
+             None, None, None, None)
+            for i, name in enumerate(IAST_NAMES)
+        ],
+        ENTITY_SCHEMA,
+    ).repartition(2)
+    labels = [o["label"] for o in serving.dropdown_options(iast)["all"]]
+    keys = [sort_key_py(label) for label in labels]
+    assert keys == sorted(keys)
+    names = [label.split(" (")[0] for label in labels]
+    assert names[:4] == ["Ājñā", "Ṛgveda", "Aitareya", "Auśanasa"]
+    assert sorted(names[4:6]) == ["Kavi", "kavi"]
+    assert names[6:] == ["Khaṇḍana", "Gaṅgā", "ghaṭa"]
+
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 10)
+    assert len(serving.dropdown_options(entities)["all"]) == 10
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 9)
+    with pytest.raises(
+        serving.ServingCapExceeded,
+        match=r"^dropdown option set too large: more than 9 rows at the serving boundary",
+    ):
+        serving.dropdown_options(entities)
