@@ -9,11 +9,13 @@ hygiene, and a set of large-scale training-data-pipeline operators
 for 100 TB-class inputs.
 
 Layout:
-    session.py    SparkSession factory (AQE, Arrow, checkpoint dir)
-    schemas.py    canonical StructTypes (entities/edges/etext_links + testdata)
-    sources/      loaders (parquet testdata, reference-shaped CSVs) and sinks
-    operators/    relational, graph, seti, dedup, text, similarity, multimodal
-    functions/    scalar function library (collation, labels, formatting)
+    session.py    SparkSession factory (AQE, Arrow, UTC, host-derived cores and heap)
+    etl.py        reference ETL: Pandit CSV -> entities/edges, SETI CSV -> e-text links
+    serving.py    the reference's API endpoints (k-hop subgraph, SETI views, dropdown)
+    sources/      loaders (parquet testdata, reference-shaped CSVs), sinks, SQL views
+    operators/    relational, graph, dedup, text, similarity, multimodal, ml,
+                  partitioning, quality, sampling, timeseries
+    functions/    scalar function library (collation, labels)
     plans/        query registry: name -> (spark, sf_dir) -> DataFrame + oracle SQL
     streaming/    Structured Streaming operators over the events table
 """

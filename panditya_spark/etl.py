@@ -12,9 +12,11 @@ field-setting event carries (row_idx, priority, pos) and the final
 value is the event with the highest ordinal — fully shuffle-parallel,
 no driver loop.
 
-Row indices come from a single-partition read (the reference files are
-tiny); at cluster scale the input would carry an explicit sequence
-column instead — the rest of the pipeline is unchanged.
+Row indices are file-order offsets computed over any partitioning
+(_with_row_idx: per-partition counts cumulative-summed on the driver),
+without collapsing the read to one partition; at cluster scale the
+input would carry an explicit sequence column instead — the rest of
+the pipeline is unchanged.
 
 Quirks replicated on purpose (see SURVEY.md §4):
 - years: both become null when `Highest Year` is empty, even if

@@ -6,16 +6,17 @@ tier: a loop of joins with lineage hygiene (cache + localCheckpoint every
 few rounds, _LoopState), so the same code runs on a 17k-node
 prosopography graph or a multi-billion-edge cluster graph.
 
-Connected components, strongly connected components, PageRank, label
-propagation and exact betweenness also have a local tier, because on a
-small graph every loop round is Spark fixed cost, not work. The rule
-that picks the tier (_local_graph): one ``limit(cap+1)`` collect of the
-edges, and of the vertices when given, is both the size probe and the
-data fetch. When the edges fit the heap-derived cap (_local_cap), no id
-is null, all ids share one string or integer type, and the result has
-at most _LOCAL_MAX_ROWS rows, a pure-Python kernel with the distributed
-loop's exact semantics runs on the driver and its rows come back
-through relational.literal_frame. Otherwise the distributed loop runs.
+Connected components, strongly connected components, PageRank and
+personalized PageRank, label propagation and exact betweenness also
+have a local tier, because on a small graph every loop round is Spark
+fixed cost, not work. The rule that picks the tier (_local_graph): one
+``limit(cap+1)`` collect of the edges, and of the vertices when given,
+is both the size probe and the data fetch. When the edges fit the
+heap-derived cap (_local_cap), no id is null, all ids share one string
+or integer type, and the result has at most _LOCAL_MAX_ROWS rows, a
+pure-Python kernel with the distributed loop's exact semantics runs on
+the driver and its rows come back through relational.literal_frame.
+Otherwise the distributed loop runs.
 The truss peel of ktruss and truss_decomposition finishes on the driver
 under the same cap.
 
@@ -454,30 +455,31 @@ def _scc_local(pairs: list[tuple], nodes: list) -> list[tuple]:
 
 
 def _pagerank_local(
-    pairs: list[tuple], nodes: list, iters: int, damping: float
+    pairs: list[tuple], restart: dict, norm: float, iters: int, damping: float
 ) -> list[tuple]:
-    """pagerank on the driver with the distributed loop's semantics:
-    out-degrees count every edge, duplicates included; only ranked
-    nodes contribute; dangling mass is the rank of ranked nodes without
-    an out-edge. The update keeps pagerank()'s operand order,
-    (1-d) + d*(contrib + dm/n), which _pr_topk_oracle relies on; only
-    the order of summation differs."""
+    """_rank_loop on the driver, for pagerank and personalized_pagerank:
+    ``restart`` maps every ranked node to its restart weight r and
+    ``norm`` is S. Ranks start at r and each round computes
+    (1-d)*r + d*(contrib + dm/S*r), the distributed loop's operand
+    order; only the order of summation differs. Out-degrees count every
+    edge, duplicates included; only ranked nodes contribute; dangling
+    mass is the rank of ranked nodes without an out-edge."""
     out: dict = {}
     for a, _ in pairs:
         out[a] = out.get(a, 0) + 1
-    n = float(len(nodes))
-    dangling = [v for v in nodes if v not in out]
-    rank = dict.fromkeys(nodes, 1.0)
+    dangling = [v for v in restart if v not in out]
+    keep = 1 - damping
+    rank = dict(restart)
     for _ in range(iters):
         contrib: dict = {}
         for a, b in pairs:
             r = rank.get(a)
             if r is not None:
                 contrib[b] = contrib.get(b, 0.0) + r / out[a]
-        dm = sum(rank[v] for v in dangling)
+        dm = sum(rank[v] for v in dangling) / norm
         rank = {
-            v: (1 - damping) + damping * (contrib.get(v, 0.0) + dm / n)
-            for v in nodes
+            v: keep * r + damping * (contrib.get(v, 0.0) + dm * r)
+            for v, r in restart.items()
         }
     return list(rank.items())
 
@@ -1480,19 +1482,20 @@ def pagerank(
     """Power-iteration PageRank — the engine's substitute surface for
     eigenvector centrality (analyze.py:169-172; SURVEY §2.8 G8).
 
-    Returns (node, rank). Dangling mass is redistributed uniformly each
-    round so ranks sum to n. Out-degrees are precomputed once and the
-    rank⋈edges join reuses the same key each round — on a cluster the
-    edge table would be pre-partitioned by src so every iteration
-    shuffles only the rank vector. A graph that fits the local tier
-    runs the same iteration on the driver (_pagerank_local).
+    Returns (node, rank) for `vertices`, or the edge endpoints when
+    none are given. The uniform case of _rank_loop: every node's
+    restart weight is r = 1.0 and S = n, so ranks start at 1.0, each
+    round computes (1-d) + d*(contrib + dm/n), and dangling mass is
+    redistributed uniformly, keeping the ranks' sum at n. A graph that
+    fits the local tier runs the same iteration on the driver
+    (_pagerank_local).
     """
     local = _local_graph(edges, vertices)
     if local is not None:
         pairs, nodes, t = local
         return literal_frame(
             edges.sparkSession,
-            _pagerank_local(pairs, nodes, iters, damping),
+            _pagerank_local(pairs, dict.fromkeys(nodes, 1.0), float(len(nodes)), iters, damping),
             f"node {t}, rank double",
         )
     e = edges.select("src", "dst")
@@ -1500,14 +1503,31 @@ def pagerank(
         vertices.select(F.col(vertices.columns[0]).alias("node"))
         if vertices is not None
         else e.select(F.col("src").alias("node")).union(e.select(F.col("dst").alias("node")))
-    ).distinct().cache()
-    n = nodes.count()
+    ).distinct()
+    restart = nodes.withColumn("r", F.lit(1.0)).cache()
+    n = restart.count()
+    return _rank_loop(e, restart, n, float(n), iters, damping)
+
+
+def _rank_loop(
+    e: DataFrame, restart: DataFrame, n: int, norm: float, iters: int, damping: float
+) -> DataFrame:
+    """The distributed power iteration of pagerank and
+    personalized_pagerank over the pinned (node, r) frame ``restart``
+    of n rows, r being each node's restart weight and ``norm`` the
+    normalizer S. Ranks start at r; each round computes
+    (1-d)*r + d*(contrib + dm/S*r), where contrib sums rank/out_degree
+    over a node's in-edges and dm is the rank of the nodes without an
+    out-edge. Out-degrees are precomputed once and the rank⋈edges join
+    reuses the same key each round — on a cluster the edge table would
+    be pre-partitioned by src so every iteration shuffles only the rank
+    vector. Unpersists ``restart`` on exit."""
     outd = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("out_degree"))
     # contributions flow src -> dst; precompute (src, dst, out_degree)
     adj = e.join(outd, e.src == outd.node).select("src", "dst", "out_degree").cache()
 
     state = _LoopState()
-    ranks = _checkpoint(nodes.withColumn("rank", F.lit(1.0)))
+    ranks = _checkpoint(restart.select("node", F.col("r").alias("rank")))
     # Count-gated broadcast hints (r17, guide §3.1): the per-round rank
     # vector and contribution table are V-row frames over checkpointed
     # LogicalRDDs the planner cannot size (the loop-family defect class
@@ -1515,7 +1535,7 @@ def pagerank(
     # exactly when V fits the heap-derived budget and the cached O(E)
     # adjacency streams unshuffled. Above the cap (cluster scale) the
     # joins shuffle as before.
-    small_v = n <= _broadcast_edge_cap(edges.sparkSession) // 2
+    small_v = n <= _broadcast_edge_cap(e.sparkSession) // 2
     for _ in range(iters):
         r_src = ranks.withColumnRenamed("node", "src")
         contribs = (
@@ -1538,22 +1558,22 @@ def pagerank(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
         )
         ranks, _ = state.step(
-            nodes.join(contribs, "node", "left_outer")
+            restart.join(contribs, "node", "left_outer")
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",
                 (
-                    F.lit(1 - damping)
+                    F.lit(1 - damping) * F.col("r")
                     + F.lit(damping)
                     * (
                         F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dangling_mass") / F.lit(float(n))
+                        + F.col("dangling_mass") / F.lit(norm) * F.col("r")
                     )
                 ).alias("rank"),
             )
         )
     adj.unpersist()
-    nodes.unpersist()
+    restart.unpersist()
     state.finish(ranks)
     return ranks
 
@@ -1848,70 +1868,45 @@ def personalized_pagerank(
     score (which authors/works are structurally closest to this one),
     a natural serving-layer companion to the k-hop subgraph query.
 
-    Same power-iteration shape as pagerank() (one rank⋈edges join per
-    round, dangling mass folded in as a 1-row broadcast aggregate —
-    here returned to the SEEDS, matching the restart semantics), so
-    total mass is EXACTLY 1.0 every round (mass-conservation pytest:
-    new_total = (1-d)·1 + d·prev_total, a fixpoint at 1).
-    Seeds' first column is the node id; restart mass splits uniformly
-    across seeds. Returns (node, rank) for all reachable nodes.
+    The seeded case of _rank_loop, on either tier: over the edge
+    endpoints, a seed's restart weight is r = 1/|distinct seeds| and
+    every other node's is 0, with S = 1.0, so each round computes
+    (1-d)*r + d*(contrib + dm*r) and dangling mass returns to the seeds
+    too. When every seed is a node, total mass is EXACTLY 1.0 every
+    round (new_total = (1-d)·1 + d·prev_total, a fixpoint at 1); a seed
+    outside the graph still counts in |seeds|, so the ranks then sum to
+    less. Seeds' first column is the node id; an empty seed set raises.
+    Returns (node, rank) for the nodes with rank > 0. A graph that fits
+    the local tier, with at most _LOCAL_MAX_ROWS seed rows of the edge
+    id type, runs the same iteration on the driver (_pagerank_local).
     """
+    local = _local_graph(edges)
+    seed_col = seeds.schema[seeds.columns[0]]
+    if local is not None and seed_col.dataType.simpleString() == local[2]:
+        fetched = seeds.select(seed_col.name).limit(_LOCAL_MAX_ROWS + 1).collect()
+        if len(fetched) <= _LOCAL_MAX_ROWS:
+            pairs, nodes, t = local
+            ids = {r[0] for r in fetched}
+            w = 1.0 / len(ids)
+            restart = {v: w if v in ids else 0.0 for v in nodes}
+            return literal_frame(
+                edges.sparkSession,
+                [vr for vr in _pagerank_local(pairs, restart, 1.0, iters, damping) if vr[1] > 0],
+                f"node {t}, rank double",
+            )
     e = edges.select("src", "dst")
-    nodes = (
+    s = seeds.select(F.col(seed_col.name).alias("node")).distinct()
+    w = 1.0 / s.count()
+    restart = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
+        .join(s.withColumn("r0", F.lit(w)), "node", "left_outer")
+        .select("node", F.coalesce("r0", F.lit(0.0)).alias("r"))
         .cache()
     )
-    s = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().cache()
-    n_seeds = s.count()
-    restart = s.withColumn("r0", F.lit(1.0 / n_seeds))
-    outd = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
-    adj = e.join(outd, e.src == outd.node).select("src", "dst", "out_degree").cache()
-
-    state = _LoopState()
-    ranks = _checkpoint(
-        nodes.join(restart, "node", "left_outer").select(
-            "node", F.coalesce("r0", F.lit(0.0)).alias("rank")
-        )
-    )
-    for _ in range(iters):
-        contribs = (
-            adj.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("out_degree")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        dangling = ranks.join(outd.select("node"), "node", "left_anti").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
-        )
-        ranks, _ = state.step(
-            nodes.join(contribs, "node", "left_outer")
-            .join(restart, "node", "left_outer")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1 - damping) * F.coalesce("r0", F.lit(0.0))
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        # Dangling mass restarts at the seeds too.
-                        + F.col("dangling_mass") * F.coalesce("r0", F.lit(0.0))
-                    )
-                ).alias("rank"),
-            )
-        )
-    adj.unpersist()
-    nodes.unpersist()
-    s.unpersist()
-    state.finish(ranks)
-    return ranks.filter(F.col("rank") > 0)
+    n = restart.count()
+    return _rank_loop(e, restart, n, 1.0, iters, damping).filter(F.col("rank") > 0)
 
 
 # ------------------------------------------------------------ G15 (ext)

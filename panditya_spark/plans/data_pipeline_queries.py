@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 from panditya_spark.operators import dedup as D
 from panditya_spark.operators import similarity as S
 from panditya_spark.operators import text as T
-from panditya_spark.plans.registry import register
+from panditya_spark.plans.registry import register, table as _t
 
 # Searched constant making pmod(murmur3_42(shard_id + OFFSET), 8) a
 # bijection on shard ids {0..7} — pipeline_training_shards keys each
@@ -25,14 +25,6 @@ from panditya_spark.plans.registry import register
 # serialized into one task), never row placement — partitionBy governs
 # which directory a row lands in.
 _SHARD_ROUTE_OFFSET = 347
-from panditya_spark.sources.loaders import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ----------------------------------------------- shared corpus quality gate

@@ -17,15 +17,7 @@ from panditya_spark.operators.graph import (
     khop_bfs,
     longest_chain_depth,
 )
-from panditya_spark.plans.registry import register
-from panditya_spark.sources.loaders import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
+from panditya_spark.plans.registry import register, table as _t
 
 
 def key_chain_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,8 +29,7 @@ from pyspark.sql.types import (
 )
 
 from panditya_spark.operators import multimodal as M
-from panditya_spark.plans.registry import register
-from panditya_spark.sources.loaders import load_table
+from panditya_spark.plans.registry import register, table as _t
 
 _MEDIA_SCHEMA = StructType(
     [
@@ -38,13 +37,6 @@ _MEDIA_SCHEMA = StructType(
         StructField("payload", BinaryType(), True),
     ]
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _media(

@@ -17,6 +17,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from panditya_spark.session import ensure_session_defaults
+from panditya_spark.sources.loaders import load_table
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -33,3 +36,12 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
         return fn
 
     return deco
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Testdata table ``name`` under ``sf_dir``, read after the runtime
+    session defaults every query relies on (UTC, the events timestamp
+    reads) are applied to ``spark``, which may be a session the caller
+    built. The query modules import it as ``_t``."""
+    ensure_session_defaults(spark)
+    return load_table(spark, sf_dir, name)

@@ -21,15 +21,7 @@ from panditya_spark.operators.relational import (
     split_to_array,
     top_n_by,
 )
-from panditya_spark.plans.registry import register
-from panditya_spark.sources.loaders import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
+from panditya_spark.plans.registry import register, table as _t
 
 
 # ---------------------------------------------------------------- P1+P2

@@ -26,15 +26,8 @@ from panditya_spark.functions.labels import (
     node_color,
 )
 from panditya_spark.plans.graph_queries import _EDGES_SQL, key_chain_edges
-from panditya_spark.plans.registry import register
+from panditya_spark.plans.registry import register, table as _t
 from panditya_spark.sources.loaders import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------- O1/U1
@@ -656,12 +649,14 @@ def g3_g4_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ppr_topk_oracle(iters: int, k: int) -> str:
     """UNROLLED personalized-PageRank oracle: each round is one
     contrib join-sum, one dangling-mass aggregate, and the combine
-    expression written in personalized_pagerank's exact operand order
-    ((1.0 - 0.85) matches the Python 1-damping bit pattern). On the
-    key-chain graph every node has in-degree <= 1, so contrib sums are
-    single-term (bit-exact cross-engine); only the dangling mass is a
-    wide float sum, and it enters every rank through the same
-    multiplicative chain — rank ORDER is noise-robust. The checked
+    expression written in the exact operand order of the engine's one
+    rank update (1-d)*r + d*(contrib + dm/S*r) at its seeded restart
+    vector, r0 = 1/|seeds| on the seeds and S = 1.0 (x/1.0 is exact, so
+    dm/S*r0 is dm*r0; (1.0 - 0.85) matches the Python 1-damping bit
+    pattern). On the key-chain graph every node has in-degree <= 1, so
+    contrib sums are single-term (bit-exact cross-engine); only the
+    dangling mass is a wide float sum, and it enters every rank through
+    the same multiplicative chain — rank ORDER is noise-robust. The checked
     output is the top-k rank order over ranks rounded to 9 decimals:
     structural classes (customers of one nation, orders of one
     customer — bit-equal in-engine) snap equal and break on node id."""
@@ -731,11 +726,13 @@ def g8_ppr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pr_topk_oracle(iters: int, k: int) -> str:
     """Unrolled UNIFORM PageRank oracle — the unseeded sibling of
     _ppr_topk_oracle: rank0 = 1.0 everywhere (ranks sum to n), dangling
-    mass redistributed uniformly (dm / n), update written in
-    pagerank()'s exact operand order. The same robustness argument
-    applies: in-degree <= 1 keeps contrib sums single-term, so rank
-    tie classes are bit-equal within each engine and the rounded
-    top-k rank order is engine-exact."""
+    mass redistributed uniformly (dm / n), update written in the exact
+    operand order of the engine's one rank update
+    (1-d)*r + d*(contrib + dm/S*r) at its uniform restart vector, r = 1.0
+    and S = n (x*1.0 is exact, so it reads (1-d) + d*(contrib + dm/n)).
+    The same robustness argument applies: in-degree <= 1 keeps contrib
+    sums single-term, so rank tie classes are bit-equal within each
+    engine and the rounded top-k rank order is engine-exact."""
     parts = [
         f"WITH edges AS ({_EDGES_SQL})",
         "nodes AS MATERIALIZED (SELECT DISTINCT node FROM (SELECT src"

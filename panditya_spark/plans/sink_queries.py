@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from panditya_spark.plans.registry import register
+from panditya_spark.plans.registry import register, table as _t
 from panditya_spark.sources.loaders import load_table, read_csv_all_string
 
 _SINK_TMP: str | None = None
@@ -42,13 +42,6 @@ def _sink_dir(name: str) -> str:
     d = os.path.join(_SINK_TMP, name)
     os.makedirs(d, exist_ok=True)
     return d
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------- S6

@@ -8,15 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from panditya_spark.plans.registry import register
-from panditya_spark.sources.loaders import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from panditya_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    return load_table(spark, sf_dir, name)
+from panditya_spark.plans.registry import register, table as _t
 
 
 @register(

@@ -11,18 +11,13 @@ Defaults chosen for correctness *and* scale-out behavior:
   SPARK_GRAFT_CPUS and SPARK_DRIVER_MEM override them.
 - shuffle partitions sized to the local core count; on a real cluster
   this would be set per-job or left to AQE coalescing.
-- A checkpoint dir for iterative algorithms (connected components,
-  BFS) whose lineage must be cut periodically.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
-
-_CHECKPOINT_DIR: str | None = None
 
 
 def host_defaults() -> tuple[int, str]:
@@ -73,10 +68,9 @@ def get_spark(app_name: str = "panditya-spark") -> SparkSession:
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply runtime-mutable defaults to *any* session (including one the
-    driver hands us): UTC timestamps for oracle parity and a checkpoint
-    dir for iterative graph jobs. Static confs (AQE etc.) can't be
-    changed post-start, so we only touch runtime confs here."""
-    global _CHECKPOINT_DIR
+    driver hands us): UTC timestamps for oracle parity and the parquet
+    timestamp reads below. Static confs (AQE etc.) can't be changed
+    post-start, so we only touch runtime confs here."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The driver's events.parquet timestamp physical type has changed
     # across testdata generations: TIMESTAMP(NANOS) in one, then
@@ -99,11 +93,4 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
             # locked conf); the schema-level guards in the loaders are
             # the real defense — do not mask THEIR failures.
             pass
-    try:
-        if not spark.sparkContext.getCheckpointDir():
-            if _CHECKPOINT_DIR is None:
-                _CHECKPOINT_DIR = tempfile.mkdtemp(prefix="panditya-spark-ckpt-")
-            spark.sparkContext.setCheckpointDir(_CHECKPOINT_DIR)
-    except Exception:
-        pass  # Spark Connect sessions have no sparkContext; localCheckpoint fallback
     return spark

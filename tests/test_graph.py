@@ -499,15 +499,19 @@ def _small_digraph(draw):
 @given(_small_digraph())
 def test_graph_tiers_agree(spark, graph):
     """The local and distributed tiers of CC, SCC and LPA return the
-    same rows; PageRank and exact betweenness agree within the
-    benchmark oracle's relative tolerance of 1e-9. SCC and betweenness
-    also run on the same graph with int ids, and on both tiers their
-    node column (and SCC's scc column) has the input id type."""
+    same rows; PageRank, personalized PageRank and exact betweenness
+    return the same nodes with values within the benchmark oracle's
+    relative tolerance of 1e-9. PPR is seeded with one node of the
+    graph and one outside it, which still counts in 1/|seeds|. SCC and
+    betweenness also run on the same graph with int ids, and on both
+    tiers their node column (and SCC's scc column) has the input id
+    type."""
     import math
 
     from panditya_spark.operators.graph import (
         betweenness_centrality,
         label_propagation,
+        personalized_pagerank,
         strongly_connected_components,
     )
 
@@ -515,6 +519,8 @@ def test_graph_tiers_agree(spark, graph):
     e = spark.createDataFrame(edges, "src string, dst string")
     ie = spark.createDataFrame([(int(a[1:]), int(b[1:])) for a, b in edges], "src int, dst int")
     v = None if vertices is None else spark.createDataFrame([(x,) for x in vertices], "id string")
+    # v8 is never an edge endpoint (_small_digraph draws edges over v0-v6).
+    ppr_seeds = spark.createDataFrame([(edges[0][0],), ("v8",)], "node string")
 
     def scc(df):
         out = strongly_connected_components(df)
@@ -533,6 +539,7 @@ def test_graph_tiers_agree(spark, graph):
             dict(rows(label_propagation(e, max_iter=3, vertices=v))),
             scc(ie),
             dict(rows(pagerank(e, iters=3, vertices=v))),
+            dict(rows(personalized_pagerank(e, ppr_seeds, iters=3))),
             bc(e),
             bc(ie),
         )
@@ -548,15 +555,16 @@ def test_graph_tiers_agree(spark, graph):
             assert math.isclose(x, got_dist[node], rel_tol=1e-9), (graph, node)
 
 
-def test_personalized_pagerank_proximity_and_mass(spark):
-    """PPR fundamentals: (1) total mass is exactly 1.0 (restart AND
-    dangling mass both return to the seeds); (2) rank decays with
-    graph distance from the seed along a chain (x > y > z); (3) the
-    seed ranks highest; (4) unreachable nodes get no rank. (A first
-    draft asserted "every seed-lobe node outranks every far node" on a
-    far TRIANGLE — wrong: a recirculating far lobe that never leaks
-    back is an absorbing sink and legitimately accumulates rank; the
-    decay property only holds along non-recirculating paths.)"""
+def test_personalized_pagerank_proximity_and_mass(spark, graph_tiers):
+    """PPR fundamentals, on both tiers: (1) total mass is exactly 1.0
+    (restart AND dangling mass both return to the seeds); (2) rank
+    decays with graph distance from the seed along a chain (x > y > z);
+    (3) the seed ranks highest; (4) unreachable nodes get no rank; (5)
+    an empty seed set raises. (A first draft asserted "every seed-lobe
+    node outranks every far node" on a far TRIANGLE — wrong: a
+    recirculating far lobe that never leaks back is an absorbing sink
+    and legitimately accumulates rank; the decay property only holds
+    along non-recirculating paths.)"""
     from panditya_spark.operators.graph import personalized_pagerank
 
     edges = [
@@ -569,11 +577,31 @@ def test_personalized_pagerank_proximity_and_mass(spark):
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
     seeds = spark.createDataFrame([("a",)], ["node"])
-    got = {r["node"]: r["rank"] for r in personalized_pagerank(df, seeds).collect()}
-    assert abs(sum(got.values()) - 1.0) < 1e-9, sum(got.values())
-    assert "p" not in got and "q" not in got           # unreachable
-    assert got["x"] > got["y"] > got["z"], got          # distance decay
-    assert got["a"] == max(got.values()), got           # seed ranks highest
+    for tier in graph_tiers():
+        got = {r["node"]: r["rank"] for r in personalized_pagerank(df, seeds).collect()}
+        assert abs(sum(got.values()) - 1.0) < 1e-9, (tier, sum(got.values()))
+        assert "p" not in got and "q" not in got, tier      # unreachable
+        assert got["x"] > got["y"] > got["z"], (tier, got)  # distance decay
+        assert got["a"] == max(got.values()), (tier, got)   # seed ranks highest
+        with pytest.raises(ZeroDivisionError):
+            personalized_pagerank(df, seeds.limit(0))
+
+
+def test_personalized_pagerank_local_jobs_flat_in_iters(spark):
+    """On the local tier the PPR rounds run on the driver: iters=10
+    costs the Spark jobs of iters=2 (the bounded fetches and the
+    result collect), not a loop step per round."""
+    from panditya_spark.operators.graph import personalized_pagerank
+
+    df = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], ["src", "dst"])
+    seeds = spark.createDataFrame([("a",)], ["node"])
+
+    def jobs(iters):
+        return _group_jobs(
+            spark, f"ppr-local-{iters}", lambda: personalized_pagerank(df, seeds, iters=iters).collect()
+        )
+
+    assert jobs(10) == jobs(2)
 
 
 # ---------------------------------------------------------------- G15 kcore
