@@ -1,68 +1,66 @@
 """Serving layer: the reference's API surface (SURVEY §3) composed
 from engine operators. Each function returns the exact response shape
-of the corresponding Flask endpoint; dict shaping happens at the
-collect() boundary exactly as the reference's jsonify boundary, and
-collects that grow with the data are bounded by the serving row cap.
+of the corresponding Flask endpoint.
+
+Start-up snapshots: the reference holds the whole dataset in process
+memory and answers every request from it (flask_app.py:18-24,
+grapher.py:20-21). Here Spark computes that state: each served table is
+read once, on its first use, into a driver-side snapshot, and every
+request is then answered from the snapshots without a Spark job. A
+snapshot is one Arrow fetch of the table through one partition, indexed
+for the requests:
+
+- entities: the node projection, with the dates and the dropdown label
+  computed by the label columns, indexed by id; the dropdown options
+  sorted once by the reference's collation key;
+- edges: (src, dst) in scan order, indexed as id → the positions of the
+  edges that touch it (the reference's pre-joined adjacency);
+- e-text links: the (work_id, collection, subtype) groups with their
+  sorted, de-duplicated urls, indexed by work.
+
+Snapshots live in a WeakKeyDictionary keyed on the DataFrame and hold no
+reference to it, so each is freed with its frame. The served tables are
+start-up tables of reference size (17.5k entities); a table of more than
+``graph._local_cap`` rows, the driver-side tiers' heap-derived bound, is
+refused with ServingCapExceeded.
 
 Flagship: subgraph_response == POST /api/graph/subgraph
 (flask_app.py:183-252): validate → k-hop BFS with exclusion
 (grapher.py:25-94) → annotate (grapher.py:118-137) → per-type node
-projection + edge relationship phrases → response dict. A reply is
-bounded by the cap, so the BFS state (seeds, exclude list, visited set,
-frontier) lives on the driver as Python sets, and each hop is one scan
-of the edge table filtered by a hash-set ``IN`` predicate
-(``operators.relational.in_set``); the distributed ``khop_bfs`` serves
-the unbounded batch query (g1_khop_bfs) and is re-exported here.
-
-One-partition rule: every query here reads its table through
-``coalesce(1)``. A single-partition child already satisfies the
-distribution an aggregate, window, distinct, sort or sort-merge join
-requires, so no request plans an exchange, and Spark's incremental
-``limit`` take finishes in its first job: each collect is one job over
-any partitioning of the served tables. Nothing on the request path
-starts a Python worker; the dropdown is collated on the driver. The
-rule relies on the served tables being start-up tables of reference
-size (17.5k entities) and on a reply being capped at SERVING_MAX_ROWS,
-so that one task reading a whole table stays cheap.
+projection + edge relationship phrases → response dict. The distributed
+``khop_bfs`` serves the unbounded batch query (g1_khop_bfs) and is
+re-exported here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import os as _os
+import re
+import weakref
+from collections import namedtuple
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from panditya_spark.etl import nest_links
 from panditya_spark.functions.collation import sort_key_py
 from panditya_spark.functions.labels import RELATIONSHIP_PHRASES, date_info, dropdown_label
+from panditya_spark.operators import graph
 from panditya_spark.operators.graph import khop_bfs  # noqa: F401  (re-export)
 from panditya_spark.operators.relational import in_set
 
-# Serving-boundary row cap (VERDICT r8 #4): every response path here
-# collects the final frame into the driver — correct reference parity
-# (the jsonify boundary, SURVEY §3.1), but at 100× a hub-seeded 3-hop
-# subgraph can pull millions of rows into driver memory. The cap turns
-# that from an OOM into a clear client-side error. Probed with
-# limit(cap+1) so the engine never computes more than cap+1 rows of an
-# over-cap result (TakeOrderedAndProject-class early exit, not a full
-# materialize-then-count).
-import os as _os
-
+# Serving-boundary row cap (VERDICT r8 #4): a reply holds at most this
+# many nodes, edges, e-text groups, labels or dropdown options, counted
+# where the reference's jsonify boundary would collect them (SURVEY
+# §3.1). Past it the client gets a clear error naming the surface
+# instead of a reply that grows with the data (a hub-seeded 3-hop
+# subgraph at 100× scale). Read at call time.
 SERVING_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_SERVING_MAX_ROWS", "100000"))
 
 
 class ServingCapExceeded(ValueError):
-    """A serving response would exceed SERVING_MAX_ROWS collected rows."""
-
-
-def _bounded_collect(df: DataFrame, what: str, cap: int | None = None) -> list:
-    """collect() guarded by the serving row cap: fetch cap+1 rows via
-    limit() and raise loudly when the extra row shows up. An at-cap
-    result serves normally; the error names the surface and the cap so
-    the client can narrow the request (fewer hops, tighter exclude)."""
-    cap = SERVING_MAX_ROWS if cap is None else cap
-    rows = df.limit(cap + 1).collect()
-    _check_cap(len(rows), what, cap)
-    return rows
+    """A serving response would exceed SERVING_MAX_ROWS rows, or a
+    served table the snapshot bound."""
 
 
 def _check_cap(n: int, what: str, cap: int) -> None:
@@ -72,6 +70,156 @@ def _check_cap(n: int, what: str, cap: int) -> None:
             "boundary (raise SPARK_GRAFT_SERVING_MAX_ROWS or narrow the "
             "request)"
         )
+
+
+# ------------------------------------------------------------ snapshots
+
+_SNAPSHOTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _snapshot(df: DataFrame, kind: type):
+    """The ``kind`` snapshot of ``df``, built on first use and kept
+    until ``df`` is freed. Two threads that miss at once both build it;
+    either result is the same snapshot, so no lock is taken."""
+    snaps = _SNAPSHOTS.setdefault(df, {})
+    if kind not in snaps:
+        snaps[kind] = kind(df)
+    return snaps[kind]
+
+
+def _fetch(df: DataFrame, table: str, fold=None) -> dict[str, list]:
+    """``df`` as Python column lists, from one Arrow fetch of its first
+    ``bound + 1`` rows through one partition (one job, no exchange),
+    where ``bound`` is ``graph._local_cap``. ``fold`` aggregates those
+    rows in Spark and adds each group's row count as ``rows``. A table
+    of more than ``bound`` rows is refused."""
+    bound = graph._local_cap(df.sparkSession)
+    head = df.coalesce(1).limit(bound + 1)
+    got = (fold(head) if fold else head).toArrow()
+    cols = {c: got.column(c).to_pylist() for c in got.column_names}
+    if (sum(cols.pop("rows")) if fold else got.num_rows) > bound:
+        raise ServingCapExceeded(
+            f"{table} table too large to serve: more than {bound} rows, "
+            "the driver-side snapshot bound"
+        )
+    return cols
+
+
+_Node = namedtuple("_Node", "id label type aka social_ids dates discipline disciplines")
+
+
+class _Entities:
+    """The entity table: every row's node projection (``rows``), each
+    id's row positions in table order (``positions``; a null id matches
+    no request), and the dropdown options (id, type, label) in the
+    reference's collation order."""
+
+    def __init__(self, entities: DataFrame) -> None:
+        dates = date_info(
+            F.col("type"),
+            F.col("lowest_year"),
+            F.col("highest_year"),
+            F.col("author_lowest_year"),
+            F.col("author_highest_year"),
+        )
+        cols = _fetch(
+            entities.select(
+                "id",
+                F.col("name").alias("label"),
+                "type",
+                "aka",
+                F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
+                dates.alias("dates"),
+                F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
+                F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
+                dropdown_label(F.col("name"), F.col("id"), dates, F.col("aka")).alias("option"),
+            ),
+            "entity",
+        )
+        self.rows = [_Node(*r) for r in zip(*(cols[f] for f in _Node._fields))]
+        self.positions: dict = {}
+        for p, i in enumerate(cols["id"]):
+            if i is not None:
+                self.positions.setdefault(i, []).append(p)
+        # A null label (a null name) sorts first, as nulls do in Spark;
+        # the sort is stable, so equal keys keep their table order.
+        self.options = sorted(
+            zip(cols["id"], cols["type"], cols["option"]),
+            key=lambda r: sort_key_py(r[2] or ""),
+        )
+
+    def node(self, i) -> _Node:
+        """The last row of id ``i``, as a dict keyed by id keeps it."""
+        return self.rows[self.positions[i][-1]]
+
+    def in_table_order(self, ids) -> list:
+        """The known ids among ``ids``, by their first table position."""
+        return sorted((i for i in ids if i in self.positions), key=lambda i: self.positions[i][0])
+
+
+class _Edges:
+    """The edge table: (src, dst) ``pairs`` in scan order, and per id
+    the ascending positions of the pairs that touch it (a self-loop
+    once; a null end touches nothing)."""
+
+    def __init__(self, edges: DataFrame) -> None:
+        cols = _fetch(edges.select("src", "dst"), "edge")
+        self.pairs = list(zip(cols["src"], cols["dst"]))
+        self.touching: dict = {}
+        for p, (s, d) in enumerate(self.pairs):
+            for n in (s,) if s == d else (s, d):
+                if n is not None:
+                    self.touching.setdefault(n, []).append(p)
+
+
+def _touching(edges: _Edges, ids) -> list[int]:
+    """The positions of the edges with an end in ``ids``, in scan order:
+    the rows an ``IN`` filter over the edge table would return."""
+    return sorted({p for n in ids for p in edges.touching.get(n, ())})
+
+
+class _Links:
+    """The e-text link table as (work_id, collection, subtype, urls)
+    ``groups``, each group's urls de-duplicated and sorted (null urls
+    dropped, the group kept), as ``collect_set`` and ``array_sort``
+    give them; the groups of each work (``by_work``), each work's set of
+    non-null collections (``colls``; null work ids share one entry, as
+    in a window partition), and the distinct collections (``valid``)."""
+
+    def __init__(self, links: DataFrame) -> None:
+        cols = _fetch(
+            links,
+            "e-text link",
+            lambda rows: rows.groupBy("work_id", "collection", "subtype").agg(
+                F.array_sort(F.collect_set("url")).alias("urls"), F.count(F.lit(1)).alias("rows")
+            ),
+        )
+        self.groups = list(zip(cols["work_id"], cols["collection"], cols["subtype"], cols["urls"]))
+        self.by_work: dict = {}
+        self.colls: dict = {}
+        for g in self.groups:
+            self.by_work.setdefault(g[0], []).append(g)
+            colls = self.colls.setdefault(g[0], set())
+            if g[1] is not None:
+                colls.add(g[1])
+        self.valid = list(dict.fromkeys(g[1] for g in self.groups))
+
+
+def _nest(groups) -> dict:
+    """work_id → collection → (sorted url list | subtype → sorted url
+    list), single-subtype collections flattened to the bare list — the
+    ETEXT_LINKS value shape (transform.py:246-270)."""
+    return nest_links({(w, c, s): list(urls) for w, c, s, urls in groups})
+
+
+def _groups_of(links: _Links, works, what: str) -> list:
+    """The link groups of ``works``; the cap counts groups."""
+    groups = [g for w in works for g in links.by_work.get(w, ())]
+    _check_cap(len(groups), what, SERVING_MAX_ROWS)
+    return groups
+
+
+# ------------------------------------------------------------ endpoints
 
 
 def validate_subgraph_inputs(authors, works, hops, exclude_list):
@@ -98,29 +246,25 @@ def subgraph_response(
     etext_links is the (work_id, collection, subtype, url) long table
     or None. Returns the flask_app.py:233-245 response dict.
 
-    The BFS is level-synchronous and held on the driver, like the
-    reference's loop (grapher.py:25-94): the visited set and the
-    frontier are Python sets, checked against the node cap at every
-    hop. Each hop is one collect of the edges touching the expandable
-    frontier (the frontier minus excluded nodes, which are reached but
-    never expanded), as an ``InSet`` filter over the one-partition edge
-    table. Every such edge has both ends visited, so it is an edge of
-    the reply and the edge-set cap bounds the fetch. After the loop, two
-    more collects read the visited entities left-joined with their
-    e-text links (``_with_links``) and the induced edges (duplicates
-    kept, as in khop_bfs's ``sub_edges``): a hops-h request is h + 2
-    jobs. No frame is built from request data and nothing is
-    broadcast, shuffled, cached or checkpointed. A visited id without
-    an entity row is an unknown id (the reference's KeyError → 400).
-    The flags, the nested e-text shape and the relationship phrases are
-    shaped on the driver from the collected rows."""
+    The BFS is level-synchronous, like the reference's loop
+    (grapher.py:25-94): the visited set and the frontier are Python
+    sets, checked against the node cap at every hop. Each hop takes the
+    edges touching the expandable frontier (the frontier minus excluded
+    nodes, which are reached but never expanded) from the edge
+    snapshot, in scan order, and at most cap + 1 of them. Every such
+    edge has both ends visited, so it is an edge of the reply and the
+    edge-set cap bounds it. A visited id without an entity row is an
+    unknown id (the reference's KeyError → 400). Nodes come back in
+    table order; the edges are those induced on the visited set, in
+    scan order, duplicates kept (as in khop_bfs's ``sub_edges``). No
+    Spark job runs once the tables' snapshots exist."""
     authors = list(dict.fromkeys(authors))
     works = list(dict.fromkeys(works))
     exclude_list = list(set(exclude_list or []))
     err = validate_subgraph_inputs(authors, works, hops, exclude_list)
     if err is not None:
         return err
-    entities, edges = entities.coalesce(1), edges.coalesce(1)
+    known, adjacent = _snapshot(entities, _Entities), _snapshot(edges, _Edges)
 
     center = set(authors) | set(works)
     exclude = set(exclude_list)
@@ -133,13 +277,12 @@ def subgraph_response(
         expand = frontier - exclude
         if not expand:
             break
-        touching = edges.where(in_set("src", expand) | in_set("dst", expand))
-        # Bounded like _bounded_collect, but the node cap is checked
-        # first, as when both were checked on the finished BFS.
-        rows = touching.select("src", "dst").limit(SERVING_MAX_ROWS + 1).collect()
+        # The node cap is checked before the edge cap, as when both were
+        # checked on the finished BFS.
+        rows = _touching(adjacent, expand)[: SERVING_MAX_ROWS + 1]
         frontier = set()
-        for e in rows:
-            for n in (e.src, e.dst):
+        for p in rows:
+            for n in adjacent.pairs[p]:
                 if n not in visited:
                     visited.add(n)
                     frontier.add(n)
@@ -147,66 +290,38 @@ def subgraph_response(
         _check_cap(len(visited), "subgraph node set", SERVING_MAX_ROWS)
         _check_cap(len(rows), "subgraph edge set", SERVING_MAX_ROWS)
 
-    dates = date_info(
-        F.col("type"),
-        F.col("lowest_year"),
-        F.col("highest_year"),
-        F.col("author_lowest_year"),
-        F.col("author_highest_year"),
-    )
-    nodes = entities.where(in_set("id", visited)).select(
-        "id",
-        F.col("name").alias("label"),
-        "type",
-        "aka",
-        F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
-        dates.alias("dates"),
-        F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
-        F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
-    )
-    if etext_links is not None:
-        nodes = _with_links(nodes, etext_links, visited)
-    rows = nodes.collect()
-    annotated = {r.id: r for r in rows}
-    unknown = next((n for n in order if n not in annotated), None)
+    unknown = next((n for n in order if n not in known.positions), None)
     if unknown is not None:
         return {"error": f"Invalid ID: '{unknown}'"}
-    # e-text annotation (J7): the nested per-work shape. The raw rows
-    # are bounded by the node cap times links per work.
+    # e-text annotation (J7): the nested per-work shape.
     links_by_work = (
-        _fold_links(rows, "subgraph e-text annotation") if etext_links is not None else {}
+        _nest(_groups_of(_snapshot(etext_links, _Links), visited, "subgraph e-text annotation"))
+        if etext_links is not None
+        else {}
     )
-
     filtered_nodes = [
         {
-            "id": r.id,
-            "label": r.label,
-            "type": r.type,
-            "aka": r.aka,
-            "social_ids": r.social_ids,
-            "dates": r.dates,
-            "discipline": r.discipline,
-            "disciplines": r.disciplines,
-            "is_central": r.id in center,
-            "is_excluded": r.id in exclude,
+            **known.node(n)._asdict(),
+            "is_central": n in center,
+            "is_excluded": n in exclude,
             # reference uses False (not None) for works without links
-            "etext_links": links_by_work.get(r.id, False),
+            "etext_links": links_by_work.get(n, False),
         }
-        for r in annotated.values()
+        for n in known.in_table_order(visited)
     ]
 
     # Periphery trim (grapher.py:90-92): the edges induced on the
     # visited set, each phrased from its endpoints' entity types.
-    induced = edges.where(in_set("src", visited) & in_set("dst", visited))
+    touching = (adjacent.pairs[p] for p in _touching(adjacent, visited))
+    induced = [(s, d) for s, d in touching if s in visited and d in visited]
+    _check_cap(len(induced), "subgraph edge set", SERVING_MAX_ROWS)
     filtered_edges = [
         {
-            "source": e.src,
-            "target": e.dst,
-            "relationship": RELATIONSHIP_PHRASES.get(
-                (annotated[e.src].type, annotated[e.dst].type)
-            ),
+            "source": s,
+            "target": d,
+            "relationship": RELATIONSHIP_PHRASES.get((known.node(s).type, known.node(d).type)),
         }
-        for e in _bounded_collect(induced.select("src", "dst"), "subgraph edge set")
+        for s, d in induced
     ]
 
     return {
@@ -220,75 +335,12 @@ def subgraph_response(
     }
 
 
-def _link_groups(links: DataFrame, cap: int | None = None) -> list:
-    """(work_id, collection, subtype, urls) rows, one per group, with
-    the group's de-duplicated urls sorted; at most ``cap`` groups
-    (default SERVING_MAX_ROWS) are served. Aggregation in Spark over one
-    partition: one collect, one job, no exchange."""
-    return _bounded_collect(
-        links.coalesce(1).groupBy("work_id", "collection", "subtype").agg(
-            F.array_sort(F.collect_set("url")).alias("urls")
-        ),
-        "e-text link mapping",
-        cap,
-    )
-
-
-def _nest(groups) -> dict:
-    """work_id → collection → (sorted url list | subtype → sorted url
-    list), single-subtype collections flattened to the bare list — the
-    ETEXT_LINKS value shape (transform.py:246-270), folded from
-    _link_groups rows."""
-    return nest_links({(r.work_id, r.collection, r.subtype): list(r.urls) for r in groups})
-
-
-def _with_links(keyed: DataFrame, links: DataFrame, ids) -> DataFrame:
-    """``keyed`` (one row per ``id``) left-joined with its link rows:
-    ``links`` filtered to ``ids`` as (collection, subtype, url) plus
-    ``linked``, true on a joined row; a row without links keeps nulls.
-    Both sides read one partition, so the sort-merge join plans no
-    exchange and one job fetches the rows with their links. The hint
-    keeps the planner from broadcasting a small side, which would take
-    a job of its own."""
-    link_rows = (
-        links.coalesce(1)
-        .where(in_set("work_id", ids))
-        .select(
-            F.col("work_id").alias("id"), "collection", "subtype", "url", F.lit(True).alias("linked")
-        )
-    )
-    return keyed.join(link_rows.hint("merge"), "id", "left")
-
-
-def _fold_links(rows, what: str) -> dict:
-    """The nested link mapping of ``_with_links`` rows, folded on the
-    driver: one group per (id, collection, subtype) with its
-    de-duplicated urls sorted. The cap counts groups, as when Spark
-    grouped them (``_link_groups``)."""
-    urls: dict[tuple[str, str, str], set[str]] = {}
-    for r in rows:
-        if r.linked:
-            got = urls.setdefault((r.id, r.collection, r.subtype), set())
-            if r.url is not None:
-                got.add(r.url)
-    _check_cap(len(urls), what, SERVING_MAX_ROWS)
-    return nest_links({k: sorted(us) for k, us in urls.items()})
-
-
-def _with_work_collections(links: DataFrame) -> DataFrame:
-    """The links with ``colls``, the set of collections of each row's
-    work, as a window over one partition: no exchange, no join."""
-    return links.coalesce(1).withColumn(
-        "colls", F.collect_set("collection").over(Window.partitionBy("work_id"))
-    )
-
-
 def valid_collections(links: DataFrame) -> list[str]:
     """VALID_COLLECTIONS (flask_app.py:24): the collections known to the
     e-text summary — here, the distinct collections in the links table.
-    The views below call it only when their own rows cannot show that
-    the requested collections exist."""
-    return [r.collection for r in links.coalesce(1).select("collection").distinct().collect()]
+    The views below consult it only when their own groups cannot show
+    that the requested collections exist."""
+    return list(_snapshot(links, _Links).valid)
 
 
 def _invalid_collection(links: DataFrame, collection: str) -> dict | None:
@@ -305,21 +357,26 @@ def by_collection_response(
     get_works_by_collection, flask_app.py:261-293): every work that has
     at least one link in `collection`; other collections' contributions
     are hidden unless include_other_collections. 'all' returns the full
-    mapping. The '...' placeholder work id is dropped. A non-empty
-    reply shows the collection exists; only an empty one is checked
-    against valid_collections (a collection whose only work is the
-    placeholder is valid and empty)."""
+    mapping. The '...' placeholder work id and null work ids are
+    dropped. A non-empty reply shows the collection exists; only an
+    empty one is checked against valid_collections (a collection whose
+    only work is the placeholder is valid and empty)."""
     if not collection:
         return {"error": "Missing required parameter: collection"}
+    snap = _snapshot(links, _Links)
     if collection.lower() == "all":
         # flask_app.py:274-275 returns ETEXT_LINKS verbatim — the '...'
         # placeholder is only popped in the per-collection path.
-        return _nest(_link_groups(links))
-    if include_other_collections:
-        sub = _with_work_collections(links).filter(F.array_contains("colls", collection))
-    else:
-        sub = links.filter(F.col("collection") == collection)
-    groups = _link_groups(sub.filter(F.col("work_id") != "..."))
+        _check_cap(len(snap.groups), "e-text link mapping", SERVING_MAX_ROWS)
+        return _nest(snap.groups)
+    groups = [
+        g
+        for g in snap.groups
+        if g[0] is not None
+        and g[0] != "..."
+        and (collection in snap.colls[g[0]] if include_other_collections else g[1] == collection)
+    ]
+    _check_cap(len(groups), "e-text link mapping", SERVING_MAX_ROWS)
     if not groups:
         return _invalid_collection(links, collection) or {}
     return _nest(groups)
@@ -327,15 +384,15 @@ def by_collection_response(
 
 def unique_to_collection_response(links: DataFrame, collection: str | None) -> dict:
     """GET /api/seti/by_collection/unique (flask_app.py:331-361): works
-    whose ONLY collection is `collection`, restricted to it. As in
+    whose ONLY collection is `collection`, restricted to it (a work's
+    null-collection groups count for no collection and are kept). As in
     by_collection_response, only an empty reply is checked against
     valid_collections."""
     if not collection:
         return {"error": "Missing required parameter: collection"}
-    only = _with_work_collections(links).filter(
-        (F.size("colls") == 1) & (F.col("colls")[0] == collection)
-    )
-    groups = _link_groups(only)
+    snap = _snapshot(links, _Links)
+    groups = [g for g in snap.groups if snap.colls[g[0]] == {collection}]
+    _check_cap(len(groups), "e-text link mapping", SERVING_MAX_ROWS)
     if not groups:
         return _invalid_collection(links, collection) or {}
     return _nest(groups)
@@ -348,11 +405,10 @@ def overlap_response(
     three-way partition of works across two collections, each side
     restricted to its own collection(s).
 
-    One grouped collect of the two collections' rows; each work's part
-    follows from the collections its groups name, so the split happens
-    on the driver. Each part keeps its own cap on groups, as when each
-    was collected alone. valid_collections runs only when a requested
-    collection has no row."""
+    Each work's part follows from the collections its groups in the two
+    collections name. Each part keeps its own cap on groups, and all
+    three together are capped at 3×. valid_collections is consulted
+    only when a requested collection has no group."""
     if not collection1 or not collection2:
         return {"error": "Both collection1 and collection2 are required"}
 
@@ -365,30 +421,30 @@ def overlap_response(
             f"Valid options: {sorted(valid)}"
         }
 
-    pair = links.filter(in_set("collection", {collection1, collection2}))
+    pair = {collection1, collection2}
+    groups = [g for g in _snapshot(links, _Links).groups if g[1] in pair]
     try:
-        # Each part holds at most the cap, so all three at most 3x.
-        groups = _link_groups(pair, 3 * SERVING_MAX_ROWS)
+        _check_cap(len(groups), "e-text link mapping", 3 * SERVING_MAX_ROWS)
     except ServingCapExceeded:
         err = invalid()
         if err is not None:
             return err
         raise
-    if not {r.collection for r in groups} >= {collection1, collection2}:
+    if not {g[1] for g in groups} >= pair:
         err = invalid()
         if err is not None:
             return err
     colls: dict[str, set[str]] = {}
-    for r in groups:
-        colls.setdefault(r.work_id, set()).add(r.collection)
+    for g in groups:
+        colls.setdefault(g[0], set()).add(g[1])
     both, only1, only2 = [], [], []
-    for r in groups:
-        if colls[r.work_id] >= {collection1, collection2}:
-            both.append(r)
-        elif r.collection == collection1:
-            only1.append(r)
+    for g in groups:
+        if colls[g[0]] >= pair:
+            both.append(g)
+        elif g[1] == collection1:
+            only1.append(g)
         else:
-            only2.append(r)
+            only2.append(g)
     for part in (both, only1, only2):
         _check_cap(len(part), "e-text link mapping", SERVING_MAX_ROWS)
     return {
@@ -400,10 +456,8 @@ def overlap_response(
 
 def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | None) -> dict:
     """GET /api/seti/by_work (flask_app.py:419-454): comma-separated
-    numeric ids → nested link data for the valid WORK ids among them.
-    One collect fetches the requested works joined with their links."""
-    import re
-
+    numeric ids → nested link data for the valid WORK ids among them
+    (an id with any row of type work)."""
     if not ids_param or not ids_param.strip():
         return {"error": "List input must be non-empty."}
     stripped = ids_param.strip()
@@ -415,11 +469,15 @@ def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | Non
     ids = [i for i in stripped.split(",") if i]
     if not ids:
         return {"error": "No IDs provided"}
-    works = entities.coalesce(1).filter((F.col("type") == "work") & in_set("id", ids))
-    rows = _with_links(works.select("id"), links, ids).collect()
-    if not rows:
+    known = _snapshot(entities, _Entities)
+    works = [
+        i
+        for i in dict.fromkeys(ids)
+        if any(known.rows[p].type == "work" for p in known.positions.get(i, ()))
+    ]
+    if not works:
         return {"error": "No valid work IDs provided"}
-    return _fold_links(rows, "e-text link mapping")
+    return _nest(_groups_of(_snapshot(links, _Links), works, "e-text link mapping"))
 
 
 def visualize_collection_params(
@@ -427,19 +485,23 @@ def visualize_collection_params(
 ) -> dict:
     """GET /seti/by_collection/<collection>/visualize
     (flask_app.py:467-490): the initial_params handed to the D3 page —
-    the collection's works plus every author of those works."""
+    the collection's works plus every author of those works. The
+    authors come from one collect over the entities' ``author_ids``,
+    which the entity snapshot does not hold."""
     works_data = by_collection_response(links, collection)
     if "error" in works_data and isinstance(works_data.get("error"), str):
         return works_data
     works = list(works_data.keys())
-    author_rows = _bounded_collect(
+    author_rows = (
         entities.coalesce(1)
         .filter(in_set("id", works))
         .select(F.explode_outer("author_ids").alias("aid"))
         .filter(F.col("aid").isNotNull())
-        .distinct(),
-        "visualize author set",
+        .distinct()
+        .limit(SERVING_MAX_ROWS + 1)
+        .collect()
     )
+    _check_cap(len(author_rows), "visualize author set", SERVING_MAX_ROWS)
     return {
         "works": works,
         "authors": [r.aid for r in author_rows],
@@ -452,52 +514,28 @@ def visualize_collection_params(
 def entity_labels_response(entities: DataFrame, ids: list[str]) -> dict:
     """GET /api/entities/labels (flask_app.py:109-146) — returns labels
     only for VALID ids (the reference builds from unvalidated input and
-    can KeyError; SURVEY §3.4 documents the fix)."""
-    import re
-
+    can KeyError; SURVEY §3.4 documents the fix). The cap counts entity
+    rows, so a duplicated id counts once per row."""
     if any(not re.fullmatch(r"[\d,]*", i) for i in ids):
         return {"error": "invalid id format"}
-    rows = _bounded_collect(
-        entities.coalesce(1)
-        .filter(in_set("id", ids))
-        .select("id", F.col("name").alias("label")),
-        "entity label set",
-    )
-    return {"labels": {r.id: r.label for r in rows}}
+    known = _snapshot(entities, _Entities)
+    found = known.in_table_order(set(ids))
+    _check_cap(sum(len(known.positions[i]) for i in found), "entity label set", SERVING_MAX_ROWS)
+    return {"labels": {i: known.node(i).label for i in found}}
 
 
 def dropdown_options(entities: DataFrame) -> dict:
     """GET /api/entities/{authors|works|all} (flask_app.py:59-73,95-106):
-    '{name} ({id})' + optional date/aka brackets, collation-sorted.
-    Every call labels the whole entity table in Spark, fetches
-    (id, type, label) as Arrow from one partition under the serving
-    cap, and sorts on the driver by ``collation.sort_key_py``, the
-    reference's own key applied as the reference applies it; entities
-    with equal keys keep their fetch order. Nothing is cached. The
-    reference builds these lists once at start-up, so a server should
-    keep the result."""
-    dates = date_info(
-        F.col("type"),
-        F.col("lowest_year"),
-        F.col("highest_year"),
-        F.col("author_lowest_year"),
-        F.col("author_highest_year"),
-    )
-    table = (
-        entities.coalesce(1)
-        .select(
-            "id",
-            "type",
-            dropdown_label(F.col("name"), F.col("id"), dates, F.col("aka")).alias("label"),
-        )
-        .limit(SERVING_MAX_ROWS + 1)
-        .toArrow()
-    )
-    _check_cap(table.num_rows, "dropdown option set", SERVING_MAX_ROWS)
-    rows = zip(*(table.column(c).to_pylist() for c in ("id", "type", "label")))
+    '{name} ({id})' + optional date/aka brackets, collation-sorted by
+    ``collation.sort_key_py``, the reference's own key applied as the
+    reference applies it; entities with equal keys keep their table
+    order. The options are labelled and sorted once, when the entity
+    snapshot is built, as the reference builds these lists at start-up;
+    each call checks the cap and shapes the reply."""
+    known = _snapshot(entities, _Entities)
+    _check_cap(len(known.rows), "dropdown option set", SERVING_MAX_ROWS)
     out = {"all": [], "authors": [], "works": []}
-    # A null label (a null name) sorts first, as nulls do in Spark.
-    for id_, type_, label in sorted(rows, key=lambda r: sort_key_py(r[2] or "")):
+    for id_, type_, label in known.options:
         opt = {"id": id_, "label": label}
         out["all"].append(opt)
         out[type_ + "s"].append(opt)

@@ -9,6 +9,8 @@ reference data files.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -164,14 +166,13 @@ def test_serving_cap_on_node_set(tables, monkeypatch):
     the hop whose new nodes cross it: from a1 the visited set grows
     1 → 3 → 5 → 8 over hops 1-3. The expanded frontiers show where."""
     expanded = []
-    real = serving.in_set
+    real = serving._touching
 
-    def spy(col, values):
-        if col == "src":
-            expanded.append(set(values))
-        return real(col, values)
+    def spy(edges, ids):
+        expanded.append(set(ids))
+        return real(edges, ids)
 
-    monkeypatch.setattr(serving, "in_set", spy)
+    monkeypatch.setattr(serving, "_touching", spy)
     hop1, hop2, hop3 = {"a1"}, {"w1", "w2"}, {"w3", "w4"}
     for cap, hops, frontiers in [(3, 3, [hop1, hop2]), (5, 3, [hop1, hop2, hop3]), (2, 1, [hop1])]:
         monkeypatch.setattr(serving, "SERVING_MAX_ROWS", cap)
@@ -179,7 +180,7 @@ def test_serving_cap_on_node_set(tables, monkeypatch):
         with pytest.raises(serving.ServingCapExceeded, match="subgraph node set"):
             _reply(tables, ["a1"], [], hops, links=False)
         assert expanded == frontiers
-    # the seeds alone over the cap: no scan at all
+    # the seeds alone over the cap: no expansion at all
     monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 1)
     expanded.clear()
     with pytest.raises(serving.ServingCapExceeded, match="subgraph node set"):
@@ -225,10 +226,9 @@ def _jobs_after(spark, first: int) -> list:
 def partitioned_tables(tables):
     """The fixture tables as one- and two-partition local checkpoints,
     the way the benchmark materializes its start-up tables. Over two
-    partitions a ``limit`` collect of a checkpoint takes a second job
-    unless the query reads one partition (a cached table takes one job
-    either way), and a distinct or aggregate needs an exchange unless
-    it does."""
+    partitions a ``limit`` fetch of a checkpoint takes a second job
+    unless it reads one partition (a cached table takes one job either
+    way), and an aggregate needs an exchange unless it does."""
     from panditya_spark.operators.graph import _release
 
     out = {
@@ -239,6 +239,12 @@ def partitioned_tables(tables):
     for ts in out.values():
         for t in ts:
             _release(t)
+
+
+def _fresh(tables) -> tuple:
+    """New frames over the same tables, so no snapshot is keyed on them
+    yet."""
+    return tuple(t.select("*") for t in tables)
 
 
 def _jobs_of(spark, call, group: str) -> list:
@@ -270,23 +276,52 @@ def _assert_no_shuffle(spark, jobs) -> None:
             assert store.lastStageAttempt(stage).shuffleWriteBytes() == 0
 
 
+def _executions(spark) -> set:
+    """The ids of the SQL executions the status store holds."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    return {x.executionId() for x in _iterate(sql.executionsList())}
+
+
+def _assert_no_python(spark, before: set) -> None:
+    """The SQL executions since ``before`` exist and none of their plans
+    evaluates Python."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    plans = [
+        x.physicalPlanDescription()
+        for x in _iterate(sql.executionsList())
+        if x.executionId() not in before
+    ]
+    assert plans
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 @pytest.mark.parametrize("hops", [0, 1, 2, 3])
 def test_job_shape(spark, partitioned_tables, hops):
-    """A hops-h request from a1 scans the edges once per hop, then the
-    induced edges once, and the entities joined with their links once:
-    h + 2 jobs over one- and two-partition tables alike, since the
-    request reads each table through one partition. Over two partitions
-    no job writes shuffle data, broadcasts, checkpoints or caches."""
-    assert len(_request_jobs(spark, partitioned_tables[1], hops)) == hops + 2
+    """On fresh frames a hops-h request from a1 starts one job per
+    served table, the Arrow fetch of its snapshot (entities, edges,
+    links), over one- and two-partition tables alike, since each fetch
+    reads one partition. Over two partitions no job writes shuffle
+    data, broadcasts, checkpoints or caches, and no plan evaluates
+    Python. Once the snapshots exist, the same request again and a
+    request at every hops value start no job and no SQL execution."""
+    assert len(_request_jobs(spark, _fresh(partitioned_tables[1]), hops)) == 3
     jsc = spark.sparkContext._jsc.sc()
     persisted = jsc.getPersistentRDDs().size()
-    jobs = _request_jobs(spark, partitioned_tables[2], hops)
-    assert len(jobs) == hops + 2
+    fresh = _fresh(partitioned_tables[2])
+    before = _executions(spark)
+    jobs = _request_jobs(spark, fresh, hops)
+    assert len(jobs) == 3
     for j in jobs:
         assert not j.name().startswith(("localCheckpoint", "checkpoint")), j.name()
         assert not any(t.startswith("broadcast exchange") for t in _iterate(j.jobTags()))
     _assert_no_shuffle(spark, jobs)
+    _assert_no_python(spark, before)
     assert jsc.getPersistentRDDs().size() == persisted
+    executed = _executions(spark)
+    for again in (hops, 0, 1, 2, 3):
+        assert _request_jobs(spark, fresh, again) == []
+    assert _executions(spark) == executed
 
 
 def _numeric(entities, links):
@@ -315,40 +350,40 @@ def _with_author_ids(entities):
     return entities.withColumn("author_ids", by_work[F.col("id")])
 
 
-# (view, collects, call over the (entities, edges, links) fixture)
+# (view, snapshot fetches, other jobs per call, the call over the
+# fixture's (entities, links), its derived frames built once)
 VIEW_SHAPES = [
-    ("by_collection", 1, lambda e, _, li: serving.by_collection_response(li, "GRETIL")),
-    ("by_collection_others", 1, lambda e, _, li: serving.by_collection_response(li, "DCS", True)),
-    ("by_collection_invalid", 2, lambda e, _, li: serving.by_collection_response(li, "XX")),
-    ("unique", 1, lambda e, _, li: serving.unique_to_collection_response(li, "GRETIL")),
-    ("unique_invalid", 2, lambda e, _, li: serving.unique_to_collection_response(li, "XX")),
-    ("overlap", 1, lambda e, _, li: serving.overlap_response(li, "DCS", "GRETIL")),
-    ("overlap_invalid", 2, lambda e, _, li: serving.overlap_response(li, "SARIT", "XX")),
-    ("labels", 1, lambda e, _, li: serving.entity_labels_response(_numeric(e, li)[0], ["21", "11"])),
-    ("by_work", 1, lambda e, _, li: _by_work(e, li, "21,22")),
-    ("visualize", 2, lambda e, _, li: serving.visualize_collection_params(li, _with_author_ids(e), "GRETIL")),
-    ("dropdown", 1, lambda e, _, li: serving.dropdown_options(e)),
+    ("by_collection", 1, 0, lambda e, li: partial(serving.by_collection_response, li, "GRETIL")),
+    ("by_collection_others", 1, 0, lambda e, li: partial(serving.by_collection_response, li, "DCS", True)),
+    ("by_collection_invalid", 1, 0, lambda e, li: partial(serving.by_collection_response, li, "XX")),
+    ("unique", 1, 0, lambda e, li: partial(serving.unique_to_collection_response, li, "GRETIL")),
+    ("unique_invalid", 1, 0, lambda e, li: partial(serving.unique_to_collection_response, li, "XX")),
+    ("overlap", 1, 0, lambda e, li: partial(serving.overlap_response, li, "DCS", "GRETIL")),
+    ("overlap_invalid", 1, 0, lambda e, li: partial(serving.overlap_response, li, "SARIT", "XX")),
+    ("labels", 1, 0, lambda e, li: partial(serving.entity_labels_response, _numeric(e, li)[0], ["21", "11"])),
+    ("by_work", 2, 0, lambda e, li: partial(serving.by_work_response, *_numeric(e, li)[::-1], "21,22")),
+    ("visualize", 1, 1, lambda e, li: partial(serving.visualize_collection_params, li, _with_author_ids(e), "GRETIL")),
+    ("dropdown", 1, 0, lambda e, li: partial(serving.dropdown_options, e)),
 ]
 
 
-@pytest.mark.parametrize("collects, call", [v[1:] for v in VIEW_SHAPES], ids=[v[0] for v in VIEW_SHAPES])
-def test_view_job_shape(spark, partitioned_tables, collects, call):
-    """Over two-partition tables every endpoint but the subgraph runs
-    one job per collect, writes no shuffle data and plans no Python
-    evaluation."""
-    sql = spark._jsparkSession.sharedState().statusStore()
-    before = {x.executionId() for x in _iterate(sql.executionsList())}
-    jobs = _jobs_of(spark, lambda: call(*partitioned_tables[2]), "serving-view-shape")
-    assert len(jobs) == collects
+@pytest.mark.parametrize("fetches, other, call", [v[1:] for v in VIEW_SHAPES], ids=[v[0] for v in VIEW_SHAPES])
+def test_view_job_shape(spark, partitioned_tables, fetches, other, call):
+    """On fresh two-partition frames an endpoint's first call starts one
+    job per served table it reads, the fetch of its snapshot, plus
+    visualize's author collect; no job writes shuffle data and no plan
+    evaluates Python. A second call gives the same reply and starts only
+    the author collect."""
+    entities, _, links = _fresh(partitioned_tables[2])
+    request = call(entities, links)
+    replies = []
+    before = _executions(spark)
+    jobs = _jobs_of(spark, lambda: replies.append(request()), "serving-view-shape")
+    assert len(jobs) == fetches + other
     _assert_no_shuffle(spark, jobs)
-    plans = [
-        x.physicalPlanDescription()
-        for x in _iterate(sql.executionsList())
-        if x.executionId() not in before
-    ]
-    assert plans
-    for plan in plans:
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    _assert_no_python(spark, before)
+    assert len(_jobs_of(spark, lambda: replies.append(request()), "serving-view-shape")) == other
+    assert replies[0] == replies[1]
 
 
 def test_ids_needing_escapes_round_trip(spark):
@@ -454,6 +489,98 @@ def test_collection_views(spark, tables):
     assert serving.overlap_response(links, "SARIT", "XX") == {
         "error": f"Invalid collection(s): SARIT, XX. Valid options: {valid}"
     }
+
+
+def test_collection_views_with_nulls(spark, tables):
+    """The SETI views over links with a null work id, a null collection,
+    a null url and the '...' placeholder, as Spark's null semantics give
+    them: a ``!=`` filter drops a null work id, ``collect_set`` skips a
+    null url but keeps its group, a work's collections ignore a null
+    collection while the work keeps that group, and null work ids count
+    as one work."""
+    entities = tables[0]
+    links = spark.createDataFrame(
+        LINKS
+        + [
+            (None, "GRETIL", "w", "n0"),
+            ("w7", None, "w", "n7"),
+            ("w8", "DCS", "web HTML", None),
+            ("...", "GRETIL", "w", "p"),
+        ],
+        "work_id string, collection string, subtype string, url string",
+    )
+    w1 = {"GRETIL": ["u0", "u1"]}
+    w2_dcs = {"web HTML": ["d1"], "GitHub (1) CoNLL-U": ["d2"]}
+    w2 = {"DCS": w2_dcs, "GRETIL": ["g2"]}
+    w7 = {"SARIT": ["s7"], None: ["n7"]}
+    w8 = {"DCS": []}
+    nameless, placeholder = {"GRETIL": ["n0"]}, {"GRETIL": ["p"]}
+    assert serving.by_collection_response(links, "all") == {
+        "w1": w1, "w2": w2, "w7": w7, "w8": w8, None: nameless, "...": placeholder,
+    }
+    assert serving.by_collection_response(links, "GRETIL") == {"w1": w1, "w2": {"GRETIL": ["g2"]}}
+    assert serving.by_collection_response(links, "DCS") == {"w2": {"DCS": w2_dcs}, "w8": w8}
+    assert serving.by_collection_response(links, "SARIT", True) == {"w7": w7}
+    assert serving.by_collection_response(links, "GRETIL", True) == {"w1": w1, "w2": w2}
+    assert serving.unique_to_collection_response(links, "SARIT") == {"w7": w7}
+    assert serving.unique_to_collection_response(links, "DCS") == {"w8": w8}
+    assert serving.unique_to_collection_response(links, "GRETIL") == {
+        "w1": w1, None: nameless, "...": placeholder,
+    }
+    assert serving.overlap_response(links, "DCS", "GRETIL") == {
+        "overlap": {"w2": w2},
+        "only_in_DCS": {"w8": w8},
+        "only_in_GRETIL": {"w1": w1, None: nameless, "...": placeholder},
+    }
+    assert serving.overlap_response(links, "SARIT", "GRETIL") == {
+        "overlap": {},
+        "only_in_SARIT": {"w7": {"SARIT": ["s7"]}},
+        "only_in_GRETIL": {"w1": w1, "w2": {"GRETIL": ["g2"]}, None: nameless, "...": placeholder},
+    }
+    assert _by_work(entities, links, "27,28") == {"27": w7, "28": w8}
+    w8_node = _nodes(serving.subgraph_response(entities, tables[1], links, [], ["w8"], 0))["w8"]
+    assert w8_node["etext_links"] == w8
+
+
+def test_snapshot_freed_with_frame(tables):
+    """A snapshot is keyed weakly on its frame and holds no reference to
+    it: once the frame is dropped, the frame and its snapshot are both
+    freed."""
+    import gc
+    import weakref
+
+    frame = tables[0].select("*")
+    serving.dropdown_options(frame)
+    snapshot = weakref.ref(serving._SNAPSHOTS[frame][serving._Entities])
+    ref, entries = weakref.ref(frame), len(serving._SNAPSHOTS)
+    del frame
+    gc.collect()
+    assert ref() is None and snapshot() is None
+    assert len(serving._SNAPSHOTS) < entries
+
+
+def test_snapshot_bound(tables, monkeypatch):
+    """Each served table is fetched under the driver-side tiers' row
+    cap (graph._local_cap): a table one row over it is refused with an
+    error naming the table; a table exactly at it is served."""
+    from panditya_spark.operators import graph
+
+    entities, edges, links = tables
+    cases = [
+        ("entity", entities, 10, serving.dropdown_options),
+        ("edge", edges, 8, lambda t: serving.subgraph_response(entities, t, None, ["a1"], [], 1)),
+        ("e-text link", links, 7, lambda t: serving.by_collection_response(t, "all")),
+    ]
+    want = [call(table.select("*")) for _, table, _, call in cases]
+    for (name, table, rows, call), reply in zip(cases, want):
+        monkeypatch.setattr(graph, "_local_cap", lambda spark, cap=rows - 1: cap)
+        with pytest.raises(
+            serving.ServingCapExceeded,
+            match=f"^{name} table too large to serve: more than {rows - 1} rows",
+        ):
+            call(table.select("*"))
+        monkeypatch.setattr(graph, "_local_cap", lambda spark, cap=rows: cap)
+        assert call(table.select("*")) == reply
 
 
 def test_by_work_response(tables):
